@@ -34,10 +34,10 @@ object HeaderPromotion {
     val indexed = withRowIndex(df).localCheckpoint(true)
     // backtick-quoted: staged names may carry readxl-style `...N` dots
     val hdr = indexed.filter(col(s"`$matchCol`").rlike(pattern))
-      .agg(min(col("_row_idx"))).head()
-    require(!hdr.isNullAt(0), s"HeaderPromotion: no row in '$matchCol' matches /$pattern/")
-    val headerIdx = hdr.getLong(0)
-    val headerRow = indexed.filter(col("_row_idx") === headerIdx).head()
+      .orderBy(col("_row_idx")).head(1)
+    require(hdr.nonEmpty, s"HeaderPromotion: no row in '$matchCol' matches /$pattern/")
+    val headerRow = hdr.head
+    val headerIdx = headerRow.getAs[Long]("_row_idx")
     val names = df.columns.indices.map { i =>
       Option(headerRow.get(i)).map(v => Relational.cleanName(v.toString))
         .filter(_.nonEmpty).getOrElse(s"x$i")

@@ -4,6 +4,7 @@ import graft.ops.Relational
 import graft.sources.SourceSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** The per-vintage overnight/day beds extraction + harmonisation programs
   * (scripts/available-and-occupied-beds/build_datasets_overnight_day_beds.R:
@@ -156,19 +157,18 @@ object BedsVintages {
     df = tail0010(df)
     val measures = df.columns.filterNot(
       Seq("fname", "org_code", "org_name", "year").contains)
-    df = measures.foldLeft(df)((d, m) =>
-      d.withColumn(m, expr(s"try_cast($m AS DOUBLE)")))
+    df = df.withColumns(ListMap.from(measures.map(m => m -> expr(s"try_cast($m AS DOUBLE)"))))
     if (early) {
-      df = categories.foldLeft(df) { (a, cat) =>
+      df = df.withColumns(ListMap.from(categories.map { cat =>
         val av = col(s"${cat}_on_beds_available")
         val occ = col(s"${cat}_on_beds_occupied")
-        a.withColumn(s"${cat}_on_beds_percent_occupied",
+        s"${cat}_on_beds_percent_occupied" ->
           when(av.isNull || occ.isNull, lit(null))
             .when(occ === 0d && av > 0d, lit(null)) // +Inf → na_if
             .when(occ === 0d && av === 0d, lit(Double.NaN)) // 0/0 NaN KEPT
             .when(occ === 0d, lit(Double.NegativeInfinity)) // -Inf survives na_if
-            .otherwise(av / occ))
-      }
+            .otherwise(av / occ)
+      }))
       df = df.drop("available_acute", "available_geriatric",
         "occupied_acute", "occupied_geriatric")
     }

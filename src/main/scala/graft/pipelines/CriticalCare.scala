@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.ops.HeaderPromotion
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Critical-care beds trust × month panel: the org-change adjustment stage
   * (scripts/critical-care-beds/build_datasets_critical_care_beds.R:273-371)
@@ -28,16 +29,16 @@ object CriticalCare {
     * for ANSI mode.
     */
   private def recomputePercents(df: DataFrame): DataFrame =
-    categories.foldLeft(df) { (a, cat) =>
+    df.withColumns(ListMap.from(categories.map { cat =>
       val occ = col(s"number_of_${cat}_occupied")
       val av = col(s"number_of_${cat}_open")
-      a.withColumn(s"${cat}_percent_occupied",
+      s"${cat}_percent_occupied" ->
         when(occ.isNull || av.isNull, lit(null))
           .when(av === 0d && occ === 0d, lit(null))
           .when(av === 0d && occ > 0d, lit(Double.PositiveInfinity))
           .when(av === 0d, lit(Double.NegativeInfinity))
-          .otherwise(occ / av))
-    }
+          .otherwise(occ / av)
+    }))
 
   /** @param panel  trust × month rows in file order: org_code, date (month
     *               start), month, year, org_name, measure columns (strings OK)
@@ -46,11 +47,9 @@ object CriticalCare {
   def adjust(panel: DataFrame, lookup: DataFrame): DataFrame = {
     val indexed = HeaderPromotion.withRowIndex(panel)
     val measures = measureCols(indexed)
-    val typed = measures.foldLeft(
-        indexed
-          .withColumn("year", expr("try_cast(year AS INT)"))
-          .withColumn("date", col("date").cast("date"))
-      )((d, m) => d.withColumn(m, expr(s"try_cast($m AS DOUBLE)")))
+    val typed = indexed.withColumns(ListMap.from(
+      Seq("year" -> expr("try_cast(year AS INT)"), "date" -> col("date").cast("date")) ++
+        measures.map(m => m -> expr(s"try_cast($m AS DOUBLE)"))))
 
     ReferenceAdjust.adjustMonthly(typed, lookup,
       measureCols = measures,

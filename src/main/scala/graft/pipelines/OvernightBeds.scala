@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.ops.{HeaderPromotion, Relational}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Overnight + day beds 2000–24 panel: merge the two committed clean
   * vintages (annual 2000–10, quarterly 2010–24) and apply the org-change
@@ -32,21 +33,18 @@ object OvernightBeds {
     * [[graft.ops.Relational.safeDiv]] is the fixed-policy alternative.
     */
   private def recomputePercents(df: DataFrame): DataFrame =
-    categories.foldLeft(df) { (acc, cat) =>
-      Seq("day_", "on_").foldLeft(acc) { (a, typ) =>
-        val pct = s"${cat}${typ}beds_percent_occupied"
-        val occ = col(s"${cat}${typ}beds_occupied")
-        val av = col(s"${cat}${typ}beds_available")
-        // explicit case split: ANSI mode errors on double /0, so the R
-        // outcomes are spelled out (0/0 → null, x/0 → ±Inf, NA → null)
-        a.withColumn(pct,
-          when(occ.isNull || av.isNull, lit(null))
-            .when(av === 0d && occ === 0d, lit(null))
-            .when(av === 0d && occ > 0d, lit(Double.PositiveInfinity))
-            .when(av === 0d, lit(Double.NegativeInfinity))
-            .otherwise(occ / av))
-      }
-    }
+    df.withColumns(ListMap.from(for (cat <- categories; typ <- Seq("day_", "on_")) yield {
+      val occ = col(s"${cat}${typ}beds_occupied")
+      val av = col(s"${cat}${typ}beds_available")
+      // explicit case split: ANSI mode errors on double /0, so the R
+      // outcomes are spelled out (0/0 → null, x/0 → ±Inf, NA → null)
+      s"${cat}${typ}beds_percent_occupied" ->
+        when(occ.isNull || av.isNull, lit(null))
+          .when(av === 0d && occ === 0d, lit(null))
+          .when(av === 0d && occ > 0d, lit(Double.PositiveInfinity))
+          .when(av === 0d, lit(Double.NegativeInfinity))
+          .otherwise(occ / av)
+    }))
 
   /** @param beds1024 raw string frame of overnight_day_beds_2010_24_clean.csv
     * @param beds0010 raw string frame of overnight_day_beds_2000_10_clean.csv
@@ -62,9 +60,9 @@ object OvernightBeds {
     val indexed = HeaderPromotion.withRowIndex(unioned)
 
     val measures = measureCols(indexed)
-    val typed = measures.foldLeft(
-        indexed.withColumn("year", expr("try_cast(year AS INT)"))
-      )((d, m) => d.withColumn(m, expr(s"try_cast($m AS DOUBLE)")))
+    val typed = indexed.withColumns(ListMap.from(
+      ("year" -> expr("try_cast(year AS INT)")) +:
+        measures.map(m => m -> expr(s"try_cast($m AS DOUBLE)"))))
 
     ReferenceAdjust.adjust(typed, lookup, ReferenceAdjust.Params(
         measureCols = measures,

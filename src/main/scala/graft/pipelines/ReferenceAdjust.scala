@@ -1,9 +1,10 @@
 package graft.pipelines
 
 import graft.ops.{Fill, Relational}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** The reference's org-change adjustment template, shared by all four panel
   * scripts (wait times, overnight/day beds, critical care, supporting
@@ -36,6 +37,57 @@ object ReferenceAdjust {
       nameKeepLast: Boolean = true,
       mergedPost: DataFrame => DataFrame = identity)
 
+  /** Classify every code the lookup mentions, once, on the driver (the
+    * lookup is a bounded, driver-collected artifact — see [[OrgChanges]]):
+    * one row per clean lookup row listing the code as `old_code`, or a
+    * single row with null `final_code`/`experiences_split` for a code that
+    * is only problematic or only a clean final code. An old code listed
+    * twice keeps both rows, so its panel rows are re-keyed once per
+    * listing (GoldenOrgChangesSpec pins that lookup shape).
+    */
+  private def lookupTable(lookup: DataFrame): DataFrame = {
+    val rows = lookup.select(col("old_code"), col("final_code"), col("experiences_split"),
+      col("problematic") === 1, col("problematic") === 0).collect()
+    def where(i: Int) = rows.filter(r => !r.isNullAt(i) && r.getBoolean(i))
+    def codes(rs: Array[Row]): Set[Any] = rs.iterator.flatMap(r => Seq(r.get(0), r.get(1))).toSet
+    val clean = where(4)
+    val problematic = codes(where(3))
+    val affected = codes(clean)
+    val cleanByOld = clean.groupBy(_.get(0))
+    val out = (problematic ++ affected - null).toSeq.flatMap { c =>
+      val flags = Seq(c, problematic(c), affected(c))
+      cleanByOld.get(c) match {
+        case Some(rs) => rs.toSeq.map(r => Row.fromSeq(flags ++ Seq(r.get(1), r.get(2))))
+        case None => Seq(Row.fromSeq(flags ++ Seq(null, null)))
+      }
+    }
+    val f = lookup.schema
+    val schema = StructType(Seq(
+      StructField("org_code", f("old_code").dataType),
+      StructField("__problematic", BooleanType, nullable = false),
+      StructField("__affected", BooleanType, nullable = false),
+      StructField("final_code", f("final_code").dataType),
+      StructField("experiences_split", f("experiences_split").dataType)))
+    lookup.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+  }
+
+  /** The shared first step of every org-change adjustment (R:459-478 in
+    * the wait-times script): flag rows of problematic trusts
+    * (`exp_problematic_org_change`), then split the panel into the rows a
+    * clean change touches — joined to their `final_code` and
+    * `experiences_split` — and the untouched rest (without `_row_idx`).
+    * One broadcast join against [[lookupTable]], split by a predicate.
+    */
+  private[pipelines] def splitByLookup(body: DataFrame, lookup: DataFrame): (DataFrame, DataFrame) = {
+    val j = body.join(broadcast(lookupTable(lookup)), Seq("org_code"), "left")
+    val flagged = ("org_code" +: body.columns.filterNot(_ == "org_code"))
+      .map(c => col(s"`$c`")) :+
+      when(col("__problematic"), 1).otherwise(0).as("exp_problematic_org_change")
+    val isAffected = coalesce(col("__affected"), lit(false))
+    (j.filter(isAffected).select(flagged ++ Seq(col("final_code"), col("experiences_split")): _*),
+      j.filter(!isAffected).select(flagged: _*).drop("_row_idx"))
+  }
+
   def adjust(data: DataFrame, lookup: DataFrame, params: Params): DataFrame = {
     val hasName = data.columns.contains("org_name")
 
@@ -50,29 +102,7 @@ object ReferenceAdjust {
         Seq(if (params.nameKeepLast) col("first_idx").desc else col("first_idx").asc))
         .select(col("org_code"), col("org_name"))
 
-    val body = data.drop("org_name")
-
-    // ---- problematic flag ----
-    val problematicCodes = lookup.filter(col("problematic") === 1)
-      .select(col("old_code").as("org_code"))
-      .union(lookup.filter(col("problematic") === 1).select(col("final_code").as("org_code")))
-      .distinct()
-    val flagged = body
-      .join(broadcast(problematicCodes.withColumn("__p", lit(1))), Seq("org_code"), "left")
-      .withColumn("exp_problematic_org_change", when(col("__p").isNotNull, 1).otherwise(0))
-      .drop("__p")
-
-    // ---- affected/unaffected split over old ∪ final codes ----
-    val cleanLk = lookup.filter(col("problematic") === 0)
-      .select(col("old_code"), col("final_code"), col("experiences_split"))
-    val affectedCodes = cleanLk.select(col("old_code").as("org_code"))
-      .union(cleanLk.select(col("final_code").as("org_code"))).distinct()
-    val affected = flagged.join(broadcast(affectedCodes), Seq("org_code"), "left_semi")
-    val unaffected = flagged.join(broadcast(affectedCodes), Seq("org_code"), "left_anti")
-      .drop("_row_idx")
-
-    val joined = affected.join(
-      broadcast(cleanLk.withColumnRenamed("old_code", "org_code")), Seq("org_code"), "left")
+    val (joined, unaffected) = splitByLookup(data.drop("org_name"), lookup)
 
     // ---- change indicator (first period under the new arrangement) ----
     val w = Window.partitionBy(col("org_code"), col("final_code"))
@@ -160,27 +190,7 @@ object ReferenceAdjust {
         Seq(if (nameKeepLast) col("first_idx").desc else col("first_idx").asc))
         .select(col("org_code"), col("org_name"))
 
-    val body = data.drop("org_name")
-
-    val problematicCodes = lookup.filter(col("problematic") === 1)
-      .select(col("old_code").as("org_code"))
-      .union(lookup.filter(col("problematic") === 1).select(col("final_code").as("org_code")))
-      .distinct()
-    val flagged = body
-      .join(broadcast(problematicCodes.withColumn("__p", lit(1))), Seq("org_code"), "left")
-      .withColumn("exp_problematic_org_change", when(col("__p").isNotNull, 1).otherwise(0))
-      .drop("__p")
-
-    val cleanLk = lookup.filter(col("problematic") === 0)
-      .select(col("old_code"), col("final_code"), col("experiences_split"))
-    val affectedCodes = cleanLk.select(col("old_code").as("org_code"))
-      .union(cleanLk.select(col("final_code").as("org_code"))).distinct()
-    val affected = flagged.join(broadcast(affectedCodes), Seq("org_code"), "left_semi")
-    val unaffected = flagged.join(broadcast(affectedCodes), Seq("org_code"), "left_anti")
-      .drop("_row_idx")
-
-    val joined = affected.join(
-      broadcast(cleanLk.withColumnRenamed("old_code", "org_code")), Seq("org_code"), "left")
+    val (joined, unaffected) = splitByLookup(data.drop("org_name"), lookup)
 
     // date-based change indicator: +1 month for mergers, in-place for splits
     val w = Window.partitionBy(col("org_code"), col("final_code"))

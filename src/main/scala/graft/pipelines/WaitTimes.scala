@@ -64,25 +64,9 @@ object WaitTimes {
           .agg(min(col("_row_idx")).as("first_idx")),
         Seq("org_code"), Seq(col("first_idx").asc))
       .select(col("org_code"), col("org_name"))
-    val body = indexed.drop("org_name", "_row_idx")
-
     // problematic flag + affected split (R:459-478)
-    val problematicCodes = lookup.filter(col("problematic") === 1)
-      .select(col("old_code").as("org_code"))
-      .union(lookup.filter(col("problematic") === 1).select(col("final_code").as("org_code")))
-      .distinct()
-    val flagged = body
-      .join(broadcast(problematicCodes.withColumn("__p", lit(1))), Seq("org_code"), "left")
-      .withColumn("exp_problematic_org_change", when(col("__p").isNotNull, 1).otherwise(0))
-      .drop("__p")
-    val cleanLk = lookup.filter(col("problematic") === 0)
-      .select(col("old_code"), col("final_code"), col("experiences_split"))
-    val affectedCodes = cleanLk.select(col("old_code").as("org_code"))
-      .union(cleanLk.select(col("final_code").as("org_code"))).distinct()
-    val affected = flagged.join(broadcast(affectedCodes), Seq("org_code"), "left_semi")
-    val unaffected = flagged.join(broadcast(affectedCodes), Seq("org_code"), "left_anti")
-    val joined = affected.join(
-      broadcast(cleanLk.withColumnRenamed("old_code", "org_code")), Seq("org_code"), "left")
+    val (joined, unaffected) =
+      ReferenceAdjust.splitByLookup(indexed.drop("org_name", "_row_idx"), lookup)
 
     // change indicator: +1 month for mergers, in place for splits (R:487-496)
     val wChain = Window.partitionBy(col("org_code"), col("final_code"))

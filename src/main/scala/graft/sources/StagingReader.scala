@@ -1,8 +1,12 @@
 package graft.sources
 
 import graft.ops.Relational
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
+import scala.collection.immutable.ListMap
 
 /** Declarative per-vintage source spec: the canonical ingestion path
   * replacing the reference's copy-pasted read/rename blocks
@@ -99,8 +103,8 @@ object StagingReader {
       .map(_.name).filterNot(Set("fname", "sheet_name"))
     // backtick-quoted: staged names may carry readxl-style `...N` suffixes
     // (dots would otherwise parse as nested-field access)
-    val nulled = stringCols.foldLeft(renamed)((d, c) =>
-      d.withColumn(c, Relational.nullifySentinels(col(s"`$c`"), spec.naSentinels)))
+    val nulled = renamed.withColumns(ListMap.from(stringCols.map(c =>
+      c -> Relational.nullifySentinels(col(s"`$c`"), spec.naSentinels))))
 
     val dated = spec.fileDateRegex match {
       case Some((re, fmt)) =>
@@ -118,15 +122,23 @@ object StagingReader {
   }
 
   /** S4 — distributed Excel scan (.xlsx AND legacy .xls) with NO external
-    * jars: the `binaryFile` source ships each workbook's bytes to an
-    * executor, where [[Excel]] StAX-parses (xlsx) or [[Xls]] BIFF-parses
-    * (.xls) the selected sheet — per-file dispatch, so one glob covers the
-    * mixed vintages the reference collects. One task per file (workbook
-    * containers are not splittable); a 100 TB drop of many
-    * workbooks parallelises per file exactly like every production Excel
-    * connector.
+    * jars: each workbook's bytes are read on an executor, where [[Excel]]
+    * StAX-parses (xlsx) or [[Xls]] BIFF-parses (.xls) the selected sheet —
+    * per-file dispatch, so one glob covers the mixed vintages the reference
+    * collects. Workbook containers are not splittable, so the unit of work
+    * is a whole file: the path-sorted file list is cut into at most one
+    * contiguous slice per core, and each task opens its files through the
+    * Hadoop `FileSystem` (any configured scheme) with a configuration
+    * broadcast once per read.
+    *
+    * Nothing runs on the cluster before the first action: the globs are
+    * expanded and the schema probed on the driver, which opens the leading
+    * candidate files itself, one at a time.
     *
     * Selection semantics (matching the reference's readers):
+    *  - Paths follow the file source's listing rules: globs are expanded,
+    *    directories are listed recursively, and names starting with `_` or
+    *    `.` are skipped.
     *  - `sheetName` set: a file WITHOUT a matching sheet contributes no
     *    rows — the reference skips such files outright
     *    (build_datasets_critical_care_beds.R:47-57); `sheetIndex` is used
@@ -136,6 +148,7 @@ object StagingReader {
     *    into the schema.
     *  - Column names come from the first file (path order) that yields a
     *    non-empty selected sheet, with readxl's unique-name repair applied.
+    *  - Rows come out in path order, each file's rows in sheet order.
     *  - A row carrying NON-NULL cells beyond that schema fails loudly
     *    (silent truncation would drop data — staging families are
     *    homogeneous by contract); all-null padding from an oversized
@@ -147,11 +160,12 @@ object StagingReader {
                        renderDates: Boolean = true,
                        allSheets: Boolean = false,
                        fileNameFilter: Option[String] = None): DataFrame = {
-    val allFiles = spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-    val files = fileNameFilter
-      .map(re => allFiles.filter(regexp_extract(col("path"), "[^/]+$", 0).rlike(re)))
-      .getOrElse(allFiles)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val nameFilter = fileNameFilter.map(_.r)
+    val files: Seq[(String, Long)] = paths.flatMap(p => listFiles(new Path(p), hadoopConf))
+      .filter(f => nameFilter.forall(_.findFirstIn(f._1.replaceAll(".*/", "")).isDefined))
+      .sortBy(_._1)
+    require(files.nonEmpty, s"no files matched: $paths")
 
     // container dispatch by extension behind one neutral view: legacy
     // BIFF (.xls) and OOXML (.xlsx/.xlsm) expose the same
@@ -192,30 +206,12 @@ object StagingReader {
     // schema from the first file (path order) yielding a non-empty selected
     // sheet — same contract as the CSV reader's first-file header, but a
     // leading file the sheet filter skips cannot poison the schema. The
-    // probe collects PATH STRINGS only (the content column is pruned from
-    // the listing scan — no file bytes move for it) and then pulls
-    // candidate files in small batches — ONE Spark job per batch, not one
-    // per file — so a broad glob whose leading files all lack the sheet
-    // (the exact case the probe exists for) costs O(files/batch) driver
-    // round-trips, with driver memory bounded by batch × workbook size.
-    val sortedPaths = files.select(col("path")).collect().map(_.getString(0)).sorted
-    require(sortedPaths.nonEmpty, s"no files matched: $paths")
-    val probeBatch = 8
-    var firstGrid: Vector[Array[String]] = Vector.empty
-    var bi = 0
-    while (bi < sortedPaths.length && firstGrid.isEmpty) {
-      val batch = sortedPaths.slice(bi, bi + probeBatch)
-      val bytesByPath = spark.read.format("binaryFile").load(batch: _*)
-        .select(col("path"), col("content")).collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-      val it = batch.iterator.flatMap(p => bytesByPath.get(p).map(p -> _))
-      while (it.hasNext && firstGrid.isEmpty) {
-        val (p, bytes) = it.next()
-        firstGrid = sheetsOf(p, bytes)
-          .collectFirst { case (_, g) if g.nonEmpty => g }.getOrElse(Vector.empty)
-      }
-      bi += probeBatch
-    }
+    // driver opens candidates one at a time and stops at the first hit, so
+    // driver memory holds one workbook.
+    val firstGrid = files.iterator
+      .flatMap { case (p, len) =>
+        sheetsOf(p, readFile(p, len, hadoopConf)).map(_._2).find(_.nonEmpty) }
+      .nextOption().getOrElse(Vector.empty)
     require(firstGrid.nonEmpty,
       s"no file yields a non-empty sheet (name=$sheetName) after skip=$skip")
     val width = firstGrid.head.length
@@ -247,9 +243,11 @@ object StagingReader {
           org.apache.spark.sql.types.StringType, nullable = true)).toSeq)
 
     val dataRows = if (header) 1 else 0
-    val rdd = files.rdd.flatMap { r =>
-      val fname = r.getString(0).replaceAll(".*/", "")
-      sheetsOf(r.getString(0), r.getAs[Array[Byte]](1)).flatMap { case (sn, grid) =>
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    val slices = math.min(files.length, spark.sparkContext.defaultParallelism)
+    val rdd = spark.sparkContext.parallelize(files, slices).flatMap { case (path, len) =>
+      val fname = path.replaceAll(".*/", "")
+      sheetsOf(path, readFile(path, len, conf.value.value)).flatMap { case (sn, grid) =>
         grid.drop(dataRows).map { cells =>
           // loud only when truncation would drop a NON-NULL cell: sheet
           // bounding boxes often exceed the data region via footnote cells,
@@ -271,6 +269,35 @@ object StagingReader {
       }
     }
     spark.createDataFrame(rdd, schema)
+  }
+
+  /** The file source's listing rules on the driver: globs expanded,
+    * directories listed recursively, `_`/`.`-prefixed and in-flight
+    * `._COPYING_` names skipped. Returns (qualified path, length) per file.
+    */
+  private def listFiles(pattern: Path, conf: Configuration): Seq[(String, Long)] = {
+    val fs = pattern.getFileSystem(conf)
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    }
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(visible).flatMap(leaves)
+      else Seq(st)
+    val roots = Option(fs.globStatus(pattern)).map(_.toSeq).getOrElse(Nil)
+    if (roots.isEmpty) throw new java.io.FileNotFoundException(s"Path does not exist: $pattern")
+    roots.filter(st => st.isDirectory || visible(st)).flatMap(leaves)
+      .map(st => st.getPath.toString -> st.getLen)
+  }
+
+  private def readFile(path: String, len: Long, conf: Configuration): Array[Byte] = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    try {
+      val bytes = new Array[Byte](Math.toIntExact(len))
+      in.readFully(bytes)
+      bytes
+    } finally in.close()
   }
 
   /** S8 — first 19xx/20xx year in a filename-ish string, "" when absent

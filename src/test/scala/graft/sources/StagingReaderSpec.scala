@@ -1,9 +1,12 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 class StagingReaderSpec extends AnyFunSuite with SparkSpec {
 
@@ -79,5 +82,64 @@ class StagingReaderSpec extends AnyFunSuite with SparkSpec {
     val files = new java.io.File(s"$out/c").listFiles.filter(_.getName.endsWith(".csv"))
     assert(files.length == 1, "reference-compatible export is exactly one csv file")
     assert(spark.read.option("header", "true").csv(s"$out/c").count() == 2)
+  }
+
+  test("excel read: no job before the first action, one task per core, same rows over 40 workbooks") {
+    import ExcelFixtures.xlsx
+    import XlsFixtures.xls
+    val dir = Files.createTempDirectory("graft_staging_many")
+    def put(name: String, bytes: Array[Byte]): Unit = Files.write(dir.resolve(name), bytes)
+    def sheet(rows: Seq[Seq[Any]]) = Seq("Front" -> Seq(Seq("title")),
+      "Provider" -> (Seq(Seq("org_code", "n_beds"): Seq[Any]) ++ rows))
+    // first in path order, but without the selected sheet: it must neither
+    // drive the schema nor contribute rows
+    put("a_summary.xlsx", xlsx(Seq("Notes" -> Seq(Seq("junk", "junk2", "junk3")))))
+    // excluded by the filename filter; not a workbook, so parsing it fails
+    put("England_totals.xlsx", "this is not a zip".getBytes("UTF-8"))
+    // hidden: the file source's listing skips it; parsed, it would fail the
+    // read with a non-null cell beyond the schema
+    put("_hidden.xlsx", xlsx(sheet(Seq(Seq("HID", 1, "overflow")))))
+    val data = (1 to 37).map { i =>
+      val rows = Seq(Seq(f"R$i%02dA", i), Seq(f"R$i%02dB", 100 + i))
+      val name = f"beds_$i%02d"
+      if (i % 3 == 0) { put(s"$name.xls", xls(sheet(rows))); s"$name.xls" -> rows }
+      else { put(s"$name.xlsx", xlsx(sheet(rows))); s"$name.xlsx" -> rows }
+    }
+    assert(dir.toFile.listFiles().length == 40, "above the 32-path parallel-listing threshold")
+
+    val jobs = new ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull ->
+          e.stageInfos.map(_.numTasks).sum)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("staging-read", "readExcelStaging")
+      val df = StagingReader.readExcelStaging(spark, Seq(s"$dir/*"),
+        sheetName = Some("^providers?$"), fileNameFilter = Some("^(?!England)"))
+      sc.setJobGroup("staging-action", "collect")
+      val got = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+      sc.clearJobGroup()
+      // listener events arrive in order: once the action's job is seen,
+      // every job the read itself started has been seen too
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.asScala.exists(_._1 == "staging-action") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val byGroup = jobs.asScala.toSeq.groupBy(_._1)
+      assert(byGroup.getOrElse("staging-read", Nil).isEmpty,
+        s"readExcelStaging started jobs before any action: ${byGroup.get("staging-read")}")
+      assert(byGroup("staging-action").map(_._2).sum <= sc.defaultParallelism,
+        s"the parse runs one task per core, not per file: ${byGroup("staging-action")}")
+
+      assert(df.columns.toSeq == Seq("fname", "org_code", "n_beds"))
+      // path order across files, sheet order within each
+      assert(got == data.flatMap { case (f, rows) =>
+        rows.map(r => (f, r(0).toString, r(1).toString)) })
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

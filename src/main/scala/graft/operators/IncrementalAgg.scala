@@ -62,25 +62,7 @@ object IncrementalAgg {
     * spec — the [[IncrementalKmv.compactStore]] discipline.
     */
   def compactStore(spark: SparkSession, table: String,
-                   groupCols: Seq[String], measureCols: Seq[String]): Unit = {
-    require(!table.contains("."),
-      s"compactStore expects an unqualified table name, got '$table'")
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table '$table' is not bucketed — was it created by appendToStore?"))
-    val folded = merged(spark, table, groupCols, measureCols)
-      .repartition(spec.numBuckets,
-        pmod(hash(spec.bucketColumnNames.map(col): _*), lit(spec.numBuckets)))
-    val tmp = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    val w = folded.write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-       w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-     else w).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-  }
+                   groupCols: Seq[String], measureCols: Seq[String]): Unit =
+    graft.sources.Sinks.rewriteStaged(spark, table,
+      merged(spark, table, groupCols, measureCols))
 }

@@ -57,7 +57,7 @@ object IncrementalAnn {
     * (and the store-side shuffle-free ingest plan) preserved verbatim.
     */
   def compactStore(spark: SparkSession, table: String): Unit =
-    graft.sources.Sinks.compactBucketed(spark, table)
+    IncrementalDedup.compactStore(spark, table)
 
   private def verified(pairs: DataFrame, minCosine: Double): DataFrame =
     pairs

@@ -78,9 +78,14 @@ object IncrementalDedup {
     * bucket spec so every cross-generation join stays store-side
     * shuffle-free (spec-pinned: same plan, bit-identical results).
     * Run it on a maintenance cadence (every N ingests), not per batch.
+    * A table without a bucket spec is refused: it is not a store.
     */
-  def compactStore(spark: SparkSession, table: String): Unit =
-    graft.sources.Sinks.compactBucketed(spark, table)
+  def compactStore(spark: SparkSession, table: String): Unit = {
+    require(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec.isDefined,
+      s"table '$table' is not bucketed — nothing to preserve, use a plain rewrite")
+    graft.sources.Sinks.rewriteStaged(spark, table, spark.table(table))
+  }
 
   /** Candidate pairs between the store (doc_a) and a new batch (doc_b):
     * equi-join on (band, bucket). The store scan's bucketing satisfies the
@@ -258,8 +263,8 @@ object IncrementalDedup {
   }
 
   /** The PHYSICAL delete: rewrite the store without the tombstoned rows
-    * (same writer-bucket-id routing as the compactions, bucket spec
-    * preserved so every downstream join keeps its plan), then drop the
+    * ([[graft.sources.Sinks.rewriteStaged]], bucket spec preserved so
+    * every downstream join keeps its plan), then drop the
     * tombstone table — after this, the deleted documents' signatures no
     * longer exist on disk, which is what a retention obligation actually
     * requires. Run between ingests; the single-writer contract covers
@@ -269,23 +274,7 @@ object IncrementalDedup {
   def purgeTombstoned(spark: SparkSession, table: String): Unit = {
     val t = tombstoneTable(table)
     if (!spark.catalog.tableExists(t)) return
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table '$table' is not bucketed — purge expects a dedup store"))
-    val tmp = table + "__purging"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    val cols = spec.bucketColumnNames.map(col)
-    val live = liveStore(spark, table)
-      .repartition(spec.numBuckets, pmod(hash(cols: _*), lit(spec.numBuckets)))
-    val w = live.write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-       w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-     else w).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    graft.sources.Sinks.rewriteStaged(spark, table, liveStore(spark, table))
     graft.sources.Sinks.dropTableAndStaleLocation(spark, t)
   }
 }

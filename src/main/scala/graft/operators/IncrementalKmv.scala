@@ -72,38 +72,16 @@ object IncrementalKmv {
       mergedSketches(spark, table, groupCol, k), groupCol, k)
 
   /** Fold the sketch log to one row per group, preserving the bucket
-    * spec (read from the catalog) so post-compaction reads keep planning
-    * exchange-free — the [[graft.sources.Sinks.compactBucketed]]
-    * discipline plus the bottom-k merge. Estimates are bit-identical
-    * before and after (spec-pinned): the merge is the same pure set
-    * function the read path applies.
+    * spec so post-compaction reads keep planning exchange-free — the
+    * [[graft.sources.Sinks.rewriteStaged]] swap with the bottom-k merge
+    * as the surviving rows. Estimates are bit-identical before and after
+    * (spec-pinned): the merge is the same pure set function the read
+    * path applies.
     */
   def compactStore(spark: SparkSession, table: String, groupCol: String,
-                   k: Int): Unit = {
-    require(!table.contains("."),
-      s"compactStore expects an unqualified table name, got '$table'")
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table '$table' is not bucketed — was it created by appendToStore?"))
-    val merged = mergedSketches(spark, table, groupCol, k)
-      .repartition(spec.numBuckets,
-        pmod(hash(spec.bucketColumnNames.map(col): _*), lit(spec.numBuckets)))
-    val tmp = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    val w = merged.write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-       w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-     else w).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    // the swap loses table properties — re-stamp k so the next
-    // maintainStore pass can still fold without a caller parameter
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-      s"('${graft.streaming.StoreMaintenance.KmvKProp}'='$k')")
-  }
+                   k: Int): Unit =
+    graft.sources.Sinks.rewriteStaged(spark, table,
+      mergedSketches(spark, table, groupCol, k))
 
   /** Drop the store AND any stale warehouse directory a previous session
     * orphaned (the [[IvfPq.buildStore]] rebuild discipline) — call

@@ -165,7 +165,7 @@ object InvertedIndex {
     * [[IncrementalDedup.appendToStore]] pattern for the posting
     * family). Sort order holds per append file, which row-group
     * pruning still exploits; compact on a maintenance cadence
-    * ([[graft.sources.Sinks.compactBucketed]]) to restore one file per
+    * ([[graft.sources.Sinks.rewriteStaged]]) to restore one file per
     * bucket.
     */
   def appendToPhraseStore(docs: DataFrame, idCol: String, textCol: String,

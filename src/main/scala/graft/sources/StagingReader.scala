@@ -397,79 +397,71 @@ object Sinks {
     }
   }
 
-  /** Compact a bucketed table in place: rewrite all its data into a fresh
-    * table with the SAME bucket/sort spec (read from the catalog), then
-    * atomically swap names. Every `mode("append")` to a bucketed table
-    * adds one file per (bucket × writing task) — an incremental store
-    * ingesting thousands of batches accumulates thousands of small files
-    * per bucket, and small-file count, not data size, becomes the scan
-    * cost at the 100 TB steady state. The rewrite pre-partitions on the
-    * bucket columns into exactly `buckets` tasks (repartition and the
-    * bucketed writer share the HashPartitioning family), so the
-    * compacted table carries ONE file per non-empty bucket; the bucket
-    * spec — and with it every shuffle-free read-time join the store's
-    * consumers pin — survives verbatim (IncrementalDedupSpec /
-    * IncrementalAnnSpec pin results AND plan shape across compaction).
+  /** The name a [[rewriteStaged]] writes its rewrite under before the
+    * swap. A crash between the swap's drop and rename leaves the rewrite
+    * here, so the crash guards name it in their recovery message.
     */
-  def compactBucketed(spark: SparkSession, table: String): Unit = {
-    require(!table.contains("."),
-      s"compactBucketed expects an unqualified table name, got '$table'")
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table '$table' is not bucketed — nothing to preserve, use a plain rewrite"))
-    val tmp = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    val cols = spec.bucketColumnNames.map(col)
-    // Route each row by the WRITER'S bucket-id expression —
-    // pmod(murmur3(bucketCols), buckets), the same formula the bucketed
-    // writer applies — so every bucket's rows land wholly in one task and
-    // the writer emits exactly one file per non-empty bucket. (A plain
-    // repartition(buckets, bucketCols) is not reliable here: its shuffle
-    // can be elided against the bucketed scan's reported partitioning
-    // while the actual read runs on file splits, leaving buckets spread
-    // across tasks.)
-    val df = spark.table(table)
-      .repartition(spec.numBuckets, pmod(hash(cols: _*), lit(spec.numBuckets)))
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-       w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-     else w).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-  }
+  def stageName(table: String): String = table + "__compacting"
 
-  /** [[compactBucketed]]'s sibling for PARTITIONED stores (the IVF
-    * serving index shape): per-batch appends accumulate one file per
-    * (partition × task) per ingest, and at the 100 TB steady state the
-    * small-file count — not the data — becomes the probe cost. Rewrites
-    * to one file per partition value (each value's rows are hashed
-    * wholly into one task, so the partitioned writer emits exactly one
-    * file there), preserving the partition spec and therefore every
-    * probe's catalog pruning. Same tmp + rename swap; run on a
-    * maintenance cadence, not per batch.
+  /** Rewrite a store table in place to `rows`, the rows of it that
+    * survive, preserving its layout: the one staged swap every
+    * compaction, fold, collapse and purge shares, so each of those only
+    * says which rows survive.
+    *
+    * Every `mode("append")` adds one file per (bucket or partition ×
+    * writing task), and at the 100 TB steady state the small-file count,
+    * not the data, becomes the scan cost. The rewrite writes one file per
+    * non-empty bucket or partition under the layout the catalog records,
+    * so every shuffle-free join and pruned probe the store's consumers
+    * pin survives (IncrementalDedupSpec / IncrementalAnnSpec pin results
+    * AND plan shape across compaction):
+    *  - bucketed: each row is routed by the WRITER'S bucket-id expression,
+    *    pmod(murmur3(bucketCols), buckets), so every bucket lands wholly
+    *    in one task. A plain repartition(buckets, bucketCols) is not
+    *    reliable here: its shuffle can be elided against the bucketed
+    *    scan's reported partitioning while the actual read runs on file
+    *    splits, leaving buckets spread across tasks;
+    *  - partitioned: each partition value's rows hash into one task, and
+    *    `MSCK REPAIR` runs after the swap — the rename moves the table
+    *    DIRECTORY but the catalog's per-partition locations still
+    *    reference the stage path, so every scan would read empty;
+    *  - neither: a plain rewrite.
+    * The stage is written completely before the table is dropped and
+    * renamed into its place, and the table's `graft.*` properties (the
+    * family parameters the ingests stamp) are re-applied, since the swap
+    * would lose them. Run between ingests — the single-writer contract
+    * covers maintenance too.
     */
-  def compactPartitioned(spark: SparkSession, table: String): Unit = {
+  def rewriteStaged(spark: SparkSession, table: String, rows: DataFrame): Unit = {
     require(!table.contains("."),
-      s"compactPartitioned expects an unqualified table name, got '$table'")
+      s"rewriteStaged expects an unqualified table name, got '$table'")
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
     val pcols = meta.partitionColumnNames
-    require(pcols.nonEmpty,
-      s"table '$table' is not partitioned — nothing to preserve, use a plain rewrite")
-    val tmp = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    spark.table(table)
-      .repartition(pcols.map(col): _*)
-      .write.mode("overwrite").format("parquet")
-      .partitionBy(pcols: _*).saveAsTable(tmp)
+    val w = meta.bucketSpec match {
+      case Some(spec) =>
+        val b = rows
+          .repartition(spec.numBuckets,
+            pmod(hash(spec.bucketColumnNames.map(col): _*), lit(spec.numBuckets)))
+          .write.bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+            spec.bucketColumnNames.tail: _*)
+        if (spec.sortColumnNames.nonEmpty)
+          b.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
+        else b
+      case None if pcols.nonEmpty =>
+        rows.repartition(pcols.map(col): _*).write.partitionBy(pcols: _*)
+      case None => rows.write
+    }
+    val stage = stageName(table)
+    spark.sql(s"DROP TABLE IF EXISTS `$stage`")
+    w.mode("overwrite").format("parquet").saveAsTable(stage)
     spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    // the rename moves the table DIRECTORY but the catalog's
-    // per-partition locations still reference the tmp path — re-derive
-    // them from the moved directory layout, or every scan reads empty
-    spark.sql(s"MSCK REPAIR TABLE `$table`")
+    spark.sql(s"ALTER TABLE `$stage` RENAME TO `$table`")
+    if (meta.bucketSpec.isEmpty && pcols.nonEmpty)
+      spark.sql(s"MSCK REPAIR TABLE `$table`")
+    val props = meta.properties.filter(_._1.startsWith("graft."))
+    if (props.nonEmpty)
+      spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
+        props.map { case (k, v) => s"'$k'='$v'" }.mkString("(", ", ", ")"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -25,8 +25,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * store+ledger over a source that has since grown produces colliding
   * ids with DIFFERENT data — an id-only ledger would silently drop that
   * data; here the fingerprint mismatch makes those batches run (the old
-  * rows re-append — at-least-once store rows, and [[compactStore]]
-  * reclaims the space), while a replay of IDENTICAL data stays a no-op.
+  * rows re-append — at-least-once store rows, and
+  * [[StoreMaintenance.maintainStore]] reclaims the space), while a
+  * replay of IDENTICAL data stays a no-op.
   * The ledger row lands AFTER the store append, so a crash exactly
   * between the two re-appends one batch on restart — candidate
   * derivation is a DISTINCT pair set, so the duplicate rows perturb no
@@ -100,7 +101,7 @@ object StoreIngest {
     * query may ingest a given store table at a time, and the ledger must
     * not be dropped/rebuilt externally while a query is running — a
     * second concurrent writer (or an external ledger rewrite) would
-    * operate on stale commit state. All six store read sides tolerate a
+    * operate on stale commit state. Every store read side tolerates a
     * duplicate append, so the failure mode is waste, not corruption —
     * but the contract is one writer.
     */
@@ -116,7 +117,7 @@ object StoreIngest {
     * appended row with the batch identity lets the read side collapse a
     * crash-window double-append exactly (see
     * [[graft.operators.HistogramSketch.quantilesFromTaggedStore]]),
-    * where the six set-union-style stores simply don't care.
+    * where the set-union-style stores simply don't care.
     */
   private def ledgeredIngestTagged(docs: DataFrame, table: String,
                                    checkpointDir: String, trigger: Trigger)
@@ -280,10 +281,10 @@ object StoreIngest {
           s"('${StoreMaintenance.KmvKProp}'='$k')")
     }
 
-  /** Streaming ingest into the positional PHRASE index — the fourth
-    * store family through the ledgered core: each micro-batch tokenizes
-    * its documents and appends their (doc_id, pos, token) occurrence
-    * rows under the store's doc_id bucketing
+  /** Streaming ingest into the positional PHRASE index through the
+    * ledgered core: each micro-batch tokenizes its documents and appends
+    * their (doc_id, pos, token) occurrence rows under the store's doc_id
+    * bucketing
     * ([[graft.operators.InvertedIndex.appendToPhraseStore]]).
     * Occurrences are per-doc facts, so the accumulated store is
     * row-identical to the one-shot [[graft.operators.InvertedIndex
@@ -302,11 +303,11 @@ object StoreIngest {
         batch, idCol, textCol, table, buckets)
     }
 
-  /** Streaming ingest into the CHAR-GRAM WINNOWING fingerprint index —
-    * the fifth store family: each micro-batch selects its documents'
-    * winnowing fingerprints (a pure per-document function — char grams
-    * need no corpus-trained tokenizer, which is what makes the family
-    * streamable) and appends them under the store's fp bucketing
+  /** Streaming ingest into the CHAR-GRAM WINNOWING fingerprint index:
+    * each micro-batch selects its documents' winnowing fingerprints (a
+    * pure per-document function — char grams need no corpus-trained
+    * tokenizer, which is what makes the family streamable) and appends
+    * them under the store's fp bucketing
     * ([[graft.operators.Winnowing.appendToStore]]). Selected
     * fingerprints are per-doc facts, so the accumulated store is
     * row-identical to the one-shot [[graft.operators.Winnowing
@@ -326,10 +327,9 @@ object StoreIngest {
         idCol, table, buckets)
     }
 
-  /** Streaming ingest into the DECONTAMINATION gram-reference store —
-    * the sixth store family: benchmark/eval documents stream in and
-    * their distinct word-k-gram hash keys append under the store's
-    * _gram_key bucketing ([[graft.operators.Decontaminate
+  /** Streaming ingest into the DECONTAMINATION gram-reference store:
+    * benchmark/eval documents stream in and their distinct word-k-gram
+    * hash keys append under the store's _gram_key bucketing ([[graft.operators.Decontaminate
     * .appendToGramStore]]). Gram keys are per-document facts and the
     * probe reads the store's DISTINCT key set, so crash-window replays
     * and cross-batch duplicates are answer-invariant by construction —
@@ -365,12 +365,12 @@ object StoreIngest {
     }
 
   /** Streaming ingest into the histogram-sketch quantile store — the
-    * SEVENTH store family, and the one that actually exercises the
-    * ledger: histogram state is COUNT-ADDITIVE, so a replayed batch is
-    * NOT collapsed by any read-side distinct-key construction the way
-    * all six set-union-style stores collapse theirs — an uncaught
-    * replay double-counts bins and shifts every served quantile. The
-    * ledger provides exactly-once batch admission, and the per-row
+    * store family that actually exercises the ledger: histogram state is
+    * COUNT-ADDITIVE, so a replayed batch is NOT collapsed by any
+    * read-side distinct-key construction the way the set-union-style
+    * stores collapse theirs — an uncaught replay double-counts bins and
+    * shifts every served quantile. The ledger provides exactly-once
+    * batch admission, and the per-row
     * (batch id, fingerprint) tag closes the ledger-after-append crash
     * window ([[graft.operators.HistogramSketch.appendToStoreTagged]]).
     * Honest caveat, documented once here for the family: a FRESH
@@ -391,8 +391,8 @@ object StoreIngest {
     }
 
   /** Streaming CORPUS ingest into the persisted IVF serving index — the
-    * EIGHTH store family, and the maintenance half of the q217 serving
-    * story: vectors stream in, each micro-batch assigns ONLY its own
+    * maintenance half of the q217 serving story: vectors stream in, each
+    * micro-batch assigns ONLY its own
     * rows to cells against the FIXED centroids trained at
     * [[graft.operators.Similarity.initIvfStore]] time (O(batch) per
     * ingest, the store-family discipline) and appends under the store's
@@ -418,36 +418,14 @@ object StoreIngest {
         table, centroids)
     }
 
-  /** Streaming k-NN SERVING: query vectors stream in, each micro-batch
-    * probes a PERSISTED cell-partitioned IVF store
-    * ([[graft.operators.Similarity.buildIvfStore]], built ONCE here at
-    * query start — the index-build work), and the answers append to a
-    * results log — the inference-serving shape of a feature pipeline,
-    * where q193 was the index-BUILD shape. Per-batch cost is
-    * O(|batch| + rows in the probed nprobe cells): the store scan is
-    * partition-pruned at the catalog and the centroid sidecar loads
-    * once per started query (the committed-map discipline) — the
-    * corpus-wide cell assignment is NEVER re-derived inside the serving
-    * loop (the round-14 plan defect: `ivfTopK(corpus, batch, ...)` per
-    * batch re-assigned the whole corpus per micro-batch). The stored
-    * answers are bit-identical to the inline `ivfTopK` (same
-    * deterministic centroid draw, exact cosine over full stored
-    * vectors — spec-pinned), so the one-shot oracle applies verbatim.
-    *
-    * Per-query answers are pure functions of (query, corpus) —
-    * independent of how the stream slices and of every other query — so
-    * the results log is replay-idempotent BY ROW VALUE: a crash-window
-    * double-append duplicates exact rows, and the reader's distinct
-    * collapses them (read results with `spark.table(table).distinct()`).
-    */
   /** The edge log paired with a distance store. */
   def distanceEdgeTable(table: String): String = table + "_edges"
 
-  /** Streaming shortest-path distance maintenance — the NINTH store
-    * family: edge batches stream in, and the store continuously holds
-    * the FIXPOINT hop distances from a fixed seed set over the union of
-    * everything ingested so far (the artifact that serves "how far is
-    * this node from the trusted core" without a per-query BFS).
+  /** Streaming shortest-path distance maintenance: edge batches stream
+    * in, and the store continuously holds the FIXPOINT hop distances
+    * from a fixed seed set over the union of everything ingested so far
+    * (the artifact that serves "how far is this node from the trusted
+    * core" without a per-query BFS).
     * Fixpoint — not a round cap — is what makes the state
     * SLICING-INVARIANT: however the stream slices the edge list, the
     * fixpoint on the union graph is the same table, so the one-shot
@@ -465,7 +443,9 @@ object StoreIngest {
     * fixpoint, and every crash window is safe by value: a replayed
     * batch finds no improvements (appends nothing), duplicate edge-log
     * rows are harmless to min-relaxation, and a double-appended
-    * improvement row has an unchanged min.
+    * improvement row has an unchanged min. Both logs compact through
+    * [[graft.sources.Sinks.rewriteStaged]] ([[compactDistanceStore]],
+    * [[compactDistanceEdgeLog]]).
     */
   def ingestDistanceStore(edges: DataFrame, srcCol: String, dstCol: String,
                           seeds: DataFrame, table: String,
@@ -499,32 +479,17 @@ object StoreIngest {
 
   /** COLLAPSING compaction for the distance store: rewrite the
     * improvements log to its per-node minimum — one row per node, the
-    * current fixpoint — preserving the bucket spec (same tmp + rename
-    * swap as `Sinks.compactBucketed`, same writer-bucket-id routing so
-    * each bucket lands in one file). Unlike the rewrite-in-place
-    * compactions, this one SHRINKS state: the log grows by one row per
-    * improvement (a node can improve once per graph growth step), and
-    * the collapse resets it to node count. Served reads are unchanged
-    * (min of a min-collapsed log is the same min). Run between ingests
-    * — the single-writer contract covers maintenance too.
+    * current fixpoint — through [[graft.sources.Sinks.rewriteStaged]]
+    * (bucket spec preserved, one file per bucket). Unlike the
+    * rewrite-in-place compactions, this one SHRINKS state: the log grows
+    * by one row per improvement (a node can improve once per graph growth
+    * step), and the collapse resets it to node count. Served reads are
+    * unchanged (min of a min-collapsed log is the same min).
     */
   def compactDistanceStore(spark: org.apache.spark.sql.SparkSession,
-                           table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table '$table' is not bucketed — not a distance store"))
-    val tmp = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    graft.operators.Bfs.distancesFromStore(spark, table)
-      .repartition(spec.numBuckets,
-        pmod(hash(col("node")), lit(spec.numBuckets)))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets, "node").sortBy("node")
-      .saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-  }
+                           table: String): Unit =
+    graft.sources.Sinks.rewriteStaged(spark, table,
+      graft.operators.Bfs.distancesFromStore(spark, table))
 
   /** Dedup compaction for the distance store's EDGE log: the log
     * appends every batch's edges forever, and while duplicate edges
@@ -533,40 +498,23 @@ object StoreIngest {
     * scans the log, so an R-times-replayed edge costs R× forever.
     * Collapsing to DISTINCT keeps the log edge-set-bounded; served
     * reads and future ingests are unchanged by construction (relax
-    * over a multiset of edges ≡ relax over its support). Same
-    * tmp + rename swap as [[compactDistanceStore]], bucket spec
-    * preserved. Run between ingests — the single-writer contract
-    * covers maintenance too.
+    * over a multiset of edges ≡ relax over its support).
     */
   def compactDistanceEdgeLog(spark: org.apache.spark.sql.SparkSession,
                              table: String): Unit = {
     val edgeLog = distanceEdgeTable(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(edgeLog))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table '$edgeLog' is not bucketed — not a distance edge log"))
-    val srcCol = spec.bucketColumnNames.head
-    val tmp = edgeLog + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    spark.table(edgeLog).distinct()
-      .repartition(spec.numBuckets,
-        pmod(hash(col(srcCol)), lit(spec.numBuckets)))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets, srcCol).sortBy(srcCol)
-      .saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$edgeLog`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$edgeLog`")
+    graft.sources.Sinks.rewriteStaged(spark, edgeLog, spark.table(edgeLog).distinct())
   }
 
-  /** STREAMING minimum-spanning-forest ingest — the TENTH store family,
-    * and the one whose state is NODE-BOUNDED no matter how many edges
+  /** STREAMING minimum-spanning-forest ingest — the store family whose
+    * state is NODE-BOUNDED no matter how many edges
     * ever arrive: each micro-batch folds into the current forest via
     * [[graft.operators.Mst.mergeBatch]] (MSF(E₁∪E₂) = MSF(MSF(E₁)∪E₂),
     * the sparsification lemma — so the store always equals the one-shot
     * forest over everything ingested, however the stream sliced it) and
     * appends the NEW forest as a snapshot tagged with its batch id.
     *
-    * Unlike the nine append-only-log families, forest edges can be
+    * Unlike the append-only-log families, forest edges can be
     * EVICTED by later batches (a lighter edge makes an old one
     * cycle-heaviest), so the state is snapshot-VERSIONED rather than
     * log-folded: the served read ([[mstForestFromStore]]) returns the
@@ -637,36 +585,144 @@ object StoreIngest {
 
   /** Drop superseded snapshots: rewrite the store to the latest
     * committed snapshot only (tag preserved, so reads and later ingests
-    * are unchanged). The tmp + rename swap of the other compactions;
-    * run between ingests — the single-writer contract covers
-    * maintenance too.
+    * are unchanged).
     */
   def compactMstStore(spark: org.apache.spark.sql.SparkSession,
                       table: String): Unit = {
     val last = spark.table(ledgerTable(table))
       .agg(max(col("batch_id"))).head().getLong(0)
-    val tmp = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    spark.table(table).filter(col("snap") === last).distinct()
-      .write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    graft.sources.Sinks.rewriteStaged(spark, table,
+      spark.table(table).filter(col("snap") === last).distinct())
   }
 
-  /** The tail-state table paired with a skip-gram store. */
+  /** The tail-state table paired with a skip-gram or session store. */
   def tailsTable(table: String): String = table + "_tails"
 
-  /** Streaming skip-gram co-occurrence ingest — the ELEVENTH store
-    * family, and the first whose per-key state is a sliding WINDOW of the
-    * stream rather than a set, a min, or a snapshot: the item2vec pair
-    * statistic ([[graft.ops.Sequences.skipGramPairs]]) accumulates while
-    * events arrive, without ever re-ranking history.
+  /** The committed state of a (batch id, fingerprint)-tagged log of the
+    * store `table`: its DISTINCT rows whose tag the LEDGER has committed,
+    * so a crash-window append whose ledger row never landed is invisible
+    * and a replay's duplicate rows collapse. `users` keeps only those
+    * `__user`s; a non-empty `latest` keeps each `__user`'s first `keep`
+    * rows under that ordering. The one read of committed prior state for
+    * the skip-gram and session stores' ingests, serves and tail
+    * compactions — they reuse it and never recompute history.
+    */
+  private def committedLog(spark: org.apache.spark.sql.SparkSession,
+                           table: String, log: String,
+                           users: Option[DataFrame] = None,
+                           latest: Seq[Column] = Nil, keep: Int = 1): DataFrame = {
+    val committed = spark.table(ledgerTable(table))
+      .select(col("batch_id").as("__b"), col("fp").as("__f"))
+    val rows = spark.table(log).distinct()
+      .join(committed, col("__batch") === col("__b") &&
+        col("__fp") === col("__f"), "left_semi")
+    val scoped = users.fold(rows)(rows.join(_, Seq("__user"), "left_semi"))
+    if (latest.isEmpty) scoped
+    else scoped
+      .withColumn("__tr", row_number().over(Window
+        .partitionBy(col("__user")).orderBy(latest: _*)))
+      .filter(col("__tr") <= keep)
+      .drop("__tr")
+  }
+
+  /** A skip-gram tail's latest-first order: its last `window` events. */
+  private val SkipGramLatest = Seq(col("__rn").desc)
+
+  /** A session tail's latest-first order: its open session. */
+  private val SessionLatest =
+    Seq(col("__sid").desc, col("__last").desc, col("__ltie").desc)
+
+  /** The ingest both tailed families (skip-gram, session) share: a
+    * [[ledgeredIngestTagged]] whose batch body first
+    *   1. fails loudly on the missing-tails crash state: a committed
+    *      ledger with NO tails table is the drop-to-rename window of a
+    *      crashed tail compaction, and treating it as a first run would
+    *      silently `loss`; the compacted rewrite survives under the
+    *      staged name;
+    *   2. reads each arriving user's COMMITTED tail (`tailCols`, the
+    *      first `keep` rows under `latest`) and rebases it on a cached
+    *      RDD leaf — the tails table is appended below, and an
+    *      un-materialized read would be invalidated mid-flight (the
+    *      refreshDistances discipline);
+    *   3. enforces the order-contiguity contract: every batch user with a
+    *      committed tail must START strictly after that tail's last
+    *      (order, tie) event, which `tailLast` gives per `__user` as
+    *      `__tmax` — otherwise the incremental ranks or gaps are silently
+    *      not the one-shot ones. Nothing is appended on failure;
+    * then runs the family's own `extend(batch, tails, batchId, fp)`, and
+    * stamps `prop` when the tails table is created, so maintainStore reads
+    * the family parameter off the table. The tails table is a third
+    * owner-visible table beyond the (table, ledger) pair the shared core
+    * refreshes, so the owner's listing of it is refreshed here.
+    */
+  private def ingestTailed(events: DataFrame, userCol: String,
+                           orderCol: Column, tieCol: Column,
+                           table: String, checkpointDir: String, trigger: Trigger,
+                           family: String, loss: String, prop: (String, String),
+                           tailCols: Seq[(String, Column)], latest: Seq[Column],
+                           keep: Int, offendersLabel: String,
+                           tailLast: DataFrame => DataFrame)
+                          (extend: (DataFrame, DataFrame, Long, (Long, Long)) => Unit): StreamingQuery = {
+    val owner = events.sparkSession
+    ledgeredIngestTagged(events, table, checkpointDir, trigger) {
+      (batch, batchId, fp) =>
+        val s = batch.sparkSession
+        val tails = tailsTable(table)
+        val ledger = ledgerTable(table)
+        val tailsExists = s.catalog.tableExists(tails)
+        val ledgerExists = s.catalog.tableExists(ledger)
+        if (ledgerExists && !tailsExists && !s.table(ledger).limit(1).isEmpty)
+          throw new IllegalStateException(
+            s"$family store '$table' has committed ledger rows but the tails table " +
+              s"'$tails' is missing — a compaction crashed between its swap steps. Recover " +
+              s"the staged '${graft.sources.Sinks.stageName(tails)}' table (ALTER TABLE " +
+              s"RENAME it to '$tails') before ingesting; proceeding would silently $loss")
+        val tailsBase =
+          if (tailsExists && ledgerExists)
+            committedLog(s, table, tails,
+              Some(batch.select(col(userCol).as("__user")).distinct()), latest, keep)
+              .select(tailCols.map(c => col(c._1)): _*)
+          else
+            batch.select(tailCols.map { case (n, c) => c.as(n) }: _*).limit(0)
+        val tRdd = tailsBase.rdd
+        tRdd.cache()
+        val nTails = pt("tails cache+count")(tRdd.count())
+        val tailsNow = s.createDataFrame(tRdd, tailsBase.schema)
+        try {
+          // no committed tail for any batch user (always true on the
+          // first batch) ⇒ the inner join below is empty by construction
+          // — skip the whole offender action
+          val offenders = if (nTails == 0L) Array.empty[Any]
+          else pt(offendersLabel)(batch
+            .groupBy(col(userCol).as("__user"))
+            .agg(min(struct(orderCol.as("o"), tieCol.as("t"))).as("__bmin"))
+            .join(tailLast(tailsNow), Seq("__user"))
+            .filter(col("__bmin") <= col("__tmax"))
+            .select(col("__user")).limit(5).collect().map(_.get(0)))
+          if (offenders.nonEmpty)
+            throw new IllegalStateException(
+              s"out-of-order micro-batch for user(s) ${offenders.mkString(", ")} in $family " +
+                s"store '$table': a batch must be per-user order-contiguous — its (order, tie) " +
+                "range must strictly extend the committed tail. Nothing was appended; fix the " +
+                "slicing (arrival-ordered sources satisfy this by construction) and re-ingest")
+          extend(batch, tailsNow, batchId, fp)
+          if (!tailsExists)
+            s.sql(s"ALTER TABLE `$tails` SET TBLPROPERTIES ('${prop._1}'='${prop._2}')")
+          owner.catalog.refreshTable(tails)
+        } finally tRdd.unpersist()
+    }
+  }
+
+  /** Streaming skip-gram co-occurrence ingest — a store family whose
+    * per-key state is a sliding WINDOW of the stream rather than a set, a
+    * min, or a snapshot: the item2vec pair statistic
+    * ([[graft.ops.Sequences.skipGramPairs]]) accumulates while events
+    * arrive, without ever re-ranking history.
     *
     * Per batch (all O(batch) — the store-family discipline):
     *   1. read each arriving user's COMMITTED tail (their last `window`
-    *      events with their global per-user ranks) and rebase it on a
-    *      cached RDD leaf (the refreshDistances discipline — the same
-    *      tables are appended below);
+    *      events with their global per-user ranks) through
+    *      [[ingestTailed]];
     *   2. extend ranks: a user's next events continue from the tail's max
     *      rank, so incremental ranks equal the one-shot row_number;
     *   3. count the NEW pairs — exactly those whose destination is in
@@ -678,10 +734,11 @@ object StoreIngest {
     *
     * Crash windows: counts are COUNT-ADDITIVE (the histogram-family
     * hazard), so BOTH logs admit rows only when their tag is
-    * LEDGER-committed — an append whose ledger row never landed is
-    * invisible to serves AND to later batches' tail reads, the replay
-    * recomputes the identical rows (same committed state, same batch
-    * content ⇒ same tag), and one DISTINCT collapses the duplicates.
+    * LEDGER-committed ([[committedLog]]) — an append whose ledger row
+    * never landed is invisible to serves AND to later batches' tail
+    * reads, the replay recomputes the identical rows (same committed
+    * state, same batch content ⇒ same tag), and one DISTINCT collapses
+    * the duplicates.
     * Contract: micro-batches must be per-user order-contiguous in
     * (orderCol, tieCol) — an event stream sliced by arrival satisfies
     * this by construction; the ranks (and therefore the gaps) of an
@@ -689,10 +746,7 @@ object StoreIngest {
     * is ENFORCED at ingest, not just documented: the tail keeps each
     * event's (order, tie) values alongside its rank, and a batch whose
     * per-user minimum (order, tie) does not strictly extend that user's
-    * committed tail maximum fails loudly BEFORE anything is appended —
-    * the one store family whose misuse would otherwise be a silent
-    * wrong answer rather than an error. The check is one O(batch)
-    * aggregate joined to the (already batch-user-pruned) tail read.
+    * committed tail maximum fails loudly BEFORE anything is appended.
     *
     * State bounds: the tail log grows by at most window·users(batch) rows
     * per batch and [[compactSkipGramTails]] resets it to window·users
@@ -700,127 +754,61 @@ object StoreIngest {
     * is already aggregated (no per-event rows are ever stored).
     */
   def ingestSkipGramStore(events: DataFrame, userCol: String,
-                          typeCol: String, orderCol: org.apache.spark.sql.Column,
-                          tieCol: org.apache.spark.sql.Column, window: Int,
+                          typeCol: String, orderCol: Column,
+                          tieCol: Column, window: Int,
                           table: String, checkpointDir: String,
                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(window >= 1, "window must be >= 1")
-    val owner = events.sparkSession
-    ledgeredIngestTagged(events, table, checkpointDir, trigger) {
-      (batch, batchId, fp) =>
+    ingestTailed(events, userCol, orderCol, tieCol, table, checkpointDir, trigger,
+      "skip-gram", "rebase every user's ranks at 0",
+      StoreMaintenance.SkipGramWindowProp -> window.toString,
+      Seq("__user" -> col(userCol), "__rn" -> lit(0L), "__type" -> col(typeCol),
+        "__ord" -> orderCol, "__tie" -> tieCol),
+      SkipGramLatest, window, "sg offenders collect",
+      _.groupBy(col("__user"))
+        .agg(max(struct(col("__ord").as("o"), col("__tie").as("t"))).as("__tmax"))) {
+      (batch, tailsNow, batchId, fp) =>
         val s = batch.sparkSession
-        val tails = tailsTable(table)
-        val ledger = ledgerTable(table)
-        val users = batch.select(col(userCol).as("__user")).distinct()
-        // committed tails of THIS batch's users, current window only
-        val tailsExists = s.catalog.tableExists(tails)
-        val ledgerExists = s.catalog.tableExists(ledger)
-        // crash-window guard: a committed ledger with NO tails table is
-        // the drop-to-rename window of a crashed compactSkipGramTails —
-        // treating it as a first run would silently rebase every user's
-        // ranks at 0 (wrong pair counts forever). Fail loudly instead;
-        // the compacted rewrite survives under the staged name.
-        if (ledgerExists && !tailsExists && !s.table(ledger).limit(1).isEmpty)
-          throw new IllegalStateException(
-            s"skip-gram store '$table' has committed ledger rows but the tails table " +
-              s"'$tails' is missing — a compaction crashed between its swap steps. Recover " +
-              s"the staged '${tails}__compacting' table (ALTER TABLE RENAME it to '$tails') " +
-              "before ingesting; proceeding would silently rebase every user's ranks at 0")
-        val have = tailsExists && ledgerExists
-        val tailsBase =
-          if (have) {
-            val committed = s.table(ledger)
-              .select(col("batch_id").as("__b"), col("fp").as("__f"))
-            s.table(tails).distinct()
-              .join(committed, col("__batch") === col("__b") &&
-                col("__fp") === col("__f"), "left_semi")
-              .join(users, Seq("__user"), "left_semi")
-              .withColumn("__tr", row_number().over(Window
-                .partitionBy(col("__user")).orderBy(col("__rn").desc)))
-              .filter(col("__tr") <= window)
-              .select(col("__user"), col("__rn"), col("__type"),
-                col("__ord"), col("__tie"))
-          } else
-            batch.select(col(userCol).as("__user"), lit(0L).as("__rn"),
-              col(typeCol).as("__type"), orderCol.as("__ord"),
-              tieCol.as("__tie")).limit(0)
-        // cached-leaf rebase: the tail table is appended below, and an
-        // un-materialized read would be invalidated mid-flight
-        val tRdd = tailsBase.rdd
-        tRdd.cache()
-        val nTails = pt("tails cache+count")(tRdd.count())
-        val tailsNow = s.createDataFrame(tRdd, tailsBase.schema)
+        val baseRanks = tailsNow.groupBy(col("__user"))
+          .agg(max(col("__rn")).as("__base"))
+        val ranked0 = batch
+          .withColumn("__loc", row_number().over(Window
+            .partitionBy(col(userCol)).orderBy(orderCol, tieCol)).cast("long"))
+          .select(col(userCol).as("__user"), col("__loc"),
+            col(typeCol).as("__type"), orderCol.as("__ord"),
+            tieCol.as("__tie"))
+          .join(baseRanks, Seq("__user"), "left")
+          .select(col("__user"),
+            (coalesce(col("__base"), lit(0L)) + col("__loc")).as("__rn"),
+            col("__type"), col("__ord"), col("__tie"))
+        val rRdd = ranked0.rdd
+        pt("sg ranked cache+count"){ rRdd.cache(); rRdd.count() }
+        val ranked = s.createDataFrame(rRdd, ranked0.schema)
         try {
-          // order-contiguity enforcement: every batch user with a
-          // committed tail must START strictly after that tail's last
-          // event — otherwise the incremental ranks are NOT the one-shot
-          // row_number and every downstream gap is silently wrong
-          val tailMax = tailsNow.groupBy(col("__user"))
-            .agg(max(struct(col("__ord").as("o"), col("__tie").as("t"))).as("__tmax"))
-          // no committed tail for any batch user (always true on the
-          // first batch) ⇒ the inner join below is empty by construction
-          // — skip the whole offender action
-          val offenders = if (nTails == 0L) Array.empty[Any]
-          else pt("sg offenders collect")(batch
-            .groupBy(col(userCol).as("__user"))
-            .agg(min(struct(orderCol.as("o"), tieCol.as("t"))).as("__bmin"))
-            .join(tailMax, Seq("__user"))
-            .filter(col("__bmin") <= col("__tmax"))
-            .select(col("__user")).limit(5).collect().map(_.get(0)))
-          if (offenders.nonEmpty)
-            throw new IllegalStateException(
-              s"out-of-order micro-batch for user(s) ${offenders.mkString(", ")} in skip-gram " +
-                s"store '$table': a batch must be per-user order-contiguous — its (order, tie) " +
-                "range must strictly extend the committed tail. Nothing was appended; fix the " +
-                "slicing (arrival-ordered sources satisfy this by construction) and re-ingest")
-          val baseRanks = tailsNow.groupBy(col("__user"))
-            .agg(max(col("__rn")).as("__base"))
-          val ranked0 = batch
-            .withColumn("__loc", row_number().over(Window
-              .partitionBy(col(userCol)).orderBy(orderCol, tieCol)).cast("long"))
-            .select(col(userCol).as("__user"), col("__loc"),
-              col(typeCol).as("__type"), orderCol.as("__ord"),
-              tieCol.as("__tie"))
-            .join(baseRanks, Seq("__user"), "left")
-            .select(col("__user"),
-              (coalesce(col("__base"), lit(0L)) + col("__loc")).as("__rn"),
-              col("__type"), col("__ord"), col("__tie"))
-          val rRdd = ranked0.rdd
-          pt("sg ranked cache+count"){ rRdd.cache(); rRdd.count() }
-          val ranked = s.createDataFrame(rRdd, ranked0.schema)
-          try {
-            val srcs = tailsNow.unionByName(ranked)
-            val pairs = srcs.as("a").join(ranked.as("b"),
-                col("a.__user") === col("b.__user") &&
-                col("b.__rn") > col("a.__rn") &&
-                col("b.__rn") <= col("a.__rn") + window)
-              .select(col("a.__type").as("src_type"),
-                col("b.__type").as("dst_type"),
-                (col("b.__rn") - col("a.__rn")).as("gap"))
-              .groupBy(col("src_type"), col("dst_type"), col("gap"))
-              .agg(count(lit(1)).as("n_pairs"))
-              .withColumn("__batch", lit(batchId))
-              .withColumn("__fp", lit(fp._2))
-            pt("sg pairs write")(pairs.write.mode("append").format("parquet").saveAsTable(table))
-            val newTails = ranked
-              .withColumn("__tr", row_number().over(Window
-                .partitionBy(col("__user")).orderBy(col("__rn").desc)))
-              .filter(col("__tr") <= window)
-              .select(col("__user"), col("__rn"), col("__type"),
-                col("__ord"), col("__tie"))
-              .withColumn("__batch", lit(batchId))
-              .withColumn("__fp", lit(fp._2))
-            pt("sg newTails write")(newTails.write.mode("append").format("parquet").saveAsTable(tails))
-            // stamp the window at creation so maintainStore can compact
-            // the tails without a caller-carried parameter
-            if (!tailsExists)
-              s.sql(s"ALTER TABLE `$tails` SET TBLPROPERTIES " +
-                s"('${StoreMaintenance.SkipGramWindowProp}'='$window')")
-            // a third owner-visible table beyond the (table, ledger) pair
-            // the shared core refreshes — keep the owner's listing fresh
-            owner.catalog.refreshTable(tails)
-          } finally rRdd.unpersist()
-        } finally tRdd.unpersist()
+          val srcs = tailsNow.unionByName(ranked)
+          val pairs = srcs.as("a").join(ranked.as("b"),
+              col("a.__user") === col("b.__user") &&
+              col("b.__rn") > col("a.__rn") &&
+              col("b.__rn") <= col("a.__rn") + window)
+            .select(col("a.__type").as("src_type"),
+              col("b.__type").as("dst_type"),
+              (col("b.__rn") - col("a.__rn")).as("gap"))
+            .groupBy(col("src_type"), col("dst_type"), col("gap"))
+            .agg(count(lit(1)).as("n_pairs"))
+            .withColumn("__batch", lit(batchId))
+            .withColumn("__fp", lit(fp._2))
+          pt("sg pairs write")(pairs.write.mode("append").format("parquet").saveAsTable(table))
+          val newTails = ranked
+            .withColumn("__tr", row_number().over(Window
+              .partitionBy(col("__user")).orderBy(SkipGramLatest: _*)))
+            .filter(col("__tr") <= window)
+            .select(col("__user"), col("__rn"), col("__type"),
+              col("__ord"), col("__tie"))
+            .withColumn("__batch", lit(batchId))
+            .withColumn("__fp", lit(fp._2))
+          pt("sg newTails write")(newTails.write.mode("append").format("parquet")
+            .saveAsTable(tailsTable(table)))
+        } finally rRdd.unpersist()
     }
   }
 
@@ -829,58 +817,33 @@ object StoreIngest {
     * [[graft.ops.Sequences.skipGramPairs]] over everything ingested.
     */
   def skipGramFromStore(spark: org.apache.spark.sql.SparkSession,
-                        table: String): DataFrame = {
-    val committed = spark.table(ledgerTable(table))
-      .select(col("batch_id").as("__b"), col("fp").as("__f"))
-    spark.table(table).distinct()
-      .join(committed, col("__batch") === col("__b") &&
-        col("__fp") === col("__f"), "left_semi")
+                        table: String): DataFrame =
+    committedLog(spark, table, table)
       .groupBy(col("src_type"), col("dst_type"), col("gap"))
       .agg(sum(col("n_pairs")).as("n_pairs"))
-  }
 
   /** Collapse the tail log to each user's current committed window — the
     * log grows by one row per (batch, active user) and this resets it to
     * window·users. Tags are preserved on the surviving rows, so served
     * reads and later ingests are unchanged; uncommitted crash-window
     * residue is dropped (its batch will replay from committed state
-    * anyway). Run between ingests — the single-writer contract covers
-    * maintenance too.
+    * anyway).
     */
   def compactSkipGramTails(spark: org.apache.spark.sql.SparkSession,
-                           table: String, window: Int): Unit = {
-    val tails = tailsTable(table)
-    val committed = spark.table(ledgerTable(table))
-      .select(col("batch_id").as("__b"), col("fp").as("__f"))
-    val tmp = tails + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    spark.table(tails).distinct()
-      .join(committed, col("__batch") === col("__b") &&
-        col("__fp") === col("__f"), "left_semi")
-      .withColumn("__tr", row_number().over(Window
-        .partitionBy(col("__user")).orderBy(col("__rn").desc)))
-      .filter(col("__tr") <= window)
-      .drop("__tr")
-      .write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$tails`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$tails`")
-    // the swap loses table properties — re-stamp the window so the next
-    // maintainStore pass still knows the family parameter
-    spark.sql(s"ALTER TABLE `$tails` SET TBLPROPERTIES " +
-      s"('${StoreMaintenance.SkipGramWindowProp}'='$window')")
-  }
+                           table: String, window: Int): Unit =
+    graft.sources.Sinks.rewriteStaged(spark, tailsTable(table),
+      committedLog(spark, table, tailsTable(table), latest = SkipGramLatest, keep = window))
 
-  /** Streaming sessionization ingest — the TWELFTH store family, and the
-    * first whose per-key state is an OPEN INTERVAL of the stream: the
-    * gaps-and-islands session table ([[graft.ops.TimeSeries.sessionTable]])
-    * accumulates while events arrive, closing a session the moment a
-    * later event proves the gap and never re-scanning history.
+  /** Streaming sessionization ingest — a store family whose per-key state
+    * is an OPEN INTERVAL of the stream: the gaps-and-islands session
+    * table ([[graft.ops.TimeSeries.sessionTable]]) accumulates while
+    * events arrive, closing a session the moment a later event proves
+    * the gap and never re-scanning history.
     *
     * Per batch (all O(batch) — the store-family discipline):
     *   1. read each arriving user's COMMITTED tail (their single open
-    *      session: index, start, last-event order/tie, event count) and
-    *      rebase it on a cached RDD leaf (the same tables are appended
-    *      below);
+    *      session: index, start, last-event order/tie, event count)
+    *      through [[ingestTailed]];
     *   2. extend sessions: the batch's first per-user event either
     *      continues the tail session (gap ≤ `gapUs`) or opens index+1;
     *      within the batch, session indices are the tail index plus a
@@ -894,14 +857,16 @@ object StoreIngest {
     *
     * Crash windows: closed-session rows are complete facts but a replay
     * re-appends them, so BOTH logs admit rows only when their tag is
-    * LEDGER-committed — an append whose ledger row never landed is
-    * invisible to serves AND to later batches' tail reads, the replay
-    * recomputes identical rows, and one DISTINCT collapses duplicates.
+    * LEDGER-committed ([[committedLog]]) — an append whose ledger row
+    * never landed is invisible to serves AND to later batches' tail
+    * reads, the replay recomputes identical rows, and one DISTINCT
+    * collapses duplicates.
     * Contract: micro-batches must be per-user order-contiguous in
-    * (orderCol, tieCol) — ENFORCED, not documented: a batch whose
-    * per-user minimum does not strictly extend the committed tail's last
-    * event fails loudly before anything is appended (the skip-gram
-    * guard; an arrival-ordered source satisfies it by construction).
+    * (orderCol, tieCol) — ENFORCED, not documented: the gap to the tail's
+    * last event is part of the answer, so a batch whose per-user minimum
+    * does not strictly extend the committed tail's last event fails
+    * loudly before anything is appended (an arrival-ordered source
+    * satisfies it by construction).
     *
     * State bounds: the tail log grows by one row per (batch, active
     * user) and [[compactSessionTails]] resets it to one row per user;
@@ -909,113 +874,60 @@ object StoreIngest {
     * `orderCol` must be an integral microsecond timestamp.
     */
   def ingestSessionStore(events: DataFrame, userCol: String,
-                         orderCol: org.apache.spark.sql.Column,
-                         tieCol: org.apache.spark.sql.Column, gapUs: Long,
+                         orderCol: Column, tieCol: Column, gapUs: Long,
                          table: String, checkpointDir: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(gapUs >= 1L, "gapUs must be >= 1")
-    val owner = events.sparkSession
-    ledgeredIngestTagged(events, table, checkpointDir, trigger) {
-      (batch, batchId, fp) =>
+    ingestTailed(events, userCol, orderCol, tieCol, table, checkpointDir, trigger,
+      "session", "restart every user's sessions at 0",
+      StoreMaintenance.SessionGapProp -> gapUs.toString,
+      Seq("__user" -> col(userCol), "__sid" -> lit(0L), "__start" -> orderCol,
+        "__last" -> orderCol, "__ltie" -> tieCol, "__n" -> lit(0L)),
+      SessionLatest, 1, "offenders collect",
+      _.select(col("__user"),
+        struct(col("__last").as("o"), col("__ltie").as("t")).as("__tmax"))) {
+      (batch, tailsNow, batchId, fp) =>
         val s = batch.sparkSession
-        val tails = tailsTable(table)
-        val ledger = ledgerTable(table)
-        val users = batch.select(col(userCol).as("__user")).distinct()
-        val tailsExists = s.catalog.tableExists(tails)
-        val ledgerExists = s.catalog.tableExists(ledger)
-        // the skip-gram crash-window guard: a committed ledger with no
-        // tails table is a crashed tail compaction — first-run treatment
-        // would re-open every closed session at index 0
-        if (ledgerExists && !tailsExists && !s.table(ledger).limit(1).isEmpty)
-          throw new IllegalStateException(
-            s"session store '$table' has committed ledger rows but the tails table " +
-              s"'$tails' is missing — a compaction crashed between its swap steps. Recover " +
-              s"the staged '${tails}__compacting' table (ALTER TABLE RENAME it to '$tails') " +
-              "before ingesting; proceeding would silently restart every user's sessions at 0")
-        val have = tailsExists && ledgerExists
-        val tailsBase =
-          if (have) {
-            val committed = s.table(ledger)
-              .select(col("batch_id").as("__b"), col("fp").as("__f"))
-            s.table(tails).distinct()
-              .join(committed, col("__batch") === col("__b") &&
-                col("__fp") === col("__f"), "left_semi")
-              .join(users, Seq("__user"), "left_semi")
-              .withColumn("__tr", row_number().over(Window
-                .partitionBy(col("__user"))
-                .orderBy(col("__sid").desc, col("__last").desc, col("__ltie").desc)))
-              .filter(col("__tr") === 1)
-              .select(col("__user"), col("__sid"), col("__start"),
-                col("__last"), col("__ltie"), col("__n"))
-          } else
-            batch.select(col(userCol).as("__user"), lit(0L).as("__sid"),
-              orderCol.as("__start"), orderCol.as("__last"),
-              tieCol.as("__ltie"), lit(0L).as("__n")).limit(0)
-        val tRdd = tailsBase.rdd
-        tRdd.cache()
-        val nTails = pt("tails cache+count")(tRdd.count())
-        val tailsNow = s.createDataFrame(tRdd, tailsBase.schema)
+        val w = Window.partitionBy(col("__user")).orderBy(col("__ord"), col("__tie"))
+        val ev = batch
+          .select(col(userCol).as("__user"), orderCol.as("__ord"), tieCol.as("__tie"))
+          .join(tailsNow.select(col("__user"), col("__sid").as("__tsid"),
+            col("__start").as("__tstart"), col("__last").as("__tlast"),
+            col("__n").as("__tn")), Seq("__user"), "left")
+        val prev = lag(col("__ord"), 1).over(w)
+        val isNew = when(prev.isNotNull,
+            when(col("__ord") - prev > gapUs, 1L).otherwise(0L))
+          .otherwise(when(col("__tlast").isNull, 1L)
+            .otherwise(when(col("__ord") - col("__tlast") > gapUs, 1L).otherwise(0L)))
+        val sess0 = ev.withColumn("__new", isNew)
+          .withColumn("__sid", coalesce(col("__tsid"), lit(0L)) + sum(col("__new"))
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        val agg = sess0.groupBy(col("__user"), col("__sid"))
+          .agg(count(lit(1)).as("__bn"), min(col("__ord")).as("__bstart"),
+            max(struct(col("__ord").as("o"), col("__tie").as("t"))).as("__bend"),
+            min(col("__tsid")).as("__xsid"), min(col("__tstart")).as("__xstart"),
+            min(col("__tn")).as("__xn"))
+        // a batch session carrying the tail's index CONTINUES it: the
+        // session's true start and count fold the tail's in
+        val full = agg.select(col("__user"), col("__sid"),
+          when(col("__sid") === col("__xsid"), col("__xstart"))
+            .otherwise(col("__bstart")).as("__start"),
+          col("__bend").getField("o").as("__last"),
+          col("__bend").getField("t").as("__ltie"),
+          (when(col("__sid") === col("__xsid"), col("__xn")).otherwise(lit(0L))
+            + col("__bn")).as("__n"))
+        val marked0 = full.withColumn("__maxsid",
+          max(col("__sid")).over(Window.partitionBy(col("__user"))))
+        // rebase the per-(user, session) frame on ONE cached RDD leaf:
+        // three consumers read it (closed rows, new tails, the
+        // tail-closed min-sid probe), and without the leaf each write
+        // re-ran the whole batch window chain and re-planned its full
+        // tree — measured 1.9–2.9 s of the ~5 s per-batch body at
+        // sf0.1. Session-count-sized rows, so the leaf is tiny.
+        val mRdd = marked0.rdd
+        mRdd.cache(); mRdd.count()
+        val marked = s.createDataFrame(mRdd, marked0.schema)
         try {
-          // order-contiguity enforcement (the skip-gram contract): the
-          // gap to the tail's last event is part of the answer, so an
-          // out-of-order slicing is a silent wrong session table
-          // empty committed-tail set (always true on the first batch) ⇒
-          // the inner join below is empty by construction — skip the action
-          val offenders = if (nTails == 0L) Array.empty[Any]
-          else pt("offenders collect")(batch
-            .groupBy(col(userCol).as("__user"))
-            .agg(min(struct(orderCol.as("o"), tieCol.as("t"))).as("__bmin"))
-            .join(tailsNow.select(col("__user"),
-              struct(col("__last").as("o"), col("__ltie").as("t")).as("__tmax")),
-              Seq("__user"))
-            .filter(col("__bmin") <= col("__tmax"))
-            .select(col("__user")).limit(5).collect().map(_.get(0)))
-          if (offenders.nonEmpty)
-            throw new IllegalStateException(
-              s"out-of-order micro-batch for user(s) ${offenders.mkString(", ")} in session " +
-                s"store '$table': a batch must be per-user order-contiguous — its (order, tie) " +
-                "range must strictly extend the committed tail. Nothing was appended; fix the " +
-                "slicing (arrival-ordered sources satisfy this by construction) and re-ingest")
-          val w = Window.partitionBy(col("__user")).orderBy(col("__ord"), col("__tie"))
-          val ev = batch
-            .select(col(userCol).as("__user"), orderCol.as("__ord"), tieCol.as("__tie"))
-            .join(tailsNow.select(col("__user"), col("__sid").as("__tsid"),
-              col("__start").as("__tstart"), col("__last").as("__tlast"),
-              col("__n").as("__tn")), Seq("__user"), "left")
-          val prev = lag(col("__ord"), 1).over(w)
-          val isNew = when(prev.isNotNull,
-              when(col("__ord") - prev > gapUs, 1L).otherwise(0L))
-            .otherwise(when(col("__tlast").isNull, 1L)
-              .otherwise(when(col("__ord") - col("__tlast") > gapUs, 1L).otherwise(0L)))
-          val sess0 = ev.withColumn("__new", isNew)
-            .withColumn("__sid", coalesce(col("__tsid"), lit(0L)) + sum(col("__new"))
-              .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          val agg = sess0.groupBy(col("__user"), col("__sid"))
-            .agg(count(lit(1)).as("__bn"), min(col("__ord")).as("__bstart"),
-              max(struct(col("__ord").as("o"), col("__tie").as("t"))).as("__bend"),
-              min(col("__tsid")).as("__xsid"), min(col("__tstart")).as("__xstart"),
-              min(col("__tn")).as("__xn"))
-          // a batch session carrying the tail's index CONTINUES it: the
-          // session's true start and count fold the tail's in
-          val full = agg.select(col("__user"), col("__sid"),
-            when(col("__sid") === col("__xsid"), col("__xstart"))
-              .otherwise(col("__bstart")).as("__start"),
-            col("__bend").getField("o").as("__last"),
-            col("__bend").getField("t").as("__ltie"),
-            (when(col("__sid") === col("__xsid"), col("__xn")).otherwise(lit(0L))
-              + col("__bn")).as("__n"))
-          val marked0 = full.withColumn("__maxsid",
-            max(col("__sid")).over(Window.partitionBy(col("__user"))))
-          // rebase the per-(user, session) frame on ONE cached RDD leaf:
-          // three consumers read it (closed rows, new tails, the
-          // tail-closed min-sid probe), and without the leaf each write
-          // re-ran the whole batch window chain and re-planned its full
-          // tree — measured 1.9–2.9 s of the ~5 s per-batch body at
-          // sf0.1. Session-count-sized rows, so the leaf is tiny.
-          val mRdd = marked0.rdd
-          mRdd.cache(); mRdd.count()
-          val marked = s.createDataFrame(mRdd, marked0.schema)
-          try {
           // closed = batch sessions below the user's max, plus a tail
           // session the batch's first event broke away from (it never
           // appears among the batch's session indices). The min over the
@@ -1041,15 +953,9 @@ object StoreIngest {
               col("__last"), col("__ltie"), col("__n"))
             .withColumn("__batch", lit(batchId))
             .withColumn("__fp", lit(fp._2))
-          pt("newTails write")(newTails.write.mode("append").format("parquet").saveAsTable(tails))
-          // stamp the gap at creation — maintainStore's classifier and
-          // any later ingest read the family parameter off the table
-          if (!tailsExists)
-            s.sql(s"ALTER TABLE `$tails` SET TBLPROPERTIES " +
-              s"('${StoreMaintenance.SessionGapProp}'='$gapUs')")
-          owner.catalog.refreshTable(tails)
-          } finally mRdd.unpersist()
-        } finally tRdd.unpersist()
+          pt("newTails write")(newTails.write.mode("append").format("parquet")
+            .saveAsTable(tailsTable(table)))
+        } finally mRdd.unpersist()
     }
   }
 
@@ -1060,19 +966,10 @@ object StoreIngest {
     */
   def sessionsFromStore(spark: org.apache.spark.sql.SparkSession,
                         table: String): DataFrame = {
-    val committed = spark.table(ledgerTable(table))
-      .select(col("batch_id").as("__b"), col("fp").as("__f"))
-    val closed = spark.table(table).distinct()
-      .join(committed, col("__batch") === col("__b") &&
-        col("__fp") === col("__f"), "left_semi")
+    val closed = committedLog(spark, table, table)
       .select(col("user_id"), col("session_idx"), col("start_us"),
         col("end_us"), col("n_events"))
-    val open = spark.table(tailsTable(table)).distinct()
-      .join(committed, col("__batch") === col("__b") &&
-        col("__fp") === col("__f"), "left_semi")
-      .withColumn("__tr", row_number().over(Window.partitionBy(col("__user"))
-        .orderBy(col("__sid").desc, col("__last").desc, col("__ltie").desc)))
-      .filter(col("__tr") === 1)
+    val open = committedLog(spark, table, tailsTable(table), latest = SessionLatest)
       .select(col("__user").as("user_id"), col("__sid").as("session_idx"),
         col("__start").as("start_us"), col("__last").as("end_us"),
         col("__n").as("n_events"))
@@ -1083,33 +980,35 @@ object StoreIngest {
     * session — the log grows by one row per (batch, active user) and
     * this resets it to one row per user. Tags preserved; uncommitted
     * crash-window residue dropped (its batch replays from committed
-    * state). Same staged-swap protocol as [[compactSkipGramTails]];
-    * the gap property is re-stamped after the swap.
+    * state).
     */
   def compactSessionTails(spark: org.apache.spark.sql.SparkSession,
-                          table: String): Unit = {
-    val tails = tailsTable(table)
-    val gap = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tails))
-      .properties.get(StoreMaintenance.SessionGapProp)
-    val committed = spark.table(ledgerTable(table))
-      .select(col("batch_id").as("__b"), col("fp").as("__f"))
-    val tmp = tails + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    spark.table(tails).distinct()
-      .join(committed, col("__batch") === col("__b") &&
-        col("__fp") === col("__f"), "left_semi")
-      .withColumn("__tr", row_number().over(Window.partitionBy(col("__user"))
-        .orderBy(col("__sid").desc, col("__last").desc, col("__ltie").desc)))
-      .filter(col("__tr") === 1)
-      .drop("__tr")
-      .write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$tails`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$tails`")
-    gap.foreach(g => spark.sql(s"ALTER TABLE `$tails` SET TBLPROPERTIES " +
-      s"('${StoreMaintenance.SessionGapProp}'='$g')"))
-  }
+                          table: String): Unit =
+    graft.sources.Sinks.rewriteStaged(spark, tailsTable(table),
+      committedLog(spark, table, tailsTable(table), latest = SessionLatest))
 
+  /** Streaming k-NN SERVING: query vectors stream in, each micro-batch
+    * probes a PERSISTED cell-partitioned IVF store
+    * ([[graft.operators.Similarity.buildIvfStore]], built ONCE here at
+    * query start — the index-build work), and the answers append to a
+    * results log — the inference-serving shape of a feature pipeline,
+    * where q193 was the index-BUILD shape. Per-batch cost is
+    * O(|batch| + rows in the probed nprobe cells): the store scan is
+    * partition-pruned at the catalog and the centroid sidecar loads
+    * once per started query (the committed-map discipline) — the
+    * corpus-wide cell assignment is NEVER re-derived inside the serving
+    * loop (the round-14 plan defect: `ivfTopK(corpus, batch, ...)` per
+    * batch re-assigned the whole corpus per micro-batch). The stored
+    * answers are bit-identical to the inline `ivfTopK` (same
+    * deterministic centroid draw, exact cosine over full stored
+    * vectors — spec-pinned), so the one-shot oracle applies verbatim.
+    *
+    * Per-query answers are pure functions of (query, corpus) —
+    * independent of how the stream slices and of every other query — so
+    * the results log is replay-idempotent BY ROW VALUE: a crash-window
+    * double-append duplicates exact rows, and the reader's distinct
+    * collapses them (read results with `spark.table(table).distinct()`).
+    */
   def ingestKnnResults(queries: DataFrame, corpus: DataFrame,
                        idCol: String, vecCol: String, table: String,
                        checkpointDir: String, k: Int, nlist: Int,

@@ -5,15 +5,18 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** One maintenance entry point for every incremental-store family.
   *
-  * Eleven store families accumulate state through per-batch appends, and
-  * each grew its own maintenance verb as it landed: bucketed-log rewrite
-  * (dedup/ANN/phrase/winnow/gram/histogram), per-group sketch fold (KMV),
-  * per-node minimum collapse + edge-log dedup (distance), superseded
-  * snapshot eviction (MST), tail-window reset (skip-gram), and tombstone
-  * purge (dedup deletion). [[maintainStore]] turns that per-family lore
-  * into an API: it inspects the table — companion tables, schema, bucket
-  * spec, and the family properties the ingests stamp — decides which
-  * compactions apply, runs them, and reports what it did.
+  * The store families accumulate state through per-batch appends, and
+  * each has its own maintenance verb: bucketed-log rewrite
+  * (dedup/ANN/phrase/winnow/gram/histogram), partitioned rewrite (IVF),
+  * per-group sketch fold (KMV), per-node minimum collapse + edge-log
+  * dedup (distance), superseded snapshot eviction (MST), tail reset
+  * (skip-gram window, session open interval), and tombstone purge (dedup
+  * deletion). Each is one [[graft.sources.Sinks.rewriteStaged]] that
+  * differs only in which rows survive. [[maintainStore]] turns that
+  * per-family lore into an API: it inspects the table — companion
+  * tables, schema, bucket spec, and the family properties the ingests
+  * stamp — decides which compactions apply, runs them, and reports what
+  * it did.
   *
   * The invariant every branch shares (and StoreMaintenanceSpec pins per
   * family): a maintenance pass NEVER changes what the store serves —
@@ -47,7 +50,8 @@ object StoreMaintenance {
     * microseconds — stamped by [[StoreIngest.ingestSessionStore]] at tails
     * creation. The tail compaction itself needs no parameter (latest
     * committed row per user); the property is the operational record of
-    * the family parameter, preserved across the compaction swap.
+    * the family parameter, which the compaction swap re-applies like
+    * every `graft.*` property.
     */
   val SessionGapProp = "graft.session.gap_us"
 
@@ -117,8 +121,8 @@ object StoreMaintenance {
       val w = props(spark, tails).get(SkipGramWindowProp).map(_.toInt)
         .getOrElse(throw new IllegalStateException(
           s"tails table '$tails' carries no '$SkipGramWindowProp' property — " +
-            "it predates property stamping; run compactSkipGramTails(window) directly once, " +
-            "or re-stamp the property"))
+            "it predates property stamping; run compactSkipGramTails(window) directly, " +
+            "or stamp the property"))
       StoreIngest.compactSkipGramTails(spark, table, w)
       actions += s"compacted skip-gram tails '$tails' to window=$w per user"
       // the pair store itself is an unbucketed tagged log — rows must
@@ -138,15 +142,15 @@ object StoreMaintenance {
 
     if (!mainRewritten) {
       val meta = cat.getTableMetadata(TableIdentifier(table))
+      // the generic append-log families (dedup signatures, ANN buckets,
+      // phrase/winnow/gram postings, tagged histogram bins) and the
+      // partitioned serving indexes (IVF cells): a pure spec-preserving
+      // rewrite — one file per bucket or partition, rows verbatim
       if (meta.bucketSpec.isDefined) {
-        // the generic append-log families (dedup signatures, ANN buckets,
-        // phrase/winnow/gram postings, tagged histogram bins): a pure
-        // spec-preserving rewrite — one file per bucket, rows verbatim
-        graft.sources.Sinks.compactBucketed(spark, table)
+        graft.sources.Sinks.rewriteStaged(spark, table, spark.table(table))
         actions += s"rewrote bucketed store '$table' to one file per bucket"
       } else if (meta.partitionColumnNames.nonEmpty) {
-        // the partitioned serving indexes (IVF cells)
-        graft.sources.Sinks.compactPartitioned(spark, table)
+        graft.sources.Sinks.rewriteStaged(spark, table, spark.table(table))
         actions += s"rewrote partitioned store '$table' to one file per partition"
       } else if (actions.isEmpty) {
         actions += s"no maintenance defined for '$table' (unbucketed, unpartitioned, no family markers) — left as-is"

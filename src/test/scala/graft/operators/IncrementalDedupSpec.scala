@@ -210,7 +210,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkSpec {
     dropTable("graft_tst_plain")
     Seq((1L, "x")).toDF("a", "b").write.saveAsTable("graft_tst_plain")
     intercept[IllegalArgumentException] {
-      graft.sources.Sinks.compactBucketed(spark, "graft_tst_plain")
+      IncrementalDedup.compactStore(spark, "graft_tst_plain")
     }
     dropTable("graft_tst_plain")
   }

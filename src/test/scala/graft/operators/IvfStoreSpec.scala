@@ -69,7 +69,8 @@ class IvfStoreSpec extends AnyFunSuite with SparkSpec {
     // maintenance: compaction rewrites to one file per cell, keeps the
     // partition spec (pruning intact), and cannot change answers —
     // including the duplicate rows it faithfully carries
-    graft.sources.Sinks.compactPartitioned(spark, "graft_ivfinc_spec")
+    graft.sources.Sinks.rewriteStaged(spark, "graft_ivfinc_spec",
+      spark.table("graft_ivfinc_spec"))
     val loc = new java.io.File(new java.net.URI(
       spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier("graft_ivfinc_spec"))

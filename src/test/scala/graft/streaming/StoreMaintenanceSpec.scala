@@ -22,6 +22,15 @@ class StoreMaintenanceSpec extends AnyFunSuite with SparkSpec {
 
   private val base = "the quick brown fox jumps over the lazy dog near the river bank today"
 
+  /** Stamp a `graft.*` property on `table`, as the ingests stamp their
+    * family parameters, and read it back — every rewrite must keep it.
+    */
+  private def stamp(table: String): Unit =
+    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES ('graft.spec.stamp'='kept')")
+  private def stamped(table: String): Option[String] =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).properties.get("graft.spec.stamp")
+
   test("dedup store: tombstones route to purge; without them, the generic bucketed rewrite") {
     val t = "graft_maint_dedup"
     Seq(t, IncrementalDedup.tombstoneTable(t)).foreach(dropTable)
@@ -30,6 +39,7 @@ class StoreMaintenanceSpec extends AnyFunSuite with SparkSpec {
         4L -> "unrelated words entirely").toDF("doc_id", "text")
       IncrementalDedup.appendToStore(
         IncrementalDedup.bandedSignatures(docs, "doc_id", "text"), t, buckets = 4)
+      stamp(t)
       IncrementalDedup.deleteFromStore(spark, t,
         Seq(2L).toDF("doc_id"))
       def serve() = IncrementalDedup.storeCandidates(IncrementalDedup.liveStore(spark, t))
@@ -41,11 +51,13 @@ class StoreMaintenanceSpec extends AnyFunSuite with SparkSpec {
       assert(acts.exists(_.contains("purged")), s"expected the purge branch, got $acts")
       assert(!spark.catalog.tableExists(IncrementalDedup.tombstoneTable(t)))
       assert(serve() == before, "a maintenance pass must not change serves")
+      assert(stamped(t).contains("kept"), "the purge's swap must keep graft.* properties")
 
       // no tombstones now: the same call routes to the generic rewrite
       val acts2 = StoreMaintenance.maintainStore(spark, t)
       assert(acts2.exists(_.contains("bucketed store")), s"expected the bucketed branch, got $acts2")
       assert(serve() == before)
+      assert(stamped(t).contains("kept"), "the bucketed rewrite must keep graft.* properties")
       // spec preserved: the self-join still plans with only the
       // pair-distinct exchange
       withConf(
@@ -301,6 +313,7 @@ class StoreMaintenanceSpec extends AnyFunSuite with SparkSpec {
         .map(i => (i, Seq.fill(8)(rnd.nextFloat() * 2f - 1f)))
         .toDF("vec_id", "embedding").cache()
       graft.operators.Similarity.buildIvfStore(c, "vec_id", "embedding", t, nlist = 8)
+      stamp(t)
       val cents = graft.operators.Similarity.loadIvfCentroids(spark, t)
       val q = c.filter(col("vec_id") % 10 === 3)
       def serve() = graft.operators.Similarity
@@ -317,11 +330,13 @@ class StoreMaintenanceSpec extends AnyFunSuite with SparkSpec {
       assert(!spark.catalog.tableExists(graft.operators.Similarity.ivfTombstoneTable(t)))
       assert(serve() == masked, "a maintenance pass must not change serves")
       assert(spark.table(t).filter(col("cand_id") % 9 === 0).count() == 0L)
+      assert(stamped(t).contains("kept"), "the cell purge must keep graft.* properties")
 
       // tombstones gone: the same call routes to the generic partitioned rewrite
       val acts2 = StoreMaintenance.maintainStore(spark, t)
       assert(acts2.exists(_.contains("partitioned store")), s"got $acts2")
       assert(serve() == masked)
+      assert(stamped(t).contains("kept"), "the partitioned rewrite must keep graft.* properties")
       graft.Storage.releaseAll(spark)
     } finally {
       all.foreach(dropTable)

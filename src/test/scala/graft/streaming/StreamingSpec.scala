@@ -1381,4 +1381,75 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       graft.Storage.releaseAll(spark)
     }
   }
+
+  // Spark jobs per committed micro-batch of each tailed store, measured
+  // on this fixture with two micro-batches per store (local[4]); the
+  // count repeats exactly run to run.
+  private val SkipGramJobsPerBatch = 18.5
+  private val SessionJobsPerBatch = 15.0
+
+  test("tailed stores: Spark jobs per committed micro-batch stay at the measured count") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sg = "graft_stream_jobs_skipgram"
+    val ss = "graft_stream_jobs_session"
+    val tables = Seq(sg, ss).flatMap(x =>
+      Seq(x, StoreIngest.ledgerTable(x), StoreIngest.tailsTable(x)))
+    tables.foreach(dropTable)
+    val root = java.nio.file.Files.createTempDirectory("graft_tail_jobs").toFile
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    // listener events arrive in order: once a marker job is seen, every
+    // job started before it has been seen too
+    def mark(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(group) && System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    def jobsOf(ingest: => Unit): Int = {
+      mark("jobs-before")
+      jobs.clear()
+      ingest
+      mark("jobs-after")
+      jobs.asScala.count(_ != "jobs-after")
+    }
+    sc.addSparkListener(listener)
+    try {
+      // three users, each order-contiguous across the two slices, so the
+      // second batch reads committed tails and runs the offender check
+      val events = for (u <- 1L to 3L; i <- 0L until 6L)
+        yield (u, if (i % 2 == 0) "A" else "B", 10L * i + u, 100L * u + i)
+      val (first, second) = events.partition(_._3 < 30L)
+      val in = new java.io.File(root, "in")
+      writeSgSlices(in, Seq(first, second))
+      def stream = spark.readStream
+        .schema("user LONG, etype STRING, ord LONG, eid LONG")
+        .option("maxFilesPerTrigger", "1").parquet(in.getAbsolutePath)
+      val sgJobs = jobsOf(StoreIngest.ingestSkipGramStore(stream, "user", "etype",
+        col("ord"), col("eid"), window = 2, sg,
+        new java.io.File(root, "cp_sg").getAbsolutePath).awaitTermination())
+      val ssJobs = jobsOf(StoreIngest.ingestSessionStore(stream, "user",
+        col("ord"), col("eid"), gapUs = 15L, ss,
+        new java.io.File(root, "cp_ss").getAbsolutePath).awaitTermination())
+      assert(spark.table(StoreIngest.ledgerTable(sg)).count() == 2L &&
+        spark.table(StoreIngest.ledgerTable(ss)).count() == 2L,
+        "the fixture must commit exactly two micro-batches per store")
+      info(s"jobs per committed batch: skip-gram ${sgJobs / 2.0}, session ${ssJobs / 2.0}")
+      assert(sgJobs / 2.0 <= SkipGramJobsPerBatch,
+        s"skip-gram ingest: ${sgJobs / 2.0} jobs per batch, measured $SkipGramJobsPerBatch")
+      assert(ssJobs / 2.0 <= SessionJobsPerBatch,
+        s"session ingest: ${ssJobs / 2.0} jobs per batch, measured $SessionJobsPerBatch")
+    } finally {
+      sc.removeSparkListener(listener)
+      rmTree(root)
+      tables.foreach(dropTable)
+      graft.Storage.releaseAll(spark)
+    }
+  }
 }

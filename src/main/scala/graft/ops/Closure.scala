@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** J7 — iterative successor resolution: the transitive closure of an edge
   * list (reference: scripts/org-changes/build_trust_lookup.R:66-84 while-loop;
@@ -10,76 +11,60 @@ import org.apache.spark.sql.functions._
   * Re-expressed with pointer doubling over the *edge* relation: iteration k
   * holds a mapping m(x) = the up-to-2^k-step successor of x (terminal
   * absorbed), built by composing m with itself. Multi-successor "splits"
-  * multiply rows naturally through the self-join (the reference's `unnest`,
-  * build_all_org_changes.R:96).
+  * multiply rows naturally through the composition (the reference's
+  * `unnest`, build_all_org_changes.R:96).
   *
   * Scale posture: succession chains are edge-list-sized (~700 rows in the
   * reference) while the node table being re-keyed can be arbitrarily large.
-  * Pointer doubling runs O(log depth) tiny self-joins on the edge set, then
-  * exactly ONE broadcast join against the distributed node table — zero
-  * shuffles of the big side. `localCheckpoint` truncates lineage per
-  * iteration; iterations are bounded to guard against cyclic input.
+  * The converged mapping holds at least one row per edge and feeds a
+  * broadcast join, so it has to fit on the driver anyway: the doubling runs
+  * there, over the collected edges, and the distributed node table meets it
+  * in exactly ONE broadcast join — zero shuffles of the big side.
   */
 object Closure {
 
+  /** The converged pointer-doubling mapping of `edges` (src → dst): one
+    * (src, terminal dst, hops) triple per path, so a diamond lists its
+    * terminal once per path. Each round composes the mapping with itself,
+    * as a left self-join on dst = src would: a null key never matches, and
+    * a successor row with a null dst keeps the row's own dst but still
+    * counts as an extension. Iterations are bounded to guard against
+    * cyclic input.
+    */
+  def doubling(edges: Seq[(Any, Any)], maxIter: Int = 30): Seq[(Any, Any, Int)] = {
+    var m: Seq[(Any, Any, Int)] = edges.map { case (s, d) => (s, d, 1) }
+    var iter = 0
+    var extending = true
+    while (extending && iter < maxIter) {
+      val bySrc = m.filter(_._1 != null).groupBy(_._1)
+      extending = false
+      m = m.flatMap { case row @ (s, d, h) =>
+        bySrc.get(d) match {
+          case Some(next) =>
+            extending = true
+            next.map { case (_, nd, nh) => (s, if (nd == null) d else nd, h + nh) }
+          case None => Seq(row)
+        }
+      }
+      iter += 1
+    }
+    require(!extending,
+      s"Closure.resolve: still extending after $maxIter doublings (cyclic edges?)")
+    m
+  }
+
   /** Resolve every `node` to its terminal successor(s).
-    *
-    * Each iteration materializes onto a *fresh cached-RDD leaf*.
-    * `localCheckpoint` is not enough: Spark 4 carries the child plan's
-    * statistics onto the checkpointed node
-    * (`LogicalRDD.rewriteStatsAndConstraints`), so a self-join loop squares
-    * the BigInt sizeInBytes every iteration until stats arithmetic itself
-    * hangs the planner. A cached RDD re-wrapped via `createDataFrame` resets
-    * stats to the leaf default each round. The superseded iteration's cache
-    * is released as soon as its successor materializes, and the converged
-    * mapping — broadcast-sized by construction, it feeds a broadcast join —
-    * is collected into a local relation, so `resolve` retains zero executor
-    * storage after it returns.
     *
     * @param nodes single-column frame `node`
     * @param edges two-column frame `src`, `dst`; rows multiply on splits
     * @return frame (`old_code`, `final_code`, `hops`)
     */
   def resolve(nodes: DataFrame, edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val spark = edges.sparkSession
-    // mapping m: src → (dst, hops) after following up to 2^k edges
-    val m0 = edges.select(col("src"), col("dst"), lit(1).as("hops"))
-    var mRdd = m0.rdd
-    mRdd.cache()
-    mRdd.count()
-    var m = spark.createDataFrame(mRdd, m0.schema)
-    var iter = 0
-    var extending = true
-    while (extending && iter < maxIter) {
-      val a = m.select(col("src"), col("dst"), col("hops"))
-      val b = m.select(col("src").as("b_src"), col("dst").as("b_dst"), col("hops").as("b_hops"))
-      val composed = a.join(b, a("dst") === b("b_src"), "left")
-        .select(
-          col("src"),
-          coalesce(col("b_dst"), col("dst")).as("dst"),
-          (col("hops") + coalesce(col("b_hops"), lit(0))).as("hops"),
-          col("b_src").isNotNull.as("extended"))
-      // one pass materializes AND detects convergence: the extension count
-      // rides an accumulator on the caching job (only compared to zero, so
-      // task-retry over-counting is harmless)
-      val acc = composed.sparkSession.sparkContext.longAccumulator("closure-extended")
-      val rdd = composed.rdd.map { r => if (r.getBoolean(3)) acc.add(1L); r }
-      rdd.cache()
-      rdd.count()
-      extending = acc.value > 0
-      mRdd.unpersist(blocking = false) // release the superseded iteration
-      mRdd = rdd
-      m = composed.sparkSession.createDataFrame(rdd, composed.schema).drop("extended")
-      iter += 1
-    }
-    require(!extending,
-      s"Closure.resolve: still extending after $maxIter doublings (cyclic edges?)")
-    // The mapping is joined by broadcast below, so it already has to fit on
-    // the driver: collect it into a local relation and release the final
-    // iteration's cache instead of letting it outlive the call.
-    val rows = m.collect()
-    mRdd.unpersist(blocking = false)
-    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), m.schema)
+    val e = edges.select(col("src"), col("dst"))
+    val mapping = doubling(e.collect().toSeq.map(r => (r.get(0), r.get(1))), maxIter)
+    val schema = StructType(e.schema.fields :+ StructField("hops", IntegerType, nullable = false))
+    val local = edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(mapping.map { case (s, d, h) => Row(s, d, h) }: _*), schema)
     nodes
       .join(broadcast(local), nodes("node") === local("src"), "left")
       .select(

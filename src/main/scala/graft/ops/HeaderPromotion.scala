@@ -13,16 +13,22 @@ import org.apache.spark.sql.types.LongType
   * scripts/wait-times/build_datasets_wait_times.R:126-133).
   *
   * Spark frames are unordered, so the file order the reference relies on is
-  * made explicit with `zipWithIndex` (SURVEY §7 hard part 1) — a stable,
-  * partition-order-preserving index with one lightweight extra job to count
+  * made explicit with a row index (SURVEY §7 hard part 1): the partition
+  * number in the high bits, the position within the partition in the low
+  * 33 — ordered like the input but not contiguous, with no job to count
   * per-partition offsets, no shuffle and no single-partition collapse.
   */
 object HeaderPromotion {
 
-  /** Attach a stable row index reflecting current (file) order. */
+  /** Attach a stable row index reflecting current (file) order. Only its
+    * order means anything: `(partition << 33) + position`.
+    */
   def withRowIndex(df: DataFrame, indexCol: String = "_row_idx"): DataFrame = {
     val schema = df.schema.add(indexCol, LongType, nullable = false)
-    val rdd = df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+    val rdd = df.rdd.mapPartitionsWithIndex { (p, rows) =>
+      var i = (p.toLong << 33) - 1
+      rows.map { r => i += 1; Row.fromSeq(r.toSeq :+ i) }
+    }
     df.sparkSession.createDataFrame(rdd, schema)
   }
 

@@ -12,16 +12,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the edge list (organisational changes) is tiny relative
   * to any fact table — change-EVENT-sized, thousands of rows for a national
-  * registry over decades — so the expansion broadcasts it and the finished
-  * table is collected to the driver for downstream broadcast use (the same
-  * bounded-artifact contract as the closure mapping and IVF centroids).
-  * The round-6 shape ran the refinement/classification steps as ~20 small
-  * broadcast-join jobs in SERIES — 6.8 s of pure job-scheduling latency at
-  * any data size. Since the classification operates on exactly the rows the
-  * final collect returns anyway, it now runs driver-side on the collected
-  * paths in one pass: TWO Spark jobs total (edge-table leaf + expansion
-  * collect), identical output (GoldenDerivePathsSpec pins all 677 rows
-  * byte-exact).
+  * registry over decades — and the finished table is a driver-side local
+  * relation for downstream broadcast use (the same bounded-artifact contract
+  * as the closure mapping and IVF centroids). Every step reads only the
+  * edges or the paths the expansion yields, so the whole derivation runs on
+  * the driver over the collected edges: at most ONE Spark job (the edge
+  * collect; none for a local edge frame), and a job costs fixed scheduling
+  * latency at any data size. GoldenDerivePathsSpec pins all 677 rows
+  * byte-exact.
   *
   * Input schema: (old_code, new_code, change_date) — one row per
   * succession edge; multiple rows per old_code encode a split.
@@ -31,58 +29,35 @@ object OrgChangePaths {
 
   def derivePaths(successors: DataFrame, maxHops: Int = 3): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
     val spark = successors.sparkSession
 
-    val edges = successors.select(col("old_code").as("e_src"),
-      col("new_code").as("e_dst"), col("change_date").as("e_date"))
+    val in = successors.select(col("old_code"), col("new_code"), col("change_date"))
+    val edges = in.collect()
     // a src with >1 successors is a split — every branch row is typed 'split'
-    // (build_all_org_changes.R:100-102: lengths(new_code_var) > 1).
-    // Leafed onto a cached RDD so the maxHops expansion joins broadcast the
-    // materialized rows instead of re-running the count aggregation (and so
-    // the analyzer sees a leaf, not maxHops copies of the groupBy subtree).
-    val withCnt = edges.join(
-      edges.groupBy(col("e_src")).agg(count(lit(1)).as("e_nsucc")), Seq("e_src"))
-    val edgesRdd = withCnt.rdd
-    edgesRdd.cache()
-    edgesRdd.count()
-    val edgesC = spark.createDataFrame(edgesRdd, withCnt.schema)
+    // (build_all_org_changes.R:100-102: lengths(new_code_var) > 1)
+    val bySrc = edges.filter(!_.isNullAt(0)).groupBy(_.get(0))
 
-    // Every code ever seen starts its own chain (R:62-68); codes that never
-    // changed drop out after expansion via the !is.na(new_code_1) filter.
-    val allCodes = edges.select(col("e_src").as("code"))
-      .union(edges.select(col("e_dst"))).distinct()
-
-    var m = allCodes.select(col("code").as("old_code"), col("code").as("new_code_0"))
-    for (i <- 1 to maxHops) {
-      m = m.join(broadcast(edgesC), col(s"new_code_${i - 1}") === col("e_src"), "left")
-        .withColumn(s"new_code_$i", col("e_dst"))
-        .withColumn(s"date_change_$i", col("e_date"))
-        .withColumn(s"change_type_$i",
-          when(col("e_dst").isNull, lit(null).cast("string"))
-            .when(col("e_nsucc") > 1, lit("split"))
-            .otherwise(lit("merger_or_name_change")))
-        .drop("e_src", "e_dst", "e_date", "e_nsucc")
+    // Every code ever seen starts its own chain (R:62-68); each hop is a
+    // left join on the chain's last code (a null code matches nothing).
+    var chains: Seq[(Vector[String], Vector[Any], Vector[String])] = edges.toSeq
+      .flatMap(e => Seq(e.getString(0), e.getString(1))).filter(_ != null).distinct
+      .map(c => (Vector(c), Vector(), Vector()))
+    for (_ <- 1 to maxHops) chains = chains.flatMap { case (nc, dates, cts) =>
+      bySrc.get(nc.last) match {
+        case Some(next) => next.toSeq.map { e =>
+          val ct = if (e.isNullAt(1)) null
+            else if (next.length > 1) "split" else "merger_or_name_change"
+          (nc :+ e.getString(1), dates :+ e.get(2), cts :+ ct)
+        }
+        case None => Seq((nc :+ null, dates :+ null, cts :+ null))
+      }
     }
-    val expanded = m.filter(col("new_code_1").isNotNull)
-    // The ONE collect: every step below reads only these rows, and the
-    // finished table is driver-materialized for broadcast reuse anyway.
-    val pathRows = expanded.collect()
-    edgesRdd.unpersist(blocking = false)
-
-    val sch = expanded.schema
-    val iOld = sch.fieldIndex("old_code")
-    val iNc = (0 to maxHops).map(i => sch.fieldIndex(s"new_code_$i"))
-    val iDate = (1 to maxHops).map(i => sch.fieldIndex(s"date_change_$i"))
-    val iCt = (1 to maxHops).map(i => sch.fieldIndex(s"change_type_$i"))
-    def str(r: Row, i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
 
     // One mutable record per chain; ct is the refinement's working copy.
-    final class Chain(val row: Row) {
-      val old: String = str(row, iOld)
-      val nc: Array[String] = (0 to maxHops).map(i => str(row, iNc(i))).toArray
-      val ct: Array[String] =
-        (Seq[String](null) ++ (1 to maxHops).map(i => str(row, iCt(i - 1)))).toArray
+    final class Chain(val nc: Vector[String], val dates: Vector[Any], cts: Vector[String]) {
+      val old: String = nc(0)
+      val ct: Array[String] = (null +: cts).toArray
       def hasCt(v: String): Boolean = (1 to maxHops).exists(i => ct(i) == v)
       var finalCode: String = _
       var split: Boolean = false
@@ -90,7 +65,8 @@ object OrgChangePaths {
       var adj: Int = 0
       var inCompl: Boolean = false
     }
-    val paths = pathRows.map(new Chain(_))
+    // codes that never changed drop out (the !is.na(new_code_1) filter)
+    val paths = chains.collect { case (nc, dates, cts) if nc(1) != null => new Chain(nc, dates, cts) }
 
     // original paths = chains not contained in a longer one (R:112-117)
     val succCodes: Set[String] =
@@ -166,27 +142,26 @@ object OrgChangePaths {
     // common columns, R:239-244): only chains whose final code is part of
     // a complicated path keep their labels; everything else resets to the
     // clean defaults.
-    val rows: Array[Row] = o.map { c =>
+    val rows = o.map { c =>
       val keep = c.inCompl && pcp.contains(c.finalCode)
-      val hopVals = (1 to maxHops).flatMap(i =>
-        Seq(c.row.get(iNc(i)), c.row.get(iDate(i - 1)), c.ct(i)))
+      val hopVals = (1 to maxHops).flatMap(i => Seq(c.nc(i), c.dates(i - 1), c.ct(i)))
       Row.fromSeq(
-        Seq(c.row.get(iOld), c.row.get(iNc(0))) ++ hopVals ++ Seq(
+        Seq(c.old, c.old) ++ hopVals ++ Seq(
           c.finalCode,
           if (c.split) 1 else 0,
           if (keep) c.dpc else "no",
           if (keep) c.adj else 0,
           if (pcp.contains(c.finalCode)) 1 else 0))
     }
-    val byName = sch.fields.map(f => f.name -> f).toMap
+    val code = in.schema("old_code").dataType
     val outSchema = StructType(
-      Seq(byName("old_code"), byName("new_code_0")) ++
-        (1 to maxHops).flatMap(i => Seq(byName(s"new_code_$i"),
-          byName(s"date_change_$i"), byName(s"change_type_$i"))) ++
-        Seq(StructField("final_code", byName("new_code_1").dataType),
+      Seq(StructField("old_code", code), StructField("new_code_0", code)) ++
+        (1 to maxHops).flatMap(i => Seq(StructField(s"new_code_$i", code),
+          StructField(s"date_change_$i", in.schema("change_date").dataType),
+          StructField(s"change_type_$i", StringType))) ++
+        Seq(StructField("final_code", code),
           StructField("experiences_split", IntegerType, nullable = false),
-          StructField("direct_path_complicated",
-            org.apache.spark.sql.types.StringType, nullable = false),
+          StructField("direct_path_complicated", StringType, nullable = false),
           StructField("adjacent_to_complicated", IntegerType, nullable = false),
           StructField("part_of_complicated_path", IntegerType, nullable = false)))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
@@ -195,33 +170,47 @@ object OrgChangePaths {
 
 /** Org-change lookup derivations over the committed succession-paths table
   * (`data/org-changes/all_org_changes_paths_2000_2018.csv`), re-expressing
-  * scripts/org-changes/build_trust_lookup.R Spark-first. The closure itself
-  * runs on the generic [[graft.ops.Closure]] pointer-doubling operator;
+  * scripts/org-changes/build_trust_lookup.R. The paths table is collected
+  * once and everything runs on the driver: the closure on the
+  * [[graft.ops.Closure.doubling]] kernel, and the results are local frames.
   * GoldenOrgChangesSpec pins both stages against the committed outputs.
   */
 object OrgChanges {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-  /** Edge list (src → dst) from the paths table's hop columns
-    * (new_code_0 = old_code, hops new_code_1..3; NA-terminated).
+  /** One row per chain: its codes new_code_0..3 (NA-terminated),
+    * final_code, experiences_split, whether it is outside every complicated
+    * path, and old_code.
     */
-  def edgesFromPaths(paths: DataFrame): DataFrame = {
-    val hops = Seq("new_code_0" -> "new_code_1", "new_code_1" -> "new_code_2",
-      "new_code_2" -> "new_code_3")
-    hops.map { case (a, b) =>
-      paths.filter(col(b).isNotNull && col(b) =!= "NA")
-        .select(col(a).as("src"), col(b).as("dst"))
-    }.reduce(_ union _).distinct()
+  private def chains(paths: DataFrame): Seq[Row] =
+    paths.select(col("new_code_0"), col("new_code_1"), col("new_code_2"), col("new_code_3"),
+      col("final_code"), col("experiences_split").cast("int"),
+      col("part_of_complicated_path") === "0", col("old_code")).collect().toSeq
+
+  private def present(v: Any): Boolean = v != null && v != "NA"
+
+  /** (old_code, final_code, hops) for every code appearing anywhere in a
+    * chain, over the edges the chains' consecutive hops spell out.
+    */
+  private def resolveChains(rows: Seq[Row]): Seq[(Any, Any, Int)] = {
+    val edges = rows.flatMap(r =>
+      (1 to 3).collect { case i if present(r.get(i)) => (r.get(i - 1), r.get(i)) }).distinct
+    val bySrc = Closure.doubling(edges).groupBy(_._1)
+    rows.flatMap(r => Seq(7, 1, 2, 3).map(r.get)).filter(present).distinct.flatMap { c =>
+      bySrc.get(c).fold(Seq((c, c, 0)))(_.map { case (_, d, h) => (c, d, h) })
+    }
   }
 
-  /** Every code appearing anywhere in a chain. */
-  def allCodes(paths: DataFrame): DataFrame =
-    Seq("old_code", "new_code_1", "new_code_2", "new_code_3")
-      .map(c => paths.filter(col(c).isNotNull && col(c) =!= "NA").select(col(c).as("node")))
-      .reduce(_ union _).distinct()
+  private def codeType(paths: DataFrame) = paths.schema("old_code").dataType
 
   /** (old_code, final_code, hops): closure of every known code. */
-  def resolved(paths: DataFrame): DataFrame =
-    Closure.resolve(allCodes(paths), edgesFromPaths(paths))
+  def resolved(paths: DataFrame): DataFrame = {
+    val rows = resolveChains(chains(paths)).map { case (o, f, h) => Row(o, f, h) }
+    paths.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("old_code", codeType(paths)), StructField("final_code", codeType(paths)),
+      StructField("hops", IntegerType, nullable = false))))
+  }
 
   /** Re-derivation of trust_lookup_uncomplicated_changes.csv
     * (build_trust_lookup.R:66-109): closure mapping, minus identity rows,
@@ -230,25 +219,21 @@ object OrgChanges {
     * swap, build_trust_lookup.R:104-107).
     */
   def trustLookup(paths: DataFrame): DataFrame = {
-    val mapping = resolved(paths)
-      .select(col("old_code"), col("final_code"))
-      .filter(col("old_code") =!= col("final_code"))
-      .distinct()
-
-    val unproblematic = paths
-      .filter(col("part_of_complicated_path") === "0")
-      .select(col("experiences_split").cast("int").as("experiences_split"), col("final_code"))
-      .distinct()
-
-    val joined = mapping.join(broadcast(unproblematic), Seq("final_code"), "left")
-      .withColumn("problematic", when(col("experiences_split").isNull, 1).otherwise(0))
-
-    // U6 value swap: clean splits become backwards mergers
-    val swap = col("experiences_split") === 1 && col("problematic") === 0
-    joined.select(
-      when(swap, col("final_code")).otherwise(col("old_code")).as("old_code"),
-      when(swap, col("old_code")).otherwise(col("final_code")).as("final_code"),
-      col("experiences_split"),
-      col("problematic"))
+    val rows = chains(paths)
+    val mapping = resolveChains(rows).collect { case (o, f, _) if o != f => (o, f) }.distinct
+    // (final_code → experiences_split) of the unproblematic paths
+    val unproblematic = rows.filter(r => !r.isNullAt(6) && r.getBoolean(6))
+      .map(r => (r.get(4), r.get(5))).distinct.groupBy(_._1)
+    val out = mapping.flatMap { case (o, f) =>
+      unproblematic.get(f).fold(Seq(Row(o, f, null, 1)))(_.map {
+        // U6 value swap: clean splits become backwards mergers
+        case (_, 1) => Row(f, o, 1, 0)
+        case (_, split) => Row(o, f, split, if (split == null) 1 else 0)
+      })
+    }
+    paths.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField("old_code", codeType(paths)), StructField("final_code", codeType(paths)),
+      StructField("experiences_split", IntegerType),
+      StructField("problematic", IntegerType, nullable = false))))
   }
 }

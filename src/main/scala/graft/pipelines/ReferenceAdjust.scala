@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
   * here those parameters are explicit and the logic exists once:
   *
   *  - name lookup: first or last distinct (code, name) pair in file order
-  *    (`slice(1)` vs `slice_tail(n=1)`);
+  *    (`slice(1)` vs `slice_tail(n=1)`, [[names]]);
   *  - problematic trusts flagged, never merged;
   *  - affected = codes on either side of a clean change;
   *  - the change-indicator derivation, replicated bug-for-bug (group-wide
@@ -76,10 +76,14 @@ object ReferenceAdjust {
     * (`exp_problematic_org_change`), then split the panel into the rows a
     * clean change touches — joined to their `final_code` and
     * `experiences_split` — and the untouched rest (without `_row_idx`).
-    * One broadcast join against [[lookupTable]], split by a predicate.
+    * One broadcast join against [[lookupTable]], split by a predicate. The
+    * join lands on an RDD leaf: each branch reading it (the untouched rows,
+    * the re-keyed rows and the change indicator) would otherwise broadcast
+    * its own column-pruned copy of the lookup, one Spark job each.
     */
   private[pipelines] def splitByLookup(body: DataFrame, lookup: DataFrame): (DataFrame, DataFrame) = {
-    val j = body.join(broadcast(lookupTable(lookup)), Seq("org_code"), "left")
+    val joined = body.join(broadcast(lookupTable(lookup)), Seq("org_code"), "left")
+    val j = body.sparkSession.createDataFrame(joined.rdd, joined.schema)
     val flagged = ("org_code" +: body.columns.filterNot(_ == "org_code"))
       .map(c => col(s"`$c`")) :+
       when(col("__problematic"), 1).otherwise(0).as("exp_problematic_org_change")
@@ -88,19 +92,20 @@ object ReferenceAdjust {
       j.filter(!isAffected).select(flagged: _*).drop("_row_idx"))
   }
 
+  /** One (`org_code`, `org_name`) row per code: the name of the code's
+    * first distinct (code, name) pair in `_row_idx` order (`slice(1)`), or
+    * with `keepLast` of its last one (`slice_tail(n=1)` over `distinct()`:
+    * the pair whose FIRST appearance is latest). A null name is a pair too.
+    */
+  private[pipelines] def names(data: DataFrame, keepLast: Boolean): DataFrame =
+    if (keepLast)
+      data.groupBy(col("org_code"), col("org_name"))
+        .agg(min(col("_row_idx")).as("first_idx"))
+        .groupBy(col("org_code")).agg(max_by(col("org_name"), col("first_idx")).as("org_name"))
+    else data.groupBy(col("org_code")).agg(min_by(col("org_name"), col("_row_idx")).as("org_name"))
+
   def adjust(data: DataFrame, lookup: DataFrame, params: Params): DataFrame = {
     val hasName = data.columns.contains("org_name")
-
-    // ---- name lookup: first/last distinct pair in file order ----
-    val names =
-      if (!hasName) null
-      else Relational.firstPerGroup(
-        data.select(col("org_code"), col("org_name"), col("_row_idx"))
-          .groupBy(col("org_code"), col("org_name"))
-          .agg(min(col("_row_idx")).as("first_idx")),
-        Seq("org_code"),
-        Seq(if (params.nameKeepLast) col("first_idx").desc else col("first_idx").asc))
-        .select(col("org_code"), col("org_name"))
 
     val (joined, unaffected) = splitByLookup(data.drop("org_name"), lookup)
 
@@ -115,7 +120,6 @@ object ReferenceAdjust {
         when(col("year") === col("change_year") && col("__qnum").isNotNull, col("__maxq")))
     val ci = Fill.up(ci0, Seq("change_quarter"), Seq("org_code", "final_code"), Seq(col("_row_idx")))
       .select(col("final_code"), col("change_year"), col("change_quarter"), col("experiences_split"))
-      .distinct()
       .withColumnRenamed("final_code", "org_code")
       .withColumn("__q1",
         when(col("change_quarter").isNotNull,
@@ -161,7 +165,8 @@ object ReferenceAdjust {
       .withColumn("exp_unproblematic_org_change",
         max(col("unproblematic_org_change")).over(Window.partitionBy(col("org_code"))))
 
-    if (hasName) withCi.join(broadcast(names), Seq("org_code"), "left") else withCi
+    if (hasName) withCi.join(broadcast(names(data, params.nameKeepLast)), Seq("org_code"), "left")
+    else withCi
   }
 
   /** Monthly-grain variant (critical-care beds,
@@ -180,16 +185,6 @@ object ReferenceAdjust {
                     nameKeepLast: Boolean = false,
                     mergedPost: DataFrame => DataFrame = identity): DataFrame = {
     val hasName = data.columns.contains("org_name")
-    val names =
-      if (!hasName) null
-      else Relational.firstPerGroup(
-        data.select(col("org_code"), col("org_name"), col("_row_idx"))
-          .groupBy(col("org_code"), col("org_name"))
-          .agg(min(col("_row_idx")).as("first_idx")),
-        Seq("org_code"),
-        Seq(if (nameKeepLast) col("first_idx").desc else col("first_idx").asc))
-        .select(col("org_code"), col("org_name"))
-
     val (joined, unaffected) = splitByLookup(data.drop("org_name"), lookup)
 
     // date-based change indicator: +1 month for mergers, in-place for splits
@@ -221,6 +216,7 @@ object ReferenceAdjust {
       .withColumn("exp_unproblematic_org_change",
         max(col("unproblematic_org_change")).over(Window.partitionBy(col("org_code"))))
 
-    if (hasName) withCi.join(broadcast(names), Seq("org_code"), "left") else withCi
+    if (hasName) withCi.join(broadcast(names(data, nameKeepLast)), Seq("org_code"), "left")
+    else withCi
   }
 }

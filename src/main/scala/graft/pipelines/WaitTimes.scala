@@ -58,12 +58,7 @@ object WaitTimes {
     val indexed = HeaderPromotion.withRowIndex(panel)
 
     // name lookup: first distinct pair in file order (R:449-453)
-    val names = Relational.firstPerGroup(
-        indexed.select(col("org_code"), col("org_name"), col("_row_idx"))
-          .groupBy(col("org_code"), col("org_name"))
-          .agg(min(col("_row_idx")).as("first_idx")),
-        Seq("org_code"), Seq(col("first_idx").asc))
-      .select(col("org_code"), col("org_name"))
+    val names = ReferenceAdjust.names(indexed, keepLast = false)
     // problematic flag + affected split (R:459-478)
     val (joined, unaffected) =
       ReferenceAdjust.splitByLookup(indexed.drop("org_name", "_row_idx"), lookup)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * min(R-hop-bounded distance), a pure function of (graph, seeds, R)
   * that the SQL oracle unrolls round by round.
   *
-  * Scale shape mirrors the PageRank dual: a dictionary-CSR driver loop
-  * when the node count fits `broadcastMaxNodes` (one map-only job per
+  * Scale shape mirrors the PageRank dual: a [[DriverCsr]] loop when the
+  * node count fits `broadcastMaxNodes` (one map-only job per
   * round over the cached in-adjacency, node-sized driver state), else a
   * distributed loop that min-merges the reached frame against the
   * cached edge list (rebased per round via RDD cache — the
@@ -49,7 +49,7 @@ object Bfs {
     */
   def hopDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, rounds: Int,
-                   broadcastMaxNodes: Long = 2000000L): DataFrame = {
+                   broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val g = buildHopGraph(edges, srcCol, dstCol, broadcastMaxNodes)
     // driver-path walks are eager (local-row results), so closing after
@@ -63,8 +63,8 @@ object Bfs {
     * the dictionary and adjacency for the second walk duplicated every
     * build shuffle (guide §2.4: remove shuffles outright). Graphs above
     * `broadcastMaxNodes` get a fallback handle that delegates each walk
-    * to the distributed relax unchanged (no shared state — per-walk cost
-    * is already the honest shape there, and the walk results stay lazy).
+    * to the distributed relax unchanged (per-walk cost is already the
+    * honest shape there, and the walk results stay lazy).
     *
     * Build-path economy vs the pre-handle entry points: the raw edge
     * projection feeds [[PageRank.adjacencyPlan]] DIRECTLY — the dedup
@@ -74,35 +74,20 @@ object Bfs {
     *
     * Lifecycle: driver-path walks are EAGER (state in driver arrays,
     * results local-row frames), so the handle's only distributed residue
-    * is the cached adjacency RDD — [[HopGraph.close]] releases it after
-    * the last walk. The harness's Storage.releaseAll sweeps a leaked one.
+    * is the [[DriverCsr]] graph's cache — [[HopGraph.close]] releases it
+    * after the last walk. The harness's Storage.releaseAll sweeps a
+    * leaked one.
     */
   def buildHopGraph(edges: DataFrame, srcCol: String, dstCol: String,
-                    broadcastMaxNodes: Long = 2000000L): HopGraph = {
-    val spark = edges.sparkSession
+                    broadcastMaxNodes: Long = DriverCsr.MaxNodes): HopGraph = {
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val nodes0 = eRaw.select(col("src").as("node"))
-      .union(eRaw.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    val nodeType = nodes0.schema.fields(0).dataType
-    if (n == 0) {
-      nodes0.unpersist(blocking = false)
-      return new HopGraph(spark, eRaw, nodeType, None, 0L)
+    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+        broadcastMaxNodes) { (srcIds, dstIds) =>
+      PageRank.adjacencyPlan(eRaw, srcIds, dstIds)
+        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
     }
-    if (n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L)) {
-      val nodeVals: Array[Any] = nodes0.collect().map(_.get(0))
-      nodes0.unpersist(blocking = false)
-      val (srcIds, dstIds) = idFrames(spark, nodeVals, nodeType)
-      val adj: org.apache.spark.rdd.RDD[(Int, Array[Int])] =
-        PageRank.adjacencyPlan(eRaw, srcIds, dstIds)
-          .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-      adj.cache()
-      adj.count()
-      new HopGraph(spark, eRaw, nodeType, Some((nodeVals, adj)), n)
-    } else {
-      nodes0.unpersist(blocking = false)
-      new HopGraph(spark, eRaw, nodeType, None, n)
-    }
+    if (g.onDriver) g.adj.count()
+    new HopGraph(eRaw, g)
   }
 
   /** The prebuilt-graph handle for hop (w ≡ 1) walks — see
@@ -110,54 +95,44 @@ object Bfs {
     * entry points (same dictionary, same adjacency recurrence).
     */
   final class HopGraph private[operators] (
-      spark: SparkSession, eRaw: DataFrame,
-      nodeType: org.apache.spark.sql.types.DataType,
-      csr: Option[(Array[Any], org.apache.spark.rdd.RDD[(Int, Array[Int])])],
-      n: Long) {
+      eRaw: DataFrame, g: DriverCsr.Graph[(Int, Array[Int])]) {
+    private val spark = eRaw.sparkSession
 
     /** [[Bfs.hopDistances]] over the prebuilt graph. */
     def distances(seeds: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (n == 0) return emptyOut(spark, nodeType)
-      csr match {
-        case Some((nodeVals, adj)) =>
-          val seedVals = typedSeedVals(seeds, nodeType)
-          require(seedVals.nonEmpty, "seeds must be non-empty")
-          csrRounds(spark, nodeVals, nodeType, adj, rounds,
-            Array.tabulate(n.toInt)(j =>
-              if (seedVals.contains(nodeVals(j))) 0L else INF))
-        case None =>
-          val e = eRaw.distinct()
-          val seedDf = typedSeeds(e, seeds)
-          require(!seedDf.isEmpty, "seeds must be non-empty")
-          distributedState(spark, e, seedsFrame(e, seedDf), rounds)
+      if (g.n == 0) emptyOut(spark, g.nodeType)
+      else if (g.onDriver) {
+        val seedVals = typedSeedVals(seeds, g.nodeType)
+        require(seedVals.nonEmpty, "seeds must be non-empty")
+        csrRounds(g, rounds, g.nodeVals.map(v => if (seedVals.contains(v)) 0L else INF))
+      } else {
+        val e = eRaw.distinct()
+        val seedDf = typedSeeds(e, seeds)
+        require(!seedDf.isEmpty, "seeds must be non-empty")
+        distributedState(spark, e, seedsFrame(e, seedDf), rounds)
       }
     }
 
     /** [[Bfs.resumeDistances]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (n == 0) return emptyOut(spark, nodeType)
-      val p = prior.select(
-        col("node").cast(nodeType).as("node"),
-        col("dist").cast(LongType).as("dist"))
-      csr match {
-        case Some((nodeVals, adj)) =>
-          val m: Map[Any, Long] = p.collect()
-            .map(r => (r.get(0), r.getLong(1))).toMap
-          csrRounds(spark, nodeVals, nodeType, adj, rounds,
-            Array.tabulate(n.toInt)(j => m.getOrElse(nodeVals(j), INF)))
-        case None =>
-          val e = eRaw.distinct()
-          val d0 = e.select(col("src").as("node"))
-            .union(e.select(col("dst").as("node"))).distinct()
-            .join(p, Seq("node")).select(col("node"), col("dist"))
-          distributedState(spark, e, d0, rounds)
+      if (g.n == 0) return emptyOut(spark, g.nodeType)
+      val p = snapshot(prior, g.nodeType)
+      if (g.onDriver) {
+        val m = collectDists(p)
+        csrRounds(g, rounds, g.nodeVals.map(m.getOrElse(_, INF)))
+      } else {
+        val e = eRaw.distinct()
+        val d0 = e.select(col("src").as("node"))
+          .union(e.select(col("dst").as("node"))).distinct()
+          .join(p, Seq("node")).select(col("node"), col("dist"))
+        distributedState(spark, e, d0, rounds)
       }
     }
 
-    /** Release the cached adjacency (driver path only; no-op otherwise). */
-    def close(): Unit = csr.foreach(_._2.unpersist(blocking = false))
+    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    def close(): Unit = g.close()
 
     /** The incremental-refresh fixpoint on the driver path: relax to the
       * fixpoint from (prior ∪ seeds-at-0) and hand `consume` exactly the
@@ -168,20 +143,12 @@ object Bfs {
       */
     private[operators] def refreshFixpoint(seeds: DataFrame, prior: DataFrame,
                                            consume: DataFrame => Unit): Boolean = {
-      import scala.jdk.CollectionConverters._
-      if (n == 0) { consume(emptyOut(spark, nodeType)); return true }
-      if (csr.isEmpty) return false
-      val (nodeVals, adj) = csr.get
-      val m: Map[Any, Long] = prior.select(
-          col("node").cast(nodeType).as("node"),
-          col("dist").cast(LongType).as("dist"))
-        .collect().map(r => (r.get(0), r.getLong(1))).toMap
-      val seedVals = typedSeedVals(seeds, nodeType)
-      val dist0 = Array.tabulate(n.toInt) { j =>
-        if (seedVals.contains(nodeVals(j))) 0L
-        else m.getOrElse(nodeVals(j), INF)
-      }
-      var dist = dist0
+      if (g.n == 0) { consume(emptyOut(spark, g.nodeType)); return true }
+      if (!g.onDriver) return false
+      val (nodeVals, adj) = (g.nodeVals, g.adj)
+      val m = collectDists(snapshot(prior, g.nodeType))
+      val seedVals = typedSeedVals(seeds, g.nodeType)
+      var dist = nodeVals.map(v => if (seedVals.contains(v)) 0L else m.getOrElse(v, INF))
       var changed = true
       while (changed) {
         val bc = spark.sparkContext.broadcast(dist)
@@ -203,32 +170,9 @@ object Bfs {
           if (d < next(did)) { next(did) = d; changed = true } }
         dist = next
       }
-      val improvedRows: java.util.List[org.apache.spark.sql.Row] =
-        (0 until n.toInt).iterator
-          .filter { i => dist(i) != INF &&
-            m.get(nodeVals(i)).forall(dist(i) < _) }
-          .map(i => org.apache.spark.sql.Row(nodeVals(i), dist(i)))
-          .toSeq.asJava
-      consume(spark.createDataFrame(improvedRows, StructType(Seq(
-        StructField("node", nodeType, nullable = true),
-        StructField("dist", LongType, nullable = false)))))
+      consume(distFrame(g, dist, i => m.get(nodeVals(i)).forall(dist(i) < _)))
       true
     }
-  }
-
-  /** Dictionary frames for the driver-CSR id mapping. */
-  private def idFrames(spark: SparkSession, nodeVals: Array[Any],
-                       nodeType: org.apache.spark.sql.types.DataType)
-      : (DataFrame, DataFrame) = {
-    import scala.jdk.CollectionConverters._
-    val idRows: java.util.List[org.apache.spark.sql.Row] =
-      nodeVals.zipWithIndex.map { case (v, i) =>
-        org.apache.spark.sql.Row(v, i) }.toSeq.asJava
-    val idSchema = StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("id", org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val srcIds = spark.createDataFrame(idRows, idSchema)
-    (srcIds, srcIds.select(col("node").as("node2"), col("id").as("id2")))
   }
 
   private def emptyOut(spark: SparkSession,
@@ -238,6 +182,23 @@ object Bfs {
       StructType(Seq(
         StructField("node", nodeType, nullable = true),
         StructField("dist", LongType, nullable = false))))
+
+  /** A (node, dist) snapshot cast to the graph's node type. */
+  private def snapshot(prior: DataFrame,
+                       nodeType: org.apache.spark.sql.types.DataType): DataFrame =
+    prior.select(col("node").cast(nodeType).as("node"),
+      col("dist").cast(LongType).as("dist"))
+
+  /** A snapshot on the driver: node-sized, within the driver contract. */
+  private def collectDists(p: DataFrame): Map[Any, Long] =
+    p.collect().map(r => (r.get(0), r.getLong(1))).toMap
+
+  /** The reached nodes of a driver distance vector that pass `keep`. */
+  private def distFrame(g: DriverCsr.Graph[_], dist: Array[Long],
+                        keep: Int => Boolean = _ => true): DataFrame =
+    g.frame(dist.indices.iterator.filter(i => dist(i) != INF && keep(i))
+        .map(i => Row(g.nodeVals(i), dist(i))),
+      StructField("dist", LongType, nullable = false))
 
   /** The seed frame cast to the NODE column's type before any matching:
     * the driver path compares with strict runtime equality
@@ -279,12 +240,9 @@ object Bfs {
     * unreached) over a prebuilt cached adjacency. The adjacency stays
     * cached — its lifetime belongs to the [[HopGraph]] handle.
     */
-  private def csrRounds(spark: SparkSession, nodeVals: Array[Any],
-                        nodeType: org.apache.spark.sql.types.DataType,
-                        adj: org.apache.spark.rdd.RDD[(Int, Array[Int])],
-                        rounds: Int, init: Array[Long]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val n = nodeVals.length
+  private def csrRounds(g: DriverCsr.Graph[(Int, Array[Int])], rounds: Int,
+                        init: Array[Long]): DataFrame = {
+    val (spark, adj) = (g.nodes.sparkSession, g.adj)
     var dist = init
     var r = 0
     while (r < rounds) {
@@ -308,13 +266,7 @@ object Bfs {
       dist = next
       r += 1
     }
-    val outRows: java.util.List[org.apache.spark.sql.Row] =
-      (0 until n).iterator.filter(dist(_) != INF)
-        .map(i => org.apache.spark.sql.Row(nodeVals(i), dist(i)))
-        .toSeq.asJava
-    spark.createDataFrame(outRows, StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("dist", LongType, nullable = false))))
+    distFrame(g, dist)
   }
 
   /** Distributed rounds from an arbitrary initial reached frame. */
@@ -446,53 +398,42 @@ object Bfs {
     */
   def landmarkDistances(edges: DataFrame, srcCol: String, dstCol: String,
                         landmarks: DataFrame, rounds: Int,
-                        broadcastMaxNodes: Long = 2000000L): DataFrame = {
+                        broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val spark = edges.sparkSession
     // raw projection: the driver path's adjacency build dedups inside its
     // one int-keyed exchange, so no upstream string distinct (the
     // buildHopGraph economy); the distributed branch distincts below.
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val nodes0 = eRaw.select(col("src").as("node"))
-      .union(eRaw.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
     val lmDf = typedSeeds(eRaw, landmarks)
     val lmVals: Array[Any] = lmDf.collect().map(_.get(0))
     require(lmVals.nonEmpty, "landmarks must be non-empty")
-    if (n == 0) {
-      val out = nodes0.withColumn("lm", col("node"))
-        .withColumn("dist", lit(0L)).limit(0)
-      nodes0.unpersist(blocking = false)
-      return out
+    // driver state is n·L longs: the gate admits n <= bound / L
+    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+        broadcastMaxNodes / lmVals.length) { (srcIds, dstIds) =>
+      PageRank.adjacencyPlan(eRaw, srcIds, dstIds)
+        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
     }
-    if (n * lmVals.length <= math.min(broadcastMaxNodes, Int.MaxValue - 8L))
-      landmarkDriverState(spark, eRaw, nodes0, n.toInt, lmVals, rounds)
-    else {
-      nodes0.unpersist(blocking = false)
-      val e = eRaw.distinct()
-      val nodesDf = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-      val d0 = nodesDf.join(lmDf.select(col("node").as("lm")),
-          nodesDf("node") === col("lm"))
-        .select(col("node"), col("lm"), lit(0L).as("dist"))
-      landmarkDistributedState(spark, e, d0, rounds)
-    }
+    try {
+      if (g.n == 0)
+        g.nodes.withColumn("lm", col("node")).withColumn("dist", lit(0L)).limit(0)
+      else if (g.onDriver) landmarkCsrRounds(g, lmVals, rounds)
+      else {
+        val e = eRaw.distinct()
+        val nodesDf = e.select(col("src").as("node"))
+          .union(e.select(col("dst").as("node"))).distinct()
+        val d0 = nodesDf.join(lmDf.select(col("node").as("lm")),
+            nodesDf("node") === col("lm"))
+          .select(col("node"), col("lm"), lit(0L).as("dist"))
+        landmarkDistributedState(spark, e, d0, rounds)
+      }
+    } finally g.close()
   }
 
-  private def landmarkDriverState(spark: SparkSession, e: DataFrame,
-                                  nodes0: DataFrame, n: Int,
-                                  lmVals: Array[Any], rounds: Int): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val nodeVals: Array[Any] = nodes0.collect().map(_.get(0))
-    nodes0.unpersist(blocking = false)
-    val nodeType = nodes0.schema.fields(0).dataType
-    val (srcIds, dstIds) = idFrames(spark, nodeVals, nodeType)
-    val adj: org.apache.spark.rdd.RDD[(Int, Array[Int])] =
-      PageRank.adjacencyPlan(e, srcIds, dstIds)
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-    adj.cache()
+  private def landmarkCsrRounds(g: DriverCsr.Graph[(Int, Array[Int])],
+                                lmVals: Array[Any], rounds: Int): DataFrame = {
+    val (spark, adj, n, nodeVals) = (g.nodes.sparkSession, g.adj, g.n.toInt, g.nodeVals)
     adj.count()
-
     val nodeIdx: Map[Any, Int] = nodeVals.zipWithIndex.toMap
     val L = lmVals.length
     // dist(l)(i): landmark l's distance to node i — all L vectors relax
@@ -538,16 +479,12 @@ object Bfs {
       dist = next
       r += 1
     }
-    adj.unpersist(blocking = false)
-    val outRows: java.util.List[org.apache.spark.sql.Row] =
-      (for (l <- (0 until L).iterator; i <- (0 until n).iterator
-            if dist(l)(i) != INF)
-        yield org.apache.spark.sql.Row(nodeVals(i), lmVals(l), dist(l)(i)))
-        .toSeq.asJava
-    spark.createDataFrame(outRows, StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("lm", nodeType, nullable = true),
-      StructField("dist", LongType, nullable = false))))
+    g.frame(
+      for (l <- (0 until L).iterator; i <- (0 until n).iterator
+           if dist(l)(i) != INF)
+        yield Row(nodeVals(i), lmVals(l), dist(l)(i)),
+      StructField("lm", g.nodeType, nullable = true),
+      StructField("dist", LongType, nullable = false))
   }
 
   private def landmarkDistributedState(spark: SparkSession, e: DataFrame,
@@ -627,7 +564,7 @@ object Bfs {
     */
   def weightedDistances(edges: DataFrame, srcCol: String, dstCol: String,
                         weightCol: String, seeds: DataFrame, rounds: Int,
-                        broadcastMaxNodes: Long = 2000000L): DataFrame = {
+                        broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val g = buildWeightedGraph(edges, srcCol, dstCol, weightCol,
       broadcastMaxNodes)
@@ -645,49 +582,34 @@ object Bfs {
     */
   def buildWeightedGraph(edges: DataFrame, srcCol: String, dstCol: String,
                          weightCol: String,
-                         broadcastMaxNodes: Long = 2000000L): WeightedGraph = {
-    val spark = edges.sparkSession
+                         broadcastMaxNodes: Long = DriverCsr.MaxNodes): WeightedGraph = {
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast(LongType).as("w"))
-    val nodes0 = eRaw.select(col("src").as("node"))
-      .union(eRaw.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    val nodeType = nodes0.schema.fields(0).dataType
-    if (n == 0) {
-      nodes0.unpersist(blocking = false)
-      return new WeightedGraph(spark, eRaw, nodeType, None, 0L, 0L)
+    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+        broadcastMaxNodes) { (srcIds, dstIds) =>
+      weightedAdjacencyPlan(eRaw, srcIds, dstIds)
+        .rdd.map { r =>
+          val ins = r.getSeq[Row](1)
+          val sids = new Array[Int](ins.length)
+          val ws = new Array[Long](ins.length)
+          var j = 0
+          ins.foreach { x => sids(j) = x.getInt(0); ws(j) = x.getLong(1); j += 1 }
+          (r.getInt(0), sids, ws)
+        }
     }
+    if (g.n == 0) return new WeightedGraph(eRaw, g, 0L)
     val wStats = eRaw.agg(min(col("w")).as("lo"), max(col("w")).as("hi")).head()
-    require(!wStats.isNullAt(0) && wStats.getLong(0) >= 1L,
-      s"edge weights must be positive longs, found min ${wStats.get(0)}")
-    if (n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L)) {
-      val nodeVals: Array[Any] = nodes0.collect().map(_.get(0))
-      nodes0.unpersist(blocking = false)
-      val (srcIds, dstIds) = idFrames(spark, nodeVals, nodeType)
-      val adj: org.apache.spark.rdd.RDD[(Int, Array[Int], Array[Long])] =
-        weightedAdjacencyPlan(eRaw, srcIds, dstIds)
-          .rdd.map { r =>
-            val ins = r.getSeq[org.apache.spark.sql.Row](1)
-            val sids = new Array[Int](ins.length)
-            val ws = new Array[Long](ins.length)
-            var j = 0
-            ins.foreach { x => sids(j) = x.getInt(0); ws(j) = x.getLong(1); j += 1 }
-            (r.getInt(0), sids, ws)
-          }
-      adj.cache()
-      adj.count()
-      // collapsed max weight, one pass over the cached CSR — the bound
-      // the old post-collapse agg computed
-      val maxW = adj.map { case (_, _, ws) =>
-        var m = 0L; var j = 0
-        while (j < ws.length) { if (ws(j) > m) m = ws(j); j += 1 }
-        m
-      }.fold(0L)(math.max)
-      new WeightedGraph(spark, eRaw, nodeType, Some((nodeVals, adj)), n, maxW)
-    } else {
-      nodes0.unpersist(blocking = false)
-      new WeightedGraph(spark, eRaw, nodeType, None, n, wStats.getLong(1))
-    }
+    val positive = !wStats.isNullAt(0) && wStats.getLong(0) >= 1L
+    if (!positive) g.close()
+    require(positive, s"edge weights must be positive longs, found min ${wStats.get(0)}")
+    // collapsed max weight, one pass over the cached CSR (which it
+    // materializes) — the bound the old post-collapse agg computed
+    val maxW = if (!g.onDriver) wStats.getLong(1) else g.adj.map { case (_, _, ws) =>
+      var m = 0L; var j = 0
+      while (j < ws.length) { if (ws(j) > m) m = ws(j); j += 1 }
+      m
+    }.fold(0L)(math.max)
+    new WeightedGraph(eRaw, g, maxW)
   }
 
   /** Weighted sibling of [[PageRank.adjacencyPlan]] — the same two
@@ -710,63 +632,54 @@ object Bfs {
     * [[buildWeightedGraph]].
     */
   final class WeightedGraph private[operators] (
-      spark: SparkSession, eRaw: DataFrame,
-      nodeType: org.apache.spark.sql.types.DataType,
-      csr: Option[(Array[Any],
-                   org.apache.spark.rdd.RDD[(Int, Array[Int], Array[Long])])],
-      n: Long, maxW: Long) {
+      eRaw: DataFrame, g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
+      maxW: Long) {
+    private val spark = eRaw.sparkSession
 
     /** [[Bfs.weightedDistances]] over the prebuilt graph. */
     def distances(seeds: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (n == 0) return emptyOut(spark, nodeType)
+      if (g.n == 0) return emptyOut(spark, g.nodeType)
       require(rounds == 0 || maxW <= (Long.MaxValue - 1L) / rounds,
         s"rounds*maxWeight would overflow: rounds=$rounds maxW=$maxW")
-      csr match {
-        case Some((nodeVals, adj)) =>
-          val seedVals = typedSeedVals(seeds, nodeType)
-          require(seedVals.nonEmpty, "seeds must be non-empty")
-          csrRoundsWeighted(spark, nodeVals, nodeType, adj, rounds,
-            Array.tabulate(n.toInt)(j =>
-              if (seedVals.contains(nodeVals(j))) 0L else INF))
-        case None =>
-          val e = collapsed
-          val seedDf = typedSeeds(e, seeds)
-          require(!seedDf.isEmpty, "seeds must be non-empty")
-          weightedDistributedState(spark, e, seedsFrame(e, seedDf), rounds)
+      if (g.onDriver) {
+        val seedVals = typedSeedVals(seeds, g.nodeType)
+        require(seedVals.nonEmpty, "seeds must be non-empty")
+        csrRoundsWeighted(g, rounds,
+          g.nodeVals.map(v => if (seedVals.contains(v)) 0L else INF))
+      } else {
+        val e = collapsed
+        val seedDf = typedSeeds(e, seeds)
+        require(!seedDf.isEmpty, "seeds must be non-empty")
+        weightedDistributedState(spark, e, seedsFrame(e, seedDf), rounds)
       }
     }
 
     /** [[Bfs.resumeWeightedDistances]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (n == 0) return emptyOut(spark, nodeType)
-      val p = prior.select(
-        col("node").cast(nodeType).as("node"),
-        col("dist").cast(LongType).as("dist"))
+      if (g.n == 0) return emptyOut(spark, g.nodeType)
+      val p = snapshot(prior, g.nodeType)
       val maxPriorRow = p.agg(max(col("dist"))).head()
       val maxPrior = if (maxPriorRow.isNullAt(0)) 0L else maxPriorRow.getLong(0)
       require(maxPrior >= 0L, s"snapshot distances must be >= 0, max $maxPrior")
       require(rounds == 0 || maxW <= (Long.MaxValue - 1L - maxPrior) / rounds,
         s"maxPrior + rounds*maxWeight would overflow: " +
           s"maxPrior=$maxPrior rounds=$rounds maxW=$maxW")
-      csr match {
-        case Some((nodeVals, adj)) =>
-          val m: Map[Any, Long] = p.collect()
-            .map(r => (r.get(0), r.getLong(1))).toMap
-          csrRoundsWeighted(spark, nodeVals, nodeType, adj, rounds,
-            Array.tabulate(n.toInt)(j => m.getOrElse(nodeVals(j), INF)))
-        case None =>
-          val e = collapsed
-          val d0 = e.select(col("src").as("node"))
-            .union(e.select(col("dst").as("node"))).distinct()
-            .join(p, Seq("node")).select(col("node"), col("dist"))
-          weightedDistributedState(spark, e, d0, rounds)
+      if (g.onDriver) {
+        val m = collectDists(p)
+        csrRoundsWeighted(g, rounds, g.nodeVals.map(m.getOrElse(_, INF)))
+      } else {
+        val e = collapsed
+        val d0 = e.select(col("src").as("node"))
+          .union(e.select(col("dst").as("node"))).distinct()
+          .join(p, Seq("node")).select(col("node"), col("dist"))
+        weightedDistributedState(spark, e, d0, rounds)
       }
     }
 
-    /** Release the cached adjacency (driver path only; no-op otherwise). */
-    def close(): Unit = csr.foreach(_._2.unpersist(blocking = false))
+    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    def close(): Unit = g.close()
 
     /** The distributed branch's parallel-edge MIN collapse (the driver
       * branch collapses inside the adjacency exchange instead).
@@ -785,7 +698,7 @@ object Bfs {
   def resumeWeightedDistances(edges: DataFrame, srcCol: String,
                               dstCol: String, weightCol: String,
                               prior: DataFrame, rounds: Int,
-                              broadcastMaxNodes: Long = 2000000L): DataFrame = {
+                              broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val g = buildWeightedGraph(edges, srcCol, dstCol, weightCol,
       broadcastMaxNodes)
@@ -796,13 +709,9 @@ object Bfs {
     * adjacency — [[csrRounds]]' weighted sibling; raw d + w is exact
     * because the caller checked the hoisted overflow bound.
     */
-  private def csrRoundsWeighted(spark: SparkSession, nodeVals: Array[Any],
-                                nodeType: org.apache.spark.sql.types.DataType,
-                                adj: org.apache.spark.rdd.RDD[
-                                  (Int, Array[Int], Array[Long])],
+  private def csrRoundsWeighted(g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
                                 rounds: Int, init: Array[Long]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val n = nodeVals.length
+    val (spark, adj) = (g.nodes.sparkSession, g.adj)
     var dist = init
     var r = 0
     while (r < rounds) {
@@ -824,13 +733,7 @@ object Bfs {
       dist = next
       r += 1
     }
-    val outRows: java.util.List[org.apache.spark.sql.Row] =
-      (0 until n).iterator.filter(dist(_) != INF)
-        .map(i => org.apache.spark.sql.Row(nodeVals(i), dist(i)))
-        .toSeq.asJava
-    spark.createDataFrame(outRows, StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("dist", LongType, nullable = false))))
+    distFrame(g, dist)
   }
 
   private def weightedDistributedState(spark: SparkSession, e: DataFrame,
@@ -873,7 +776,7 @@ object Bfs {
     */
   def resumeDistances(edges: DataFrame, srcCol: String, dstCol: String,
                       prior: DataFrame, rounds: Int,
-                      broadcastMaxNodes: Long = 2000000L): DataFrame = {
+                      broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val g = buildHopGraph(edges, srcCol, dstCol, broadcastMaxNodes)
     try g.resumeFrom(prior, rounds) finally g.close()
@@ -945,7 +848,7 @@ object Bfs {
   def refreshDistances(edges: DataFrame, srcCol: String, dstCol: String,
                        newEdges: DataFrame, seeds: DataFrame,
                        prior: DataFrame,
-                       broadcastMaxNodes: Long = 2000000L)
+                       broadcastMaxNodes: Long = DriverCsr.MaxNodes)
                       (consume: DataFrame => Unit): Unit = {
     val spark = edges.sparkSession
     // DRIVER-CSR FIXPOINT when the node count fits the bounded contract

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *     pass of the incidence table — 2k jobs of mostly fixed overhead
   *     at bench scale; the driver sweep is one collect. Selection
   *     replays the distributed rule exactly: gain DESC, then LOWEST id
-  *     under Spark's own column ordering (numeric for integral ids,
-  *     unsigned UTF-8 bytes for strings — the Mst.driverForest
-  *     argument), pinned driver ≡ distributed in CoverageSpec.
+  *     under Spark's own ordering of the id type, nulls first
+  *     ([[DriverCsr.ordering]]; unsigned UTF-8 bytes for strings — the
+  *     Mst.driverForest argument), pinned driver ≡ distributed in
+  *     CoverageSpec.
   *   - DISTRIBUTED SWEEP otherwise: k passes over the incidence table,
   *     each ONE anti-join against the covered set plus one
   *     map-side-combined count and a TakeOrdered(1) winner draw. The
@@ -59,8 +60,11 @@ object Coverage {
       StructField("round", LongType, nullable = false),
       StructField("doc_id", idType),
       StructField("gain", LongType, nullable = false)))
+    // a null token is no vocabulary: dropped once, so both sweeps see
+    // the same element set
     val elems = df
       .select(col(idCol).as("__id"), explode(tokensCol).as("__tok"))
+      .filter(col("__tok").isNotNull)
       .distinct()
       .persist()
     try {
@@ -87,7 +91,7 @@ object Coverage {
           val id = winner.head.get(0)
           val gain = winner.head.getLong(1)
           picks += Row(r.toLong, id, gain)
-          covered ++= elems.filter(col("__id") === lit(id))
+          covered ++= elems.filter(col("__id") <=> lit(id))
             .select(col("__tok")).as[String].collect()
           r += 1
         }
@@ -104,25 +108,8 @@ object Coverage {
   private def greedyDriver(rows: Array[org.apache.spark.sql.Row],
                            idType: org.apache.spark.sql.types.DataType,
                            k: Int): Seq[org.apache.spark.sql.Row] = {
-    import java.nio.charset.StandardCharsets
-    // Spark's ascending column order for the tie-break: numeric for
-    // integral ids, unsigned UTF-8 bytes for strings (String.compareTo
-    // is UTF-16 code units — differs above the BMP)
-    def idCmp(a: Any, b: Any): Int = idType match {
-      case org.apache.spark.sql.types.StringType =>
-        val ab = a.asInstanceOf[String].getBytes(StandardCharsets.UTF_8)
-        val bb = b.asInstanceOf[String].getBytes(StandardCharsets.UTF_8)
-        var i = 0
-        while (i < ab.length && i < bb.length) {
-          val c = (ab(i) & 0xff) - (bb(i) & 0xff)
-          if (c != 0) return c
-          i += 1
-        }
-        ab.length - bb.length
-      case _ => java.lang.Long.compare(
-        a.asInstanceOf[java.lang.Number].longValue(),
-        b.asInstanceOf[java.lang.Number].longValue())
-    }
+    // the distributed winner draw's ascending id order, nulls first
+    val idOrd = DriverCsr.ordering(idType)
     // intern tokens to ints; group incidence rows per doc
     val tokIdx = new java.util.HashMap[String, Integer]()
     val docToks = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Int]]()
@@ -147,7 +134,7 @@ object Coverage {
     var exhausted = false
     while (r <= k && !exhausted) {
       var bestId: Any = null
-      var bestGain = 0L
+      var bestGain = 0L // 0 until a doc with an uncovered token is seen
       docs.foreach { e =>
         if (!picked.contains(e.getKey)) {
           var g = 0L
@@ -159,11 +146,11 @@ object Coverage {
           // them, so an all-covered round is "exhausted", not a 0-gain
           // pick)
           if (g >= 1L && (g > bestGain ||
-              (g == bestGain && (bestId == null || idCmp(e.getKey, bestId) < 0))))
+              (g == bestGain && idOrd.lt(e.getKey, bestId))))
             { bestGain = g; bestId = e.getKey }
         }
       }
-      if (bestId == null) exhausted = true
+      if (bestGain == 0L) exhausted = true
       else {
         picks += org.apache.spark.sql.Row(r.toLong, bestId, bestGain)
         val ts = docToks.get(bestId)

@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions._
   * R rounds unroll in the DuckDB oracle with zero tolerance (the
   * [[KMeans]] fixed-round discipline).
   *
-  * Scale shape: the deduplicated edge list persists TWICE, partitioned
-  * on each join key (the LabelPropagation lesson applied to a
-  * two-sided iteration): rounds exchange only node-sized score frames.
+  * Scale shape: graphs within the [[DriverCsr]] gate run both half-rounds
+  * on the driver over one cached in-adjacency. Above it, the
+  * deduplicated edge list persists TWICE, partitioned on each join key
+  * (the LabelPropagation lesson applied to a two-sided iteration):
+  * rounds exchange only node-sized score frames.
   * Per round the driver collects exactly two longs (the maxima) — the
   * bounded-scalar contract. Overflow bound (ANSI throws):
   * scale² · max-degree < 2⁶³ — at the default 10⁶ scale that admits
@@ -44,9 +46,10 @@ object Hits {
     */
   def hubsAuthorities(edges: DataFrame, srcCol: String, dstCol: String,
                       rounds: Int, scale: Long = 1000000L,
-                      broadcastMaxNodes: Long = 2000000L): DataFrame =
-    hitsCore(edges, srcCol, dstCol, rounds, scale, broadcastMaxNodes,
-      priorHubs = None)
+                      broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+    val g = buildHitsGraph(edges, srcCol, dstCol, broadcastMaxNodes)
+    try g.scores(rounds, scale) finally g.close()
+  }
 
   /** Persist a HITS score frame as a managed table — the
     * [[PageRank.saveRanks]] serving discipline for hub/authority
@@ -73,16 +76,20 @@ object Hits {
   def resumeHubsAuthorities(edges: DataFrame, srcCol: String, dstCol: String,
                             prior: DataFrame, rounds: Int,
                             scale: Long = 1000000L,
-                            broadcastMaxNodes: Long = 2000000L): DataFrame =
-    hitsCore(edges, srcCol, dstCol, rounds, scale, broadcastMaxNodes,
-      priorHubs = Some(prior.select(col("node"), col("hub_q"))))
+                            broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+    val g = buildHitsGraph(edges, srcCol, dstCol, broadcastMaxNodes)
+    try g.resumeFrom(prior, rounds, scale) finally g.close()
+  }
 
-  private def hitsCore(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int, scale: Long, broadcastMaxNodes: Long,
-                       priorHubs: Option[DataFrame]): DataFrame = {
+  private def checkRounds(rounds: Int, scale: Long): Unit = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(scale >= 1, s"scale must be >= 1, got $scale")
-    val spark = edges.sparkSession
+  }
+
+  /** The big-graph loop over the null-filtered (s, d) edges. */
+  private def hitsDistributed(eF: DataFrame, rounds: Int, scale: Long,
+                              priorHubs: Option[DataFrame]): DataFrame = {
+    val spark = eF.sparkSession
 
     def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
       val rdd = df.rdd
@@ -90,25 +97,7 @@ object Hits {
       (spark.createDataFrame(rdd, df.schema), rdd)
     }
 
-    // raw null-filtered projection: the driver path's multi-edge dedup
-    // rides the adjacency exchange (adjacencyPlan collapses duplicates),
-    // so no upstream distinct there; the distributed branch distincts
-    // below (its per-round sums would double-count otherwise)
-    val eF = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s").isNotNull && col("d").isNotNull)
-
-    val nodesProbe = eF.select(col("s").as("node"))
-      .union(eF.select(col("d").as("node"))).distinct().persist()
-    val nProbe = nodesProbe.count()
-    if (nProbe > 0 && nProbe <= math.min(broadcastMaxNodes, Int.MaxValue - 8L)) {
-      // the snapshot is node-sized — the driver path's contract already
-      // bounds node-sized driver state (the PageRank.resumeRanks shape)
-      val initH = priorHubs.map(_.collect()
-        .map(r => (r.get(0), r.getLong(1))).toMap)
-      return hitsDriverState(spark, eF, nodesProbe, nProbe.toInt, rounds,
-        scale, initH)
-    }
-    nodesProbe.unpersist(blocking = false)
+    // multi-edge dedup: the per-round sums would double-count otherwise
     val e0 = eF.distinct()
     val eByS = e0.repartition(col("s"))
     eByS.persist()
@@ -163,129 +152,75 @@ object Hits {
       .select(col("node"), col("h").as("hub_q"), col("a").as("auth_q"))
   }
 
-  /** The common-case loop on [[PageRank]]'s dictionary-CSR layout: the
-    * cached in-adjacency serves BOTH half-rounds — the authority gather
-    * a[d] = Σ h[s] reads each node's in-neighbor array (one map-only
-    * job + n-row collect), and the hub update h[s] = Σ a[d] is the
-    * TRANSPOSED product, a scatter over the same arrays folded through
-    * a per-partition n-long accumulator (the out-degree treeAggregate's
-    * memory contract). Maxima and normalization are O(n) driver longs.
-    * Bit-identical to the distributed loop (HitsSpec pins it).
-    */
-  /** The driver path's prebuilt state (the Bfs/PageRank handle shape):
-    * dictionary + cached CSR adjacency, built once and shared by the
-    * snapshot and resume walks of one query.
-    */
-  private[operators] final case class HitsCsr(
-      nodeVals: Array[Any],
-      nodeType: org.apache.spark.sql.types.DataType,
-      adj: org.apache.spark.rdd.RDD[(Int, Array[Int])])
-
-  private def buildHitsCsr(spark: org.apache.spark.sql.SparkSession,
-                           e0: DataFrame, nodes0: DataFrame): HitsCsr = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val nodeVals: Array[Any] = nodes0.collect().map(_.get(0))
-    nodes0.unpersist(blocking = false)
-    val nodeType = nodes0.schema.fields(0).dataType
-    val idRows: java.util.List[Row] =
-      nodeVals.zipWithIndex.map { case (v, i) => Row(v, i) }.toSeq.asJava
-    val idSchema = StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("id", IntegerType, nullable = false)))
-    val srcIds = spark.createDataFrame(idRows, idSchema)
-    val dstIds = srcIds.select(col("node").as("node2"), col("id").as("id2"))
-    val adj: org.apache.spark.rdd.RDD[(Int, Array[Int])] =
-      PageRank.adjacencyPlan(
-        e0.select(col("s").as("src"), col("d").as("dst")), srcIds, dstIds)
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-    adj.cache()
-    adj.count()
-    HitsCsr(nodeVals, nodeType, adj)
-  }
-
-  /** Shared-build handle for the q197 snapshot+resume gate: graph built
-    * once, cold and resumed walks run over it. Above `broadcastMaxNodes`
-    * the fallback handle delegates each walk to [[hitsCore]] unchanged.
+  /** Shared-build handle for the q197 snapshot+resume gate: the
+    * [[DriverCsr]] graph built once, cold and resumed walks run over it.
+    * Above `broadcastMaxNodes` the fallback handle runs each walk on the
+    * distributed loop.
     */
   def buildHitsGraph(edges: DataFrame, srcCol: String, dstCol: String,
-                     broadcastMaxNodes: Long = 2000000L): HitsGraph = {
-    val spark = edges.sparkSession
+                     broadcastMaxNodes: Long = DriverCsr.MaxNodes): HitsGraph = {
     // raw null-filtered projection: the driver path's dedup rides the
     // adjacency exchange (adjacencyPlan collapses duplicates), so no
-    // upstream distinct; the fallback distincts per call
+    // upstream distinct; the fallback distincts per walk
     val eF = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull)
-    val nodes0 = eF.select(col("s").as("node"))
-      .union(eF.select(col("d").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    if (n > 0 && n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L))
-      new HitsGraph(spark, edges, srcCol, dstCol, broadcastMaxNodes,
-        Some((buildHitsCsr(spark, eF, nodes0), n.toInt)))
-    else {
-      nodes0.unpersist(blocking = false)
-      new HitsGraph(spark, edges, srcCol, dstCol, broadcastMaxNodes, None)
+    val g = DriverCsr.build(DriverCsr.nodesOf(eF, "s", "d"), broadcastMaxNodes) {
+      (srcIds, dstIds) =>
+        PageRank.adjacencyPlan(eF.select(col("s").as("src"), col("d").as("dst")),
+          srcIds, dstIds).rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
     }
+    if (g.onDriver) g.adj.count()
+    new HitsGraph(eF, g)
   }
 
   /** See [[buildHitsGraph]]. */
   final class HitsGraph private[operators] (
-      spark: org.apache.spark.sql.SparkSession, edges: DataFrame,
-      srcCol: String, dstCol: String, broadcastMaxNodes: Long,
-      csr: Option[(HitsCsr, Int)]) {
+      eF: DataFrame, g: DriverCsr.Graph[(Int, Array[Int])]) {
 
     /** [[Hits.hubsAuthorities]] over the prebuilt graph. */
     def scores(rounds: Int, scale: Long = 1000000L): DataFrame = {
-      require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-      require(scale >= 1, s"scale must be >= 1, got $scale")
-      csr match {
-        case Some((c, n)) =>
-          hitsCsrLoop(spark, c, n, rounds, scale, initH = None)
-        case None => hitsCore(edges, srcCol, dstCol, rounds, scale,
-          broadcastMaxNodes, priorHubs = None)
-      }
+      checkRounds(rounds, scale)
+      if (g.onDriver) hitsCsrLoop(g, rounds, scale, initH = None)
+      else hitsDistributed(eF, rounds, scale, priorHubs = None)
     }
 
     /** [[Hits.resumeHubsAuthorities]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, rounds: Int,
                    scale: Long = 1000000L): DataFrame = {
-      require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-      require(scale >= 1, s"scale must be >= 1, got $scale")
+      checkRounds(rounds, scale)
       val p = prior.select(col("node"), col("hub_q"))
-      csr match {
-        case Some((c, n)) =>
-          val m = p.collect().map(r => (r.get(0), r.getLong(1))).toMap
-          hitsCsrLoop(spark, c, n, rounds, scale, initH = Some(m))
-        case None => hitsCore(edges, srcCol, dstCol, rounds, scale,
-          broadcastMaxNodes, priorHubs = Some(p))
-      }
+      if (g.onDriver) {
+        // the snapshot is node-sized, within the driver contract
+        val m = p.collect().map(r => (r.get(0), r.getLong(1))).toMap
+        hitsCsrLoop(g, rounds, scale, initH = Some(m))
+      } else hitsDistributed(eF, rounds, scale, priorHubs = Some(p))
     }
 
-    /** Release the cached adjacency (driver path only; no-op otherwise). */
-    def close(): Unit = csr.foreach(_._1.adj.unpersist(blocking = false))
+    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    def close(): Unit = g.close()
   }
 
-  private def hitsDriverState(spark: org.apache.spark.sql.SparkSession,
-                              e0: DataFrame, nodes0: DataFrame, n: Int,
-                              rounds: Int, scale: Long,
-                              initH: Option[scala.collection.Map[Any, Long]] = None): DataFrame = {
-    val csr = buildHitsCsr(spark, e0, nodes0)
-    try hitsCsrLoop(spark, csr, n, rounds, scale, initH)
-    finally csr.adj.unpersist(blocking = false)
-  }
-
-  private def hitsCsrLoop(spark: org.apache.spark.sql.SparkSession,
-                          csr: HitsCsr, n: Int, rounds: Int, scale: Long,
+  /** The driver path's rounds on [[PageRank]]'s in-adjacency layout: the
+    * cached adjacency serves BOTH half-rounds — the authority gather
+    * a[d] = Σ h[s] reads each node's in-neighbor array (one map-only
+    * job + n-row collect), and the hub update h[s] = Σ a[d] is the
+    * TRANSPOSED product, a scatter over the same arrays folded through
+    * a per-partition n-long accumulator. Maxima and normalization are
+    * O(n) driver longs. Bit-identical to the distributed loop (HitsSpec
+    * pins it).
+    */
+  private def hitsCsrLoop(g: DriverCsr.Graph[(Int, Array[Int])], rounds: Int,
+                          scale: Long,
                           initH: Option[scala.collection.Map[Any, Long]]): DataFrame = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val HitsCsr(nodeVals, nodeType, adj) = csr
+    import org.apache.spark.sql.types.{LongType, StructField}
+    val spark = g.nodes.sparkSession
+    val (nodeVals, adj, n) = (g.nodeVals, g.adj, g.n.toInt)
 
     // Overflow discipline: the distributed path's long sums and ANSI
     // multiply THROW past the documented scale²·max-degree bound — the
     // driver loop must fail the same way, never wrap silently into wrong
     // scores. The proof is HOISTED out of the per-edge loops (the
-    // PageRank ranksDriverState discipline): every score is in
+    // PageRank ranksCsrLoop discipline): every score is in
     // [0, scale] after normalize (raw(j) <= mx ⇒ ⌊raw·scale/mx⌋ <=
     // scale) and starts at scale, so every accumulator slot is bounded
     // by n·scale — one multiplyExact(n, scale) up front proves every
@@ -358,14 +293,8 @@ object Hits {
       h = normalize(hRaw)
       r += 1
     }
-    // adj stays cached — its lifetime belongs to the caller (the handle
-    // may run a second walk over it)
-    val outSchema = StructType(Seq(
-      StructField("node", nodeType, nullable = true),
+    g.frame(Iterator.tabulate(n)(i => Row(nodeVals(i), h(i), a(i))),
       StructField("hub_q", LongType, nullable = false),
-      StructField("auth_q", LongType, nullable = false)))
-    val outRows: java.util.List[Row] =
-      Array.tabulate(n)(i => Row(nodeVals(i), h(i), a(i))).toSeq.asJava
-    spark.createDataFrame(outRows, outSchema)
+      StructField("auth_q", LongType, nullable = false))
   }
 }

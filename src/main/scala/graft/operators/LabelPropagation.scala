@@ -21,12 +21,13 @@ import org.apache.spark.sql.functions._
   * bipartite-ish regions by design, so "fixed R" IS the deterministic
   * semantics, the [[KCore.peel]] oracle-form discipline.
   *
-  * Scale shape: the symmetric edge list persists HASH-PARTITIONED on
-  * the vote key, so R rounds pay ONE edge exchange total — each round
-  * joins the cached partitioning against the node-sized label frame
-  * (only the label frame exchanges), then a map-side-combined
-  * (node, label) count and a struct-min argmax — no driver-side graph
-  * state at any point. Labels rebase onto a cached
+  * Scale shape: long-keyed graphs within the [[DriverCsr]] gate run on
+  * the driver. Otherwise the symmetric edge list persists
+  * HASH-PARTITIONED on the vote key, so R rounds pay ONE edge exchange
+  * total — each round joins the cached partitioning against the
+  * node-sized label frame (only the label frame exchanges), then a
+  * map-side-combined (node, label) count and a struct-min argmax — no
+  * driver-side graph state at any point. Labels rebase onto a cached
   * RDD leaf per round (plan size O(1) in rounds) and each superseded
   * leaf is released once its successor materializes (the Closure
   * unpersist discipline). Caller releases the final leaves via
@@ -44,9 +45,10 @@ object LabelPropagation {
     * community representative.
     */
   def propagate(edges: DataFrame, srcCol: String, dstCol: String,
-                rounds: Int): DataFrame =
-    propagateCore(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      lit(1L).as("__w")), rounds)
+                rounds: Int): DataFrame = {
+    val g = buildLpaGraph(edges, srcCol, dstCol)
+    try g.propagate(rounds) finally g.close()
+  }
 
   /** Persist a labeling as a managed table — the [[PageRank.saveRanks]]
     * serving discipline applied to community labels: compute once,
@@ -72,10 +74,10 @@ object LabelPropagation {
     * arithmetic). On a grown graph it is the warm-start refresh shape.
     */
   def resumePropagate(edges: DataFrame, srcCol: String, dstCol: String,
-                      prior: DataFrame, rounds: Int): DataFrame =
-    propagateCore(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      lit(1L).as("__w")), rounds,
-      initLabels = Some(prior.select(col("node"), col("label"))))
+                      prior: DataFrame, rounds: Int): DataFrame = {
+    val g = buildLpaGraph(edges, srcCol, dstCol)
+    try g.resumeFrom(prior, rounds) finally g.close()
+  }
 
   /** WEIGHTED [[propagate]]: each neighbor's vote counts `weightCol`
     * (an exact integer — a near-dup similarity as a float weight would
@@ -85,9 +87,11 @@ object LabelPropagation {
     * (weight-sum desc, label asc).
     */
   def propagateWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                        weightCol: String, rounds: Int): DataFrame =
-    propagateCore(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      col(weightCol).cast("long").as("__w")), rounds)
+                        weightCol: String, rounds: Int): DataFrame = {
+    val g = lpaGraph(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
+      col(weightCol).cast("long").as("__w")))
+    try g.propagate(rounds) finally g.close()
+  }
 
   /** The canonical symmetric edge list (dedup to max weight, both
     * directions), persisted HASH-PARTITIONED ON `v` — the per-round
@@ -121,48 +125,15 @@ object LabelPropagation {
       .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("w"))
       .select(col("u").as("node"), col("w.l").as("label"))
 
-  private def propagateCore(edges: DataFrame, rounds: Int,
-                            initLabels: Option[DataFrame] = None): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+  /** The big-graph loop over the (`__s`, `__d`, `__w`) vote edges. */
+  private def lpaDistributed(edges: DataFrame, rounds: Int,
+                             initLabels: Option[DataFrame]): DataFrame = {
     val spark = edges.sparkSession
 
     def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
       val rdd = df.rdd
       rdd.cache()
       (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-
-    // Common case: long-keyed graph that fits the node-sized driver
-    // budget → the PageRank dictionary-CSR loop (one map-only job per
-    // round, no per-round shuffle at all). Other key types or bigger
-    // graphs take the distributed loop below — spec-pinned
-    // bit-identical.
-    if (edges.schema("__s").dataType ==
-        org.apache.spark.sql.types.LongType &&
-        edges.schema("__d").dataType ==
-        org.apache.spark.sql.types.LongType) {
-      // Node inventory from the CANONICAL edge list (self-loops and null
-      // endpoints dropped), the exact set the distributed path seeds its
-      // labels from (sym.u) — raw endpoints would emit self-loop-only
-      // nodes here but not there, breaking the bit-identity contract
-      // when a graph grows past broadcastMaxNodes.
-      val canon0 = edges.select(least(col("__s"), col("__d")).as("a"),
-          greatest(col("__s"), col("__d")).as("b"))
-        .filter(col("a") =!= col("b"))
-      val nodes = canon0.select(col("a").as("n"))
-        .union(canon0.select(col("b").as("n")))
-        .distinct().persist()
-      val n = nodes.count()
-      val fits = n > 0 && n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L)
-      if (fits) {
-        // the snapshot is node-sized — within the driver path's contract
-        val init = initLabels.map(_.collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toMap)
-        val out = propagateDriver(spark, edges, nodes, n.toInt, rounds, init)
-        nodes.unpersist(blocking = false)
-        return out
-      }
-      nodes.unpersist(blocking = false)
     }
 
     val sym = symPartitioned(edges)
@@ -196,155 +167,120 @@ object LabelPropagation {
     labels
   }
 
-  /** The graph-size bound for the driver-state path (the PageRank
-    * contract: node-sized arrays on the driver, nothing data-sized).
-    */
-  private val broadcastMaxNodes = 2000000L
-
-  /** Shared-build handle for the q198 snapshot+resume gate (the
-    * Bfs/PageRank/Hits discipline): dictionary + weighted CSR built
-    * once; cold and resumed propagation runs over it. Non-long-keyed or
-    * oversized graphs get a fallback handle delegating each walk to the
-    * one-shot entry points, unchanged.
+  /** Shared-build handle for the q198 snapshot+resume gate: the
+    * [[DriverCsr]] graph built once; cold and resumed propagation runs
+    * over it. Non-long-keyed or oversized graphs get a fallback handle
+    * that runs each walk on the distributed loop.
     */
   def buildLpaGraph(edges: DataFrame, srcCol: String,
-                    dstCol: String): LpaGraph = {
-    val spark = edges.sparkSession
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      lit(1L).as("__w"))
+                    dstCol: String): LpaGraph =
+    lpaGraph(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
+      lit(1L).as("__w")))
+
+  /** Long-keyed graphs that fit the gate take the driver loop (one
+    * map-only job per round, no per-round shuffle at all): the dictionary
+    * is SORTED, so a smaller index is a smaller label and the tie-break
+    * carries over. Other key types take the distributed loop, spec-pinned
+    * bit-identical.
+    */
+  private def lpaGraph(e: DataFrame): LpaGraph = {
     val longKeyed = e.schema("__s").dataType ==
       org.apache.spark.sql.types.LongType &&
       e.schema("__d").dataType == org.apache.spark.sql.types.LongType
-    if (!longKeyed) return new LpaGraph(spark, edges, srcCol, dstCol, None)
+    if (!longKeyed) return new LpaGraph(e, None)
+    // Node inventory from the CANONICAL edge list (self-loops and null
+    // endpoints dropped), the exact set the distributed path seeds its
+    // labels from (sym.u) — raw endpoints would emit self-loop-only
+    // nodes here but not there, breaking the bit-identity contract
+    // when a graph grows past the gate.
     val canon0 = e.select(least(col("__s"), col("__d")).as("a"),
         greatest(col("__s"), col("__d")).as("b"))
       .filter(col("a") =!= col("b"))
-    val nodes = canon0.select(col("a").as("n"))
-      .union(canon0.select(col("b").as("n")))
-      .distinct().persist()
-    val n = nodes.count()
-    val fits = n > 0 && n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L)
-    if (!fits) {
-      nodes.unpersist(blocking = false)
-      return new LpaGraph(spark, edges, srcCol, dstCol, None)
+    val g = DriverCsr.build(DriverCsr.nodesOf(canon0, "a", "b"),
+        DriverCsr.MaxNodes, sorted = true) { (ids, ids2) =>
+      // the weighted symmetric CSR: dedup to max weight, both directions
+      val canon = e.select(least(col("__s"), col("__d")).as("a"),
+          greatest(col("__s"), col("__d")).as("b"), col("__w"))
+        .filter(col("a") =!= col("b"))
+        .groupBy(col("a"), col("b")).agg(max(col("__w")).as("w"))
+      canon
+        .join(broadcast(ids), canon("a") === ids("node"))
+        .join(broadcast(ids2), canon("b") === ids2("node2"))
+        .select(col("id").as("ai"), col("id2").as("bi"), col("w"))
+        .select(explode(array(
+          struct(col("ai").as("u"), col("bi").as("v"), col("w")),
+          struct(col("bi").as("u"), col("ai").as("v"), col("w")))).as("e"))
+        .select(col("e.u"), col("e.v"), col("e.w"))
+        .repartition(col("u"))
+        .groupBy(col("u"))
+        .agg(collect_list(col("v")).as("vs"), collect_list(col("w")).as("ws"))
+        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray,
+          r.getSeq[Long](2).toArray))
     }
-    val csr = buildLpaCsr(spark, e, nodes, n.toInt)
-    nodes.unpersist(blocking = false)
-    new LpaGraph(spark, edges, srcCol, dstCol, Some(csr))
+    if (g.onDriver) g.adj.count()
+    new LpaGraph(e, Some(g))
   }
 
   /** See [[buildLpaGraph]]. */
   final class LpaGraph private[operators] (
-      spark: org.apache.spark.sql.SparkSession, edges: DataFrame,
-      srcCol: String, dstCol: String, csr: Option[LpaCsr]) {
+      e: DataFrame, g: Option[DriverCsr.Graph[(Int, Array[Int], Array[Long])]]) {
+
+    private def driver = g.filter(_.onDriver)
 
     /** [[LabelPropagation.propagate]] over the prebuilt graph. */
     def propagate(rounds: Int): DataFrame = {
       require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-      csr match {
-        case Some(c) => lpaLoop(spark, c, rounds, init = None)
-        case None => LabelPropagation.propagate(edges, srcCol, dstCol, rounds)
+      driver match {
+        case Some(c) => lpaLoop(c, rounds, init = None)
+        case None => lpaDistributed(e, rounds, initLabels = None)
       }
     }
 
     /** [[LabelPropagation.resumePropagate]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-      csr match {
+      val p = prior.select(col("node"), col("label"))
+      driver match {
         case Some(c) =>
-          val m = prior.select(col("node"), col("label")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toMap
-          lpaLoop(spark, c, rounds, init = Some(m))
-        case None => LabelPropagation.resumePropagate(edges, srcCol, dstCol,
-          prior, rounds)
+          // the snapshot is node-sized, within the driver contract
+          val m = p.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+          lpaLoop(c, rounds, init = Some(m))
+        case None => lpaDistributed(e, rounds, initLabels = Some(p))
       }
     }
 
-    /** Release the cached adjacency (driver path only; no-op otherwise). */
-    def close(): Unit = csr.foreach(_.csr.unpersist(blocking = false))
+    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    def close(): Unit = g.foreach(_.close())
   }
 
-  /** The common-case loop: long node ids dictionary-compress to dense
-    * ints (SORTED, so smaller index ⇔ smaller label — the tiebreak
-    * carries over), the weighted symmetric adjacency caches as a CSR
-    * RDD, and each round is ONE map-only job over it with the n-int
-    * label vector broadcast — votes tally in a per-row open-address
-    * pass over the neighbor array, winner = (weight desc, label asc).
-    * Bit-identical to the distributed loop (LabelPropagationSpec pins
-    * both paths on the same fixtures).
+  /** The driver path's rounds: each is ONE map-only job over the cached
+    * weighted CSR with the n-int label vector broadcast — votes tally in
+    * a per-row open-address pass over the neighbor array, winner =
+    * (weight desc, label asc). Bit-identical to the distributed loop
+    * (LabelPropagationSpec pins both paths on the same fixtures).
     */
-  /** The driver path's prebuilt state: SORTED long dictionary (smaller
-    * index ⇔ smaller label — the tiebreak carries over) + cached
-    * weighted CSR. Built once, shared by every walk of one query.
-    */
-  private[operators] final case class LpaCsr(nodeVals: Array[Long],
-      csr: org.apache.spark.rdd.RDD[(Int, Array[Int], Array[Long])])
-
-  private def buildLpaCsr(spark: org.apache.spark.sql.SparkSession,
-                          edges: DataFrame, nodes: DataFrame,
-                          n: Int): LpaCsr = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val nodeVals: Array[Long] = nodes.collect().map(_.getLong(0)).sorted
-    val idRows: java.util.List[Row] =
-      nodeVals.zipWithIndex.map { case (v, i) => Row(v, i) }.toSeq.asJava
-    val idSchema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("id", IntegerType, nullable = false)))
-    val ids = spark.createDataFrame(idRows, idSchema)
-    val ids2 = ids.select(col("node").as("node2"), col("id").as("id2"))
-    val canon = edges.select(least(col("__s"), col("__d")).as("a"),
-        greatest(col("__s"), col("__d")).as("b"), col("__w"))
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b")).agg(max(col("__w")).as("w"))
-    val csr: org.apache.spark.rdd.RDD[(Int, Array[Int], Array[Long])] = canon
-      .join(broadcast(ids), canon("a") === ids("node"))
-      .join(broadcast(ids2), canon("b") === ids2("node2"))
-      .select(col("id").as("ai"), col("id2").as("bi"), col("w"))
-      .select(explode(array(
-        struct(col("ai").as("u"), col("bi").as("v"), col("w")),
-        struct(col("bi").as("u"), col("ai").as("v"), col("w")))).as("e"))
-      .select(col("e.u"), col("e.v"), col("e.w"))
-      .repartition(col("u"))
-      .groupBy(col("u"))
-      .agg(collect_list(col("v")).as("vs"), collect_list(col("w")).as("ws"))
-      .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray,
-        r.getSeq[Long](2).toArray))
-    csr.cache()
-    csr.count()
-    LpaCsr(nodeVals, csr)
-  }
-
-  private def propagateDriver(spark: org.apache.spark.sql.SparkSession,
-                              edges: DataFrame, nodes: DataFrame, n: Int,
-                              rounds: Int,
-                              init: Option[scala.collection.Map[Long, Long]] = None): DataFrame = {
-    val c = buildLpaCsr(spark, edges, nodes, n)
-    try lpaLoop(spark, c, rounds, init)
-    finally c.csr.unpersist(blocking = false)
-  }
-
-  private def lpaLoop(spark: org.apache.spark.sql.SparkSession, c: LpaCsr,
+  private def lpaLoop(g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
                       rounds: Int,
                       init: Option[scala.collection.Map[Long, Long]]): DataFrame = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val LpaCsr(nodeVals, csr) = c
-    val n = nodeVals.length
+    import org.apache.spark.sql.types.{LongType, StructField}
+    val spark = g.nodes.sparkSession
+    val (nodeVals, csr, n) = (g.nodeVals, g.adj, g.n.toInt)
 
     // warm start: snapshot labels dictionary-compress to indexes; an
     // unseen node or a dangling label (no longer in the inventory —
     // binarySearch < 0) falls back to the node's own id, the cold value
     var labels = init match {
       case None => Array.tabulate(n)(identity)
-      case Some(m) => Array.tabulate(n) { j =>
-        m.get(nodeVals(j)) match {
-          case Some(l) =>
-            val idx = java.util.Arrays.binarySearch(nodeVals, l)
-            if (idx >= 0) idx else j
-          case None => j
+      case Some(m) =>
+        val keys = nodeVals.map(_.asInstanceOf[Long])
+        Array.tabulate(n) { j =>
+          m.get(keys(j)) match {
+            case Some(l) =>
+              val idx = java.util.Arrays.binarySearch(keys, l)
+              if (idx >= 0) idx else j
+            case None => j
+          }
         }
-      }
     }
     var r = 0
     while (r < rounds) {
@@ -383,14 +319,8 @@ object LabelPropagation {
       labels = arr
       r += 1
     }
-    // csr stays cached — its lifetime belongs to the caller (the handle
-    // may run a second walk over it)
-    val outSchema = StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("label", LongType, nullable = false)))
-    val outRows: java.util.List[Row] =
-      Array.tabulate(n)(i => Row(nodeVals(i), nodeVals(labels(i)))).toSeq.asJava
-    spark.createDataFrame(outRows, outSchema)
+    g.frame(Iterator.tabulate(n)(i => Row(nodeVals(i), nodeVals(labels(i)))),
+      StructField("label", LongType, nullable = false))
   }
 
   /** Community roll-up: one row per surviving label with its member

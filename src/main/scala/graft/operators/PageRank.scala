@@ -4,7 +4,7 @@ import graft.functions.IntOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** PageRank (Brin & Page 1998) in FIXED-POINT integer arithmetic — link
   * analysis for corpus curation (rank-weighted sampling, seed selection,
@@ -26,18 +26,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * Scale shape. Two layouts, chosen by node count — the MLlib shape
   * (data-sized state distributed, model-sized state on the driver):
   *
-  *   - `n <= broadcastMaxNodes` (the common case; rank state is ~16
-  *     bytes/node, exactly the bound ANY broadcast-rank PageRank implies):
-  *     node keys are dictionary-compressed to dense int ids once at
-  *     setup (two broadcast joins over the raw edges — profiling the
-  *     string-keyed loop showed per-round columnar decode + string
-  *     hashing of the edge cache was 90% of the round cost), and the
-  *     edge list is cached as TWO INT COLUMNS, partitioned by `src` by
+  *   - `n <= broadcastMaxNodes` (the common case): the [[DriverCsr]]
+  *     layout. Node keys are dictionary-compressed to dense int ids once
+  *     at setup (profiling the string-keyed loop showed per-round
+  *     columnar decode + string hashing of the edge cache was 90% of
+  *     the round cost), and the in-adjacency is cached as int arrays by
   *     the one shuffle that also collapses duplicate edges. Each round
-  *     broadcasts the node-sized (id → rank/outdeg) contribution table,
-  *     hash-joins it against the cached int edges, and collects the
-  *     map-side-combined dst sums — ONE job per round, zero per-round
-  *     Exchange on the edge side, nothing data-sized ever on the driver.
+  *     broadcasts the node-sized contribution vector and sums it in ONE
+  *     map-only job — nothing data-sized ever on the driver.
   *   - larger graphs: ranks stay distributed, rebased each round onto a
   *     cached-RDD leaf (the Closure pattern — carrying the loop's
   *     lineage squares plan statistics until planning hangs), and the
@@ -95,138 +91,44 @@ object PageRank {
   /** @param edges two-column frame (`src`, `dst`) of directed edges;
     *        duplicates are collapsed
     * @param broadcastMaxNodes graphs up to this many nodes keep the
-    *        node-sized rank state driver-local. The honest driver cost
-    *        is NOT 16 bytes/node: the node dictionary lives as boxed
-    *        rows while the id mapping materializes (≈100–200 bytes/node
-    *        for string keys), the per-round broadcast ships 8 bytes/node,
-    *        and the out-degree treeAggregate allocates one 8·n-byte
-    *        scratch per partition. The 2M default is comfortable in a
-    *        few-GB driver; raise it only with driver/executor memory to
-    *        match. Larger graphs keep ranks distributed and shuffle only
-    *        the rank frame against the cached src-partitioned edges.
+    *        node-sized rank state on the driver ([[DriverCsr]] states the
+    *        memory contract). Larger graphs keep ranks distributed and
+    *        shuffle only the rank frame against the cached src-partitioned
+    *        edges.
     * @return (`node`, `rank`) — fixed-point ranks after exactly
     *         `iterations` rounds from the uniform start
     */
   def ranks(edges: DataFrame, iterations: Int = 10,
             scale: Long = 1000000000000L,
             dampNum: Long = 85, dampDen: Long = 100,
-            broadcastMaxNodes: Long = 2000000L): DataFrame = {
+            broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+    val g = buildRankGraph(edges, broadcastMaxNodes)
+    try g.ranks(iterations, scale, dampNum, dampDen) finally g.close()
+  }
+
+  private def checkRounds(iterations: Int, dampNum: Long, dampDen: Long): Unit = {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
-    val spark = edges.sparkSession
-    val e = edges.select(col("src"), col("dst"))
-    // Node inventory: one distinct shuffle over both endpoint columns.
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    if (n == 0) {
-      val out = nodes0.withColumn("rank", lit(0L))
-      nodes0.unpersist(blocking = false)
-      return out
-    }
-    if (n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L))
-      ranksDriverState(spark, e, nodes0, n.toInt, iterations, scale, dampNum, dampDen)
-    else
-      ranksDistributedState(spark, e, nodes0, n, iterations, scale, dampNum, dampDen)
   }
 
-  /** Common case: dense-int dictionary compression + a cached CSR-style
-    * in-adjacency (did → array of in-neighbor ids) + driver-held
-    * node-sized rank state — the GraphX/Pregel layout reduced to its
-    * essentials. Per round: broadcast the n-long contribution vector
-    * (c_u = rank_u div outdeg_u), one MAP-ONLY job sums it over each
-    * node's in-neighbor array, collect n rows. No per-round shuffle, no
-    * per-round hash aggregation (profiling showed Spark's hash-agg
-    * machinery at ~0.4 µs/edge was the round floor once the edge scan
-    * itself was int-compressed), and nothing data-sized ever reaches the
-    * driver. Per-round work: O(edges/partition) adds per task, O(n)
-    * driver longs — both bounded contracts.
+  /** The driver path's rounds over a [[DriverCsr]] graph: broadcast the
+    * n-long contribution vector (c_u = rank_u div outdeg_u), one MAP-ONLY
+    * job sums it over each node's in-neighbor array, collect n rows. No
+    * per-round shuffle, no per-round hash aggregation (profiling showed
+    * Spark's hash-agg machinery at ~0.4 µs/edge was the round floor once
+    * the edge scan itself was int-compressed).
     */
-  /** The driver path's prebuilt state: node dictionary, cached CSR
-    * in-adjacency, and the out-degree vector — built ONCE and shared by
-    * every walk over the same graph (the Bfs.buildHopGraph discipline;
-    * the snapshot+resume gate q194 runs two walks on one unchanged
-    * graph). Release via [[RankGraph.close]].
-    */
-  private[operators] final case class RankCsr(
-      nodeVals: Array[Any],
-      nodeType: org.apache.spark.sql.types.DataType,
-      adj: org.apache.spark.rdd.RDD[(Int, Array[Int])],
-      outdeg: Array[Long])
-
-  private def buildRankCsr(spark: SparkSession, e: DataFrame,
-                           nodes0: DataFrame, n: Int): RankCsr = {
-    import scala.jdk.CollectionConverters._
-    val nodeVals: Array[Any] = nodes0.collect().map(_.get(0))
-    nodes0.unpersist(blocking = false)
-    val nodeType = nodes0.schema.fields(0).dataType
-    val idRows: java.util.List[Row] =
-      nodeVals.zipWithIndex.map { case (v, i) => Row(v, i) }.toSeq.asJava
-    val idSchema = StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("id", IntegerType, nullable = false)))
-    val srcIds = spark.createDataFrame(idRows, idSchema)
-    val dstIds = srcIds.select(col("node").as("node2"), col("id").as("id2"))
-    // ONE int shuffle builds both the dedup and the adjacency: map the
-    // endpoints to ids via broadcast joins, partition by did, collapse
-    // duplicate edges (the (did,sid) aggregate is satisfied by the did
-    // partitioning), then gather each node's in-neighbors (same
-    // partitioning again — no further exchange). Long sums are exact and
-    // commutative, so the gather order is free.
-    val adj: org.apache.spark.rdd.RDD[(Int, Array[Int])] =
-      adjacencyPlan(e, srcIds, dstIds)
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-    adj.cache()
-    // Out-degrees from the deduped adjacency itself (sid occurrences
-    // across all in-neighbor arrays) — one pass over the cached CSR, no
-    // second shuffle. Per-partition O(n) scratch, within the driver-path
-    // memory contract (n <= broadcastMaxNodes).
-    val outdeg = adj.treeAggregate(new Array[Long](n))(
-      seqOp = { (acc, kv) =>
-        val sids = kv._2
-        var j = 0
-        while (j < sids.length) { acc(sids(j)) += 1; j += 1 }
-        acc
-      },
-      combOp = { (a, b) =>
-        var j = 0
-        while (j < n) { a(j) += b(j); j += 1 }
-        a
-      })
-    RankCsr(nodeVals, nodeType, adj, outdeg)
-  }
-
-  private def ranksDriverState(spark: SparkSession, e: DataFrame, nodes0: DataFrame,
-                               n: Int, iterations: Int, scale: Long,
-                               dampNum: Long, dampDen: Long,
-                               seeds: Option[Set[Any]] = None,
-                               initFrom: Option[scala.collection.Map[Any, Long]] = None): DataFrame =
-    ranksCsrLoop(spark, buildRankCsr(spark, e, nodes0, n), n, iterations,
-      scale, dampNum, dampDen, seeds, initFrom)
-
-  private def ranksCsrLoop(spark: SparkSession, csr: RankCsr, n: Int,
+  private def ranksCsrLoop(g: DriverCsr.Graph[(Int, Array[Int])], outdeg: Array[Long],
                            iterations: Int, scale: Long,
                            dampNum: Long, dampDen: Long,
                            seeds: Option[Set[Any]] = None,
                            initFrom: Option[scala.collection.Map[Any, Long]] = None): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val RankCsr(nodeVals, nodeType, adj, outdeg) = csr
+    val spark = g.nodes.sparkSession
+    val (nodeVals, adj, n) = (g.nodeVals, g.adj, g.n.toInt)
 
     // uniform teleport (classic) or seed-restricted (personalized) —
     // same loop, different base/start vectors
-    val (baseArr, init): (Array[Long], Array[Long]) = seeds match {
-      case None =>
-        val b = scale * (dampDen - dampNum) / dampDen / n
-        (Array.fill(n)(b), Array.fill(n)(scale / n))
-      case Some(ss) =>
-        val flag = nodeVals.map(ss.contains)
-        val k = flag.count(identity)
-        require(k > 0, "no seed appears in the graph")
-        val b = scale * (dampDen - dampNum) / dampDen / k
-        require(b > 0 && scale / k > 0, s"scale $scale too small for $k seeds")
-        (Array.tabulate(n)(j => if (flag(j)) b else 0L),
-          Array.tabulate(n)(j => if (flag(j)) scale / k else 0L))
-    }
+    val (baseArr, init) = baseAndStart(nodeVals, scale, dampNum, dampDen, seeds)
     // warm start: resume from a prior snapshot; nodes the snapshot has
     // never seen start at the cold-start value (the round-R rank of a
     // node that joined later IS its cold value)
@@ -271,98 +173,143 @@ object PageRank {
         (did, s)
       }.collect()
       bc.destroy()
-      val next = baseArr.clone()
-      sums.foreach { case (did, s) =>
-        next(did) = Math.addExact(baseArr(did),
-          Math.multiplyExact(s, dampNum) / dampDen) }
-      rank = next
+      rank = damped(baseArr, sums, dampNum, dampDen)
       i += 1
     }
-    val outSchema = StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("rank", LongType, nullable = false)))
-    val outRows: java.util.List[Row] =
-      Array.tabulate(n)(i0 => Row(nodeVals(i0), rank(i0))).toSeq.asJava
-    spark.createDataFrame(outRows, outSchema)
+    rankFrame(g, rank)
   }
 
-  /** Shared-build handle for the snapshot+resume gates (the
-    * Bfs.buildHopGraph discipline): dictionary, cached CSR adjacency and
-    * out-degrees built ONCE; cold and resumed walks run over it. Graphs
-    * above `broadcastMaxNodes` get a fallback handle whose walks
-    * delegate to the distributed loop per call, unchanged.
+  /** Per-node base and start vectors of the driver loops: uniform
+    * teleport, or restricted to `seeds` (personalized).
+    */
+  private def baseAndStart(nodeVals: Array[Any], scale: Long, dampNum: Long,
+                           dampDen: Long,
+                           seeds: Option[Set[Any]]): (Array[Long], Array[Long]) = {
+    val n = nodeVals.length
+    seeds match {
+      case None =>
+        val b = scale * (dampDen - dampNum) / dampDen / n
+        (Array.fill(n)(b), Array.fill(n)(scale / n))
+      case Some(ss) =>
+        val flag = nodeVals.map(ss.contains)
+        val k = flag.count(identity)
+        require(k > 0, "no seed appears in the graph")
+        val b = scale * (dampDen - dampNum) / dampDen / k
+        require(b > 0 && scale / k > 0, s"scale $scale too small for $k seeds")
+        (Array.tabulate(n)(j => if (flag(j)) b else 0L),
+          Array.tabulate(n)(j => if (flag(j)) scale / k else 0L))
+    }
+  }
+
+  /** next(v) = base(v) + ⌊in-mass(v)·dampNum/dampDen⌋, checked. */
+  private def damped(baseArr: Array[Long], sums: Array[(Int, Long)],
+                     dampNum: Long, dampDen: Long): Array[Long] = {
+    val next = baseArr.clone()
+    sums.foreach { case (did, s) =>
+      next(did) = Math.addExact(baseArr(did),
+        Math.multiplyExact(s, dampNum) / dampDen) }
+    next
+  }
+
+  private def rankFrame(g: DriverCsr.Graph[_], rank: Array[Long]): DataFrame =
+    g.frame(Iterator.tabulate(rank.length)(i => Row(g.nodeVals(i), rank(i))),
+      StructField("rank", LongType, nullable = false))
+
+  /** Shared-build handle for the snapshot+resume gates: the [[DriverCsr]]
+    * graph (dictionary + cached CSR in-adjacency) and the out-degree
+    * vector built ONCE; cold and resumed walks run over it (the q194 gate
+    * runs two walks on one unchanged graph). Graphs above
+    * `broadcastMaxNodes` get a fallback handle whose walks run the
+    * distributed loop per call, unchanged.
     */
   def buildRankGraph(edges: DataFrame,
-                     broadcastMaxNodes: Long = 2000000L): RankGraph = {
-    val spark = edges.sparkSession
+                     broadcastMaxNodes: Long = DriverCsr.MaxNodes): RankGraph = {
     val e = edges.select(col("src"), col("dst"))
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    if (n == 0) {
-      val out = nodes0.withColumn("rank", lit(0L))
-      nodes0.unpersist(blocking = false)
-      return new RankGraph(spark, e, None, 0L, Some(out))
-    }
-    if (n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L))
-      new RankGraph(spark, e, Some(buildRankCsr(spark, e, nodes0, n.toInt)),
-        n, None)
-    else {
-      nodes0.unpersist(blocking = false)
-      new RankGraph(spark, e, None, n, None)
-    }
+    new RankGraph(e, DriverCsr.build(DriverCsr.nodesOf(e, "src", "dst"),
+      broadcastMaxNodes) { (srcIds, dstIds) =>
+      // ONE int shuffle builds both the dedup and the adjacency (see
+      // adjacencyPlan); long sums are exact and commutative, so the
+      // gather order is free
+      adjacencyPlan(e, srcIds, dstIds)
+        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
+    })
   }
 
   /** See [[buildRankGraph]]. Every walk is bit-identical to the one-shot
     * entry points (same dictionary, same adjacency, same loop).
     */
   final class RankGraph private[operators] (
-      spark: SparkSession, e: DataFrame, csr: Option[RankCsr],
-      n: Long, empty: Option[DataFrame]) {
+      e: DataFrame, g: DriverCsr.Graph[(Int, Array[Int])]) {
+
+    // Out-degrees from the deduped adjacency itself (sid occurrences
+    // across all in-neighbor arrays) — one pass over the cached CSR, which
+    // also materializes it; no second shuffle.
+    private val outdeg: Array[Long] = if (!g.onDriver) null else {
+      val n = g.n.toInt
+      g.adj.treeAggregate(new Array[Long](n))(
+        seqOp = { (acc, kv) =>
+          val sids = kv._2
+          var j = 0
+          while (j < sids.length) { acc(sids(j)) += 1; j += 1 }
+          acc
+        },
+        combOp = { (a, b) =>
+          var j = 0
+          while (j < n) { a(j) += b(j); j += 1 }
+          a
+        })
+    }
+
+    private def empty: DataFrame = g.nodes.withColumn("rank", lit(0L))
 
     /** [[PageRank.ranks]] over the prebuilt graph. */
     def ranks(iterations: Int = 10, scale: Long = 1000000000000L,
               dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
-      require(iterations >= 1, "iterations must be >= 1")
-      require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
-      if (empty.isDefined) return empty.get
-      csr match {
-        case Some(c) => ranksCsrLoop(spark, c, n.toInt, iterations, scale,
-          dampNum, dampDen)
-        case None =>
-          val nodes0 = e.select(col("src").as("node"))
-            .union(e.select(col("dst").as("node"))).distinct().persist()
-          nodes0.count()
-          ranksDistributedState(spark, e, nodes0, n, iterations, scale,
-            dampNum, dampDen)
-      }
+      checkRounds(iterations, dampNum, dampDen)
+      if (g.n == 0) empty
+      else if (g.onDriver)
+        ranksCsrLoop(g, outdeg, iterations, scale, dampNum, dampDen)
+      else ranksDistributedState(e.sparkSession, e, g.nodes, g.n, iterations,
+        scale, dampNum, dampDen)
     }
 
     /** [[PageRank.resumeRanks]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, iterations: Int = 5,
                    scale: Long = 1000000000000L,
                    dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
-      require(iterations >= 1, "iterations must be >= 1")
-      require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
-      if (empty.isDefined) return empty.get
+      checkRounds(iterations, dampNum, dampDen)
       val p = prior.select(col("node"), col("rank"))
-      csr match {
-        case Some(c) =>
-          val m: Map[Any, Long] =
-            p.collect().map(r => (r.get(0), r.getLong(1))).toMap
-          ranksCsrLoop(spark, c, n.toInt, iterations, scale, dampNum,
-            dampDen, initFrom = Some(m))
-        case None =>
-          val nodes0 = e.select(col("src").as("node"))
-            .union(e.select(col("dst").as("node"))).distinct().persist()
-          nodes0.count()
-          ranksDistributedState(spark, e, nodes0, n, iterations, scale,
-            dampNum, dampDen, prior = Some(p))
-      }
+      if (g.n == 0) empty
+      else if (g.onDriver) {
+        // the snapshot is node-sized, within the driver contract
+        val m: Map[Any, Long] =
+          p.collect().map(r => (r.get(0), r.getLong(1))).toMap
+        ranksCsrLoop(g, outdeg, iterations, scale, dampNum, dampDen,
+          initFrom = Some(m))
+      } else ranksDistributedState(e.sparkSession, e, g.nodes, g.n,
+        iterations, scale, dampNum, dampDen, prior = Some(p))
     }
 
-    /** Release the cached adjacency (driver path only; no-op otherwise). */
-    def close(): Unit = csr.foreach(_.adj.unpersist(blocking = false))
+    /** [[PageRank.personalizedRanks]] over the prebuilt graph. */
+    private[operators] def personalized(seeds: DataFrame, iterations: Int,
+                                        scale: Long, dampNum: Long,
+                                        dampDen: Long): DataFrame = {
+      checkRounds(iterations, dampNum, dampDen)
+      val seedSet = seeds.select(col(seeds.columns.head).as("node")).distinct()
+      // the seed set IS the query — driver-collected under the bounded
+      // contract regardless of path (probeCells' shape)
+      val seedVals: Set[Any] = seedSet.collect().map(_.get(0)).toSet
+      require(seedVals.nonEmpty, "seeds must be non-empty")
+      if (g.onDriver)
+        // same dictionary-CSR loop as [[ranks]] — only base/start differ
+        ranksCsrLoop(g, outdeg, iterations, scale, dampNum, dampDen,
+          seeds = Some(seedVals))
+      else personalizedDistributedState(e.sparkSession, e, g.nodes, seedSet,
+        iterations, scale, dampNum, dampDen)
+    }
+
+    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    def close(): Unit = g.close()
   }
 
   /** WEIGHTED PageRank: a node's rank flows to its out-neighbors in
@@ -384,52 +331,19 @@ object PageRank {
     * multiplyExact/addExact in the driver loop): scale · max-weight
     * < 2⁶³.
     *
-    * Scale shape mirrors [[ranks]]: a dictionary-CSR driver loop when
-    * the node count fits `broadcastMaxNodes` (the in-adjacency carries
-    * a parallel weight array; W rides one treeAggregate), else the
-    * distributed loop (weighted edges cached src-partitioned, rounds
-    * exchange only the rank frame).
+    * Scale shape mirrors [[ranks]]: a [[DriverCsr]] loop when the node
+    * count fits `broadcastMaxNodes` (the in-adjacency carries a parallel
+    * weight array; W rides one treeAggregate), else the distributed loop
+    * (weighted edges cached src-partitioned, rounds exchange only the
+    * rank frame).
     */
   def weightedRanks(edges: DataFrame, srcCol: String, dstCol: String,
                     weightCol: String, iterations: Int = 10,
                     scale: Long = 1000000000000L,
                     dampNum: Long = 85, dampDen: Long = 100,
-                    broadcastMaxNodes: Long = 2000000L): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
-    val spark = edges.sparkSession
-    // Non-positive input weights FAIL LOUDLY (raise_error at execution)
-    // rather than being silently dropped: a filter-before-collapse would
-    // make mixed-sign duplicates (e.g. +5 and −5 for one edge) yield 5
-    // where a caller netting correction events expects 0 — with every
-    // input weight required positive, "duplicates collapse by SUMMING"
-    // holds exactly and the collapsed weight is always positive.
-    val wChecked = when(col("w") > 0, col("w")).otherwise(
-      raise_error(concat(lit("weightedRanks: weight must be > 0, got "),
-        coalesce(col("w").cast("string"), lit("NULL")))).cast("long"))
-    // raw projection with the per-row positivity check; the driver path's
-    // duplicate-edge SUM collapse rides the adjacency's int exchange
-    // (weightedAdjacencyPlan below), the distributed path collapses
-    // upstream as before
-    val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("long").as("w"))
-      .select(col("src"), col("dst"), wChecked.as("w"))
-    val nodes0 = eRaw.select(col("src").as("node"))
-      .union(eRaw.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    if (n == 0) {
-      val out = nodes0.withColumn("rank", lit(0L))
-      nodes0.unpersist(blocking = false)
-      return out
-    }
-    if (n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L))
-      weightedDriverState(spark, eRaw, nodes0, n.toInt, iterations, scale,
-        dampNum, dampDen)
-    else
-      weightedDistributedState(spark,
-        eRaw.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
-        nodes0, n, iterations, scale, dampNum, dampDen)
-  }
+                    broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame =
+    weighted(edges, srcCol, dstCol, weightCol, None, iterations, scale,
+      dampNum, dampDen, broadcastMaxNodes)
 
   /** WEIGHTED + PERSONALIZED PageRank — the two restart variants
     * COMPOSED: rank flows in proportion to integer edge weights
@@ -441,82 +355,81 @@ object PageRank {
     * together". Same exact-integer discipline as both parents — the
     * oracle unrolls every round with the per-edge division and the
     * seed-flag CASE; nodes unreachable from the seeds hold rank 0.
-    * Both scale shapes: the dictionary-CSR driver loop when the node
-    * count fits `broadcastMaxNodes`, else the distributed loop carrying
-    * each node's base on its zero-contribution row.
+    * Both scale shapes: the [[DriverCsr]] loop when the node count fits
+    * `broadcastMaxNodes`, else the distributed loop carrying each node's
+    * base on its zero-contribution row.
     */
   def weightedPersonalizedRanks(edges: DataFrame, srcCol: String,
                                 dstCol: String, weightCol: String,
                                 seeds: DataFrame, iterations: Int = 10,
                                 scale: Long = 1000000000000L,
                                 dampNum: Long = 85, dampDen: Long = 100,
-                                broadcastMaxNodes: Long = 2000000L): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
+                                broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame =
+    weighted(edges, srcCol, dstCol, weightCol, Some(seeds), iterations, scale,
+      dampNum, dampDen, broadcastMaxNodes)
+
+  private def weighted(edges: DataFrame, srcCol: String, dstCol: String,
+                       weightCol: String, seeds: Option[DataFrame],
+                       iterations: Int, scale: Long, dampNum: Long,
+                       dampDen: Long, broadcastMaxNodes: Long): DataFrame = {
+    checkRounds(iterations, dampNum, dampDen)
     val spark = edges.sparkSession
+    // Non-positive input weights FAIL LOUDLY (raise_error at execution)
+    // rather than being silently dropped: a filter-before-collapse would
+    // make mixed-sign duplicates (e.g. +5 and −5 for one edge) yield 5
+    // where a caller netting correction events expects 0 — with every
+    // input weight required positive, "duplicates collapse by SUMMING"
+    // holds exactly and the collapsed weight is always positive.
     val wChecked = when(col("w") > 0, col("w")).otherwise(
       raise_error(concat(lit("weightedRanks: weight must be > 0, got "),
         coalesce(col("w").cast("string"), lit("NULL")))).cast("long"))
-    // raw projection + per-row check; collapse placement per path (the
-    // weightedRanks discipline)
+    // raw projection with the per-row positivity check; the driver path's
+    // duplicate-edge SUM collapse rides the adjacency's int exchange, the
+    // distributed path collapses upstream
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
       .select(col("src"), col("dst"), wChecked.as("w"))
     // the seed set IS the query — driver-collected under the bounded
     // contract regardless of path (personalizedRanks' shape)
-    val seedVals: Set[Any] = seeds
-      .select(col(seeds.columns.head).as("node")).distinct()
-      .collect().map(_.get(0)).toSet
-    require(seedVals.nonEmpty, "seeds must be non-empty")
-    val nodes0 = eRaw.select(col("src").as("node"))
-      .union(eRaw.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    if (n == 0) {
-      val out = nodes0.withColumn("rank", lit(0L))
-      nodes0.unpersist(blocking = false)
-      return out
+    val seedVals: Option[Set[Any]] = seeds.map { s =>
+      val v = s.select(col(s.columns.head).as("node")).distinct()
+        .collect().map(_.get(0)).toSet
+      require(v.nonEmpty, "seeds must be non-empty")
+      v
     }
-    if (n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L))
-      weightedDriverState(spark, eRaw, nodes0, n.toInt, iterations, scale,
-        dampNum, dampDen, seeds = Some(seedVals))
-    else
-      weightedDistributedState(spark,
+    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+        broadcastMaxNodes) { (srcIds, dstIds) =>
+      // weighted in-adjacency: (did, sids, ws) — the duplicate-edge SUM
+      // collapse rides this int exchange (the (did, sid) aggregate's
+      // distribution is satisfied by the did partitioning, so no second
+      // exchange appears)
+      eRaw
+        .join(broadcast(srcIds), eRaw("src") === srcIds("node"))
+        .join(broadcast(dstIds), eRaw("dst") === dstIds("node2"))
+        .select(col("id").as("sid"), col("id2").as("did"), col("w"))
+        .repartition(col("did"))
+        .groupBy(col("did"), col("sid")).agg(sum(col("w")).as("w"))
+        .groupBy(col("did"))
+        .agg(collect_list(col("sid")).as("sids"), collect_list(col("w")).as("ws"))
+        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray,
+          r.getSeq[Long](2).toArray))
+    }
+    try {
+      if (g.n == 0) g.nodes.withColumn("rank", lit(0L))
+      else if (g.onDriver)
+        weightedCsrLoop(g, iterations, scale, dampNum, dampDen, seedVals)
+      else weightedDistributedState(spark,
         eRaw.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
-        nodes0, n, iterations, scale, dampNum, dampDen,
-        seeds = Some(seedVals))
+        g.nodes, g.n, iterations, scale, dampNum, dampDen, seedVals)
+    } finally g.close()
   }
 
-  private def weightedDriverState(spark: SparkSession, e: DataFrame,
-                                  nodes0: DataFrame, n: Int, iterations: Int,
-                                  scale: Long, dampNum: Long,
-                                  dampDen: Long,
-                                  seeds: Option[Set[Any]] = None): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val nodeVals: Array[Any] = nodes0.collect().map(_.get(0))
-    nodes0.unpersist(blocking = false)
-    val nodeType = nodes0.schema.fields(0).dataType
-    val idRows: java.util.List[Row] =
-      nodeVals.zipWithIndex.map { case (v, i) => Row(v, i) }.toSeq.asJava
-    val idSchema = StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("id", IntegerType, nullable = false)))
-    val srcIds = spark.createDataFrame(idRows, idSchema)
-    val dstIds = srcIds.select(col("node").as("node2"), col("id").as("id2"))
-    // weighted in-adjacency: (did, sids, ws) — the duplicate-edge SUM
-    // collapse rides this int exchange (the (did, sid) aggregate's
-    // distribution is satisfied by the did partitioning, so no second
-    // exchange appears), replacing the old upstream string-keyed groupBy
-    val adj: org.apache.spark.rdd.RDD[(Int, Array[Int], Array[Long])] = e
-      .join(broadcast(srcIds), e("src") === srcIds("node"))
-      .join(broadcast(dstIds), e("dst") === dstIds("node2"))
-      .select(col("id").as("sid"), col("id2").as("did"), col("w"))
-      .repartition(col("did"))
-      .groupBy(col("did"), col("sid")).agg(sum(col("w")).as("w"))
-      .groupBy(col("did"))
-      .agg(collect_list(col("sid")).as("sids"), collect_list(col("w")).as("ws"))
-      .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray,
-        r.getSeq[Long](2).toArray))
-    adj.cache()
+  private def weightedCsrLoop(g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
+                              iterations: Int, scale: Long, dampNum: Long,
+                              dampDen: Long,
+                              seeds: Option[Set[Any]]): DataFrame = {
+    val spark = g.nodes.sparkSession
+    val (adj, n) = (g.adj, g.n.toInt)
     // out-weight totals W(u) from the cached adjacency — one pass
     val wsum = adj.treeAggregate(new Array[Long](n))(
       seqOp = { (acc, kv) =>
@@ -531,22 +444,7 @@ object PageRank {
         while (j < n) { x(j) = Math.addExact(x(j), y(j)); j += 1 }
         x
       })
-    // uniform teleport (classic weighted) or seed-restricted
-    // (personalized) — same loop, different base/start vectors (the
-    // ranksDriverState shape)
-    val (baseArr, init): (Array[Long], Array[Long]) = seeds match {
-      case None =>
-        val b = scale * (dampDen - dampNum) / dampDen / n
-        (Array.fill(n)(b), Array.fill(n)(scale / n))
-      case Some(ss) =>
-        val flag = nodeVals.map(ss.contains)
-        val k = flag.count(identity)
-        require(k > 0, "no seed appears in the graph")
-        val b = scale * (dampDen - dampNum) / dampDen / k
-        require(b > 0 && scale / k > 0, s"scale $scale too small for $k seeds")
-        (Array.tabulate(n)(j => if (flag(j)) b else 0L),
-          Array.tabulate(n)(j => if (flag(j)) scale / k else 0L))
-    }
+    val (baseArr, init) = baseAndStart(g.nodeVals, scale, dampNum, dampDen, seeds)
     var rank = init
     // per-round raw-loop proof needs the largest out-weight total once:
     // every edge weight w <= wsum(src), so rank·w <= maxRank·maxWsum
@@ -561,7 +459,7 @@ object PageRank {
       // Overflow discipline: the distributed path's IntegralDivide over
       // rank·w throws under ANSI when rank·max-weight crosses 2⁶³ — the
       // driver loop must fail the same way, never wrap into silently
-      // wrong ranks. As in ranksDriverState, the proof is HOISTED out of
+      // wrong ranks. As in ranksCsrLoop, the proof is HOISTED out of
       // the per-edge loop: ranks are non-negative, each term
       // ⌊rank·w/wsum⌋ <= rank (w <= wsum), so partial sums are bounded by
       // totalRank = Σ rank, and each multiply by maxRank·maxWsum — if
@@ -599,22 +497,11 @@ object PageRank {
         (did, s)
       }.collect()
       bc.destroy()
-      val next = baseArr.clone()
-      sums.foreach { case (did, s) =>
-        next(did) = Math.addExact(baseArr(did),
-          Math.multiplyExact(s, dampNum) / dampDen) }
-      rank = next
+      rank = damped(baseArr, sums, dampNum, dampDen)
       i += 1
     }
-    adj.unpersist(blocking = false)
-    val outSchema = StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("rank", LongType, nullable = false)))
-    val outRows: java.util.List[Row] =
-      Array.tabulate(n)(i0 => Row(nodeVals(i0), rank(i0))).toSeq.asJava
-    spark.createDataFrame(outRows, outSchema)
+    rankFrame(g, rank)
   }
-
   private def weightedDistributedState(spark: SparkSession, e: DataFrame,
                                        nodes0: DataFrame, n: Long,
                                        iterations: Int, scale: Long,
@@ -696,30 +583,10 @@ object PageRank {
   def resumeRanks(edges: DataFrame, prior: DataFrame, iterations: Int = 5,
                   scale: Long = 1000000000000L,
                   dampNum: Long = 85, dampDen: Long = 100,
-                  broadcastMaxNodes: Long = 2000000L): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
-    val spark = edges.sparkSession
-    val e = edges.select(col("src"), col("dst"))
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    val n = nodes0.count()
-    if (n == 0) {
-      val out = nodes0.withColumn("rank", lit(0L))
-      nodes0.unpersist(blocking = false)
-      return out
-    }
-    val p = prior.select(col("node"), col("rank"))
-    if (n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L)) {
-      // the snapshot is node-sized and the driver path's contract
-      // already bounds node-sized driver state
-      val m: Map[Any, Long] =
-        p.collect().map(r => (r.get(0), r.getLong(1))).toMap
-      ranksDriverState(spark, e, nodes0, n.toInt, iterations, scale,
-        dampNum, dampDen, initFrom = Some(m))
-    } else
-      ranksDistributedState(spark, e, nodes0, n, iterations, scale,
-        dampNum, dampDen, prior = Some(p))
+                  broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+    val g = buildRankGraph(edges, broadcastMaxNodes)
+    try g.resumeFrom(prior, iterations, scale, dampNum, dampDen)
+    finally g.close()
   }
 
   /** PERSONALIZED PageRank: teleport mass returns only to `seeds` — the
@@ -740,23 +607,18 @@ object PageRank {
   def personalizedRanks(edges: DataFrame, seeds: DataFrame,
                         iterations: Int = 10, scale: Long = 1000000000000L,
                         dampNum: Long = 85, dampDen: Long = 100,
-                        broadcastMaxNodes: Long = 2000000L): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
-    val spark = edges.sparkSession
-    val e = edges.select(col("src"), col("dst"))
-    val seedSet = seeds.select(col(seeds.columns.head).as("node")).distinct()
-    // the seed set IS the query — driver-collected under the bounded
-    // contract regardless of path (probeCells' shape)
-    val seedVals: Set[Any] = seedSet.collect().map(_.get(0)).toSet
-    require(seedVals.nonEmpty, "seeds must be non-empty")
-    val nodesPlain = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    val nTotal = nodesPlain.count()
-    if (nTotal > 0 && nTotal <= math.min(broadcastMaxNodes, Int.MaxValue - 8L))
-      // same dictionary-CSR loop as [[ranks]] — only base/start differ
-      return ranksDriverState(spark, e, nodesPlain, nTotal.toInt, iterations,
-        scale, dampNum, dampDen, seeds = Some(seedVals))
+                        broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+    val g = buildRankGraph(edges, broadcastMaxNodes)
+    try g.personalized(seeds, iterations, scale, dampNum, dampDen)
+    finally g.close()
+  }
+
+  /** Big-graph fallback of [[personalizedRanks]]. */
+  private def personalizedDistributedState(spark: SparkSession, e: DataFrame,
+                                           nodesPlain: DataFrame,
+                                           seedSet: DataFrame, iterations: Int,
+                                           scale: Long, dampNum: Long,
+                                           dampDen: Long): DataFrame = {
     val edgesDeg = e
       .repartition(col("src"))
       .groupBy(col("src"), col("dst")).agg(lit(1))

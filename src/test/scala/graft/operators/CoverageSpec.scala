@@ -55,25 +55,55 @@ class CoverageSpec extends AnyFunSuite with SparkSpec {
   test("driver sweep ≡ distributed sweep (gate forced both ways)") {
     val fixture = (1L to 60L).map(i =>
       i -> (0 until (i % 9 + 1).toInt).map(j => s"t${(i * 7 + j * 11) % 41}"))
-    val d = docs(fixture: _*)
-    val driver = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 8)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    val dist = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 8,
-      driverMaxRows = 0L)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    assert(driver == dist)
-    assert(driver.nonEmpty)
+    // (input, the selection as "round|id|gain", or Nil to check parity only);
+    // each tied pair below must break to the LOWER id in Spark's ordering
+    // of the id type, nulls first
+    val date = java.sql.Date.valueOf(_: String)
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String])] = Seq(
+      ("long ids", docs(fixture: _*), Nil),
+      ("double ids tied on gain",
+        Seq(1.75 -> Seq("a", "b"), 1.25 -> Seq("c", "d"), 1.8 -> Seq("e", "f"),
+          3.0 -> Seq("a")).toDF("id", "toks"),
+        Seq("1|1.25|2", "2|1.75|2", "3|1.8|2")),
+      ("decimal ids tied on gain",
+        Seq(BigDecimal("2.26") -> Seq("a", "b"), BigDecimal("2.25") -> Seq("c", "d"))
+          .toDF("id", "toks").select(col("id").cast("decimal(5,2)"), col("toks")),
+        Seq("1|2.25|2", "2|2.26|2")),
+      ("date ids tied on gain",
+        Seq(date("2024-03-02") -> Seq("a", "b"), date("2024-03-01") -> Seq("c", "d"))
+          .toDF("id", "toks"),
+        Seq("1|2024-03-01|2", "2|2024-03-02|2")),
+      ("a null id tied on gain",
+        Seq(Some(3L) -> Seq("a", "b"), None -> Seq("c", "d"), Some(4L) -> Seq("c"))
+          .toDF("id", "toks"),
+        Seq("1|null|2", "2|3|2")),
+      ("null tokens",
+        Seq(1L -> Seq("a", null), 2L -> Seq(null, null, "b", "c"), 3L -> Seq[String](null))
+          .toDF("id", "toks"),
+        Seq("1|2|2", "2|1|1")))
+    cases.foreach { case (label, d, want) =>
+      def sweep(maxRows: Long): Seq[String] =
+        Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 8, driverMaxRows = maxRows)
+          .collect().toSeq.map(_.mkString("|")).sorted
+      val driver = sweep(2000000L)
+      assert(driver == sweep(0L), s"$label: driver and distributed sweeps differ")
+      if (want.nonEmpty) assert(driver == want, label)
+      else assert(driver.nonEmpty, label)
+    }
   }
 
   test("driver sweep ≡ distributed sweep on STRING ids (tie-break ordering)") {
+    // a, b, "é" and z tie on gain in rounds 1-3; "é" (UTF-8 C3 A9) sorts
+    // after z (7A) byte-wise, so it is picked last
     val d = Seq(
       "b" -> Seq("x", "y"), "a" -> Seq("p", "q"), "c" -> Seq("p"),
-      "é" -> Seq("x", "z")).toDF("id", "toks")
+      "é" -> Seq("u", "t"), "z" -> Seq("v", "w")).toDF("id", "toks")
     val driver = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 4)
       .as[(Long, String, Long)].collect().toSeq.sorted
     val dist = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 4,
       driverMaxRows = 0L)
       .as[(Long, String, Long)].collect().toSeq.sorted
     assert(driver == dist)
+    assert(driver == Seq((1L, "a", 2L), (2L, "b", 2L), (3L, "z", 2L), (4L, "é", 2L)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.operators.{Bfs, Hits, LabelPropagation, PageRank}
 import graft.pipelines.{OrgChangePaths, OrgChanges}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -13,7 +14,8 @@ import scala.jdk.CollectionConverters._
 /** Steps that build plans or small driver artifacts start no Spark job of
   * their own: the row index numbers rows inside the action that reads
   * them, and the org-change lookup over a local edge frame never leaves the
-  * driver.
+  * driver. The driver-CSR graph builds plus one walk start no more jobs
+  * than the counts measured before they shared one kernel.
   */
 class DriverJobsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -86,5 +88,47 @@ class DriverJobsSpec extends AnyFunSuite with SparkSpec {
       OrgChanges.trustLookup(OrgChangePaths.derivePaths(succ)).collect())
     assert(jobs.isEmpty, s"the lookup started ${jobs.size} job(s)")
     assert(lookup.length == 5)
+  }
+
+  // a 40-node ring in both directions plus chords every fifth node, long ids
+  private lazy val graph = {
+    val ring = (0L until 40L).flatMap(i => Seq((i, (i + 1) % 40, 1 + i % 3), ((i + 1) % 40, i, 2L)))
+    val chords = (0L until 40L by 5).map(i => (i, (i + 17) % 40, 4L))
+    (ring ++ chords).toDF("src", "dst", "w")
+  }
+  private lazy val seeds = Seq(0L).toDF("node")
+
+  // job counts of each driver-path build plus one walk, measured on the
+  // operators' earlier hand-written builds (4-core local session, AQE on)
+  Seq[(String, Int, () => Unit)](
+    ("PageRank.buildRankGraph", 11, () => {
+      val g = PageRank.buildRankGraph(graph)
+      try g.ranks(iterations = 3).collect() finally g.close()
+    }),
+    ("Hits.buildHitsGraph", 14, () => {
+      val g = Hits.buildHitsGraph(graph, "src", "dst")
+      try g.scores(rounds = 3).collect() finally g.close()
+    }),
+    ("LabelPropagation.buildLpaGraph", 12, () => {
+      val g = LabelPropagation.buildLpaGraph(graph, "src", "dst")
+      try g.propagate(rounds = 3).collect() finally g.close()
+    }),
+    ("Bfs.buildHopGraph", 11, () => {
+      val g = Bfs.buildHopGraph(graph, "src", "dst")
+      try g.distances(seeds, rounds = 3).collect() finally g.close()
+    }),
+    ("Bfs.buildWeightedGraph", 14, () => {
+      val g = Bfs.buildWeightedGraph(graph, "src", "dst", "w")
+      try g.distances(seeds, rounds = 3).collect() finally g.close()
+    }),
+    ("Bfs.landmarkDistances", 13, () => {
+      Bfs.landmarkDistances(graph, "src", "dst", Seq(0L, 20L).toDF("node"), rounds = 3)
+        .collect()
+    })
+  ).foreach { case (name, before, run) =>
+    test(s"$name: driver-path build + one walk start no more jobs than before") {
+      val (_, jobs) = jobsOf(run())
+      assert(jobs.size <= before, s"$name started ${jobs.size} jobs, $before before")
+    }
   }
 }

@@ -93,17 +93,21 @@ class CoverageSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("driver sweep ≡ distributed sweep on STRING ids (tie-break ordering)") {
-    // a, b, "é" and z tie on gain in rounds 1-3; "é" (UTF-8 C3 A9) sorts
-    // after z (7A) byte-wise, so it is picked last
+    // every id but c ties on gain until it is picked, so the picks follow
+    // Spark's unsigned UTF-8 byte order: z (7A) < "é" (C3 A9) < fullwidth
+    // "ｚ" U+FF5A (EF BD 9A) < "𝒜" U+1D49C (F0 9D 92 9C). UTF-16 order
+    // would put "𝒜" (surrogate D835) before "ｚ".
     val d = Seq(
       "b" -> Seq("x", "y"), "a" -> Seq("p", "q"), "c" -> Seq("p"),
-      "é" -> Seq("u", "t"), "z" -> Seq("v", "w")).toDF("id", "toks")
-    val driver = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 4)
+      "é" -> Seq("u", "t"), "z" -> Seq("v", "w"), "\uD835\uDC9C" -> Seq("o", "r"),
+      "\uFF5A" -> Seq("m", "n")).toDF("id", "toks")
+    val driver = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 6)
       .as[(Long, String, Long)].collect().toSeq.sorted
-    val dist = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 4,
+    val dist = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 6,
       driverMaxRows = 0L)
       .as[(Long, String, Long)].collect().toSeq.sorted
     assert(driver == dist)
-    assert(driver == Seq((1L, "a", 2L), (2L, "b", 2L), (3L, "z", 2L), (4L, "é", 2L)))
+    assert(driver == Seq((1L, "a", 2L), (2L, "b", 2L), (3L, "z", 2L), (4L, "é", 2L),
+      (5L, "\uFF5A", 2L), (6L, "\uD835\uDC9C", 2L)))
   }
 }

@@ -40,7 +40,8 @@ object Bfs {
 
   private val INF = Long.MaxValue
 
-  /** @param edges    (srcCol, dstCol) directed edges; duplicates collapse.
+  /** @param edges    (srcCol, dstCol) directed edges; duplicates collapse
+    *                 and an edge with a null endpoint is dropped.
     *                 Symmetrize upstream for undirected distance.
     * @param seeds    one-column frame of source nodes; nodes absent from
     *                 the graph are ignored (distance only to graph nodes)
@@ -81,12 +82,12 @@ object Bfs {
   def buildHopGraph(edges: DataFrame, srcCol: String, dstCol: String,
                     broadcastMaxNodes: Long = DriverCsr.MaxNodes): HopGraph = {
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val g = DriverCsr.build("Bfs.buildHopGraph", DriverCsr.nodesOf(eRaw, "src", "dst"),
         broadcastMaxNodes) { (srcIds, dstIds) =>
       PageRank.adjacencyPlan(eRaw, srcIds, dstIds)
         .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
     }
-    if (g.onDriver) g.adj.count()
     new HopGraph(eRaw, g)
   }
 
@@ -405,11 +406,12 @@ object Bfs {
     // one int-keyed exchange, so no upstream string distinct (the
     // buildHopGraph economy); the distributed branch distincts below.
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
     val lmDf = typedSeeds(eRaw, landmarks)
     val lmVals: Array[Any] = lmDf.collect().map(_.get(0))
     require(lmVals.nonEmpty, "landmarks must be non-empty")
     // driver state is n·L longs: the gate admits n <= bound / L
-    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+    val g = DriverCsr.build("Bfs.landmarkDistances", DriverCsr.nodesOf(eRaw, "src", "dst"),
         broadcastMaxNodes / lmVals.length) { (srcIds, dstIds) =>
       PageRank.adjacencyPlan(eRaw, srcIds, dstIds)
         .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
@@ -433,7 +435,6 @@ object Bfs {
   private def landmarkCsrRounds(g: DriverCsr.Graph[(Int, Array[Int])],
                                 lmVals: Array[Any], rounds: Int): DataFrame = {
     val (spark, adj, n, nodeVals) = (g.nodes.sparkSession, g.adj, g.n.toInt, g.nodeVals)
-    adj.count()
     val nodeIdx: Map[Any, Int] = nodeVals.zipWithIndex.toMap
     val L = lmVals.length
     // dist(l)(i): landmark l's distance to node i — all L vectors relax
@@ -584,8 +585,9 @@ object Bfs {
                          weightCol: String,
                          broadcastMaxNodes: Long = DriverCsr.MaxNodes): WeightedGraph = {
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast(LongType).as("w"))
-    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+        col(weightCol).cast(LongType).as("w"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val g = DriverCsr.build("Bfs.buildWeightedGraph", DriverCsr.nodesOf(eRaw, "src", "dst"),
         broadcastMaxNodes) { (srcIds, dstIds) =>
       weightedAdjacencyPlan(eRaw, srcIds, dstIds)
         .rdd.map { r =>

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Connected components over an undirected edge list — the resolution
   * step that turns near-duplicate PAIRS into duplicate CLUSTERS: every
@@ -13,19 +11,17 @@ import org.apache.spark.sql.types._
   * [[graft.ops.Closure]] covers functional (successor) graphs; this
   * covers the symmetric similarity graph.
   *
-  * Two execution paths, picked by measured edge count:
+  * Two execution paths, picked by the [[DriverCsr.edges]] gate over the
+  * symmetric edge list:
   *
-  *   - '''Driver union-find''' (edges ≤ `localEdgeThreshold`): after LSH
-  *     blocking the duplicate graph is edge-sparse — pairs above a 0.5
-  *     Jaccard cut number in the thousands even when the corpus numbers
-  *     in the billions — so the common case is a graph that fits in one
-  *     bounded driver read. Union-find with path compression resolves it
-  *     in one pass, replacing O(log d) multi-job distributed rounds
-  *     (seconds of pure scheduling latency) with milliseconds. The
-  *     collect is bounded by the threshold (default 1M edges), checked
-  *     against the REAL count before collecting — the same documented
-  *     bounded-driver-read contract as the IVF centroids and the org
-  *     change paths.
+  *   - '''Driver union-find''' (within the gate): after LSH blocking the
+  *     duplicate graph is edge-sparse — pairs above a 0.5 Jaccard cut
+  *     number in the thousands even when the corpus numbers in the
+  *     billions — so the common case is a graph that fits in one bounded
+  *     driver read. Union-find with path compression over the gate's
+  *     sorted dictionary resolves it in one pass, replacing O(log d)
+  *     multi-job distributed rounds (seconds of pure scheduling latency)
+  *     with milliseconds.
   *   - '''Distributed min-label propagation with POINTER JUMPING''', to
   *     fixpoint, for everything larger: each round every node takes the
   *     minimum of its own label and its neighbors' labels, then
@@ -38,34 +34,18 @@ import org.apache.spark.sql.types._
   *     onto a fresh cached-RDD leaf (the Closure pattern —
   *     `localCheckpoint` carries child statistics and a join loop
   *     squares them until planning hangs). The symmetric edge list is
-  *     likewise cached once.
+  *     the gate's cached frame.
   *
   * Both paths produce identical results (pinned in
-  * ConnectedComponentsSpec across random graphs). The local path engages
-  * only for key types whose driver-side ordering provably matches
-  * Spark's `min` (integral types; strings compared as UTF-8 bytes, which
-  * is exactly `UTF8String`'s binary ordering); other key types fall
-  * through to the distributed loop. Null endpoints are rejected loudly
-  * on the local path (a null has no defined component; the distributed
-  * loop expects null-free input too and fails deep inside the round if
-  * given one). Caller releases storage after its action
-  * ([[graft.Storage.releaseAll]] — the Verify/Bench contract).
+  * ConnectedComponentsSpec across random graphs): the driver's dictionary
+  * is sorted under Spark's ordering of the key type, so its minimum id is
+  * Spark's `min`. Null endpoints are rejected loudly on both paths, from
+  * the gate's count (a null has no defined component). Caller releases
+  * storage after its action ([[graft.Storage.releaseAll]] — the
+  * Verify/Bench contract).
   */
 object ConnectedComponents {
 
-  /** @param edges two-column frame (`u`, `v`) of undirected edges
-    * @param localEdgeThreshold symmetric-edge-count bound (×2 raw edges)
-    *        under which the graph resolves driver-side; 0 forces the
-    *        distributed loop (the spec uses this to pin path parity)
-    * @param localByteThreshold estimated driver-heap bound for the same
-    *        guard: row count alone under-guards string-keyed graphs (2M
-    *        edges × long keys can be GBs collected), so the local path
-    *        also requires symCount × estimated-row-bytes — key widths
-    *        measured with one agg over the cached symmetric edges, plus
-    *        JVM object overhead — to fit this budget (ADVICE r7)
-    * @return (`node`, `component`) for every node incident to an edge,
-    *         `component` = the minimum node id of its component
-    */
   /** INCREMENTAL maintenance: fold a NEW batch of edges into an existing
     * labeling without re-scanning the accumulated edge set. The prior
     * labeling compresses to STAR edges (node → its component rep, one
@@ -99,48 +79,26 @@ object ConnectedComponents {
       .select(col("node"), coalesce(col("__c"), col("node")).as("component"))
   }
 
+  /** @param edges two-column frame (`u`, `v`) of undirected edges
+    * @param maxEdges the [[DriverCsr.edges]] bound on symmetric edges
+    *        (×2 raw edges) under which the graph resolves driver-side; 0
+    *        forces the distributed loop
+    * @return (`node`, `component`) for every node incident to an edge,
+    *         `component` = the minimum node id of its component
+    */
   def components(edges: DataFrame, maxIter: Int = 50,
-                 localEdgeThreshold: Long = 1000000L,
-                 localByteThreshold: Long = 256L << 20): DataFrame = {
+                 maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     val spark = edges.sparkSession
     val sym0 = edges.select(col("u"), col("v"))
       .union(edges.select(col("v").as("u"), col("u").as("v")))
       .distinct()
-    val symRdd = sym0.rdd
-    symRdd.cache()
-    val symCount = symRdd.count()
-    val keyType = sym0.schema("u").dataType
+    val g = DriverCsr.edges("ConnectedComponents.components", sym0, maxEdges,
+      sorted = true)
+    require(g.nullEndpoints == 0,
+      "ConnectedComponents: null edge endpoints are not allowed")
+    if (g.onDriver) return localComponents(g)
 
-    def fitsByteBudget: Boolean = {
-      // Estimated driver bytes per collected Row: two boxed keys plus Row
-      // + array overhead (~64). Strings cost ~2 bytes/char UTF-16 plus
-      // ~48/object; the widths come from one small agg over the cached
-      // edges (local path only — the distributed loop never pays this).
-      val perRow: Long = keyType match {
-        case StringType =>
-          val r = spark.createDataFrame(symRdd, sym0.schema)
-            .agg(avg(length(col("u")) + length(col("v")))).head()
-          val avgChars = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-          64L + 2 * 48L + (2 * avgChars).toLong
-        case _ => 64L + 2 * 16L
-      }
-      symCount * perRow <= localByteThreshold
-    }
-
-    val localResult: Option[DataFrame] =
-      if (symCount > 2L * localEdgeThreshold || !fitsByteBudget) None
-      else driverOrdering(keyType).map { ord =>
-        val rows = symRdd.collect() // bounded: symCount + bytes checked above
-        // Loud contract (the BloomJoin precedent): a null endpoint has no
-        // defined component and would NPE deep inside the distributed
-        // loop's changed-flag read — fail at the boundary instead.
-        require(!rows.exists(r => r.isNullAt(0) || r.isNullAt(1)),
-          "ConnectedComponents: null edge endpoints are not allowed")
-        localComponents(spark, rows, keyType, ord)
-      }
-    if (localResult.isDefined) return localResult.get
-
-    val sym = spark.createDataFrame(symRdd, sym0.schema)
+    val sym = g.cached
     val l0 = sym.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     var lRdd = l0.rdd
@@ -181,82 +139,25 @@ object ConnectedComponents {
     labels.select(col("node"), col("label").as("component"))
   }
 
-  /** Driver-side ordering matching Spark's `min`/`least` for the key
-    * type, or None if no provably-identical ordering exists (then the
-    * distributed loop — which uses Spark's own ordering — handles it).
-    * Strings compare as unsigned UTF-8 bytes: `UTF8String`'s binary
-    * ordering, NOT `String.compareTo` (UTF-16 code units), which
-    * diverges on supplementary-plane characters.
+  /** Union-find with path compression over the gate's interned edges,
+    * each root the smallest id of its set: ids follow Spark's ordering,
+    * so the root is the component's minimum key. One driver pass over the
+    * edges, one over the nodes.
     */
-  private def driverOrdering(dt: DataType): Option[Ordering[Any]] = dt match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      Some(Ordering.by((v: Any) => v.asInstanceOf[Number].longValue()))
-    case StringType => Some(new Ordering[Any] {
-      def compare(a: Any, b: Any): Int = {
-        val x = a.asInstanceOf[String].getBytes(StandardCharsets.UTF_8)
-        val y = b.asInstanceOf[String].getBytes(StandardCharsets.UTF_8)
-        val n = math.min(x.length, y.length)
-        var i = 0
-        while (i < n) {
-          val c = (x(i) & 0xff) - (y(i) & 0xff)
-          if (c != 0) return c
-          i += 1
-        }
-        x.length - y.length
-      }
-    })
-    case _ => None
-  }
-
-  /** Union-find with path compression and union by size over the
-    * collected symmetric edges; component = minimum key per root under
-    * `ord`. One driver pass over the edges, one over the nodes.
-    */
-  private def localComponents(spark: SparkSession, symEdges: Array[Row],
-                              keyType: DataType,
-                              ord: Ordering[Any]): DataFrame = {
-    val idx = new java.util.HashMap[Any, Integer]()
-    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def id(k: Any): Int = {
-      val e = idx.get(k)
-      if (e != null) e.intValue()
-      else { idx.put(k, keys.length); keys += k; keys.length - 1 }
-    }
-    val us = new Array[Int](symEdges.length)
-    val vs = new Array[Int](symEdges.length)
-    var i = 0
-    while (i < symEdges.length) {
-      us(i) = id(symEdges(i).get(0)); vs(i) = id(symEdges(i).get(1)); i += 1
-    }
-    val n = keys.length
+  private def localComponents(g: DriverCsr.Edges): DataFrame = {
+    val n = g.nodeVals.length
     val parent = Array.tabulate(n)(identity)
-    val size = Array.fill(n)(1)
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    i = 0
-    while (i < symEdges.length) {
-      val ra = find(us(i)); val rb = find(vs(i))
-      if (ra != rb) {
-        val (big, small) = if (size(ra) >= size(rb)) (ra, rb) else (rb, ra)
-        parent(small) = big
-        size(big) += size(small)
-      }
-      i += 1
+    g.src.indices.foreach { i =>
+      val ra = find(g.src(i)); val rb = find(g.dst(i))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    val minKey = new Array[Any](n)
-    i = 0
-    while (i < n) {
-      val r = find(i)
-      if (minKey(r) == null || ord.lt(keys(i), minKey(r))) minKey(r) = keys(i)
-      i += 1
-    }
-    val out = (0 until n).map(i => Row(keys(i), minKey(find(i))))
-    val schema = StructType(Seq(
-      StructField("node", keyType), StructField("component", keyType)))
-    val slices = math.max(1, math.min(32, n / 65536 + 1))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, slices), schema)
+    val keyType = g.schema.fields(0).dataType
+    g.frame((0 until n).map(i => Row(g.nodeVals(i), g.nodeVals(find(i)))), StructType(Seq(
+      StructField("node", keyType), StructField("component", keyType))))
   }
 }

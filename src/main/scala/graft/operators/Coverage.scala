@@ -12,16 +12,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape, two regimes (the KCore/KTruss driver-gate discipline):
   *
-  *   - DRIVER SWEEP when the distinct (doc, token) incidence table fits
-  *     `driverMaxRows`: collect once, intern tokens to ints, run the k
+  *   - DRIVER SWEEP when the distinct (doc, token) incidence table passes
+  *     the [[DriverCsr.edges]] gate (which states the driver-memory
+  *     contract): collect once, intern tokens to ints, run the k
   *     rounds over arrays. The distributed sweep's per-round floor is
   *     2 Spark jobs (winner draw + winner-token collect) over a full
   *     pass of the incidence table — 2k jobs of mostly fixed overhead
   *     at bench scale; the driver sweep is one collect. Selection
   *     replays the distributed rule exactly: gain DESC, then LOWEST id
   *     under Spark's own ordering of the id type, nulls first
-  *     ([[DriverCsr.ordering]]; unsigned UTF-8 bytes for strings — the
-  *     Mst.driverForest argument), pinned driver ≡ distributed in
+  *     ([[DriverCsr.ordering]]; unsigned UTF-8 bytes for strings), pinned driver ≡ distributed in
   *     CoverageSpec.
   *   - DISTRIBUTED SWEEP otherwise: k passes over the incidence table,
   *     each ONE anti-join against the covered set plus one
@@ -40,16 +40,15 @@ object Coverage {
 
   /** @param tokensCol array-of-string column (duplicates tolerated — the
     *                  incidence table is distinct)
-    * @param driverMaxRows incidence-row bound for the driver sweep
-    *                      (distinct (doc, token) rows — ~60 bytes each
-    *                      collected, so the 2M default is ~120 MB of
-    *                      driver heap, the KCore gate's contract)
+    * @param maxEdges the [[DriverCsr.edges]] bound on distinct
+    *                 (doc, token) rows for the driver sweep; 0 forces the
+    *                 distributed sweep
     * @return (round 1..k, doc_id, gain) — gain is the count of FIRST-TIME
     *         tokens the round's winner contributed; gains are
     *         non-increasing (submodularity), pinned in CoverageSpec
     */
   def greedyMaxCoverage(df: DataFrame, idCol: String, tokensCol: Column,
-                        k: Int, driverMaxRows: Long = 2000000L): DataFrame = {
+                        k: Int, maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
@@ -61,18 +60,15 @@ object Coverage {
       StructField("doc_id", idType),
       StructField("gain", LongType, nullable = false)))
     // a null token is no vocabulary: dropped once, so both sweeps see
-    // the same element set
-    val elems = df
+    // the same element set. Doc ids and tokens are two key domains, so
+    // the driver sweep takes the gate's rows, not its dictionary.
+    val g = DriverCsr.edges("Coverage.greedyMaxCoverage", df
       .select(col(idCol).as("__id"), explode(tokensCol).as("__tok"))
       .filter(col("__tok").isNotNull)
-      .distinct()
-      .persist()
+      .distinct(), maxEdges)
+    if (g.onDriver) return g.frame(greedyDriver(g.rows, idType, k), outSchema)
+    val elems = g.cached
     try {
-      if (elems.count() <= driverMaxRows) {
-        val rows = elems.collect()
-        return spark.createDataFrame(
-          java.util.Arrays.asList(greedyDriver(rows, idType, k): _*), outSchema)
-      }
       val covered = scala.collection.mutable.HashSet.empty[String]
       val picks = scala.collection.mutable.Buffer.empty[Row]
       var r = 1
@@ -97,7 +93,7 @@ object Coverage {
         }
       }
       spark.createDataFrame(java.util.Arrays.asList(picks.toSeq: _*), outSchema)
-    } finally elems.unpersist()
+    } finally g.close()
   }
 
   /** The k greedy rounds over the collected incidence rows — the same

@@ -164,12 +164,12 @@ object Hits {
     // upstream distinct; the fallback distincts per walk
     val eF = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull)
-    val g = DriverCsr.build(DriverCsr.nodesOf(eF, "s", "d"), broadcastMaxNodes) {
+    val g = DriverCsr.build("Hits.buildHitsGraph", DriverCsr.nodesOf(eF, "s", "d"),
+        broadcastMaxNodes) {
       (srcIds, dstIds) =>
         PageRank.adjacencyPlan(eF.select(col("s").as("src"), col("d").as("dst")),
           srcIds, dstIds).rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
     }
-    if (g.onDriver) g.adj.count()
     new HitsGraph(eF, g)
   }
 

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** k-core decomposition by iterative peeling (Seidman 1983; Batagelj &
   * Zaveršnik 2003 for the peeling formulation): repeatedly delete nodes
@@ -17,23 +19,19 @@ import org.apache.spark.sql.functions._
   *     unrolls exactly R rounds as plain CTEs, no fixpoint detection
   *     needed. Each round keeps nodes whose degree in the subgraph
   *     induced by the previous round's survivors is >= k.
-  *   - [[core]] — the true fixpoint: peel until the survivor count
-  *     stops changing (spec-pinned equal to [[peel]] once [[peel]]'s
-  *     round budget covers convergence).
+  *   - [[core]] — the true fixpoint: the same peel run until a round
+  *     removes nothing, throwing if `maxRounds` rounds do not get there.
   *
-  * Scale shape: the edge list is canonicalized once and REBASED onto a
-  * cached RDD leaf; each round is two semi-joins of the edges against
-  * the (shrinking) alive set plus one map-side-combined degree count —
-  * the alive set is node-sized and broadcasts once it fits, so late
-  * rounds cost one edge scan each. Alive sets rebase per round (the
-  * [[KMeans.fit]] lineage discipline), so plan size is O(1) in rounds.
+  * Scale shape: the edge list is canonicalized once and passed through
+  * the [[DriverCsr.edges]] gate. Within it the peel runs on driver
+  * arrays over the collected adjacency. Above it each round is two
+  * semi-joins of the cached edges against the (shrinking) alive set plus
+  * one map-side-combined degree count — the alive set is node-sized and
+  * broadcasts once it fits, so late rounds cost one edge scan each.
+  * Alive sets rebase per round (the [[KMeans.fit]] lineage discipline),
+  * so plan size is O(1) in rounds.
   */
 object KCore {
-
-  private def canonical(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges.select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
 
   /** One peeling round: degrees of the subgraph induced by `alive`,
     * then the >= k survivors. Returns the DEGREE frame (node, deg) —
@@ -46,189 +44,157 @@ object KCore {
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
-  private def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
-    val spark = df.sparkSession
-    val rdd = df.rdd
-    rdd.cache()
-    (spark.createDataFrame(rdd, df.schema), rdd)
-  }
-
-  /** What a peeling run hands back: the final round's degree frame (lazy —
-    * it still reads `lastInputRdd`), the materialized survivor leaf, and
-    * the two cached RDDs a caller may release once it is done with the
-    * corresponding frames.
+  /** What a distributed peel hands back: the final round's scored
+    * survivors (lazy — they still read `lastInputRdd`), the materialized
+    * survivor leaf, the two cached RDDs a caller may release once it is
+    * done with the corresponding frames, and whether a round removed
+    * nothing.
     */
-  private case class PeelResult(lastDeg: DataFrame, alive: DataFrame,
-                                aliveRdd: org.apache.spark.rdd.RDD[Row],
-                                lastInputRdd: org.apache.spark.rdd.RDD[Row])
+  private[operators] case class PeelResult(survivors: DataFrame, alive: DataFrame,
+                                           aliveRdd: RDD[Row], lastInputRdd: RDD[Row],
+                                           converged: Boolean)
 
-  private def allNodes(canon: DataFrame): DataFrame =
-    canon.select(col("a").as("node"))
-      .union(canon.select(col("b").as("node"))).distinct()
-
-  // ------------------------------------------------------------------
-  // Driver peel (the dictionary-CSR dual, gated on collected EDGE count)
-  // ------------------------------------------------------------------
-
-  /** Collected canonical graph for the driver peel: node dictionary +
-    * primitive-int adjacency. BOUNDED CONTRACT: entered only when the
-    * canonical edge count fits `driverMaxEdges` (the peel recurrence
-    * needs the whole induced-subgraph degree per round, so the unit of
-    * driver state here is the EDGE list, not just the node vector — the
-    * default 2M canonical edges is tens of MB of ints plus the
-    * dictionary). Above the budget the distributed peel runs unchanged.
-    */
-  private final case class DriverGraph(nodeVals: Array[Any],
-      nodeType: org.apache.spark.sql.types.DataType,
-      adj: Array[Array[Int]])
-
-  private def collectGraph(canonDf: DataFrame): DriverGraph = {
-    val rows = canonDf.collect()
-    val idx = new java.util.HashMap[Any, Integer]()
-    val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def id(v: Any): Int = {
-      val e = idx.get(v)
-      if (e != null) e.intValue()
-      else { val i = vals.length; idx.put(v, i); vals += v; i }
-    }
-    val aIds = new Array[Int](rows.length)
-    val bIds = new Array[Int](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      aIds(i) = id(rows(i).get(0)); bIds(i) = id(rows(i).get(1)); i += 1
-    }
-    val n = vals.length
-    val cnt = new Array[Int](n)
-    i = 0
-    while (i < rows.length) { cnt(aIds(i)) += 1; cnt(bIds(i)) += 1; i += 1 }
-    val adj = Array.tabulate(n)(j => new Array[Int](cnt(j)))
-    val fill = new Array[Int](n)
-    i = 0
-    while (i < rows.length) {
-      val a = aIds(i); val b = bIds(i)
-      adj(a)(fill(a)) = b; fill(a) += 1
-      adj(b)(fill(b)) = a; fill(b) += 1
-      i += 1
-    }
-    DriverGraph(vals.toArray, canonDf.schema.fields(0).dataType, adj)
-  }
-
-  /** [[peelFrom]] replayed on driver arrays: same round structure, same
-    * early exit (consecutive survivor counts equal ⇒ set stable ⇒
-    * remaining rounds are the identity). Returns the LAST EXECUTED
-    * round's input degrees and the survivor set — exactly what the
-    * distributed peel's (lastDeg, alive) pair holds.
-    */
-  private def peelDriver(g: DriverGraph, alive0: Array[Boolean], k: Int,
-                         rounds: Int): (Array[Long], Array[Boolean]) = {
-    val n = g.adj.length
-    var alive = alive0
-    var lastDeg = new Array[Long](n)
-    var nPrev = -1L
-    var r = 0
-    while (r < rounds) {
-      val deg = new Array[Long](n)
-      var v = 0
-      while (v < n) {
-        if (alive(v)) {
-          val nb = g.adj(v); var c = 0L; var j = 0
-          while (j < nb.length) { if (alive(nb(j))) c += 1; j += 1 }
-          deg(v) = c
-        }
-        v += 1
-      }
-      lastDeg = deg
-      val next = new Array[Boolean](n)
-      var cnt = 0L
-      v = 0
-      while (v < n) {
-        if (alive(v) && deg(v) >= k) { next(v) = true; cnt += 1 }
-        v += 1
-      }
-      alive = next
-      if (cnt == nPrev) r = rounds else { nPrev = cnt; r += 1 }
-    }
-    (lastDeg, alive)
-  }
-
-  private def rowsOut(spark: org.apache.spark.sql.SparkSession,
-                      g: DriverGraph, valueName: String,
-                      it: Iterator[(Int, Long)]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows: java.util.List[Row] =
-      it.map { case (v, d) => Row(g.nodeVals(v), d) }.toSeq.asJava
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", g.nodeType, nullable = true),
-      org.apache.spark.sql.types.StructField(valueName,
-        org.apache.spark.sql.types.LongType, nullable = false))))
-  }
-
-  /** `rounds` peeling rounds at threshold k starting from `alive`;
-    * returns the final degree frame (callers filter >= k for the
-    * survivors). The shared core of [[peel]] and [[corenessCapped]].
+  /** Up to `rounds` peeling rounds from `alive0` (whose row count is `n0`,
+    * or -1 when unknown): each round scores the alive rows and keeps the
+    * `keep` rows of the score frame, projected back to `alive0`'s columns.
+    * The shared core of [[KCore]] and [[KTruss]]'s distributed peels.
     *
-    * EARLY EXIT: once a round's survivor count equals its input count
-    * the set is stable (survivors ⊆ input, so count-equality is
-    * set-equality) and every remaining round is the identity — the
-    * returned frame is bit-identical to running all `rounds`, which is
-    * why the fixed-round oracles (q133/q153) stay valid. The per-round
-    * count runs on the just-cached survivor RDD, and on the q153 sweep
-    * it collapses 36 scheduled rounds to the ~16 that do work
-    * (11.2 s → ~5 s measured).
+    * EARLY EXIT: once a round's survivor count equals its input count the
+    * set is stable (survivors ⊆ input, so count-equality is set-equality)
+    * and every remaining round is the identity — the returned frame is
+    * bit-identical to running all `rounds`, which is why the fixed-round
+    * oracles (q133/q135/q153) stay valid. The per-round count runs on the
+    * just-cached survivor RDD, and on the q153 sweep it collapses 36
+    * scheduled rounds to the ~16 that do work (11.2 s → ~5 s measured).
     */
-  private def peelFrom(canon: DataFrame, alive0: DataFrame,
-                       alive0Rdd: org.apache.spark.rdd.RDD[Row],
-                       k: Int, rounds: Int): PeelResult = {
+  private[operators] def peelFrom(alive0: DataFrame, alive0Rdd: RDD[Row], n0: Long,
+                                  rounds: Int)
+                                 (score: DataFrame => DataFrame, keep: Column): PeelResult = {
+    val keys = alive0.columns.toSeq.map(col)
     var alive = alive0
     var aliveRdd = alive0Rdd
-    var n = -1L // unknown input count on entry; first round always runs
-    var lastDeg: DataFrame = null
-    var lastInputRdd: org.apache.spark.rdd.RDD[Row] = null
+    var n = n0
+    var last: DataFrame = null
+    var lastInputRdd: RDD[Row] = null
     var r = 0
     while (r < rounds) {
-      lastDeg = roundDegrees(canon, alive)
+      last = score(alive)
       val in = aliveRdd
-      val (a2, r2) = rebase(lastDeg.filter(col("deg") >= k).select(col("node")))
+      val (a2, r2) = DriverCsr.rebase(last.filter(keep).select(keys: _*))
       alive = a2; aliveRdd = r2
       val nNext = alive.count() // materializes r2 — `in` is now lineage-only
       // Unpersist discipline (the Closure/BpeMerges contract): the round
-      // BEFORE last's input leaf is superseded — its degree frame was
+      // BEFORE last's input leaf is superseded — its score frame was
       // overwritten and the new survivor leaf is materialized above it.
-      // Keep `in` (the returned lastDeg still reads it) and never release
+      // Keep `in` (the returned survivors still read it) and never release
       // the caller-owned alive0 (corenessCapped's removed-set anti-joins
       // reference each level's input until the final action).
       if (lastInputRdd != null && (lastInputRdd ne alive0Rdd))
         lastInputRdd.unpersist(blocking = false)
       lastInputRdd = in
-      if (nNext == n) r = rounds // stable — remaining rounds are identity
-      else { n = nNext; r += 1 }
+      if (nNext == n)
+        return PeelResult(last.filter(keep), alive, aliveRdd, lastInputRdd, converged = true)
+      n = nNext
+      r += 1
     }
-    PeelResult(lastDeg, alive, aliveRdd, lastInputRdd)
+    PeelResult(last.filter(keep), alive, aliveRdd, lastInputRdd, converged = false)
+  }
+
+  /** [[peelFrom]] on driver arrays: up to `rounds` rounds from `alive0`,
+    * each scoring the alive items and keeping those scoring >= `min`, with
+    * the same early exit. Returns the last round's scores, the survivors
+    * and whether a round removed nothing.
+    */
+  private[operators] def peelArrays(alive0: Array[Boolean], min: Long, rounds: Int)
+                                   (score: Array[Boolean] => Array[Long])
+      : (Array[Long], Array[Boolean], Boolean) = {
+    var alive = alive0
+    var n = alive.count(identity)
+    var last = new Array[Long](alive.length)
+    var r = 0
+    while (r < rounds) {
+      last = score(alive)
+      val in = alive
+      alive = Array.tabulate(in.length)(v => in(v) && last(v) >= min)
+      val nNext = alive.count(identity)
+      if (nNext == n) return (last, alive, true)
+      n = nNext
+      r += 1
+    }
+    (last, alive, false)
+  }
+
+  /** Both-direction int adjacency of the gate's interned edges. */
+  private def adjacency(g: DriverCsr.Edges): Array[Array[Int]] = {
+    val n = g.nodeVals.length
+    val cnt = new Array[Int](n)
+    g.src.foreach(cnt(_) += 1)
+    g.dst.foreach(cnt(_) += 1)
+    val adj = Array.tabulate(n)(j => new Array[Int](cnt(j)))
+    val fill = new Array[Int](n)
+    g.src.indices.foreach { i =>
+      val a = g.src(i); val b = g.dst(i)
+      adj(a)(fill(a)) = b; fill(a) += 1
+      adj(b)(fill(b)) = a; fill(b) += 1
+    }
+    adj
+  }
+
+  /** Degrees of the alive nodes in the subgraph they induce. */
+  private def degrees(adj: Array[Array[Int]])(alive: Array[Boolean]): Array[Long] = {
+    val deg = new Array[Long](adj.length)
+    var v = 0
+    while (v < adj.length) {
+      if (alive(v)) {
+        val nb = adj(v); var c = 0L; var j = 0
+        while (j < nb.length) { if (alive(nb(j))) c += 1; j += 1 }
+        deg(v) = c
+      }
+      v += 1
+    }
+    deg
+  }
+
+  private def nodeFrame(g: DriverCsr.Edges, valueName: String,
+                        out: Seq[(Int, Long)]): DataFrame =
+    g.frame(out.map { case (v, d) => Row(g.nodeVals(v), d) }, StructType(Seq(
+      StructField("node", g.schema.fields(0).dataType, nullable = true),
+      StructField(valueName, LongType, nullable = false))))
+
+  /** Up to `rounds` rounds of [[peel]] on either side of the edge gate:
+    * the (node, deg) survivors and whether a round removed nothing. The
+    * distributed side counts the nodes first only when `countFirst`.
+    */
+  private def peelRun(op: String, edges: DataFrame, srcCol: String, dstCol: String,
+                      k: Int, rounds: Int, maxEdges: Long,
+                      countFirst: Boolean): (DataFrame, Boolean) = {
+    val g = DriverCsr.edges(op, DriverCsr.canonical(edges, srcCol, dstCol), maxEdges)
+    if (g.onDriver) {
+      val adj = adjacency(g)
+      val (deg, alive, converged) =
+        peelArrays(Array.fill(adj.length)(true), k, rounds)(degrees(adj))
+      return (nodeFrame(g, "deg", adj.indices.filter(alive(_)).map(v => (v, deg(v)))),
+        converged)
+    }
+    val canon = g.cached
+    val (a0, a0Rdd) = DriverCsr.rebase(DriverCsr.nodesOf(canon, "a", "b"))
+    val res = peelFrom(a0, a0Rdd, if (countFirst) a0.count() else -1L, rounds)(
+      roundDegrees(canon, _), col("deg") >= k)
+    // the result reads the final DEGREE frame, not the survivor leaf —
+    // release the leaf (it was only needed for the early-exit count)
+    res.aliveRdd.unpersist(blocking = false)
+    (res.survivors, res.converged)
   }
 
   /** `rounds` peeling rounds; returns the survivors with their degree in
     * the final round's input subgraph: (node, deg), deg >= k.
     */
   def peel(edges: DataFrame, srcCol: String, dstCol: String,
-           k: Int, rounds: Int, driverMaxEdges: Long = 2000000L): DataFrame = {
+           k: Int, rounds: Int, maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val (canon, canonRdd) = rebase(canonical(edges, srcCol, dstCol))
-    if (canon.count() <= driverMaxEdges) {
-      val g = collectGraph(canon)
-      canonRdd.unpersist(blocking = false)
-      val (lastDeg, alive) = peelDriver(g,
-        Array.fill(g.adj.length)(true), k, rounds)
-      return rowsOut(edges.sparkSession, g, "deg",
-        (0 until g.adj.length).iterator.filter(alive(_))
-          .map(v => (v, lastDeg(v))))
-    }
-    val (a0, a0Rdd) = rebase(allNodes(canon))
-    val res = peelFrom(canon, a0, a0Rdd, k, rounds)
-    // the result reads the final DEGREE frame, not the survivor leaf —
-    // release the leaf (it was only needed for the early-exit count)
-    res.aliveRdd.unpersist(blocking = false)
-    res.lastDeg.filter(col("deg") >= k)
+    peelRun("KCore.peel", edges, srcCol, dstCol, k, rounds, maxEdges,
+      countFirst = false)._1
   }
 
   /** CAPPED coreness decomposition: every node's core number
@@ -241,31 +207,24 @@ object KCore {
     */
   def corenessCapped(edges: DataFrame, srcCol: String, dstCol: String,
                      kMax: Int, roundsPerK: Int,
-                     driverMaxEdges: Long = 2000000L): DataFrame = {
+                     maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(kMax >= 1 && roundsPerK >= 1, "kMax and roundsPerK must be >= 1")
-    val (canon0, canon0Rdd) = rebase(canonical(edges, srcCol, dstCol))
-    if (canon0.count() <= driverMaxEdges) {
+    val g = DriverCsr.edges("KCore.corenessCapped",
+      DriverCsr.canonical(edges, srcCol, dstCol), maxEdges)
+    if (g.onDriver) {
       // driver sweep: the whole k = 1..kMax peel runs on collected
       // arrays — the recurrence is identical level by level
       // (KCoreSpec pins driver ≡ distributed), and the 36-round
       // distributed sweep's per-round job floor disappears
-      val g = collectGraph(canon0)
-      canon0Rdd.unpersist(blocking = false)
-      val n = g.adj.length
-      var alive = Array.fill(n)(true)
-      val out = Vector.newBuilder[(Int, Long)]
+      val adj = adjacency(g)
+      val coreness = Array.fill(adj.length)(kMax.toLong)
+      var alive = Array.fill(adj.length)(true)
       for (k <- 1 to kMax) {
-        val (_, next) = peelDriver(g, alive, k, roundsPerK)
-        var v = 0
-        while (v < n) {
-          if (alive(v) && !next(v)) out += ((v, (k - 1).toLong))
-          v += 1
-        }
+        val next = peelArrays(alive, k, roundsPerK)(degrees(adj))._2
+        adj.indices.foreach(v => if (alive(v) && !next(v)) coreness(v) = k - 1L)
         alive = next
       }
-      var v = 0
-      while (v < n) { if (alive(v)) out += ((v, kMax.toLong)); v += 1 }
-      return rowsOut(edges.sparkSession, g, "coreness", out.result().iterator)
+      return nodeFrame(g, "coreness", adj.indices.map(v => (v, coreness(v))))
     }
     // Bound the union chain's plan growth: every foldEvery levels the
     // accumulated removed-set union rebases onto ONE cached leaf (and
@@ -274,17 +233,18 @@ object KCore {
     // — a kMax=1000 sweep plans the same as kMax=8 (KCoreSpec pins the
     // branch count). The fold is node-sized rows, never edges.
     val foldEvery = 8
-    val canon = canon0
-    var (alive, aliveRdd) = rebase(allNodes(canon))
+    val canon = g.cached
+    var (alive, aliveRdd) = DriverCsr.rebase(DriverCsr.nodesOf(canon, "a", "b"))
     var result: DataFrame = null
-    var resultRdd: org.apache.spark.rdd.RDD[Row] = null
+    var resultRdd: RDD[Row] = null
     var branches = 0
     for (k <- 1 to kMax) {
       // the level's survivors ARE peelFrom's materialized alive leaf — no
       // second rebase; its last degree-frame input is dead once the leaf
       // exists (unless it is this level's own input, which the removed-set
       // anti-join below still reads)
-      val res = peelFrom(canon, alive, aliveRdd, k, roundsPerK)
+      val res = peelFrom(alive, aliveRdd, -1L, roundsPerK)(
+        roundDegrees(canon, _), col("deg") >= k)
       if (res.lastInputRdd ne aliveRdd)
         res.lastInputRdd.unpersist(blocking = false)
       val next = res.alive
@@ -293,7 +253,7 @@ object KCore {
       result = if (result == null) removed else result.unionByName(removed)
       branches += 1
       if (branches >= foldEvery && k < kMax) {
-        val (r2, rr2) = rebase(result)
+        val (r2, rr2) = DriverCsr.rebase(result)
         r2.count() // materializes rr2 — the prior accumulator leaf is dead
         if (resultRdd != null) resultRdd.unpersist(blocking = false)
         result = r2; resultRdd = rr2
@@ -305,58 +265,20 @@ object KCore {
       alive.select(col("node"), lit(kMax.toLong).as("coreness")))
   }
 
-  /** The true k-core: peel to the fixpoint (survivor count stable).
-    * `maxRounds` bounds the loop — a graph peels at most node-count
-    * rounds, so hitting the bound means the budget was too small and
-    * the call throws rather than return a non-core.
+  /** The true k-core: [[peel]] run until a round removes nothing, so
+    * each survivor carries its degree within the core. `maxRounds`
+    * bounds the loop — a graph peels at most node-count rounds, so
+    * hitting the bound means the budget was too small and the call
+    * throws rather than return a non-core.
     */
   def core(edges: DataFrame, srcCol: String, dstCol: String,
            k: Int, maxRounds: Int = 1000,
-           driverMaxEdges: Long = 2000000L): DataFrame = {
+           maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val (canon, canonRdd) = rebase(canonical(edges, srcCol, dstCol))
-    if (canon.count() <= driverMaxEdges) {
-      val g = collectGraph(canon)
-      canonRdd.unpersist(blocking = false)
-      val nNodes = g.adj.length
-      var alive = Array.fill(nNodes)(true)
-      var n = nNodes.toLong
-      var r = 0
-      while (r < maxRounds) {
-        val (deg, next) = peelDriver(g, alive, k, rounds = 1)
-        var cnt = 0L
-        var v = 0
-        while (v < nNodes) { if (next(v)) cnt += 1; v += 1 }
-        if (cnt == n)
-          return rowsOut(edges.sparkSession, g, "deg",
-            (0 until nNodes).iterator.filter(next(_)).map(v => (v, deg(v))))
-        alive = next
-        n = cnt
-        r += 1
-      }
-      throw new IllegalStateException(
-        s"k-core did not converge within $maxRounds rounds")
-    }
-    var (alive, aliveRdd) = rebase(allNodes(canon))
-    var n = alive.count()
-    var degRdd: org.apache.spark.rdd.RDD[Row] = null
-    var r = 0
-    while (r < maxRounds) {
-      val (deg, dR) = rebase(roundDegrees(canon, alive))
-      val next = deg.filter(col("deg") >= k)
-      val nNext = next.count() // materializes dR
-      // dR cut the lineage: the previous degree leaf and this round's
-      // input leaf are both superseded (Closure's unpersist discipline)
-      if (degRdd != null) degRdd.unpersist(blocking = false)
-      degRdd = dR
-      aliveRdd.unpersist(blocking = false)
-      if (nNext == n) return deg.filter(col("deg") >= k)
-      val (a2, aR) = rebase(next.select(col("node")))
-      alive = a2; aliveRdd = aR
-      n = nNext
-      r += 1
-    }
-    throw new IllegalStateException(
-      s"k-core did not converge within $maxRounds rounds")
+    val (out, converged) = peelRun("KCore.core", edges, srcCol, dstCol, k,
+      maxRounds, maxEdges, countFirst = true)
+    if (!converged)
+      throw new IllegalStateException(s"k-core did not converge within $maxRounds rounds")
+    out
   }
 }

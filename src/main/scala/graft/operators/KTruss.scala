@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** k-truss decomposition — the EDGE-level sibling of [[KCore]] (Cohen
   * 2008): repeatedly delete edges lying in fewer than k−2 triangles of
@@ -12,10 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * [[peel]] runs a FIXED number of rounds (the oracle-gated form, q135:
   * the DuckDB oracle unrolls each round as MATERIALIZED CTEs — the
-  * q133 lesson); [[truss]] is the true fixpoint (edge-count-stable ⇒
-  * edge-set-stable, since survivors ⊆ current edges).
+  * q133 lesson); [[truss]] is the same peel run to its fixpoint
+  * (edge-count-stable ⇒ edge-set-stable, since survivors ⊆ current
+  * edges).
   *
-  * Scale shape per round: triangle enumeration is the q118 wedge shape
+  * Both run behind the [[DriverCsr.edges]] gate: within it the rounds
+  * run on driver arrays over the collected edges. Above it, per round,
+  * triangle enumeration is the q118 wedge shape
   * — two equi-joins of the id-oriented canonical edge list against
   * itself (x<y<z, each triangle found once), then each triangle votes
   * for its three edges through ONE explode feeding a map-side-combined
@@ -27,11 +31,6 @@ import org.apache.spark.sql.functions._
   * support aggregation is orientation-agnostic.)
   */
 object KTruss {
-
-  private def canonical(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges.select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
 
   /** Per-edge triangle support within the given canonical edge set:
     * (a, b, support), edges in no triangle absent (support 0).
@@ -51,77 +50,40 @@ object KTruss {
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
   }
 
-  // ------------------------------------------------------------------
-  // Driver peel (the KCore.collectGraph discipline: gated on collected
-  // edge count, bit-identical recurrence, distributed loop as fallback)
-  // ------------------------------------------------------------------
-
-  /** Collected canonical edge list with per-node FORWARD adjacency in
-    * the canonical (value-order) orientation: forward(x) = the (y, edge
-    * index) pairs with (x, y) canonical, sorted by neighbor id — so a
-    * triangle x<y<z is exactly one intersection of forward(x) and
-    * forward(y) at edge (x, y), and the two-pointer walk finds every
-    * edge index it must credit. BOUNDED CONTRACT: entered only when the
-    * canonical edge count fits `driverMaxEdges` (the KCore gate).
+  /** Triangle supports of the alive edges of the gate's collected
+    * canonical edge list — the exact multiset [[supports]] computes (each
+    * x<y<z triangle credits its three edges once). Per-node FORWARD
+    * lists hold the (neighbor id, edge index) pairs of the alive edges
+    * (x, y) in canonical orientation, sorted by neighbor id, so a triangle
+    * x<y<z is exactly one intersection of forward(x) and forward(y) at
+    * edge (x, y), and the two-pointer walk finds every edge index it must
+    * credit.
     */
-  private final case class DriverEdges(
-      aVals: Array[Any], bVals: Array[Any],
-      aIds: Array[Int], bIds: Array[Int],
-      nNodes: Int,
-      typeA: org.apache.spark.sql.types.DataType)
-
-  private def collectEdges(canonDf: DataFrame): DriverEdges = {
-    val rows = canonDf.collect()
-    val idx = new java.util.HashMap[Any, Integer]()
-    var nextId = 0
-    def id(v: Any): Int = {
-      val e = idx.get(v)
-      if (e != null) e.intValue()
-      else { val i = nextId; idx.put(v, i); nextId += 1; i }
-    }
-    val m = rows.length
-    val aVals = new Array[Any](m); val bVals = new Array[Any](m)
-    val aIds = new Array[Int](m); val bIds = new Array[Int](m)
+  private def supportsDriver(g: DriverCsr.Edges)(alive: Array[Boolean]): Array[Long] = {
+    val (aIds, bIds, nNodes) = (g.src, g.dst, g.nodeVals.length)
+    val m = aIds.length
+    val cnt = new Array[Int](nNodes)
     var i = 0
-    while (i < m) {
-      aVals(i) = rows(i).get(0); bVals(i) = rows(i).get(1)
-      aIds(i) = id(aVals(i)); bIds(i) = id(bVals(i))
-      i += 1
-    }
-    DriverEdges(aVals, bVals, aIds, bIds, nextId,
-      canonDf.schema.fields(0).dataType)
-  }
-
-  /** Triangle supports of the alive subset, in driver arrays — the
-    * exact multiset [[supports]] computes (each x<y<z triangle credits
-    * its three edges once).
-    */
-  private def supportsDriver(g: DriverEdges,
-                             alive: Array[Boolean]): Array[Long] = {
-    val m = g.aIds.length
-    // forward lists over ALIVE edges, sorted by neighbor id
-    val cnt = new Array[Int](g.nNodes)
-    var i = 0
-    while (i < m) { if (alive(i)) cnt(g.aIds(i)) += 1; i += 1 }
-    val nb = Array.tabulate(g.nNodes)(v => new Array[Long](cnt(v)))
-    val fill = new Array[Int](g.nNodes)
+    while (i < m) { if (alive(i)) cnt(aIds(i)) += 1; i += 1 }
+    val nb = Array.tabulate(nNodes)(v => new Array[Long](cnt(v)))
+    val fill = new Array[Int](nNodes)
     i = 0
     while (i < m) {
       if (alive(i)) {
-        val x = g.aIds(i)
+        val x = aIds(i)
         // pack (neighbor id, edge index) into one long for a cheap sort
-        nb(x)(fill(x)) = (g.bIds(i).toLong << 32) | i.toLong
+        nb(x)(fill(x)) = (bIds(i).toLong << 32) | i.toLong
         fill(x) += 1
       }
       i += 1
     }
     var v = 0
-    while (v < g.nNodes) { java.util.Arrays.sort(nb(v)); v += 1 }
+    while (v < nNodes) { java.util.Arrays.sort(nb(v)); v += 1 }
     val sup = new Array[Long](m)
     i = 0
     while (i < m) {
       if (alive(i)) {
-        val fx = nb(g.aIds(i)); val fy = nb(g.bIds(i))
+        val fx = nb(aIds(i)); val fy = nb(bIds(i))
         var p = 0; var q = 0
         while (p < fx.length && q < fy.length) {
           val zx = (fx(p) >>> 32).toInt; val zy = (fy(q) >>> 32).toInt
@@ -141,18 +103,28 @@ object KTruss {
     sup
   }
 
-  private def rowsOut(spark: org.apache.spark.sql.SparkSession,
-                      g: DriverEdges,
-                      it: Iterator[(Int, Long)]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      it.map { case (i, s) =>
-        org.apache.spark.sql.Row(g.aVals(i), g.bVals(i), s) }.toSeq.asJava
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("a", g.typeA, nullable = true),
-      StructField("b", g.typeA, nullable = true),
-      StructField("support", LongType, nullable = false))))
+  /** Up to `rounds` peeling rounds on either side of the edge gate: the
+    * (a, b, support) survivors and whether a round removed nothing.
+    */
+  private def peelRun(op: String, edges: DataFrame, srcCol: String, dstCol: String,
+                      k: Int, rounds: Int, maxEdges: Long): (DataFrame, Boolean) = {
+    val g = DriverCsr.edges(op, DriverCsr.canonical(edges, srcCol, dstCol), maxEdges)
+    if (g.onDriver) {
+      val (sup, alive, converged) =
+        KCore.peelArrays(Array.fill(g.rows.length)(true), k - 2, rounds)(supportsDriver(g))
+      val out = g.rows.indices.filter(alive(_)).map(i => Row(g.rows(i).get(0),
+        g.rows(i).get(1), sup(i)))
+      val nodeType = g.schema.fields(0).dataType
+      return (g.frame(out, StructType(Seq(
+        StructField("a", nodeType, nullable = true),
+        StructField("b", nodeType, nullable = true),
+        StructField("support", LongType, nullable = false)))), converged)
+    }
+    val res = KCore.peelFrom(g.cached, g.cachedRdd, g.count, rounds)(
+      supports, col("support") >= k - 2)
+    // the result reads the final SUPPORT frame, not the survivor leaf
+    res.aliveRdd.unpersist(blocking = false)
+    (res.survivors, res.converged)
   }
 
   /** `rounds` peeling rounds; returns the surviving edges with their
@@ -160,128 +132,23 @@ object KTruss {
     * support >= k−2.
     */
   def peel(edges: DataFrame, srcCol: String, dstCol: String,
-           k: Int, rounds: Int, driverMaxEdges: Long = 2000000L): DataFrame = {
+           k: Int, rounds: Int, maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k-2 triangles per edge), got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
-    val canon0 = canonical(edges, srcCol, dstCol)
-    if (canon0.count() <= driverMaxEdges) {
-      val g = collectEdges(canon0)
-      val m = g.aIds.length
-      var alive = Array.fill(m)(true)
-      var lastSup = new Array[Long](m)
-      var n = -1L
-      var r = 0
-      while (r < rounds) {
-        lastSup = supportsDriver(g, alive)
-        val next = new Array[Boolean](m)
-        var cnt = 0L
-        var i = 0
-        while (i < m) {
-          if (alive(i) && lastSup(i) >= k - 2) { next(i) = true; cnt += 1 }
-          i += 1
-        }
-        alive = next
-        if (cnt == n) r = rounds else { n = cnt; r += 1 }
-      }
-      return rowsOut(spark, g,
-        (0 until m).iterator.filter(alive(_)).map(i => (i, lastSup(i))))
-    }
-
-    def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd
-      rdd.cache()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-
-    var (alive, aliveRdd) = rebase(canon0)
-    var lastSup: DataFrame = null
-    var lastInputRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var n = -1L // unknown on entry; first round always runs
-    var r = 0
-    while (r < rounds) {
-      lastSup = supports(alive)
-      val in = aliveRdd
-      val (a2, r2) = rebase(lastSup.filter(col("support") >= k - 2)
-        .select(col("a"), col("b")))
-      alive = a2; aliveRdd = r2
-      val nNext = alive.count() // materializes r2 — `in` is now lineage-only
-      // survivors ⊆ input edges, so count-stable ⇒ set-stable and every
-      // remaining round is the identity: the returned frame is
-      // bit-identical to running all `rounds` (the KCore.peelFrom early
-      // exit, keeping the fixed-round oracle q135 valid). Release the
-      // round-before-last's input leaf (its support frame was overwritten);
-      // keep `in` — the returned lastSup still reads it.
-      if (lastInputRdd != null) lastInputRdd.unpersist(blocking = false)
-      lastInputRdd = in
-      if (nNext == n) r = rounds else { n = nNext; r += 1 }
-    }
-    // the result reads the final SUPPORT frame, not the survivor leaf
-    aliveRdd.unpersist(blocking = false)
-    lastSup.filter(col("support") >= k - 2)
+    peelRun("KTruss.peel", edges, srcCol, dstCol, k, rounds, maxEdges)._1
   }
 
-  /** The true k-truss: peel to the fixpoint (surviving edge count
-    * stable). Throws past `maxRounds` rather than return a non-truss.
+  /** The true k-truss: [[peel]] run until a round removes nothing.
+    * Throws past `maxRounds` rather than return a non-truss.
     */
   def truss(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, maxRounds: Int = 1000,
-            driverMaxEdges: Long = 2000000L): DataFrame = {
+            maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k-2 triangles per edge), got $k")
-    val spark = edges.sparkSession
-    val canon0 = canonical(edges, srcCol, dstCol)
-    if (canon0.count() <= driverMaxEdges) {
-      val g = collectEdges(canon0)
-      val m = g.aIds.length
-      var alive = Array.fill(m)(true)
-      var n = m.toLong
-      var r = 0
-      while (r < maxRounds) {
-        val sup = supportsDriver(g, alive)
-        val next = new Array[Boolean](m)
-        var cnt = 0L
-        var i = 0
-        while (i < m) {
-          if (alive(i) && sup(i) >= k - 2) { next(i) = true; cnt += 1 }
-          i += 1
-        }
-        if (cnt == n)
-          return rowsOut(spark, g,
-            (0 until m).iterator.filter(next(_)).map(i => (i, sup(i))))
-        alive = next
-        n = cnt
-        r += 1
-      }
-      throw new IllegalStateException(
-        s"k-truss did not converge within $maxRounds rounds")
-    }
-
-    def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd
-      rdd.cache()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-
-    var (alive, aliveRdd) = rebase(canon0)
-    var n = alive.count()
-    var supRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var r = 0
-    while (r < maxRounds) {
-      val (sup, sR) = rebase(supports(alive))
-      val next = sup.filter(col("support") >= k - 2)
-      val nNext = next.count() // materializes sR
-      // sR cut the lineage: the previous support leaf and this round's
-      // input leaf are both superseded (Closure's unpersist discipline)
-      if (supRdd != null) supRdd.unpersist(blocking = false)
-      supRdd = sR
-      aliveRdd.unpersist(blocking = false)
-      if (nNext == n) return sup.filter(col("support") >= k - 2)
-      val (a2, aR) = rebase(next.select(col("a"), col("b")))
-      alive = a2; aliveRdd = aR
-      n = nNext
-      r += 1
-    }
-    throw new IllegalStateException(
-      s"k-truss did not converge within $maxRounds rounds")
+    val (out, converged) = peelRun("KTruss.truss", edges, srcCol, dstCol, k,
+      maxRounds, maxEdges)
+    if (!converged)
+      throw new IllegalStateException(s"k-truss did not converge within $maxRounds rounds")
+    out
   }
 }

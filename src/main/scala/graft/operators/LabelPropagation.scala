@@ -196,7 +196,7 @@ object LabelPropagation {
     val canon0 = e.select(least(col("__s"), col("__d")).as("a"),
         greatest(col("__s"), col("__d")).as("b"))
       .filter(col("a") =!= col("b"))
-    val g = DriverCsr.build(DriverCsr.nodesOf(canon0, "a", "b"),
+    val g = DriverCsr.build("LabelPropagation.buildLpaGraph", DriverCsr.nodesOf(canon0, "a", "b"),
         DriverCsr.MaxNodes, sorted = true) { (ids, ids2) =>
       // the weighted symmetric CSR: dedup to max weight, both directions
       val canon = e.select(least(col("__s"), col("__d")).as("a"),
@@ -217,7 +217,6 @@ object LabelPropagation {
         .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray,
           r.getSeq[Long](2).toArray))
     }
-    if (g.onDriver) g.adj.count()
     new LpaGraph(e, Some(g))
   }
 

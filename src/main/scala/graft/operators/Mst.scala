@@ -45,19 +45,16 @@ object Mst {
   /** Run exactly `rounds` Borůvka rounds (early-exits when a round
     * selects nothing — the result is already the full MSF then).
     *
-    * Two execution paths, picked by measured edge count (the
-    * [[ConnectedComponents]] discipline): after collapsing parallel
-    * edges, a graph at or under `localEdgeThreshold` rows (and an
-    * integral- or string-keyed node type, whose driver ordering
-    * provably matches Spark's `min(struct)` — numeric, or UTF-8
-    * bytes) runs the IDENTICAL round recurrence driver-side over a
-    * union-find: one bounded collect replaces ~5 jobs per round of
-    * pure scheduling latency (measured: the distributed loop put the
-    * whole MST gate family at 16-35 s iso on a 3,800-edge graph whose
-    * forest work is milliseconds). Larger graphs or other key types
+    * Two execution paths, picked by the [[DriverCsr.edges]] gate over
+    * the collapsed edges: within it the IDENTICAL round recurrence runs
+    * driver-side over a union-find, with node ids sorted under Spark's
+    * ordering so the (w, u, v) order compares ints — one bounded collect
+    * replaces ~5 jobs per round of pure scheduling latency (measured: the
+    * distributed loop put the whole MST gate family at 16-35 s iso on a
+    * 3,800-edge graph whose forest work is milliseconds). Larger graphs
     * run the distributed loop below; MstSpec pins the two paths
-    * bit-identical across random graphs, weight ties, string keys,
-    * and round prefixes.
+    * bit-identical across random graphs, weight ties, string keys, and
+    * round prefixes.
     *
     * @param edges undirected weighted edge list; either orientation,
     *              parallel edges and self-loops tolerated (collapsed /
@@ -66,9 +63,9 @@ object Mst {
     */
   def boruvka(edges: DataFrame, srcCol: String, dstCol: String,
               wCol: String, rounds: Int,
-              localEdgeThreshold: Long = 1000000L): DataFrame = {
+              maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
-    forestCore(edges, srcCol, dstCol, wCol, rounds, localEdgeThreshold)
+    forestCore("Mst.boruvka", edges, srcCol, dstCol, wCol, rounds, maxEdges)
   }
 
   /** Borůvka to FIXPOINT — the full minimum spanning forest. Component
@@ -77,8 +74,8 @@ object Mst {
     */
   def boruvkaFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                       wCol: String,
-                      localEdgeThreshold: Long = 1000000L): DataFrame =
-    forestCore(edges, srcCol, dstCol, wCol, 63, localEdgeThreshold)
+                      maxEdges: Long = DriverCsr.MaxEdges): DataFrame =
+    forestCore("Mst.boruvkaFixpoint", edges, srcCol, dstCol, wCol, 63, maxEdges)
 
   /** INCREMENTAL maintenance: fold a NEW batch of weighted edges into an
     * existing minimum spanning forest without re-scanning the
@@ -98,13 +95,13 @@ object Mst {
     */
   def mergeBatch(forest: DataFrame, batch: DataFrame, srcCol: String,
                  dstCol: String, wCol: String,
-                 localEdgeThreshold: Long = 1000000L): DataFrame =
+                 maxEdges: Long = DriverCsr.MaxEdges): DataFrame =
     boruvkaFixpoint(
       forest.select(col("u").as("__ms"), col("v").as("__md"),
           col("w").as("__mw"))
         .unionByName(batch.select(col(srcCol).as("__ms"),
           col(dstCol).as("__md"), col(wCol).cast("long").as("__mw"))),
-      "__ms", "__md", "__mw", localEdgeThreshold)
+      "__ms", "__md", "__mw", maxEdges)
 
   /** Dendrogram cut by cluster COUNT: drop the `cuts` heaviest forest
     * edges by the (w DESC, u, v) total order — the single-linkage cut
@@ -129,77 +126,39 @@ object Mst {
     }
   }
 
-  /** The identical round recurrence over a bounded driver collect: a
+  /** The identical round recurrence over the gate's collected edges: a
     * union-find carries the component partition, each round scans the
     * edge array once recording every component's total-order-minimum
     * cross edge (selection reads the ROUND-START partition — unions
     * apply only after the scan, mirroring the distributed barrier), and
-    * the selected set accumulates. Key comparison mirrors Spark's
-    * `min(struct)` exactly: numeric for integral types, unsigned UTF-8
-    * bytes for strings (the ConnectedComponents local-path argument).
+    * the selected set accumulates. Node ids follow Spark's ordering, so
+    * comparing ids is comparing keys as `min(struct)` does.
     */
-  private def driverForest(rows: Array[Row],
-                           keyType: org.apache.spark.sql.types.DataType,
-                           rounds: Int): Array[Row] = {
-    import java.nio.charset.StandardCharsets
-    def toL(x: Any): Long = x.asInstanceOf[java.lang.Number].longValue()
-    def keyCmp(a: Any, b: Any): Int = keyType match {
-      case org.apache.spark.sql.types.StringType =>
-        val ab = a.asInstanceOf[String].getBytes(StandardCharsets.UTF_8)
-        val bb = b.asInstanceOf[String].getBytes(StandardCharsets.UTF_8)
-        var i = 0
-        while (i < ab.length && i < bb.length) {
-          val c = (ab(i) & 0xff) - (bb(i) & 0xff)
-          if (c != 0) return c
-          i += 1
-        }
-        ab.length - bb.length
-      case _ => java.lang.Long.compare(toL(a), toL(b))
-    }
-    def u(i: Int): Any = rows(i).get(0)
-    def v(i: Int): Any = rows(i).get(1)
-    def w(i: Int): Long = rows(i).getLong(2)
+  private def driverForest(g: DriverCsr.Edges, rounds: Int): Seq[Row] = {
+    val (u, v) = (g.src, g.dst)
+    val w = g.rows.map(_.getLong(2))
     // strict total order (w, u, v)
-    def edgeCmp(i: Int, j: Int): Int = {
-      val c0 = java.lang.Long.compare(w(i), w(j))
-      if (c0 != 0) return c0
-      val c1 = keyCmp(u(i), u(j))
-      if (c1 != 0) c1 else keyCmp(v(i), v(j))
-    }
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val next = parent(c); parent(c) = r; c = next
-      }
-      r
+    def before(i: Int, j: Int): Boolean =
+      if (w(i) != w(j)) w(i) < w(j) else if (u(i) != u(j)) u(i) < u(j) else v(i) < v(j)
+    val parent = Array.tabulate(g.nodeVals.length)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
     }
     val selected = scala.collection.mutable.LinkedHashSet.empty[Int]
     var r = 0
     var done = false
     while (r < rounds && !done) {
-      val best = scala.collection.mutable.HashMap.empty[Any, Int]
-      var i = 0
-      while (i < rows.length) {
+      val best = Array.fill(parent.length)(-1)
+      def offer(c: Int, i: Int): Unit = if (best(c) < 0 || before(i, best(c))) best(c) = i
+      u.indices.foreach { i =>
         val ru = find(u(i)); val rv = find(v(i))
-        if (ru != rv) {
-          var k = 0
-          while (k < 2) {
-            val c = if (k == 0) ru else rv
-            best.get(c) match {
-              case Some(j) if edgeCmp(j, i) <= 0 => ()
-              case _ => best(c) = i
-            }
-            k += 1
-          }
-        }
-        i += 1
+        if (ru != rv) { offer(ru, i); offer(rv, i) }
       }
-      if (best.isEmpty) done = true
+      val sel = best.filter(_ >= 0).distinct
+      if (sel.isEmpty) done = true
       else {
-        val sel = best.values.toSet
         sel.foreach { i =>
           val ru = find(u(i)); val rv = find(v(i))
           if (ru != rv) parent(ru) = rv
@@ -208,36 +167,20 @@ object Mst {
         r += 1
       }
     }
-    selected.toArray.map(rows)
+    selected.toSeq.map(g.rows)
   }
 
-  private def forestCore(edges: DataFrame, srcCol: String, dstCol: String,
-                         wCol: String, rounds: Int,
-                         localEdgeThreshold: Long = 1000000L): DataFrame = {
+  private def forestCore(op: String, edges: DataFrame, srcCol: String, dstCol: String,
+                         wCol: String, rounds: Int, maxEdges: Long): DataFrame = {
     val spark = edges.sparkSession
-    val e = edges.select(
+    val g = DriverCsr.edges(op, edges.select(
         least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"),
         col(wCol).cast("long").as("w"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
-      .persist()
-    val eCount = e.count()
-
-    val keyType = e.schema("u").dataType
-    val localKeyOk = {
-      import org.apache.spark.sql.types._
-      keyType match {
-        case LongType | IntegerType | ShortType | ByteType | StringType => true
-        case _ => false
-      }
-    }
-    if (eCount <= localEdgeThreshold && localKeyOk) {
-      val out = driverForest(e.collect(), keyType, rounds)
-      e.unpersist(blocking = false)
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toSeq, 1), e.schema)
-    }
+      .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), maxEdges, sorted = true)
+    if (g.onDriver) return g.frame(driverForest(g, rounds), g.schema)
+    val e = g.cached
     val nodes = e.select(col("u").as("node"))
       .unionByName(e.select(col("v").as("node"))).distinct().persist()
     nodes.count()
@@ -277,7 +220,7 @@ object Mst {
       forest = next
       r += 1
     }
-    e.unpersist(blocking = false)
+    g.close()
     nodes.unpersist(blocking = false)
     // the returned frame reads the final cached forest leaf (node-bounded,
     // never collected to the driver); caller releases via

@@ -89,7 +89,8 @@ object PageRank {
     .groupBy(col("did")).agg(collect_list(col("sid")).as("sids"))
 
   /** @param edges two-column frame (`src`, `dst`) of directed edges;
-    *        duplicates are collapsed
+    *        duplicates are collapsed and an edge with a null endpoint is
+    *        dropped
     * @param broadcastMaxNodes graphs up to this many nodes keep the
     *        node-sized rank state on the driver ([[DriverCsr]] states the
     *        memory contract). Larger graphs keep ranks distributed and
@@ -225,7 +226,8 @@ object PageRank {
   def buildRankGraph(edges: DataFrame,
                      broadcastMaxNodes: Long = DriverCsr.MaxNodes): RankGraph = {
     val e = edges.select(col("src"), col("dst"))
-    new RankGraph(e, DriverCsr.build(DriverCsr.nodesOf(e, "src", "dst"),
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    new RankGraph(e, DriverCsr.build("PageRank.buildRankGraph", DriverCsr.nodesOf(e, "src", "dst"),
       broadcastMaxNodes) { (srcIds, dstIds) =>
       // ONE int shuffle builds both the dedup and the adjacency (see
       // adjacencyPlan); long sums are exact and commutative, so the
@@ -388,6 +390,7 @@ object PageRank {
     // distributed path collapses upstream
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src"), col("dst"), wChecked.as("w"))
     // the seed set IS the query — driver-collected under the bounded
     // contract regardless of path (personalizedRanks' shape)
@@ -397,7 +400,7 @@ object PageRank {
       require(v.nonEmpty, "seeds must be non-empty")
       v
     }
-    val g = DriverCsr.build(DriverCsr.nodesOf(eRaw, "src", "dst"),
+    val g = DriverCsr.build("PageRank.weighted", DriverCsr.nodesOf(eRaw, "src", "dst"),
         broadcastMaxNodes) { (srcIds, dstIds) =>
       // weighted in-adjacency: (did, sids, ws) — the duplicate-edge SUM
       // collapse rides this int exchange (the (did, sid) aggregate's

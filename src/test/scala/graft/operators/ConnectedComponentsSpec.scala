@@ -10,14 +10,14 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   /** Resolve on BOTH paths (driver union-find and the distributed
-    * pointer-jumping loop, forced via localEdgeThreshold = 0), assert
+    * pointer-jumping loop, forced via maxEdges = 0), assert
     * they agree, return the shared result.
     */
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val df = edges.toDF("u", "v")
     val local = ConnectedComponents.components(df)
       .as[(Long, Long)].collect().toMap
-    val dist = ConnectedComponents.components(df, localEdgeThreshold = 0L)
+    val dist = ConnectedComponents.components(df, maxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     graft.Storage.releaseAll(spark)
     assert(local == dist, "driver union-find and distributed loop diverge")
@@ -78,7 +78,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpec {
     val edges = Seq(("z", "é"), (sup, "￿"), ("b", "a")).toDF("u", "v")
     val local = ConnectedComponents.components(edges)
       .as[(String, String)].collect().toMap
-    val dist = ConnectedComponents.components(edges, localEdgeThreshold = 0L)
+    val dist = ConnectedComponents.components(edges, maxEdges = 0L)
       .as[(String, String)].collect().toMap
     graft.Storage.releaseAll(spark)
     assert(local == dist)
@@ -89,20 +89,28 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpec {
 
   test("byte budget routes wide string keys to the distributed loop, same result") {
     // 6 edges but ~1 KB keys: the row count is tiny, the collected bytes
-    // are not — a small localByteThreshold must force the distributed
-    // path (and still agree with the unconstrained driver path).
+    // are not — a small byte budget at the kernel's edge gate must send
+    // the symmetric edge list to the distributed side, and that side must
+    // agree with the driver path.
     def wide(tag: String) = tag * 300
     val edges = Seq(
       (wide("a"), wide("b")), (wide("b"), wide("c")),
       (wide("x"), wide("y")), (wide("p"), wide("q")),
       (wide("q"), wide("r")), (wide("r"), wide("p"))).toDF("u", "v")
+    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v"))).distinct()
+    val budgeted = DriverCsr.edges("spec", sym, DriverCsr.MaxEdges, maxBytes = 1024L)
+    val open = DriverCsr.edges("spec", sym, DriverCsr.MaxEdges)
+    budgeted.close()
+    // 12 rows of two 300-char keys: 64 + 2·48 + 2·600 bytes each
+    assert(budgeted.count == 12L && budgeted.bytes == 12L * 1360)
+    assert(!budgeted.onDriver && open.onDriver)
     val local = ConnectedComponents.components(edges)
       .as[(String, String)].collect().toMap
-    val budgeted = ConnectedComponents.components(edges, localByteThreshold = 1024L)
+    val dist = ConnectedComponents.components(edges, maxEdges = 0L)
       .as[(String, String)].collect().toMap
     graft.Storage.releaseAll(spark)
-    assert(local == budgeted)
-    assert(budgeted(wide("c")) == wide("a") && budgeted(wide("r")) == wide("p"))
+    assert(local == dist)
+    assert(dist(wide("c")) == wide("a") && dist(wide("r")) == wide("p"))
   }
 
   test("null endpoints are rejected loudly") {

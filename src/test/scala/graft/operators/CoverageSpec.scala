@@ -83,7 +83,7 @@ class CoverageSpec extends AnyFunSuite with SparkSpec {
         Seq("1|2|2", "2|1|1")))
     cases.foreach { case (label, d, want) =>
       def sweep(maxRows: Long): Seq[String] =
-        Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 8, driverMaxRows = maxRows)
+        Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 8, maxEdges = maxRows)
           .collect().toSeq.map(_.mkString("|")).sorted
       val driver = sweep(2000000L)
       assert(driver == sweep(0L), s"$label: driver and distributed sweeps differ")
@@ -104,7 +104,7 @@ class CoverageSpec extends AnyFunSuite with SparkSpec {
     val driver = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 6)
       .as[(Long, String, Long)].collect().toSeq.sorted
     val dist = Coverage.greedyMaxCoverage(d, "id", col("toks"), k = 6,
-      driverMaxRows = 0L)
+      maxEdges = 0L)
       .as[(Long, String, Long)].collect().toSeq.sorted
     assert(driver == dist)
     assert(driver == Seq((1L, "a", 2L), (2L, "b", 2L), (3L, "z", 2L), (4L, "é", 2L),

@@ -66,6 +66,21 @@ class KCoreSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("core throws past maxRounds and converges on a first round that removes nothing, both sides") {
+    // a 40-edge path peels two endpoints per round at k = 2; K4 keeps all
+    for (m <- Seq(DriverCsr.MaxEdges, 0L)) {
+      val path = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
+      val err = intercept[IllegalStateException](
+        KCore.core(path, "src", "dst", 2, maxRounds = 3, maxEdges = m))
+      assert(err.getMessage.contains("did not converge within 3 rounds"), s"maxEdges = $m")
+      val k4 = (for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)).toDF("src", "dst")
+      assert(KCore.core(k4, "src", "dst", 2, maxRounds = 1, maxEdges = m)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        (0L to 3L).map(_ -> 3L).toMap, s"maxEdges = $m")
+      graft.Storage.releaseAll(spark)
+    }
+  }
+
   test("corenessCapped: clique 5, C4 ring 2, path/pendant 1, cap respected") {
     val got = KCore.corenessCapped(edges.toDF("src", "dst"), "src", "dst",
         kMax = 6, roundsPerK = 6)
@@ -100,16 +115,16 @@ class KCoreSpec extends AnyFunSuite with SparkSpec {
       d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (k <- Seq(2, 4); rounds <- Seq(1, 3, 8)) {
       assert(m(KCore.peel(df, "src", "dst", k, rounds)) ==
-        m(KCore.peel(df, "src", "dst", k, rounds, driverMaxEdges = 0L)),
+        m(KCore.peel(df, "src", "dst", k, rounds, maxEdges = 0L)),
         s"peel k=$k rounds=$rounds")
       graft.Storage.releaseAll(spark)
     }
     assert(m(KCore.corenessCapped(df, "src", "dst", kMax = 5, roundsPerK = 4)) ==
       m(KCore.corenessCapped(df, "src", "dst", kMax = 5, roundsPerK = 4,
-        driverMaxEdges = 0L)))
+        maxEdges = 0L)))
     graft.Storage.releaseAll(spark)
     assert(m(KCore.core(df, "src", "dst", 3)) ==
-      m(KCore.core(df, "src", "dst", 3, driverMaxEdges = 0L)))
+      m(KCore.core(df, "src", "dst", 3, maxEdges = 0L)))
     graft.Storage.releaseAll(spark)
   }
 
@@ -128,7 +143,7 @@ class KCoreSpec extends AnyFunSuite with SparkSpec {
     }
     val df = cliqueEdges.toDF("src", "dst")
     val got = KCore.corenessCapped(df, "src", "dst", kMax = 10, roundsPerK = 4,
-        driverMaxEdges = 0L)
+        maxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = (2 to 12).zip(offsets).flatMap { case (sz, off) =>
       (0 until sz).map(i => (off + i) -> math.min(sz - 1, 10).toLong)
@@ -140,7 +155,7 @@ class KCoreSpec extends AnyFunSuite with SparkSpec {
     // carries more than foldEvery un-folded branches
     def planSize(kMax: Int): Int = {
       val n = KCore.corenessCapped(df, "src", "dst", kMax, roundsPerK = 2,
-          driverMaxEdges = 0L)
+          maxEdges = 0L)
         .queryExecution.analyzed.collect { case x => x }.size
       graft.Storage.releaseAll(spark)
       n
@@ -157,7 +172,7 @@ class KCoreSpec extends AnyFunSuite with SparkSpec {
     // degree frame's input leaf (the returned frame still reads it)
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
     KCore.peel(chain, "src", "dst", k = 2, rounds = 10,
-      driverMaxEdges = 0L).collect()
+      maxEdges = 0L).collect()
     val cached = spark.sparkContext.getPersistentRDDs.size
     assert(cached <= 4, s"peel left $cached cached RDDs")
     graft.Storage.releaseAll(spark)
@@ -165,7 +180,7 @@ class KCoreSpec extends AnyFunSuite with SparkSpec {
 
   test("plan is equi-joins only — no cartesian product") {
     val p = KCore.peel(edges.toDF("src", "dst"), "src", "dst", 3, 2,
-      driverMaxEdges = 0L)
+      maxEdges = 0L)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(1500))

@@ -60,6 +60,21 @@ class KTrussSpec extends AnyFunSuite with SparkSpec {
       !got.contains((4L, 30L)))
   }
 
+  test("truss throws past maxRounds and converges on a first round that removes nothing, both sides") {
+    val k4 = (for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)).toDF("src", "dst")
+    for (m <- Seq(DriverCsr.MaxEdges, 0L)) {
+      // the fixture's first 3-truss round drops the C4, bridge and pendant
+      val err = intercept[IllegalStateException](
+        KTruss.truss(edges.toDF("src", "dst"), "src", "dst", 3, maxRounds = 1, maxEdges = m))
+      assert(err.getMessage.contains("did not converge within 1 rounds"), s"maxEdges = $m")
+      // every K4 edge lies in two triangles
+      assert(KTruss.truss(k4, "src", "dst", 4, maxRounds = 1, maxEdges = m)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap ==
+        (for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j) -> 2L).toMap, s"maxEdges = $m")
+      graft.Storage.releaseAll(spark)
+    }
+  }
+
   test("fixpoint truss equals a converged peel") {
     for (k <- Seq(3, 5)) {
       val fix = KTruss.truss(edges.toDF("src", "dst"), "src", "dst", k)
@@ -80,12 +95,12 @@ class KTrussSpec extends AnyFunSuite with SparkSpec {
       d.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     for (k <- Seq(3, 5); rounds <- Seq(1, 2, 6)) {
       assert(m(KTruss.peel(df, "src", "dst", k, rounds)) ==
-        m(KTruss.peel(df, "src", "dst", k, rounds, driverMaxEdges = 0L)),
+        m(KTruss.peel(df, "src", "dst", k, rounds, maxEdges = 0L)),
         s"peel k=$k rounds=$rounds")
       graft.Storage.releaseAll(spark)
     }
     assert(m(KTruss.truss(df, "src", "dst", 4)) ==
-      m(KTruss.truss(df, "src", "dst", 4, driverMaxEdges = 0L)))
+      m(KTruss.truss(df, "src", "dst", 4, maxEdges = 0L)))
     graft.Storage.releaseAll(spark)
   }
 

@@ -105,12 +105,12 @@ class MstSpec extends AnyFunSuite with SparkSpec {
         (rnd.nextInt(45).toLong, rnd.nextInt(45).toLong, rnd.nextInt(4).toLong))
       val df = edges.toDF("src", "dst", "w")
       // threshold 0 forces the distributed loop (the CC spec discipline)
-      assert(Mst.boruvkaFixpoint(df, "src", "dst", "w", localEdgeThreshold = 0)
+      assert(Mst.boruvkaFixpoint(df, "src", "dst", "w", maxEdges = 0)
         .as[(Long, Long, Long)].collect().toSet ==
         Mst.boruvkaFixpoint(df, "src", "dst", "w")
           .as[(Long, Long, Long)].collect().toSet, s"fixpoint trial $trial")
       for (r <- Seq(1, 2)) {
-        assert(Mst.boruvka(df, "src", "dst", "w", r, localEdgeThreshold = 0)
+        assert(Mst.boruvka(df, "src", "dst", "w", r, maxEdges = 0)
           .as[(Long, Long, Long)].collect().toSet ==
           Mst.boruvka(df, "src", "dst", "w", r)
             .as[(Long, Long, Long)].collect().toSet, s"rounds $r trial $trial")
@@ -120,7 +120,7 @@ class MstSpec extends AnyFunSuite with SparkSpec {
     val sEdges = Seq(("b", "a", 2L), ("c", "b", 2L), ("a", "c", 2L),
       ("zz", "a", 1L), ("Z", "a", 3L)) // 'Z' < 'a' in UTF-8
     val sdf = sEdges.toDF("src", "dst", "w")
-    assert(Mst.boruvkaFixpoint(sdf, "src", "dst", "w", localEdgeThreshold = 0)
+    assert(Mst.boruvkaFixpoint(sdf, "src", "dst", "w", maxEdges = 0)
       .as[(String, String, Long)].collect().toSet ==
       Mst.boruvkaFixpoint(sdf, "src", "dst", "w")
         .as[(String, String, Long)].collect().toSet)

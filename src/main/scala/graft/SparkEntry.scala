@@ -3282,7 +3282,7 @@ object SparkEntry {
   //      primitive the graph family lacked ("how far is every product
   //      from these two, through shared suppliers?"): fixed-round
   //      min-relaxation over q93's symmetrized part↔supplier graph
-  //      from the seed parts, both scale shapes (driver-CSR map-only
+  //      from the seed parts, both scale shapes (driver array
   //      rounds / distributed min-merge), oracle = the recurrence
   //      unrolled with materialized round CTEs. ----
   private def q219(s: SparkSession, dir: String): DataFrame = {

@@ -13,13 +13,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * min(R-hop-bounded distance), a pure function of (graph, seeds, R)
   * that the SQL oracle unrolls round by round.
   *
-  * Scale shape mirrors the PageRank dual: a [[DriverCsr]] loop when the
-  * node count fits `broadcastMaxNodes` (one map-only job per
-  * round over the cached in-adjacency, node-sized driver state), else a
-  * distributed loop that min-merges the reached frame against the
-  * cached edge list (rebased per round via RDD cache — the
-  * materializeLeaf discipline — so plans never nest). Unreached nodes
-  * are EXCLUDED from the output, not carried as sentinels.
+  * Scale shape mirrors [[PageRank]]: within the [[DriverCsr]] gate the
+  * edges are collected once, collapsed into an int CSR on the driver and
+  * every round is an array loop (no Spark job per round; a fixpoint
+  * walk stops when a round changes nothing). Above it a distributed
+  * loop min-merges the reached frame against the cached edge list
+  * (rebased per round via RDD cache — the materializeLeaf discipline —
+  * so plans never nest). An edge with a null endpoint is dropped on
+  * both sides. Unreached nodes are EXCLUDED from the output, not carried
+  * as sentinels.
   *
   * [[weightedDistances]] generalizes the recurrence to positive integer
   * edge weights (min-plus relaxation — the same shape weighted PageRank
@@ -50,139 +52,74 @@ object Bfs {
     */
   def hopDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, rounds: Int,
-                   broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+                   maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val g = buildHopGraph(edges, srcCol, dstCol, broadcastMaxNodes)
-    // driver-path walks are eager (local-row results), so closing after
-    // the walk is safe; the fallback handle holds no caches to close
+    val g = buildHopGraph(edges, srcCol, dstCol, maxEdges)
     try g.distances(seeds, rounds) finally g.close()
   }
 
-  /** Node dictionary + cached driver-CSR adjacency built ONCE and shared
-    * by every walk a caller runs over the same unchanged graph — the
-    * snapshot+resume gates run two walks back to back, and rebuilding
-    * the dictionary and adjacency for the second walk duplicated every
-    * build shuffle (guide §2.4: remove shuffles outright). Graphs above
-    * `broadcastMaxNodes` get a fallback handle that delegates each walk
-    * to the distributed relax unchanged (per-walk cost is already the
-    * honest shape there, and the walk results stay lazy).
-    *
-    * Build-path economy vs the pre-handle entry points: the raw edge
-    * projection feeds [[PageRank.adjacencyPlan]] DIRECTLY — the dedup
-    * rides the adjacency's one int-keyed exchange, so the old upstream
-    * string-keyed `distinct()` exchange (which adjacencyPlan then
-    * re-deduped) is gone entirely.
-    *
-    * Lifecycle: driver-path walks are EAGER (state in driver arrays,
-    * results local-row frames), so the handle's only distributed residue
-    * is the [[DriverCsr]] graph's cache — [[HopGraph.close]] releases it
-    * after the last walk. The harness's Storage.releaseAll sweeps a
-    * leaked one.
+  /** The (`src`, `dst`) projection every entry gates: null endpoints
+    * dropped.
+    */
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+
+  /** The gated edges and their CSR built ONCE and shared by every walk a
+    * caller runs over the same unchanged graph — the snapshot+resume
+    * gates run two walks back to back. Above the gate each walk runs the
+    * distributed relax over the cached edges (per-walk cost is already
+    * the honest shape there). [[HopGraph.close]] releases the cache after
+    * the last walk.
     */
   def buildHopGraph(edges: DataFrame, srcCol: String, dstCol: String,
-                    broadcastMaxNodes: Long = DriverCsr.MaxNodes): HopGraph = {
-    val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val g = DriverCsr.build("Bfs.buildHopGraph", DriverCsr.nodesOf(eRaw, "src", "dst"),
-        broadcastMaxNodes) { (srcIds, dstIds) =>
-      PageRank.adjacencyPlan(eRaw, srcIds, dstIds)
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-    }
-    new HopGraph(eRaw, g)
-  }
+                    maxEdges: Long = DriverCsr.MaxEdges): HopGraph =
+    new HopGraph(DriverCsr.edges("Bfs.buildHopGraph", endpoints(edges, srcCol, dstCol),
+      maxEdges))
 
   /** The prebuilt-graph handle for hop (w ≡ 1) walks — see
     * [[buildHopGraph]]. Every walk is bit-identical to the one-shot
-    * entry points (same dictionary, same adjacency recurrence).
+    * entry points (same edges, same recurrence).
     */
-  final class HopGraph private[operators] (
-      eRaw: DataFrame, g: DriverCsr.Graph[(Int, Array[Int])]) {
-    private val spark = eRaw.sparkSession
+  final class HopGraph private[operators] (g: DriverCsr.Edges) {
+    private lazy val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst)
 
     /** [[Bfs.hopDistances]] over the prebuilt graph. */
     def distances(seeds: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (g.n == 0) emptyOut(spark, g.nodeType)
-      else if (g.onDriver) {
-        val seedVals = typedSeedVals(seeds, g.nodeType)
-        require(seedVals.nonEmpty, "seeds must be non-empty")
-        csrRounds(g, rounds, g.nodeVals.map(v => if (seedVals.contains(v)) 0L else INF))
-      } else {
-        val e = eRaw.distinct()
+      if (g.count == 0) distFrame(g, Array.empty)
+      else if (g.onDriver) distFrame(g, relax(adj, seedStart(g, seeds), rounds))
+      else {
+        val e = g.cached.distinct()
         val seedDf = typedSeeds(e, seeds)
         require(!seedDf.isEmpty, "seeds must be non-empty")
-        distributedState(spark, e, seedsFrame(e, seedDf), rounds)
+        distributedState(e, seedsFrame(e, seedDf), rounds)
       }
     }
 
     /** [[Bfs.resumeDistances]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (g.n == 0) return emptyOut(spark, g.nodeType)
+      if (g.count == 0) return distFrame(g, Array.empty)
       val p = snapshot(prior, g.nodeType)
-      if (g.onDriver) {
-        val m = collectDists(p)
-        csrRounds(g, rounds, g.nodeVals.map(m.getOrElse(_, INF)))
-      } else {
-        val e = eRaw.distinct()
-        val d0 = e.select(col("src").as("node"))
-          .union(e.select(col("dst").as("node"))).distinct()
-          .join(p, Seq("node")).select(col("node"), col("dist"))
-        distributedState(spark, e, d0, rounds)
+      if (g.onDriver) distFrame(g, relax(adj, priorStart(g, p.collect()), rounds))
+      else {
+        val e = g.cached.distinct()
+        distributedState(e, nodesOf(e).join(p, Seq("node")).select(col("node"), col("dist")),
+          rounds)
       }
     }
 
-    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    /** Release the cached edges ([[DriverCsr.Edges.close]]). */
     def close(): Unit = g.close()
-
-    /** The incremental-refresh fixpoint on the driver path: relax to the
-      * fixpoint from (prior ∪ seeds-at-0) and hand `consume` exactly the
-      * rows that are new or strictly improved vs `prior` — the
-      * [[Bfs.refreshDistances]] contract. Returns false (doing nothing)
-      * when the graph is above the driver contract, so the caller can
-      * fall through to the distributed delta loop.
-      */
-    private[operators] def refreshFixpoint(seeds: DataFrame, prior: DataFrame,
-                                           consume: DataFrame => Unit): Boolean = {
-      if (g.n == 0) { consume(emptyOut(spark, g.nodeType)); return true }
-      if (!g.onDriver) return false
-      val (nodeVals, adj) = (g.nodeVals, g.adj)
-      val m = collectDists(snapshot(prior, g.nodeType))
-      val seedVals = typedSeedVals(seeds, g.nodeType)
-      var dist = nodeVals.map(v => if (seedVals.contains(v)) 0L else m.getOrElse(v, INF))
-      var changed = true
-      while (changed) {
-        val bc = spark.sparkContext.broadcast(dist)
-        val mins = adj.map { case (did, sids) =>
-          val dv = bc.value
-          var best = INF
-          var j = 0
-          while (j < sids.length) {
-            val d = dv(sids(j))
-            if (d != INF && d + 1 < best) best = d + 1
-            j += 1
-          }
-          (did, best)
-        }.filter(_._2 != Long.MaxValue).collect()
-        bc.destroy()
-        changed = false
-        val next = dist.clone()
-        mins.foreach { case (did, d) =>
-          if (d < next(did)) { next(did) = d; changed = true } }
-        dist = next
-      }
-      consume(distFrame(g, dist, i => m.get(nodeVals(i)).forall(dist(i) < _)))
-      true
-    }
   }
 
-  private def emptyOut(spark: SparkSession,
-                       nodeType: org.apache.spark.sql.types.DataType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("node", nodeType, nullable = true),
-        StructField("dist", LongType, nullable = false))))
+  /** The reached nodes of a driver distance vector that pass `keep`. */
+  private def distFrame(g: DriverCsr.Edges, dist: Array[Long],
+                        keep: Int => Boolean = _ => true): DataFrame =
+    g.nodeFrame(dist.indices.iterator.filter(i => dist(i) != INF && keep(i))
+        .map(i => Row(g.nodeVals(i), dist(i))),
+      StructField("dist", LongType, nullable = false))
 
   /** A (node, dist) snapshot cast to the graph's node type. */
   private def snapshot(prior: DataFrame,
@@ -190,39 +127,48 @@ object Bfs {
     prior.select(col("node").cast(nodeType).as("node"),
       col("dist").cast(LongType).as("dist"))
 
-  /** A snapshot on the driver: node-sized, within the driver contract. */
-  private def collectDists(p: DataFrame): Map[Any, Long] =
-    p.collect().map(r => (r.get(0), r.getLong(1))).toMap
+  /** A collected snapshot as a distance vector: snapshot nodes off the
+    * graph drop, every other node starts unreached.
+    */
+  private def priorStart(g: DriverCsr.Edges, prior: Array[Row]): Array[Long] = {
+    val d = Array.fill(g.nodeVals.length)(INF)
+    prior.foreach { r => val i = g.idOf(r.get(0)); if (i >= 0) d(i) = r.getLong(1) }
+    d
+  }
 
-  /** The reached nodes of a driver distance vector that pass `keep`. */
-  private def distFrame(g: DriverCsr.Graph[_], dist: Array[Long],
-                        keep: Int => Boolean = _ => true): DataFrame =
-    g.frame(dist.indices.iterator.filter(i => dist(i) != INF && keep(i))
-        .map(i => Row(g.nodeVals(i), dist(i))),
-      StructField("dist", LongType, nullable = false))
+  /** The seeds cast to the node type (see [[typedSeeds]]), collected. */
+  private def typedSeedVals(g: DriverCsr.Edges, seeds: DataFrame): Array[Any] =
+    seeds.select(col(seeds.columns.head).cast(g.nodeType).as("node"))
+      .filter(col("node").isNotNull).distinct()
+      .collect().map(_.get(0))
+
+  /** Seeds at 0, every other node unreached; seeds off the graph are
+    * ignored.
+    */
+  private def seedStart(g: DriverCsr.Edges, seeds: DataFrame): Array[Long] = {
+    val vals = typedSeedVals(g, seeds)
+    require(vals.nonEmpty, "seeds must be non-empty")
+    val d = Array.fill(g.nodeVals.length)(INF)
+    vals.map(g.idOf).filter(_ >= 0).foreach(d(_) = 0L)
+    d
+  }
 
   /** The seed frame cast to the NODE column's type before any matching:
-    * the driver path compares with strict runtime equality
-    * (`Set[Any].contains`, where an IntegerType seed never equals a
-    * LongType node) while a join path compares through Spark's implicit
-    * casts — casting once up front makes both paths see identically
-    * typed values, so the same inputs reach the same nodes regardless of
-    * which scale path runs. Seeds that don't cast (null) are dropped,
-    * which is the existing off-graph-seed rule.
+    * the driver path compares with strict runtime equality (a dictionary
+    * lookup, where an IntegerType seed never equals a LongType node)
+    * while a join path compares through Spark's implicit casts — casting
+    * once up front makes both paths see identically typed values, so the
+    * same inputs reach the same nodes regardless of which scale path
+    * runs. Seeds that don't cast (null) are dropped, which is the
+    * existing off-graph-seed rule.
     */
   private def typedSeeds(e: DataFrame, seeds: DataFrame): DataFrame =
     seeds.select(col(seeds.columns.head)
         .cast(e.schema.fields(0).dataType).as("node"))
       .filter(col("node").isNotNull).distinct()
 
-  /** [[typedSeeds]] collected for the driver path (same cast-then-match
-    * discipline, keyed on the node type directly).
-    */
-  private def typedSeedVals(seeds: DataFrame,
-                            nodeType: org.apache.spark.sql.types.DataType): Set[Any] =
-    seeds.select(col(seeds.columns.head).cast(nodeType).as("node"))
-      .filter(col("node").isNotNull).distinct()
-      .collect().map(_.get(0)).toSet
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
 
   /** Initial reached frame for the distributed path: graph nodes in the
     * seed set, at distance 0. Seeds stay a FRAME on this path (semi-join,
@@ -232,48 +178,43 @@ object Bfs {
     * path).
     */
   private def seedsFrame(e: DataFrame, seedDf: DataFrame): DataFrame =
-    e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(seedDf, Seq("node"), "left_semi")
-      .withColumn("dist", lit(0L))
+    nodesOf(e).join(seedDf, Seq("node"), "left_semi").withColumn("dist", lit(0L))
 
-  /** Driver-CSR rounds from an arbitrary initial distance vector (INF =
-    * unreached) over a prebuilt cached adjacency. The adjacency stays
-    * cached — its lifetime belongs to the [[HopGraph]] handle.
+  /** Up to `rounds` synchronous min-relaxation rounds from `init` (INF =
+    * unreached) over `adj`, each edge costing its weight (1 when the CSR
+    * is unweighted); a round that changes nothing is the fixpoint, so
+    * the loop stops there. Raw d + w is exact: weighted callers check
+    * the hoisted overflow bound first.
     */
-  private def csrRounds(g: DriverCsr.Graph[(Int, Array[Int])], rounds: Int,
-                        init: Array[Long]): DataFrame = {
-    val (spark, adj) = (g.nodes.sparkSession, g.adj)
+  private def relax(adj: DriverCsr.Csr, init: Array[Long], rounds: Int): Array[Long] = {
+    val (n, off, to, w) = (adj.n, adj.off, adj.to, adj.w)
     var dist = init
+    var changed = true
     var r = 0
-    while (r < rounds) {
-      val bc = spark.sparkContext.broadcast(dist)
-      // one map-only job: per destination, the best in-neighbor distance
-      // this round (INF-guarded — never INF+1)
-      val mins = adj.map { case (did, sids) =>
-        val dv = bc.value
-        var best = INF
-        var j = 0
-        while (j < sids.length) {
-          val d = dv(sids(j))
-          if (d != INF && d + 1 < best) best = d + 1
-          j += 1
-        }
-        (did, best)
-      }.filter(_._2 != Long.MaxValue).collect()
-      bc.destroy()
+    while (r < rounds && changed) {
       val next = dist.clone()
-      mins.foreach { case (did, d) => if (d < next(did)) next(did) = d }
+      changed = false
+      var u = 0
+      while (u < n) {
+        if (dist(u) != INF) {
+          var j = off(u)
+          while (j < off(u + 1)) {
+            val d = dist(u) + (if (w == null) 1L else w(j))
+            if (d < next(to(j))) { next(to(j)) = d; changed = true }
+            j += 1
+          }
+        }
+        u += 1
+      }
       dist = next
       r += 1
     }
-    distFrame(g, dist)
+    dist
   }
 
   /** Distributed rounds from an arbitrary initial reached frame. */
-  private def distributedState(spark: SparkSession, e: DataFrame,
-                               d0: DataFrame, rounds: Int): DataFrame =
-    distributedRelax(spark, e, d0, rounds, Seq("node"),
+  private def distributedState(e: DataFrame, d0: DataFrame, rounds: Int): DataFrame =
+    distributedRelax(e.sparkSession, e, d0, rounds, Seq("node"),
       (eC, f) => eC.join(f, eC("src") === f("node"))
         .groupBy(eC("dst").as("node"))
         .agg((min(col("dist")) + 1L).as("dist")))
@@ -390,102 +331,44 @@ object Bfs {
     *
     * BOUNDED CONTRACT: the landmark set is a CHOSEN handful by design
     * (L in the tens — it is collected to the driver, the probeCells
-    * shape); driver-path state is n·L longs, so the driver gate is
-    * n·L <= broadcastMaxNodes. Landmarks absent from the graph are
-    * ignored (the seed rule).
+    * shape). The driver path relaxes one landmark at a time over one
+    * n-long vector, and its result frame holds up to n·L rows.
+    * Landmarks absent from the graph are ignored (the seed rule).
     *
     * @return (node, lm, dist) for every (landmark, node reached from it
     *         within `rounds` hops)
     */
   def landmarkDistances(edges: DataFrame, srcCol: String, dstCol: String,
                         landmarks: DataFrame, rounds: Int,
-                        broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+                        maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val spark = edges.sparkSession
-    // raw projection: the driver path's adjacency build dedups inside its
-    // one int-keyed exchange, so no upstream string distinct (the
-    // buildHopGraph economy); the distributed branch distincts below.
-    val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val eRaw = endpoints(edges, srcCol, dstCol)
     val lmDf = typedSeeds(eRaw, landmarks)
     val lmVals: Array[Any] = lmDf.collect().map(_.get(0))
     require(lmVals.nonEmpty, "landmarks must be non-empty")
-    // driver state is n·L longs: the gate admits n <= bound / L
-    val g = DriverCsr.build("Bfs.landmarkDistances", DriverCsr.nodesOf(eRaw, "src", "dst"),
-        broadcastMaxNodes / lmVals.length) { (srcIds, dstIds) =>
-      PageRank.adjacencyPlan(eRaw, srcIds, dstIds)
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-    }
+    val g = DriverCsr.edges("Bfs.landmarkDistances", eRaw, maxEdges)
     try {
-      if (g.n == 0)
-        g.nodes.withColumn("lm", col("node")).withColumn("dist", lit(0L)).limit(0)
-      else if (g.onDriver) landmarkCsrRounds(g, lmVals, rounds)
-      else {
-        val e = eRaw.distinct()
-        val nodesDf = e.select(col("src").as("node"))
-          .union(e.select(col("dst").as("node"))).distinct()
+      if (g.onDriver) {
+        // one relax per landmark over the one CSR
+        val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst)
+        val rows = lmVals.toSeq.flatMap { lm =>
+          val d0 = Array.fill(g.nodeVals.length)(INF)
+          Some(g.idOf(lm)).filter(_ >= 0).foreach(d0(_) = 0L)
+          val dist = relax(adj, d0, rounds)
+          dist.indices.filter(dist(_) != INF).map(i => Row(g.nodeVals(i), lm, dist(i)))
+        }
+        g.frame(rows, StructType(Seq(StructField("node", g.nodeType, nullable = true),
+          StructField("lm", g.nodeType, nullable = true),
+          StructField("dist", LongType, nullable = false))))
+      } else {
+        val e = g.cached.distinct()
+        val nodesDf = nodesOf(e)
         val d0 = nodesDf.join(lmDf.select(col("node").as("lm")),
             nodesDf("node") === col("lm"))
           .select(col("node"), col("lm"), lit(0L).as("dist"))
-        landmarkDistributedState(spark, e, d0, rounds)
+        landmarkDistributedState(e.sparkSession, e, d0, rounds)
       }
     } finally g.close()
-  }
-
-  private def landmarkCsrRounds(g: DriverCsr.Graph[(Int, Array[Int])],
-                                lmVals: Array[Any], rounds: Int): DataFrame = {
-    val (spark, adj, n, nodeVals) = (g.nodes.sparkSession, g.adj, g.n.toInt, g.nodeVals)
-    val nodeIdx: Map[Any, Int] = nodeVals.zipWithIndex.toMap
-    val L = lmVals.length
-    // dist(l)(i): landmark l's distance to node i — all L vectors relax
-    // in the SAME map-only job per round (one adjacency pass serves
-    // every landmark)
-    var dist: Array[Array[Long]] = Array.tabulate(L) { l =>
-      val a = Array.fill(n)(INF)
-      nodeIdx.get(lmVals(l)).foreach(i => a(i) = 0L)
-      a
-    }
-    var r = 0
-    while (r < rounds) {
-      val bc = spark.sparkContext.broadcast(dist)
-      val mins = adj.flatMap { case (did, sids) =>
-        val dv = bc.value
-        val best = new Array[Long](dv.length)
-        var any = false
-        var l = 0
-        while (l < dv.length) {
-          val dl = dv(l)
-          var b = INF
-          var j = 0
-          while (j < sids.length) {
-            val d = dl(sids(j))
-            if (d != INF && d + 1 < b) b = d + 1
-            j += 1
-          }
-          best(l) = b
-          if (b != INF) any = true
-          l += 1
-        }
-        if (any) Iterator.single((did, best)) else Iterator.empty
-      }.collect()
-      bc.destroy()
-      val next = dist.map(_.clone())
-      mins.foreach { case (did, best) =>
-        var l = 0
-        while (l < best.length) {
-          if (best(l) < next(l)(did)) next(l)(did) = best(l)
-          l += 1
-        }
-      }
-      dist = next
-      r += 1
-    }
-    g.frame(
-      for (l <- (0 until L).iterator; i <- (0 until n).iterator
-           if dist(l)(i) != INF)
-        yield Row(nodeVals(i), lmVals(l), dist(l)(i)),
-      StructField("lm", g.nodeType, nullable = true),
-      StructField("dist", LongType, nullable = false))
   }
 
   private def landmarkDistributedState(spark: SparkSession, e: DataFrame,
@@ -565,129 +448,97 @@ object Bfs {
     */
   def weightedDistances(edges: DataFrame, srcCol: String, dstCol: String,
                         weightCol: String, seeds: DataFrame, rounds: Int,
-                        broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+                        maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val g = buildWeightedGraph(edges, srcCol, dstCol, weightCol,
-      broadcastMaxNodes)
+    val g = buildWeightedGraph(edges, srcCol, dstCol, weightCol, maxEdges)
     try g.distances(seeds, rounds) finally g.close()
   }
 
-  /** [[buildHopGraph]]'s weighted sibling: dictionary + cached weighted
-    * CSR built once, walks (cold or resumed) run over it. The parallel-
-    * edge MIN collapse rides the adjacency's one int-keyed exchange
-    * ([[weightedAdjacencyPlan]]) instead of a separate upstream
-    * string-keyed groupBy exchange; the positive-weight check runs on
-    * the raw edges (same min — collapse takes minima), and the overflow
-    * bound uses the collapsed maximum read off the cached adjacency
-    * (identical to the old post-collapse bound).
+  /** [[buildHopGraph]]'s weighted sibling: the gated edges and their
+    * weighted CSR built once, walks (cold or resumed) run over them.
+    * Parallel edges collapse to their minimum weight on both sides. The
+    * positive-weight check and the overflow bound read the raw weights
+    * (nulls ignored, as Spark's `min`/`max`), so both sides reject the
+    * same inputs.
     */
   def buildWeightedGraph(edges: DataFrame, srcCol: String, dstCol: String,
                          weightCol: String,
-                         broadcastMaxNodes: Long = DriverCsr.MaxNodes): WeightedGraph = {
-    val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast(LongType).as("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val g = DriverCsr.build("Bfs.buildWeightedGraph", DriverCsr.nodesOf(eRaw, "src", "dst"),
-        broadcastMaxNodes) { (srcIds, dstIds) =>
-      weightedAdjacencyPlan(eRaw, srcIds, dstIds)
-        .rdd.map { r =>
-          val ins = r.getSeq[Row](1)
-          val sids = new Array[Int](ins.length)
-          val ws = new Array[Long](ins.length)
-          var j = 0
-          ins.foreach { x => sids(j) = x.getInt(0); ws(j) = x.getLong(1); j += 1 }
-          (r.getInt(0), sids, ws)
-        }
-    }
-    if (g.n == 0) return new WeightedGraph(eRaw, g, 0L)
-    val wStats = eRaw.agg(min(col("w")).as("lo"), max(col("w")).as("hi")).head()
-    val positive = !wStats.isNullAt(0) && wStats.getLong(0) >= 1L
+                         maxEdges: Long = DriverCsr.MaxEdges): WeightedGraph = {
+    val g = DriverCsr.edges("Bfs.buildWeightedGraph",
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+          col(weightCol).cast(LongType).as("w"))
+        .filter(col("src").isNotNull && col("dst").isNotNull), maxEdges)
+    if (g.count == 0) return new WeightedGraph(g, 0L)
+    val (lo, hi) =
+      if (g.onDriver) {
+        val ws = g.rows.filter(!_.isNullAt(2)).map(_.getLong(2))
+        if (ws.isEmpty) (None, 0L) else (Some(ws.min), ws.max)
+      } else {
+        val r = g.cached.agg(min(col("w")), max(col("w"))).head()
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), if (r.isNullAt(1)) 0L else r.getLong(1))
+      }
+    val positive = lo.exists(_ >= 1L)
     if (!positive) g.close()
-    require(positive, s"edge weights must be positive longs, found min ${wStats.get(0)}")
-    // collapsed max weight, one pass over the cached CSR (which it
-    // materializes) — the bound the old post-collapse agg computed
-    val maxW = if (!g.onDriver) wStats.getLong(1) else g.adj.map { case (_, _, ws) =>
-      var m = 0L; var j = 0
-      while (j < ws.length) { if (ws(j) > m) m = ws(j); j += 1 }
-      m
-    }.fold(0L)(math.max)
-    new WeightedGraph(eRaw, g, maxW)
+    require(positive, s"edge weights must be positive longs, found min ${lo.getOrElse("null")}")
+    new WeightedGraph(g, hi)
   }
-
-  /** Weighted sibling of [[PageRank.adjacencyPlan]] — the same two
-    * broadcast id joins and ONE did-partitioned exchange; the parallel-
-    * edge MIN collapse is the (did, sid) aggregate riding that exchange
-    * (its distribution is satisfied by the did partitioning, so no
-    * second exchange appears — PlanSpec pins it).
-    */
-  private[graft] def weightedAdjacencyPlan(e: DataFrame, srcIds: DataFrame,
-                                           dstIds: DataFrame): DataFrame = e
-    .join(broadcast(srcIds), e("src") === srcIds("node"))
-    .join(broadcast(dstIds), e("dst") === dstIds("node2"))
-    .select(col("id").as("sid"), col("id2").as("did"), col("w"))
-    .repartition(col("did"))
-    .groupBy(col("did"), col("sid")).agg(min(col("w")).as("w"))
-    .groupBy(col("did"))
-    .agg(collect_list(struct(col("sid"), col("w"))).as("ins"))
 
   /** The prebuilt-graph handle for weighted (min-plus) walks — see
     * [[buildWeightedGraph]].
     */
-  final class WeightedGraph private[operators] (
-      eRaw: DataFrame, g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
-      maxW: Long) {
-    private val spark = eRaw.sparkSession
+  final class WeightedGraph private[operators] (g: DriverCsr.Edges, maxW: Long) {
+
+    // an edge with a null weight relaxes nothing (min(dist + null) on
+    // the distributed side)
+    private lazy val adj = {
+      val keep = g.rows.indices.filter(!g.rows(_).isNullAt(2)).toArray
+      DriverCsr.csr(g.nodeVals.length, keep.map(g.src), keep.map(g.dst),
+        keep.map(g.rows(_).getLong(2)), math.min)
+    }
 
     /** [[Bfs.weightedDistances]] over the prebuilt graph. */
     def distances(seeds: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (g.n == 0) return emptyOut(spark, g.nodeType)
+      if (g.count == 0) return distFrame(g, Array.empty)
       require(rounds == 0 || maxW <= (Long.MaxValue - 1L) / rounds,
         s"rounds*maxWeight would overflow: rounds=$rounds maxW=$maxW")
-      if (g.onDriver) {
-        val seedVals = typedSeedVals(seeds, g.nodeType)
-        require(seedVals.nonEmpty, "seeds must be non-empty")
-        csrRoundsWeighted(g, rounds,
-          g.nodeVals.map(v => if (seedVals.contains(v)) 0L else INF))
-      } else {
+      if (g.onDriver) distFrame(g, relax(adj, seedStart(g, seeds), rounds))
+      else {
         val e = collapsed
         val seedDf = typedSeeds(e, seeds)
         require(!seedDf.isEmpty, "seeds must be non-empty")
-        weightedDistributedState(spark, e, seedsFrame(e, seedDf), rounds)
+        weightedDistributedState(e, seedsFrame(e, seedDf), rounds)
       }
     }
 
     /** [[Bfs.resumeWeightedDistances]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (g.n == 0) return emptyOut(spark, g.nodeType)
+      if (g.count == 0) return distFrame(g, Array.empty)
       val p = snapshot(prior, g.nodeType)
-      val maxPriorRow = p.agg(max(col("dist"))).head()
-      val maxPrior = if (maxPriorRow.isNullAt(0)) 0L else maxPriorRow.getLong(0)
+      // the snapshot is node-sized, within the driver contract
+      val rows = if (g.onDriver) p.collect() else Array.empty[Row]
+      val maxPrior =
+        if (g.onDriver) rows.filter(!_.isNullAt(1)).map(_.getLong(1)).maxOption.getOrElse(0L)
+        else Option(p.agg(max(col("dist"))).head().get(0)).fold(0L)(_.asInstanceOf[Long])
       require(maxPrior >= 0L, s"snapshot distances must be >= 0, max $maxPrior")
       require(rounds == 0 || maxW <= (Long.MaxValue - 1L - maxPrior) / rounds,
         s"maxPrior + rounds*maxWeight would overflow: " +
           s"maxPrior=$maxPrior rounds=$rounds maxW=$maxW")
-      if (g.onDriver) {
-        val m = collectDists(p)
-        csrRoundsWeighted(g, rounds, g.nodeVals.map(m.getOrElse(_, INF)))
-      } else {
+      if (g.onDriver) distFrame(g, relax(adj, priorStart(g, rows), rounds))
+      else {
         val e = collapsed
-        val d0 = e.select(col("src").as("node"))
-          .union(e.select(col("dst").as("node"))).distinct()
-          .join(p, Seq("node")).select(col("node"), col("dist"))
-        weightedDistributedState(spark, e, d0, rounds)
+        weightedDistributedState(e,
+          nodesOf(e).join(p, Seq("node")).select(col("node"), col("dist")), rounds)
       }
     }
 
-    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    /** Release the cached edges ([[DriverCsr.Edges.close]]). */
     def close(): Unit = g.close()
 
-    /** The distributed branch's parallel-edge MIN collapse (the driver
-      * branch collapses inside the adjacency exchange instead).
-      */
+    /** The distributed side's parallel-edge MIN collapse. */
     private def collapsed: DataFrame =
-      eRaw.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
+      g.cached.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
   }
 
   /** RESUME weighted (min-plus) relaxation from a prior reached frame —
@@ -700,47 +551,15 @@ object Bfs {
   def resumeWeightedDistances(edges: DataFrame, srcCol: String,
                               dstCol: String, weightCol: String,
                               prior: DataFrame, rounds: Int,
-                              broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+                              maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val g = buildWeightedGraph(edges, srcCol, dstCol, weightCol,
-      broadcastMaxNodes)
+    val g = buildWeightedGraph(edges, srcCol, dstCol, weightCol, maxEdges)
     try g.resumeFrom(prior, rounds) finally g.close()
   }
 
-  /** Driver-CSR min-plus rounds over a prebuilt cached weighted
-    * adjacency — [[csrRounds]]' weighted sibling; raw d + w is exact
-    * because the caller checked the hoisted overflow bound.
-    */
-  private def csrRoundsWeighted(g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
-                                rounds: Int, init: Array[Long]): DataFrame = {
-    val (spark, adj) = (g.nodes.sparkSession, g.adj)
-    var dist = init
-    var r = 0
-    while (r < rounds) {
-      val bc = spark.sparkContext.broadcast(dist)
-      val mins = adj.map { case (did, sids, ws) =>
-        val dv = bc.value
-        var best = INF
-        var j = 0
-        while (j < sids.length) {
-          val d = dv(sids(j))
-          if (d != INF && d + ws(j) < best) best = d + ws(j)
-          j += 1
-        }
-        (did, best)
-      }.filter(_._2 != Long.MaxValue).collect()
-      bc.destroy()
-      val next = dist.clone()
-      mins.foreach { case (did, d) => if (d < next(did)) next(did) = d }
-      dist = next
-      r += 1
-    }
-    distFrame(g, dist)
-  }
-
-  private def weightedDistributedState(spark: SparkSession, e: DataFrame,
-                                       d0: DataFrame, rounds: Int): DataFrame =
-    distributedRelax(spark, e, d0, rounds, Seq("node"),
+  private def weightedDistributedState(e: DataFrame, d0: DataFrame,
+                                       rounds: Int): DataFrame =
+    distributedRelax(e.sparkSession, e, d0, rounds, Seq("node"),
       (eC, f) => eC.join(f, eC("src") === f("node"))
         .groupBy(eC("dst").as("node"))
         .agg(min(col("dist") + col("w")).as("dist")))
@@ -778,9 +597,9 @@ object Bfs {
     */
   def resumeDistances(edges: DataFrame, srcCol: String, dstCol: String,
                       prior: DataFrame, rounds: Int,
-                      broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
+                      maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val g = buildHopGraph(edges, srcCol, dstCol, broadcastMaxNodes)
+    val g = buildHopGraph(edges, srcCol, dstCol, maxEdges)
     try g.resumeFrom(prior, rounds) finally g.close()
   }
 
@@ -789,8 +608,9 @@ object Bfs {
   // ------------------------------------------------------------------
 
   /** FIXPOINT distances from the seeds — [[hopDistances]] with the round
-    * cap removed: the delta-frontier loop runs until the frontier
-    * empties, which is the true shortest-path fixpoint (termination:
+    * cap removed: the driver loop runs until a round changes nothing and
+    * the delta-frontier loop until its frontier empties, which is the
+    * true shortest-path fixpoint (termination:
     * distances are non-negative longs and strictly decrease somewhere
     * every continuing round). Unlike the capped form, the result is a
     * pure function of (graph, seeds) alone — independent of any round
@@ -799,13 +619,9 @@ object Bfs {
     * the union graph is the same table.
     */
   def hopDistancesToFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
-                             seeds: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val seedDf = typedSeeds(e, seeds)
-    require(!seedDf.isEmpty, "seeds must be non-empty")
-    distributedState(spark, e, seedsFrame(e, seedDf), Int.MaxValue)
-  }
+                             seeds: DataFrame,
+                             maxEdges: Long = DriverCsr.MaxEdges): DataFrame =
+    hopDistances(edges, srcCol, dstCol, seeds, Int.MaxValue, maxEdges)
 
   /** Incremental fixpoint refresh after new edges arrive — the per-batch
     * core of the streaming distance store: given the PRIOR fixpoint
@@ -850,33 +666,44 @@ object Bfs {
   def refreshDistances(edges: DataFrame, srcCol: String, dstCol: String,
                        newEdges: DataFrame, seeds: DataFrame,
                        prior: DataFrame,
-                       broadcastMaxNodes: Long = DriverCsr.MaxNodes)
+                       maxEdges: Long = DriverCsr.MaxEdges)
                       (consume: DataFrame => Unit): Unit = {
-    val spark = edges.sparkSession
-    // DRIVER-CSR FIXPOINT when the node count fits the bounded contract
-    // (the hopDistances dual, measured ~2× the per-batch speed of the
-    // distributed delta loop at bench scale): the prior is node-sized by
-    // construction (one row per reached node), so collecting it sits
-    // inside the same broadcastMaxNodes contract as every driver path
-    // here. Init = prior distances with ALL seeds at 0 — prior values
-    // are real path lengths on a subgraph of the grown graph, hence
-    // upper bounds, and Bellman–Ford relaxation from seed-anchored
-    // upper bounds converges to the exact fixpoint, which is the same
-    // slicing-invariant table the distributed branch computes
-    // (spec-pinned in StreamingSpec's one-shot equivalence).
-    val gHandle = buildHopGraph(edges, srcCol, dstCol, broadcastMaxNodes)
-    val usedDriver = gHandle.refreshFixpoint(seeds, prior, consume)
-    gHandle.close()
-    if (usedDriver) return
+    val g = DriverCsr.edges("Bfs.refreshDistances", endpoints(edges, srcCol, dstCol),
+      maxEdges)
+    try {
+      if (g.onDriver) {
+        // DRIVER FIXPOINT: the prior is node-sized by construction (one
+        // row per reached node), so collecting it sits inside the same
+        // contract as the edges. Init = prior distances with ALL seeds at
+        // 0 — prior values are real path lengths on a subgraph of the
+        // grown graph, hence upper bounds, and Bellman–Ford relaxation
+        // from seed-anchored upper bounds converges to the exact
+        // fixpoint, the same slicing-invariant table the distributed
+        // branch computes (spec-pinned in StreamingSpec's one-shot
+        // equivalence).
+        val old = priorStart(g, snapshot(prior, g.nodeType).collect())
+        val init = old.clone()
+        typedSeedVals(g, seeds).map(g.idOf).filter(_ >= 0).foreach(init(_) = 0L)
+        val dist = relax(DriverCsr.csr(g.nodeVals.length, g.src, g.dst), init, Int.MaxValue)
+        consume(distFrame(g, dist, i => dist(i) < old(i)))
+      } else refreshDistributed(g.cached, endpoints(newEdges, srcCol, dstCol), seeds, prior,
+        consume)
+    } finally g.close()
+  }
+
+  /** The distributed side of [[refreshDistances]] over the cached grown
+    * edges `e` and this batch's edges `newEdges`.
+    */
+  private def refreshDistributed(e: DataFrame, newEdges: DataFrame, seeds: DataFrame,
+                                 prior: DataFrame, consume: DataFrame => Unit): Unit = {
+    val spark = e.sparkSession
     // release EXACTLY this call's leaf caches afterwards: the RDDs are
     // tracked as they are created (here and inside distributedRelax via
     // cacheLog) — a registry-wide before/after diff would also sweep up
     // RDDs cached concurrently by other driver threads
     val cacheLog =
       scala.collection.mutable.Buffer.empty[org.apache.spark.rdd.RDD[_]]
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ne = newEdges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist()
+    val ne = newEdges.distinct().persist()
     val seedDf = typedSeeds(e, seeds)
     // rebase the prior on a cached RDD leaf (materializeLeaf discipline)
     // rather than a plan-level cache: the caller typically reads the
@@ -884,17 +711,13 @@ object Bfs {
     // plan-level cache would (a) trip the same-table read/write check in
     // the append job and (b) be invalidated — and recomputed against the
     // post-append table — by the append itself
-    val p0 = prior.select(
-      col("node").cast(e.schema.fields(0).dataType).as("node"),
-      col("dist").cast(LongType).as("dist"))
+    val p0 = snapshot(prior, e.schema.fields(0).dataType)
     val pRdd = p0.rdd
     cacheLog += pRdd
     pRdd.cache(); pRdd.count()
     val p = spark.createDataFrame(pRdd, p0.schema)
     // seed activations: seeds first appearing on the graph via this batch
-    val newNodes = ne.select(col("src").as("node"))
-      .union(ne.select(col("dst").as("node"))).distinct()
-    val seedAct = newNodes.join(seedDf, Seq("node"), "left_semi")
+    val seedAct = nodesOf(ne).join(seedDf, Seq("node"), "left_semi")
       .join(p, Seq("node"), "left_anti")
       .select(col("node"), lit(0L).as("dist"))
     // one relax pass of the batch edges against the prior

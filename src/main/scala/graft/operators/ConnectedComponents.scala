@@ -157,7 +157,7 @@ object ConnectedComponents {
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
     val keyType = g.schema.fields(0).dataType
-    g.frame((0 until n).map(i => Row(g.nodeVals(i), g.nodeVals(find(i)))), StructType(Seq(
+    g.rddFrame((0 until n).map(i => Row(g.nodeVals(i), g.nodeVals(find(i)))), StructType(Seq(
       StructField("node", keyType), StructField("component", keyType))))
   }
 }

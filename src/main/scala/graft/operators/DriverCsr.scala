@@ -6,97 +6,56 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{col, greatest, least}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
-/** The driver gates behind every graph operator: the one place that decides
-  * whether a graph runs on the driver and, when it does, how its nodes are
-  * dictionary-encoded. Each decision is logged as one INFO line
-  * (`driver gate: <operator> ... side=driver|distributed`).
+/** The one driver gate behind every graph operator: it decides whether a
+  * graph runs on the driver and, when it does, hands the operator its
+  * edges as dense int ids. Each decision is logged as one INFO line
+  * (`driver gate: <operator> rows=<n> bytes=<estimate> side=driver|distributed`).
   *
-  * The node gate, [[build]], serves [[PageRank]], [[Hits]],
-  * [[LabelPropagation]] and [[Bfs]]. It counts the caller's node inventory
-  * and admits n <= `broadcastMaxNodes` (and below the JVM array limit). A
-  * graph that passes is collected into a dense dictionary (node
-  * `nodeVals(i)` ↔ int id i), the (node, id) frames are built once, and the
-  * caller's adjacency plan over them is cached as an int-keyed CSR RDD. The
-  * operators then keep node-sized state arrays on the driver and run one
-  * map-only job per round over the cached adjacency: no per-round shuffle,
-  * nothing data-sized on the driver. A graph above the gate keeps its
-  * inventory cached for the operator's distributed loop, which is both the
-  * path for large graphs and the reference the specs pin the driver path
-  * against. `broadcastMaxNodes = 0` forces the distributed loop.
+  * [[edges]] caches the caller's edge frame, runs one job for the row
+  * count and the string widths, and admits rows <= `maxEdges` whose
+  * estimated heap fits [[MaxBytes]]. A frame that passes is collected
+  * once and its first two columns are interned into one dictionary
+  * (node `nodeVals(i)` ↔ id i, sorted under [[ordering]] when asked);
+  * the operator runs every round as an array loop, on the edge arrays or
+  * on a [[Csr]] built from them, and hands its rows to [[Edges.frame]],
+  * a local relation ([[Edges.rddFrame]] for ConnectedComponents and
+  * Mst). No driver-side round starts a Spark job. A frame
+  * above the gate stays cached for the operator's distributed loop, which
+  * is both the path for large graphs and the reference the specs pin the
+  * driver path against. `maxEdges = 0` forces the distributed loop on
+  * any non-empty frame.
   *
-  * The edge gate, [[edges]], serves [[KCore]], [[KTruss]],
-  * [[ConnectedComponents]], [[Mst]] and [[Coverage]], whose driver paths
-  * need the whole edge list rather than a node vector. It caches the
-  * caller's edge frame, runs one job for the row count and the string
-  * widths, and admits rows <= `maxEdges` whose estimated heap fits
-  * [[MaxBytes]]. A frame that passes is collected once and its first two
-  * columns are interned into one dictionary; the caller runs its recurrence
-  * on arrays and hands its rows to [[Edges.frame]]. `maxEdges = 0` forces
-  * the distributed loop, which reads the cached frame.
-  *
-  * Driver memory contract. Node gate: the honest driver cost is NOT the
-  * 8–16 bytes/node of the state arrays: the dictionary lives as boxed rows
-  * while the id mapping materializes (≈100–200 bytes/node for string keys),
-  * every round's broadcast ships 8 bytes/node per state vector, and a
-  * scatter or out-degree treeAggregate allocates one 8·n-byte scratch per
-  * partition. Edge gate: the collected rows are estimated at 64 bytes per
-  * row plus 16 per non-string column and 48 + 2·chars per string column,
-  * and the gate admits at most [[MaxBytes]] of that. A live-heap class
-  * histogram (JDK 17, compressed oops, 400k collected rows) measured 103
-  * bytes/row for two longs (estimate 96), 108 for three longs (112) and
-  * 132 for a long and a 10-char string (148); the dictionary and the int
-  * id arrays added 12–13 bytes/row, and the result rows come on top. The
-  * defaults are comfortable in a few-GB driver; raise an entry's bound
-  * only with driver and executor memory to match.
+  * Driver memory contract. The collected rows are estimated at 64 bytes
+  * per row plus 16 per non-string column and 48 + 2·chars per string
+  * column, and the gate admits at most [[MaxBytes]] of that. A live-heap
+  * class histogram (JDK 17, compressed oops, 400k collected rows)
+  * measured 103 bytes/row for two longs (estimate 96), 108 for three
+  * longs (112) and 132 for a long and a 10-char string (148); the
+  * dictionary and the int id arrays added 12–13 bytes/row. On top of that
+  * come the operator's arrays. A [[Csr]] holds 4 bytes per edge and per
+  * node, plus 8 per edge when weighted: one more histogram (400k
+  * collected long edges over 50k nodes) measured 1.88 MB for the
+  * unweighted CSR (4.7 bytes/edge) and 3.20 MB more for its weights; its
+  * build's three int sort orders (12 bytes/edge) are garbage once it
+  * returns. Per-node state vectors are 8 bytes per node each. The result
+  * rows come on top (landmark distances: up to one per node and
+  * landmark). The defaults are comfortable in a few-GB driver;
+  * raise an entry's bound only with driver and executor memory to match.
   */
 private[operators] object DriverCsr extends Logging {
 
-  /** The default `broadcastMaxNodes` of every node-gated entry point. */
-  val MaxNodes = 2000000L
-
-  /** The default `maxEdges` of every edge-gated entry point. */
+  /** The default `maxEdges` of every gated entry point. */
   val MaxEdges = 2000000L
 
-  /** The edge gate's bound on the estimated bytes of the collected rows. */
+  /** The gate's bound on the estimated bytes of the collected rows. */
   val MaxBytes: Long = 256L << 20
 
   private def decide(op: String, size: String, pass: Boolean): Boolean = {
     logInfo(s"driver gate: $op $size side=${if (pass) "driver" else "distributed"}")
     pass
   }
-
-  /** A graph after the gate: its node count and, on the driver path, the
-    * dictionary and the cached adjacency. [[close]] releases both caches.
-    */
-  final class Graph[A] private[DriverCsr] (
-      val n: Long, val nodeType: DataType, inventory: DataFrame,
-      csr: Option[(Array[Any], RDD[A])]) {
-
-    def onDriver: Boolean = csr.isDefined
-    def nodeVals: Array[Any] = csr.get._1
-    def adj: RDD[A] = csr.get._2
-
-    /** The node inventory; cached until [[close]] off the driver path. */
-    def nodes: DataFrame = inventory
-
-    /** A local frame of per-node results: `node` followed by `fields`. */
-    def frame(rows: Iterator[Row], fields: StructField*): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      inventory.sparkSession.createDataFrame(rows.toSeq.asJava,
-        StructType(StructField("node", nodeType, nullable = true) +: fields))
-    }
-
-    def close(): Unit = {
-      csr.foreach(_._2.unpersist(blocking = false))
-      inventory.unpersist(blocking = false)
-    }
-  }
-
-  /** One distinct node column over two endpoint columns of `e`. */
-  def nodesOf(e: DataFrame, a: String, b: String): DataFrame =
-    e.select(col(a).as("node")).union(e.select(col(b).as("node"))).distinct()
 
   /** The simple undirected graph of `edges`: distinct (a, b) with a < b
     * under Spark's ordering. Self-loops and edges with a null endpoint are
@@ -116,37 +75,13 @@ private[operators] object DriverCsr extends Logging {
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
 
-  /** Count `nodes` (one column) and gate it. When 0 < n <= the bound,
-    * collect the dictionary (under Spark's ordering of the node type when
-    * `sorted`) and cache `adjacency(srcIds, dstIds)`, where `srcIds` is
-    * (node, id) and `dstIds` the same rows as (node2, id2). The adjacency
-    * materializes on the caller's first action over it.
-    */
-  def build[A](op: String, nodes: DataFrame, broadcastMaxNodes: Long,
-               sorted: Boolean = false)
-              (adjacency: (DataFrame, DataFrame) => RDD[A]): Graph[A] = {
-    import scala.jdk.CollectionConverters._
-    val inv = nodes.persist()
-    val n = inv.count()
-    val nodeType = inv.schema.fields(0).dataType
-    if (!decide(op, s"nodes=$n",
-        n > 0 && n <= math.min(broadcastMaxNodes, Int.MaxValue - 8L)))
-      return new Graph(n, nodeType, inv, None)
-    val collected = inv.collect().map(_.get(0))
-    inv.unpersist(blocking = false)
-    val nodeVals = if (sorted) collected.sorted(ordering(nodeType)) else collected
-    val idRows: java.util.List[Row] =
-      nodeVals.zipWithIndex.map { case (v, i) => Row(v, i) }.toSeq.asJava
-    val srcIds = inv.sparkSession.createDataFrame(idRows, StructType(Seq(
-      StructField("node", nodeType, nullable = true),
-      StructField("id", IntegerType, nullable = false))))
-    val adj = adjacency(srcIds,
-      srcIds.select(col("node").as("node2"), col("id").as("id2")))
-    adj.cache()
-    new Graph(n, nodeType, inv, Some((nodeVals, adj)))
+  /** Binary keys compare by content, as Spark groups them. */
+  private def key(v: Any): Any = v match {
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case x => x
   }
 
-  /** An edge frame after the edge gate: its row count, estimated bytes and
+  /** An edge frame after the gate: its row count, estimated bytes and
     * rows with a null in either of the first two columns; the collected
     * rows on the driver path. Off the driver path the distributed loop
     * reads `cached`, the frame rebased onto `cachedRdd`, which [[close]]
@@ -160,6 +95,7 @@ private[operators] object DriverCsr extends Logging {
     def onDriver: Boolean = collected.isDefined
     def rows: Array[Row] = collected.get
     def schema: StructType = cached.schema
+    def nodeType: DataType = schema.fields(0).dataType
 
     /** The first two columns interned into one dictionary: node
       * `nodeVals(i)` ↔ id i, and each row's two endpoint ids. Ids follow
@@ -169,17 +105,15 @@ private[operators] object DriverCsr extends Logging {
       val idx = new java.util.HashMap[Any, Integer]()
       val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
       def id(v: Any): Int = {
-        // binary keys compare by content, as Spark groups them
-        val key = v match { case b: Array[Byte] => java.nio.ByteBuffer.wrap(b); case x => x }
-        val e = idx.get(key)
+        val e = idx.get(key(v))
         if (e != null) e.intValue()
-        else { idx.put(key, vals.length); vals += v; vals.length - 1 }
+        else { idx.put(key(v), vals.length); vals += v; vals.length - 1 }
       }
       val s = rows.map(r => id(r.get(0)))
       val d = rows.map(r => id(r.get(1)))
       if (!sorted) (vals.toArray, s, d)
       else {
-        val ord = ordering(schema.fields(0).dataType)
+        val ord = ordering(nodeType)
         val byValue = vals.indices.toArray.sortWith((i, j) => ord.lt(vals(i), vals(j)))
         val rank = new Array[Int](byValue.length)
         byValue.indices.foreach(r => rank(byValue(r)) = r)
@@ -187,19 +121,94 @@ private[operators] object DriverCsr extends Logging {
       }
     }
 
-    /** A local result frame over `out`, sliced one partition per 64k rows
-      * (at most 32).
+    private lazy val ids = {
+      val m = new java.util.HashMap[Any, Integer]()
+      nodeVals.indices.foreach(i => m.put(key(nodeVals(i)), i))
+      m
+    }
+
+    /** The id of node value `v`, or -1 when no edge touches it. */
+    def idOf(v: Any): Int = Option(ids.get(key(v))).fold(-1)(_.intValue())
+
+    /** The distinct endpoints of the cached frame as one `node` column:
+      * the distributed loops' node inventory.
       */
-    def frame(out: Seq[Row], outSchema: StructType): DataFrame = {
+    def nodes: DataFrame = {
+      val Array(a, b) = schema.fieldNames.take(2)
+      cached.select(col(a).as("node")).union(cached.select(col(b).as("node"))).distinct()
+    }
+
+    /** A local result frame over `out`: reading it starts no job. */
+    def frame(out: Iterable[Row], outSchema: StructType): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      cached.sparkSession.createDataFrame(out.toSeq.asJava, outSchema)
+    }
+
+    /** [[frame]] as an RDD leaf, sliced one partition per 64k rows (at
+      * most 32). Reading it starts a job, but it keeps the plans
+      * downstream of ConnectedComponents and Mst as they are: a local
+      * relation's size statistics turn their consumers' sort-merge joins
+      * into broadcast joins.
+      */
+    def rddFrame(out: Seq[Row], outSchema: StructType): DataFrame = {
       val spark = cached.sparkSession
       val slices = math.max(1, math.min(32, out.length / 65536 + 1))
       spark.createDataFrame(spark.sparkContext.parallelize(out, slices), outSchema)
     }
 
+    /** [[frame]] of per-node rows: `node` (the key type) then `fields`. */
+    def nodeFrame(out: Iterator[Row], fields: StructField*): DataFrame =
+      frame(out.toSeq, StructType(StructField("node", nodeType, nullable = true) +: fields))
+
     def close(): Unit = cachedRdd.unpersist(blocking = false)
   }
 
-  /** The edge gate. Caches `e`, then one job returns its row count, the
+  /** Adjacency over nodes 0 until `off.length - 1`: node u's targets are
+    * `to(off(u))` until `to(off(u + 1))`, ascending and distinct, and
+    * `w` (null for an unweighted graph) holds each target's weight.
+    */
+  final class Csr(val off: Array[Int], val to: Array[Int], val w: Array[Long]) {
+    def n: Int = off.length - 1
+  }
+
+  /** The [[Csr]] of the edges `src(i) → dst(i)` over `n` nodes, each
+    * (src, dst) pair once: duplicate edges fold their weights `w(i)` with
+    * `combine` (when `w` is given). Two stable counting sorts order the
+    * edges by (src, dst) in O(edges + n).
+    */
+  def csr(n: Int, src: Array[Int], dst: Array[Int], w: Array[Long] = null,
+          combine: (Long, Long) => Long = null): Csr = {
+    def sortBy(key: Array[Int], order: Array[Int]): Array[Int] = {
+      val pos = new Array[Int](n + 1)
+      order.foreach(i => pos(key(i) + 1) += 1)
+      (0 until n).foreach(v => pos(v + 1) += pos(v))
+      val out = new Array[Int](order.length)
+      order.foreach { i => out(pos(key(i))) = i; pos(key(i)) += 1 }
+      out
+    }
+    val order = sortBy(src, sortBy(dst, Array.range(0, src.length)))
+    val off = new Array[Int](n + 1)
+    val to = new Array[Int](order.length)
+    val ws = if (w == null) null else new Array[Long](order.length)
+    var m = 0
+    var prev = -1
+    order.foreach { i =>
+      if (prev >= 0 && src(prev) == src(i) && dst(prev) == dst(i)) {
+        if (ws != null) ws(m - 1) = combine(ws(m - 1), w(i))
+      } else {
+        to(m) = dst(i)
+        if (ws != null) ws(m) = w(i)
+        off(src(i) + 1) += 1
+        m += 1
+      }
+      prev = i
+    }
+    (0 until n).foreach(v => off(v + 1) += off(v))
+    new Csr(off, java.util.Arrays.copyOf(to, m),
+      if (ws == null) null else java.util.Arrays.copyOf(ws, m))
+  }
+
+  /** The gate. Caches `e`, then one job returns its row count, the
     * code points of its string columns and its rows with a null endpoint.
     * Rows are estimated at 64 bytes plus 16 per non-string column and
     * 48 + 2·chars per string column (chars averaged over the rows). When

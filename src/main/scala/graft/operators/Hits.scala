@@ -27,13 +27,13 @@ import org.apache.spark.sql.functions._
   * R rounds unroll in the DuckDB oracle with zero tolerance (the
   * [[KMeans]] fixed-round discipline).
   *
-  * Scale shape: graphs within the [[DriverCsr]] gate run both half-rounds
-  * on the driver over one cached in-adjacency. Above it, the
+  * Scale shape: within the [[DriverCsr]] gate the edges are collected
+  * once, deduplicated into an int CSR on the driver, and both half-rounds
+  * run as array loops (no Spark job per round). Above it, the
   * deduplicated edge list persists TWICE, partitioned on each join key
   * (the LabelPropagation lesson applied to a two-sided iteration):
-  * rounds exchange only node-sized score frames.
-  * Per round the driver collects exactly two longs (the maxima) — the
-  * bounded-scalar contract. Overflow bound (ANSI throws):
+  * rounds exchange only node-sized score frames, and per round the
+  * driver collects exactly two longs (the maxima). Overflow bound (ANSI throws):
   * scale² · max-degree < 2⁶³ — at the default 10⁶ scale that admits
   * degrees to ~9·10⁶; lower `scale` for denser graphs.
   */
@@ -46,8 +46,8 @@ object Hits {
     */
   def hubsAuthorities(edges: DataFrame, srcCol: String, dstCol: String,
                       rounds: Int, scale: Long = 1000000L,
-                      broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
-    val g = buildHitsGraph(edges, srcCol, dstCol, broadcastMaxNodes)
+                      maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val g = buildHitsGraph(edges, srcCol, dstCol, maxEdges)
     try g.scores(rounds, scale) finally g.close()
   }
 
@@ -76,8 +76,8 @@ object Hits {
   def resumeHubsAuthorities(edges: DataFrame, srcCol: String, dstCol: String,
                             prior: DataFrame, rounds: Int,
                             scale: Long = 1000000L,
-                            broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
-    val g = buildHitsGraph(edges, srcCol, dstCol, broadcastMaxNodes)
+                            maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val g = buildHitsGraph(edges, srcCol, dstCol, maxEdges)
     try g.resumeFrom(prior, rounds, scale) finally g.close()
   }
 
@@ -152,36 +152,27 @@ object Hits {
       .select(col("node"), col("h").as("hub_q"), col("a").as("auth_q"))
   }
 
-  /** Shared-build handle for the q197 snapshot+resume gate: the
-    * [[DriverCsr]] graph built once, cold and resumed walks run over it.
-    * Above `broadcastMaxNodes` the fallback handle runs each walk on the
-    * distributed loop.
+  /** Shared-build handle for the q197 snapshot+resume gate: the gated
+    * edges and their CSR built once, cold and resumed walks run over
+    * them. Above the gate each walk runs the distributed loop over the
+    * cached edges.
     */
   def buildHitsGraph(edges: DataFrame, srcCol: String, dstCol: String,
-                     broadcastMaxNodes: Long = DriverCsr.MaxNodes): HitsGraph = {
-    // raw null-filtered projection: the driver path's dedup rides the
-    // adjacency exchange (adjacencyPlan collapses duplicates), so no
-    // upstream distinct; the fallback distincts per walk
-    val eF = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s").isNotNull && col("d").isNotNull)
-    val g = DriverCsr.build("Hits.buildHitsGraph", DriverCsr.nodesOf(eF, "s", "d"),
-        broadcastMaxNodes) {
-      (srcIds, dstIds) =>
-        PageRank.adjacencyPlan(eF.select(col("s").as("src"), col("d").as("dst")),
-          srcIds, dstIds).rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-    }
-    new HitsGraph(eF, g)
-  }
+                     maxEdges: Long = DriverCsr.MaxEdges): HitsGraph =
+    new HitsGraph(DriverCsr.edges("Hits.buildHitsGraph",
+      edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
+        .filter(col("s").isNotNull && col("d").isNotNull), maxEdges))
 
   /** See [[buildHitsGraph]]. */
-  final class HitsGraph private[operators] (
-      eF: DataFrame, g: DriverCsr.Graph[(Int, Array[Int])]) {
+  final class HitsGraph private[operators] (g: DriverCsr.Edges) {
+
+    private lazy val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst)
 
     /** [[Hits.hubsAuthorities]] over the prebuilt graph. */
     def scores(rounds: Int, scale: Long = 1000000L): DataFrame = {
       checkRounds(rounds, scale)
-      if (g.onDriver) hitsCsrLoop(g, rounds, scale, initH = None)
-      else hitsDistributed(eF, rounds, scale, priorHubs = None)
+      if (g.onDriver) hitsLoop(g, adj, rounds, scale, Map.empty)
+      else hitsDistributed(g.cached, rounds, scale, priorHubs = None)
     }
 
     /** [[Hits.resumeHubsAuthorities]] over the prebuilt graph. */
@@ -189,38 +180,32 @@ object Hits {
                    scale: Long = 1000000L): DataFrame = {
       checkRounds(rounds, scale)
       val p = prior.select(col("node"), col("hub_q"))
-      if (g.onDriver) {
+      if (g.onDriver)
         // the snapshot is node-sized, within the driver contract
-        val m = p.collect().map(r => (r.get(0), r.getLong(1))).toMap
-        hitsCsrLoop(g, rounds, scale, initH = Some(m))
-      } else hitsDistributed(eF, rounds, scale, priorHubs = Some(p))
+        hitsLoop(g, adj, rounds, scale, p.collect().map(r => (r.get(0), r.getLong(1))).toMap)
+      else hitsDistributed(g.cached, rounds, scale, priorHubs = Some(p))
     }
 
-    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    /** Release the cached edges ([[DriverCsr.Edges.close]]). */
     def close(): Unit = g.close()
   }
 
-  /** The driver path's rounds on [[PageRank]]'s in-adjacency layout: the
-    * cached adjacency serves BOTH half-rounds — the authority gather
-    * a[d] = Σ h[s] reads each node's in-neighbor array (one map-only
-    * job + n-row collect), and the hub update h[s] = Σ a[d] is the
-    * TRANSPOSED product, a scatter over the same arrays folded through
-    * a per-partition n-long accumulator. Maxima and normalization are
-    * O(n) driver longs. Bit-identical to the distributed loop (HitsSpec
-    * pins it).
+  /** The driver path's rounds over the deduplicated out-adjacency: the
+    * authority half-round scatters a[v] += h[u] along every edge u→v,
+    * the hub half-round gathers h[u] = Σ a[v] over u's targets; maxima
+    * and normalization are O(n) longs. Bit-identical to the distributed
+    * loop (HitsSpec pins it).
     */
-  private def hitsCsrLoop(g: DriverCsr.Graph[(Int, Array[Int])], rounds: Int,
-                          scale: Long,
-                          initH: Option[scala.collection.Map[Any, Long]]): DataFrame = {
+  private def hitsLoop(g: DriverCsr.Edges, adj: DriverCsr.Csr, rounds: Int, scale: Long,
+                       initH: Map[Any, Long]): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField}
-    val spark = g.nodes.sparkSession
-    val (nodeVals, adj, n) = (g.nodeVals, g.adj, g.n.toInt)
+    val (n, off, to) = (adj.n, adj.off, adj.to)
 
     // Overflow discipline: the distributed path's long sums and ANSI
     // multiply THROW past the documented scale²·max-degree bound — the
     // driver loop must fail the same way, never wrap silently into wrong
     // scores. The proof is HOISTED out of the per-edge loops (the
-    // PageRank ranksCsrLoop discipline): every score is in
+    // PageRank ranksLoop discipline): every score is in
     // [0, scale] after normalize (raw(j) <= mx ⇒ ⌊raw·scale/mx⌋ <=
     // scale) and starts at scale, so every accumulator slot is bounded
     // by n·scale — one multiplyExact(n, scale) up front proves every
@@ -229,71 +214,42 @@ object Hits {
     // [0, scale] premise) do the loops run per-edge checked, throwing
     // exactly where the distributed path would.
     def normalize(raw: Array[Long]): Array[Long] = {
-      var mx = 0L
-      var j = 0
-      while (j < n) { if (raw(j) > mx) mx = raw(j); j += 1 }
+      val mx = if (n == 0) 0L else raw.max
       if (mx <= 0) new Array[Long](n)
-      else {
-        val m = mx
-        // raw(j) <= mx, so one multiplyExact(mx, scale) proves the whole
-        // column; the checked tabulate only runs past that bound
-        val mulSafe = try { Math.multiplyExact(m, scale); true }
-          catch { case _: ArithmeticException => false }
-        if (mulSafe) Array.tabulate(n)(j => raw(j) * scale / m)
-        else Array.tabulate(n)(j => Math.multiplyExact(raw(j), scale) / m)
-      }
+      // raw(j) <= mx, so one multiplyExact(mx, scale) proves the whole
+      // column; the checked tabulate only runs past that bound
+      else if (scala.util.Try(Math.multiplyExact(mx, scale)).isSuccess)
+        Array.tabulate(n)(j => raw(j) * scale / mx)
+      else Array.tabulate(n)(j => Math.multiplyExact(raw(j), scale) / mx)
     }
 
     // warm start: nodes the snapshot never saw start at the cold value
-    var h = initH.fold(Array.fill(n)(scale))(m =>
-      Array.tabulate(n)(j => m.getOrElse(nodeVals(j), scale)))
+    var h = Array.tabulate(n)(j => initH.getOrElse(g.nodeVals(j), scale))
     val rawSafe = h.forall(v => v >= 0 && v <= scale) &&
-      (try { Math.multiplyExact(n.toLong, scale); true }
-       catch { case _: ArithmeticException => false })
+      scala.util.Try(Math.multiplyExact(n.toLong, scale)).isSuccess
+    def add(x: Long, y: Long): Long = if (rawSafe) x + y else Math.addExact(x, y)
     var a = new Array[Long](n)
     var r = 0
     while (r < rounds) {
-      val bcH = spark.sparkContext.broadcast(h)
-      val aSums = adj.map { case (did, sids) =>
-        val hv = bcH.value
-        var s = 0L
-        var j = 0
-        if (rawSafe)
-          while (j < sids.length) { s += hv(sids(j)); j += 1 }
-        else
-          while (j < sids.length) { s = Math.addExact(s, hv(sids(j))); j += 1 }
-        (did, s)
-      }.collect()
-      bcH.destroy()
       val aRaw = new Array[Long](n)
-      aSums.foreach { case (did, s) => aRaw(did) = s }
+      var u = 0
+      while (u < n) {
+        var j = off(u)
+        while (j < off(u + 1)) { aRaw(to(j)) = add(aRaw(to(j)), h(u)); j += 1 }
+        u += 1
+      }
       a = normalize(aRaw)
-      val bcA = spark.sparkContext.broadcast(a)
-      val hRaw = adj.treeAggregate(new Array[Long](n))(
-        seqOp = { (acc, kv) =>
-          val av = bcA.value(kv._1)
-          val sids = kv._2
-          var j = 0
-          if (rawSafe)
-            while (j < sids.length) { acc(sids(j)) += av; j += 1 }
-          else
-            while (j < sids.length) {
-              acc(sids(j)) = Math.addExact(acc(sids(j)), av); j += 1 }
-          acc
-        },
-        combOp = { (x, y) =>
-          var j = 0
-          if (rawSafe)
-            while (j < n) { x(j) += y(j); j += 1 }
-          else
-            while (j < n) { x(j) = Math.addExact(x(j), y(j)); j += 1 }
-          x
-        })
-      bcA.destroy()
+      val hRaw = new Array[Long](n)
+      u = 0
+      while (u < n) {
+        var j = off(u)
+        while (j < off(u + 1)) { hRaw(u) = add(hRaw(u), a(to(j))); j += 1 }
+        u += 1
+      }
       h = normalize(hRaw)
       r += 1
     }
-    g.frame(Iterator.tabulate(n)(i => Row(nodeVals(i), h(i), a(i))),
+    g.nodeFrame(Iterator.tabulate(n)(i => Row(g.nodeVals(i), h(i), a(i))),
       StructField("hub_q", LongType, nullable = false),
       StructField("auth_q", LongType, nullable = false))
   }

@@ -177,7 +177,7 @@ object KCore {
         converged)
     }
     val canon = g.cached
-    val (a0, a0Rdd) = DriverCsr.rebase(DriverCsr.nodesOf(canon, "a", "b"))
+    val (a0, a0Rdd) = DriverCsr.rebase(g.nodes)
     val res = peelFrom(a0, a0Rdd, if (countFirst) a0.count() else -1L, rounds)(
       roundDegrees(canon, _), col("deg") >= k)
     // the result reads the final DEGREE frame, not the survivor leaf —
@@ -234,7 +234,7 @@ object KCore {
     // branch count). The fold is node-sized rows, never edges.
     val foldEvery = 8
     val canon = g.cached
-    var (alive, aliveRdd) = DriverCsr.rebase(DriverCsr.nodesOf(canon, "a", "b"))
+    var (alive, aliveRdd) = DriverCsr.rebase(g.nodes)
     var result: DataFrame = null
     var resultRdd: RDD[Row] = null
     var branches = 0

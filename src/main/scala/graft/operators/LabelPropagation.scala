@@ -21,8 +21,11 @@ import org.apache.spark.sql.functions._
   * bipartite-ish regions by design, so "fixed R" IS the deterministic
   * semantics, the [[KCore.peel]] oracle-form discipline.
   *
-  * Scale shape: long-keyed graphs within the [[DriverCsr]] gate run on
-  * the driver. Otherwise the symmetric edge list persists
+  * Scale shape: within the [[DriverCsr]] gate the edges are collected
+  * once into a sorted dictionary (id order is Spark's order of the key
+  * type, so the smallest-label tie-break compares ids), symmetrized and
+  * collapsed into an int CSR on the driver, and every round is an array
+  * loop (no Spark job per round). Above it the symmetric edge list persists
   * HASH-PARTITIONED on the vote key, so R rounds pay ONE edge exchange
   * total — each round joins the cached partitioning against the
   * node-sized label frame (only the label frame exchanges), then a
@@ -45,8 +48,8 @@ object LabelPropagation {
     * community representative.
     */
   def propagate(edges: DataFrame, srcCol: String, dstCol: String,
-                rounds: Int): DataFrame = {
-    val g = buildLpaGraph(edges, srcCol, dstCol)
+                rounds: Int, maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val g = buildLpaGraph(edges, srcCol, dstCol, maxEdges)
     try g.propagate(rounds) finally g.close()
   }
 
@@ -74,8 +77,9 @@ object LabelPropagation {
     * arithmetic). On a grown graph it is the warm-start refresh shape.
     */
   def resumePropagate(edges: DataFrame, srcCol: String, dstCol: String,
-                      prior: DataFrame, rounds: Int): DataFrame = {
-    val g = buildLpaGraph(edges, srcCol, dstCol)
+                      prior: DataFrame, rounds: Int,
+                      maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val g = buildLpaGraph(edges, srcCol, dstCol, maxEdges)
     try g.resumeFrom(prior, rounds) finally g.close()
   }
 
@@ -84,12 +88,16 @@ object LabelPropagation {
     * reintroduce order-sensitive float sums; quantize upstream, e.g.
     * the number of matching MinHash functions). Duplicate edges keep
     * their MAXIMUM weight (a deterministic dedup rule); winner stays
-    * (weight-sum desc, label asc).
+    * (weight-sum desc, label asc). A null weight fails loudly at
+    * execution on both sides of the gate.
     */
   def propagateWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                        weightCol: String, rounds: Int): DataFrame = {
+                        weightCol: String, rounds: Int,
+                        maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val w = col(weightCol).cast("long")
     val g = lpaGraph(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      col(weightCol).cast("long").as("__w")))
+      when(w.isNotNull, w).otherwise(raise_error(
+        lit("propagateWeighted: weight must not be null")).cast("long")).as("__w")), maxEdges)
     try g.propagate(rounds) finally g.close()
   }
 
@@ -167,159 +175,107 @@ object LabelPropagation {
     labels
   }
 
-  /** Shared-build handle for the q198 snapshot+resume gate: the
-    * [[DriverCsr]] graph built once; cold and resumed propagation runs
-    * over it. Non-long-keyed or oversized graphs get a fallback handle
-    * that runs each walk on the distributed loop.
+  /** Shared-build handle for the q198 snapshot+resume gate: the gated
+    * edges and their CSR built once; cold and resumed propagation runs
+    * over them. Above the gate each walk runs the distributed loop over
+    * the cached edges.
     */
-  def buildLpaGraph(edges: DataFrame, srcCol: String,
-                    dstCol: String): LpaGraph =
+  def buildLpaGraph(edges: DataFrame, srcCol: String, dstCol: String,
+                    maxEdges: Long = DriverCsr.MaxEdges): LpaGraph =
     lpaGraph(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      lit(1L).as("__w")))
+      lit(1L).as("__w")), maxEdges)
 
-  /** Long-keyed graphs that fit the gate take the driver loop (one
-    * map-only job per round, no per-round shuffle at all): the dictionary
-    * is SORTED, so a smaller index is a smaller label and the tie-break
-    * carries over. Other key types take the distributed loop, spec-pinned
-    * bit-identical.
+  /** The gate over the vote edges, self-loops and null endpoints dropped
+    * first (`=!=` is Spark's equality, the distributed loop's canonical
+    * filter), so the dictionary holds exactly the nodes the distributed
+    * loop seeds its labels from. Ids are sorted: a smaller id is a
+    * smaller label under Spark's ordering, whatever the key type.
     */
-  private def lpaGraph(e: DataFrame): LpaGraph = {
-    val longKeyed = e.schema("__s").dataType ==
-      org.apache.spark.sql.types.LongType &&
-      e.schema("__d").dataType == org.apache.spark.sql.types.LongType
-    if (!longKeyed) return new LpaGraph(e, None)
-    // Node inventory from the CANONICAL edge list (self-loops and null
-    // endpoints dropped), the exact set the distributed path seeds its
-    // labels from (sym.u) — raw endpoints would emit self-loop-only
-    // nodes here but not there, breaking the bit-identity contract
-    // when a graph grows past the gate.
-    val canon0 = e.select(least(col("__s"), col("__d")).as("a"),
-        greatest(col("__s"), col("__d")).as("b"))
-      .filter(col("a") =!= col("b"))
-    val g = DriverCsr.build("LabelPropagation.buildLpaGraph", DriverCsr.nodesOf(canon0, "a", "b"),
-        DriverCsr.MaxNodes, sorted = true) { (ids, ids2) =>
-      // the weighted symmetric CSR: dedup to max weight, both directions
-      val canon = e.select(least(col("__s"), col("__d")).as("a"),
-          greatest(col("__s"), col("__d")).as("b"), col("__w"))
-        .filter(col("a") =!= col("b"))
-        .groupBy(col("a"), col("b")).agg(max(col("__w")).as("w"))
-      canon
-        .join(broadcast(ids), canon("a") === ids("node"))
-        .join(broadcast(ids2), canon("b") === ids2("node2"))
-        .select(col("id").as("ai"), col("id2").as("bi"), col("w"))
-        .select(explode(array(
-          struct(col("ai").as("u"), col("bi").as("v"), col("w")),
-          struct(col("bi").as("u"), col("ai").as("v"), col("w")))).as("e"))
-        .select(col("e.u"), col("e.v"), col("e.w"))
-        .repartition(col("u"))
-        .groupBy(col("u"))
-        .agg(collect_list(col("v")).as("vs"), collect_list(col("w")).as("ws"))
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray,
-          r.getSeq[Long](2).toArray))
-    }
-    new LpaGraph(e, Some(g))
-  }
+  private def lpaGraph(e: DataFrame, maxEdges: Long): LpaGraph =
+    new LpaGraph(DriverCsr.edges("LabelPropagation.buildLpaGraph",
+      e.filter(col("__s").isNotNull && col("__d").isNotNull && col("__s") =!= col("__d")),
+      maxEdges, sorted = true))
 
   /** See [[buildLpaGraph]]. */
-  final class LpaGraph private[operators] (
-      e: DataFrame, g: Option[DriverCsr.Graph[(Int, Array[Int], Array[Long])]]) {
+  final class LpaGraph private[operators] (g: DriverCsr.Edges) {
 
-    private def driver = g.filter(_.onDriver)
+    // both directions of every edge; duplicates keep their maximum weight
+    private lazy val adj = {
+      val w = g.rows.map(_.getLong(2))
+      DriverCsr.csr(g.nodeVals.length, g.src ++ g.dst, g.dst ++ g.src, w ++ w, math.max)
+    }
 
     /** [[LabelPropagation.propagate]] over the prebuilt graph. */
     def propagate(rounds: Int): DataFrame = {
       require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-      driver match {
-        case Some(c) => lpaLoop(c, rounds, init = None)
-        case None => lpaDistributed(e, rounds, initLabels = None)
-      }
+      if (g.onDriver) lpaLoop(g, adj, rounds, Array.tabulate(g.nodeVals.length)(identity))
+      else lpaDistributed(g.cached, rounds, initLabels = None)
     }
 
     /** [[LabelPropagation.resumePropagate]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 1, s"rounds must be >= 1, got $rounds")
       val p = prior.select(col("node"), col("label"))
-      driver match {
-        case Some(c) =>
-          // the snapshot is node-sized, within the driver contract
-          val m = p.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-          lpaLoop(c, rounds, init = Some(m))
-        case None => lpaDistributed(e, rounds, initLabels = Some(p))
-      }
+      if (g.onDriver) {
+        // the snapshot is node-sized, within the driver contract; an
+        // unseen node or a dangling label (no longer a node of the
+        // graph) falls back to the node's own id, the cold value
+        val t = g.nodeType
+        val m = p.select(col("node").cast(t), col("label").cast(t)).collect()
+          .map(r => (g.idOf(r.get(0)), g.idOf(r.get(1)))).toMap
+        lpaLoop(g, adj, rounds, Array.tabulate(g.nodeVals.length)(j =>
+          m.get(j).filter(_ >= 0).getOrElse(j)))
+      } else lpaDistributed(g.cached, rounds, initLabels = Some(p))
     }
 
-    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
-    def close(): Unit = g.foreach(_.close())
+    /** Release the cached edges ([[DriverCsr.Edges.close]]). */
+    def close(): Unit = g.close()
   }
 
-  /** The driver path's rounds: each is ONE map-only job over the cached
-    * weighted CSR with the n-int label vector broadcast — votes tally in
-    * a per-row open-address pass over the neighbor array, winner =
-    * (weight desc, label asc). Bit-identical to the distributed loop
-    * (LabelPropagationSpec pins both paths on the same fixtures).
+  /** The driver path's rounds: every node tallies its neighbors'
+    * previous-round labels by edge weight in one pass over its CSR row,
+    * winner = (weight desc, label asc). Bit-identical to the distributed
+    * loop (LabelPropagationSpec pins both paths on the same fixtures).
     */
-  private def lpaLoop(g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
-                      rounds: Int,
-                      init: Option[scala.collection.Map[Long, Long]]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField}
-    val spark = g.nodes.sparkSession
-    val (nodeVals, csr, n) = (g.nodeVals, g.adj, g.n.toInt)
-
-    // warm start: snapshot labels dictionary-compress to indexes; an
-    // unseen node or a dangling label (no longer in the inventory —
-    // binarySearch < 0) falls back to the node's own id, the cold value
-    var labels = init match {
-      case None => Array.tabulate(n)(identity)
-      case Some(m) =>
-        val keys = nodeVals.map(_.asInstanceOf[Long])
-        Array.tabulate(n) { j =>
-          m.get(keys(j)) match {
-            case Some(l) =>
-              val idx = java.util.Arrays.binarySearch(keys, l)
-              if (idx >= 0) idx else j
-            case None => j
-          }
-        }
-    }
+  private def lpaLoop(g: DriverCsr.Edges, adj: DriverCsr.Csr, rounds: Int,
+                      init: Array[Int]): DataFrame = {
+    import org.apache.spark.sql.types.StructField
+    val (n, off, to, w) = (adj.n, adj.off, adj.to, adj.w)
+    var labels = init
     var r = 0
     while (r < rounds) {
-      val bc = spark.sparkContext.broadcast(labels)
-      val next = csr.map { case (u, vs, ws) =>
-        val lv = bc.value
+      val next = new Array[Int](n)
+      var u = 0
+      while (u < n) {
         // per-node vote tally over the (small) neighbor list
-        val labs = new Array[Int](vs.length)
-        val sums = new Array[Long](vs.length)
+        val labs = new Array[Int](off(u + 1) - off(u))
+        val sums = new Array[Long](labs.length)
         var k = 0
-        var j = 0
-        while (j < vs.length) {
-          val l = lv(vs(j))
+        var j = off(u)
+        while (j < off(u + 1)) {
+          val l = labels(to(j))
           var f = 0
-          var found = -1
-          while (f < k && found < 0) { if (labs(f) == l) found = f; f += 1 }
+          while (f < k && labs(f) != l) f += 1
           // addExact: the distributed path's long sum throws under ANSI
-          // on overflow — the driver loop must fail loudly too, never
-          // wrap silently (the weighted-vote overflow asymmetry)
-          if (found >= 0) sums(found) = Math.addExact(sums(found), ws(j))
-          else { labs(k) = l; sums(k) = ws(j); k += 1 }
+          // on overflow — the driver loop must fail loudly too
+          if (f < k) sums(f) = Math.addExact(sums(f), w(j))
+          else { labs(k) = l; sums(k) = w(j); k += 1 }
           j += 1
         }
         var best = 0
         var f = 1
         while (f < k) {
-          if (sums(f) > sums(best) ||
-              (sums(f) == sums(best) && labs(f) < labs(best))) best = f
+          if (sums(f) > sums(best) || (sums(f) == sums(best) && labs(f) < labs(best))) best = f
           f += 1
         }
-        (u, labs(best))
-      }.collect()
-      bc.destroy()
-      val arr = labels.clone()
-      next.foreach { case (u, l) => arr(u) = l }
-      labels = arr
+        next(u) = labs(best)
+        u += 1
+      }
+      labels = next
       r += 1
     }
-    g.frame(Iterator.tabulate(n)(i => Row(nodeVals(i), nodeVals(labels(i)))),
-      StructField("label", LongType, nullable = false))
+    g.nodeFrame(Iterator.tabulate(n)(i => Row(g.nodeVals(i), g.nodeVals(labels(i)))),
+      StructField("label", g.nodeType, nullable = false))
   }
 
   /** Community roll-up: one row per surviving label with its member

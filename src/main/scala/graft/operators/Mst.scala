@@ -179,7 +179,7 @@ object Mst {
         col(wCol).cast("long").as("w"))
       .filter(col("u") =!= col("v") && col("u").isNotNull)
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), maxEdges, sorted = true)
-    if (g.onDriver) return g.frame(driverForest(g, rounds), g.schema)
+    if (g.onDriver) return g.rddFrame(driverForest(g, rounds), g.schema)
     val e = g.cached
     val nodes = e.select(col("u").as("node"))
       .unionByName(e.select(col("v").as("node"))).distinct().persist()

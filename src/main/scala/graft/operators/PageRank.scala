@@ -23,26 +23,14 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * damping fixpoint's own convergence tolerance, and — the point —
   * IDENTICALLY in both engines.
   *
-  * Scale shape. Two layouts, chosen by node count — the MLlib shape
-  * (data-sized state distributed, model-sized state on the driver):
-  *
-  *   - `n <= broadcastMaxNodes` (the common case): the [[DriverCsr]]
-  *     layout. Node keys are dictionary-compressed to dense int ids once
-  *     at setup (profiling the string-keyed loop showed per-round
-  *     columnar decode + string hashing of the edge cache was 90% of
-  *     the round cost), and the in-adjacency is cached as int arrays by
-  *     the one shuffle that also collapses duplicate edges. Each round
-  *     broadcasts the node-sized contribution vector and sums it in ONE
-  *     map-only job — nothing data-sized ever on the driver.
-  *   - larger graphs: ranks stay distributed, rebased each round onto a
-  *     cached-RDD leaf (the Closure pattern — carrying the loop's
-  *     lineage squares plan statistics until planning hangs), and the
-  *     sort-merge join reuses the cached `src` partitioning, so each
-  *     round shuffles only the node-sized rank frame — never the edges.
-  *
-  * (The round-7/8 layout reshuffled the full string-keyed edge list
-  * every round — at 100 TB that per-iteration reshuffle is THE
-  * scale-killer this layout removes.)
+  * Scale shape: the [[DriverCsr]] gate over the null-free edges. Within
+  * it the edges are collected once, collapsed into an int CSR on the
+  * driver and every round is an array loop (no Spark job per round).
+  * Above it ranks stay distributed, rebased each round onto a
+  * cached-RDD leaf (the Closure pattern — carrying the loop's lineage
+  * squares plan statistics until planning hangs), and the sort-merge
+  * join reuses the cached `src` partitioning, so each round shuffles
+  * only the node-sized rank frame — never the edges.
   *
   * Dangling nodes (no out-edges) leak their damped mass rather than
   * redistributing it — deterministic and documented; feed a symmetrized
@@ -74,36 +62,21 @@ object PageRank {
           .as("rank"))
   }
 
-  /** The driver-path adjacency build (did, sids) — separated so PlanSpec
-    * can pin its shape: two BroadcastHashJoins for the id mapping, ONE
-    * Exchange (the repartition by did) feeding both the duplicate
-    * collapse and the in-neighbor gather, no SortMergeJoin.
-    */
-  private[graft] def adjacencyPlan(e: DataFrame, srcIds: DataFrame,
-                                   dstIds: DataFrame): DataFrame = e
-    .join(broadcast(srcIds), e("src") === srcIds("node"))
-    .join(broadcast(dstIds), e("dst") === dstIds("node2"))
-    .select(col("id").as("sid"), col("id2").as("did"))
-    .repartition(col("did"))
-    .groupBy(col("did"), col("sid")).agg(lit(1))
-    .groupBy(col("did")).agg(collect_list(col("sid")).as("sids"))
-
   /** @param edges two-column frame (`src`, `dst`) of directed edges;
     *        duplicates are collapsed and an edge with a null endpoint is
     *        dropped
-    * @param broadcastMaxNodes graphs up to this many nodes keep the
-    *        node-sized rank state on the driver ([[DriverCsr]] states the
-    *        memory contract). Larger graphs keep ranks distributed and
-    *        shuffle only the rank frame against the cached src-partitioned
-    *        edges.
+    * @param maxEdges graphs of up to this many edges (the [[DriverCsr]]
+    *        gate, which states the memory contract) run every round on
+    *        the driver. Larger graphs keep ranks distributed and shuffle
+    *        only the rank frame against the cached src-partitioned edges.
     * @return (`node`, `rank`) — fixed-point ranks after exactly
     *         `iterations` rounds from the uniform start
     */
   def ranks(edges: DataFrame, iterations: Int = 10,
             scale: Long = 1000000000000L,
             dampNum: Long = 85, dampDen: Long = 100,
-            broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
-    val g = buildRankGraph(edges, broadcastMaxNodes)
+            maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val g = buildRankGraph(edges, maxEdges)
     try g.ranks(iterations, scale, dampNum, dampDen) finally g.close()
   }
 
@@ -112,72 +85,61 @@ object PageRank {
     require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
   }
 
-  /** The driver path's rounds over a [[DriverCsr]] graph: broadcast the
-    * n-long contribution vector (c_u = rank_u div outdeg_u), one MAP-ONLY
-    * job sums it over each node's in-neighbor array, collect n rows. No
-    * per-round shuffle, no per-round hash aggregation (profiling showed
-    * Spark's hash-agg machinery at ~0.4 µs/edge was the round floor once
-    * the edge scan itself was int-compressed).
+  /** The driver path's rounds over a weighted out-adjacency (an
+    * unweighted graph has every weight 1, so ⌊rank·1/W⌋ is the uniform
+    * ⌊rank/outdeg⌋): next(v) = base(v) + ⌊in-mass(v)·dampNum/dampDen⌋,
+    * in-mass(v) = Σ_{u→v} ⌊rank(u)·w(u,v)/W(u)⌋.
     */
-  private def ranksCsrLoop(g: DriverCsr.Graph[(Int, Array[Int])], outdeg: Array[Long],
-                           iterations: Int, scale: Long,
-                           dampNum: Long, dampDen: Long,
-                           seeds: Option[Set[Any]] = None,
-                           initFrom: Option[scala.collection.Map[Any, Long]] = None): DataFrame = {
-    val spark = g.nodes.sparkSession
-    val (nodeVals, adj, n) = (g.nodeVals, g.adj, g.n.toInt)
-
-    // uniform teleport (classic) or seed-restricted (personalized) —
-    // same loop, different base/start vectors
-    val (baseArr, init) = baseAndStart(nodeVals, scale, dampNum, dampDen, seeds)
-    // warm start: resume from a prior snapshot; nodes the snapshot has
-    // never seen start at the cold-start value (the round-R rank of a
-    // node that joined later IS its cold value)
-    var rank = initFrom.fold(init)(m =>
-      Array.tabulate(n)(j => m.getOrElse(nodeVals(j), init(j))))
+  private def ranksLoop(adj: DriverCsr.Csr, base: Array[Long], start: Array[Long],
+                        iterations: Int, dampNum: Long, dampDen: Long): Array[Long] = {
+    val (n, off, to, w) = (adj.n, adj.off, adj.to, adj.w)
+    // out-weight totals W(u), summed exactly as the distributed window sum
+    val wsum = Array.tabulate(n)(u => (off(u) until off(u + 1)).foldLeft(0L)((t, j) =>
+      Math.addExact(t, w(j))))
+    val maxWsum = if (n == 0) 0L else wsum.max
+    var rank = start
     var i = 0
     while (i < iterations) {
-      // Driver half: c_u = rank_u div outdeg_u — O(n) longs, bounded by
-      // broadcastMaxNodes (floor division; inputs non-negative, so it
-      // matches the SQL `div` of the distributed path and the oracle).
-      val c = new Array[Long](n)
+      // Overflow discipline: the distributed path's IntegralDivide over
+      // rank·w and its long sums THROW under ANSI on overflow — the loop
+      // must fail the same way, never wrap into silently wrong ranks.
+      // The proof is HOISTED out of the per-edge loop (a per-edge
+      // addExact measured ~8% on q93): ranks are non-negative and each
+      // term ⌊rank·w/W⌋ <= rank (w <= W), so every partial sum is
+      // bounded by Σ rank and each multiply by maxRank·maxW — if Σ rank,
+      // Σ rank·dampNum and maxRank·maxW all fit (checked ONCE per
+      // round), the raw loop is exact. The bound is conservative; past
+      // it the per-edge checked loop runs, throwing exactly where the
+      // distributed path would.
+      val rawSafe = try {
+        var t = 0L; var mx = 0L; var v = 0
+        while (v < n) {
+          t = Math.addExact(t, rank(v))
+          if (rank(v) > mx) mx = rank(v)
+          v += 1
+        }
+        Math.multiplyExact(t, dampNum)
+        Math.multiplyExact(mx, maxWsum); true
+      } catch { case _: ArithmeticException => false }
+      val mass = new Array[Long](n)
       var u = 0
       while (u < n) {
-        if (outdeg(u) > 0) c(u) = rank(u) / outdeg(u)
+        var j = off(u)
+        if (rawSafe)
+          while (j < off(u + 1)) { mass(to(j)) += rank(u) * w(j) / wsum(u); j += 1 }
+        else
+          while (j < off(u + 1)) {
+            mass(to(j)) = Math.addExact(mass(to(j)),
+              Math.multiplyExact(rank(u), w(j)) / wsum(u))
+            j += 1
+          }
         u += 1
       }
-      val bc = spark.sparkContext.broadcast(c)
-      // Overflow discipline: the distributed path's long sum and ANSI
-      // multiply THROW on overflow — the driver loop must fail the same
-      // way, never wrap silently into wrong ranks. The proof is HOISTED
-      // out of the per-edge loop (a per-edge addExact measured ~8% on
-      // q93): every c(u) >= 0, so any partial in-neighbor sum is bounded
-      // by totalC = Σ c(u); if totalC and totalC·dampNum both fit in a
-      // long (checked ONCE per round, on the driver), no per-edge add and
-      // no downstream multiply can overflow and the raw loop is exact.
-      // Only when the round-level bound itself overflows do we run the
-      // per-edge checked loop, which throws exactly where the distributed
-      // path would.
-      val rawSafe = try {
-        var t = 0L; var v = 0
-        while (v < n) { t = Math.addExact(t, c(v)); v += 1 }
-        Math.multiplyExact(t, dampNum); true
-      } catch { case _: ArithmeticException => false }
-      val sums = adj.map { case (did, sids) =>
-        val cv = bc.value
-        var s = 0L
-        var j = 0
-        if (rawSafe)
-          while (j < sids.length) { s += cv(sids(j)); j += 1 }
-        else
-          while (j < sids.length) { s = Math.addExact(s, cv(sids(j))); j += 1 }
-        (did, s)
-      }.collect()
-      bc.destroy()
-      rank = damped(baseArr, sums, dampNum, dampDen)
+      rank = Array.tabulate(n)(v =>
+        Math.addExact(base(v), Math.multiplyExact(mass(v), dampNum) / dampDen))
       i += 1
     }
-    rankFrame(g, rank)
+    rank
   }
 
   /** Per-node base and start vectors of the driver loops: uniform
@@ -202,77 +164,58 @@ object PageRank {
     }
   }
 
-  /** next(v) = base(v) + ⌊in-mass(v)·dampNum/dampDen⌋, checked. */
-  private def damped(baseArr: Array[Long], sums: Array[(Int, Long)],
-                     dampNum: Long, dampDen: Long): Array[Long] = {
-    val next = baseArr.clone()
-    sums.foreach { case (did, s) =>
-      next(did) = Math.addExact(baseArr(did),
-        Math.multiplyExact(s, dampNum) / dampDen) }
-    next
-  }
-
-  private def rankFrame(g: DriverCsr.Graph[_], rank: Array[Long]): DataFrame =
-    g.frame(Iterator.tabulate(rank.length)(i => Row(g.nodeVals(i), rank(i))),
+  private def rankFrame(g: DriverCsr.Edges, rank: Array[Long]): DataFrame =
+    g.nodeFrame(Iterator.tabulate(rank.length)(i => Row(g.nodeVals(i), rank(i))),
       StructField("rank", LongType, nullable = false))
 
-  /** Shared-build handle for the snapshot+resume gates: the [[DriverCsr]]
-    * graph (dictionary + cached CSR in-adjacency) and the out-degree
-    * vector built ONCE; cold and resumed walks run over it (the q194 gate
-    * runs two walks on one unchanged graph). Graphs above
-    * `broadcastMaxNodes` get a fallback handle whose walks run the
-    * distributed loop per call, unchanged.
+  /** The seed set IS the query — driver-collected under the bounded
+    * contract regardless of path (probeCells' shape).
     */
-  def buildRankGraph(edges: DataFrame,
-                     broadcastMaxNodes: Long = DriverCsr.MaxNodes): RankGraph = {
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    new RankGraph(e, DriverCsr.build("PageRank.buildRankGraph", DriverCsr.nodesOf(e, "src", "dst"),
-      broadcastMaxNodes) { (srcIds, dstIds) =>
-      // ONE int shuffle builds both the dedup and the adjacency (see
-      // adjacencyPlan); long sums are exact and commutative, so the
-      // gather order is free
-      adjacencyPlan(e, srcIds, dstIds)
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray))
-    })
+  private def seedValues(seeds: DataFrame): Set[Any] = {
+    val v = seeds.select(col(seeds.columns.head)).distinct().collect().map(_.get(0)).toSet
+    require(v.nonEmpty, "seeds must be non-empty")
+    v
   }
 
-  /** See [[buildRankGraph]]. Every walk is bit-identical to the one-shot
-    * entry points (same dictionary, same adjacency, same loop).
+  /** Shared-build handle for the snapshot+resume gates: the gated edges
+    * and their CSR built ONCE; cold and resumed walks run over them (the
+    * q194 gate runs two walks on one unchanged graph). Above the gate
+    * each walk runs the distributed loop over the cached edges.
     */
-  final class RankGraph private[operators] (
-      e: DataFrame, g: DriverCsr.Graph[(Int, Array[Int])]) {
+  def buildRankGraph(edges: DataFrame,
+                     maxEdges: Long = DriverCsr.MaxEdges): RankGraph =
+    new RankGraph(DriverCsr.edges("PageRank.buildRankGraph",
+      edges.select(col("src"), col("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull), maxEdges))
 
-    // Out-degrees from the deduped adjacency itself (sid occurrences
-    // across all in-neighbor arrays) — one pass over the cached CSR, which
-    // also materializes it; no second shuffle.
-    private val outdeg: Array[Long] = if (!g.onDriver) null else {
-      val n = g.n.toInt
-      g.adj.treeAggregate(new Array[Long](n))(
-        seqOp = { (acc, kv) =>
-          val sids = kv._2
-          var j = 0
-          while (j < sids.length) { acc(sids(j)) += 1; j += 1 }
-          acc
-        },
-        combOp = { (a, b) =>
-          var j = 0
-          while (j < n) { a(j) += b(j); j += 1 }
-          a
-        })
+  /** See [[buildRankGraph]]. Every walk is bit-identical to the one-shot
+    * entry points (same edges, same loop).
+    */
+  final class RankGraph private[operators] (g: DriverCsr.Edges) {
+
+    // duplicate edges collapse; every weight is 1
+    private lazy val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst,
+      Array.fill(g.src.length)(1L), (a, _) => a)
+
+    private def empty: DataFrame = rankFrame(g, Array.empty)
+
+    private def walk(iterations: Int, scale: Long, dampNum: Long, dampDen: Long,
+                     seeds: Option[Set[Any]], prior: Map[Any, Long]): DataFrame = {
+      val (base, start) = baseAndStart(g.nodeVals, scale, dampNum, dampDen, seeds)
+      // warm start: nodes the snapshot has never seen start at the
+      // cold-start value (the round-R rank of a node that joined later
+      // IS its cold value)
+      val init = Array.tabulate(start.length)(j => prior.getOrElse(g.nodeVals(j), start(j)))
+      rankFrame(g, ranksLoop(adj, base, init, iterations, dampNum, dampDen))
     }
-
-    private def empty: DataFrame = g.nodes.withColumn("rank", lit(0L))
 
     /** [[PageRank.ranks]] over the prebuilt graph. */
     def ranks(iterations: Int = 10, scale: Long = 1000000000000L,
               dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
       checkRounds(iterations, dampNum, dampDen)
-      if (g.n == 0) empty
-      else if (g.onDriver)
-        ranksCsrLoop(g, outdeg, iterations, scale, dampNum, dampDen)
-      else ranksDistributedState(e.sparkSession, e, g.nodes, g.n, iterations,
-        scale, dampNum, dampDen)
+      if (g.count == 0) empty
+      else if (g.onDriver) walk(iterations, scale, dampNum, dampDen, None, Map.empty)
+      else ranksDistributedState(g.cached, g.nodes, iterations, scale, dampNum, dampDen)
     }
 
     /** [[PageRank.resumeRanks]] over the prebuilt graph. */
@@ -281,15 +224,13 @@ object PageRank {
                    dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
       checkRounds(iterations, dampNum, dampDen)
       val p = prior.select(col("node"), col("rank"))
-      if (g.n == 0) empty
-      else if (g.onDriver) {
+      if (g.count == 0) empty
+      else if (g.onDriver)
         // the snapshot is node-sized, within the driver contract
-        val m: Map[Any, Long] =
-          p.collect().map(r => (r.get(0), r.getLong(1))).toMap
-        ranksCsrLoop(g, outdeg, iterations, scale, dampNum, dampDen,
-          initFrom = Some(m))
-      } else ranksDistributedState(e.sparkSession, e, g.nodes, g.n,
-        iterations, scale, dampNum, dampDen, prior = Some(p))
+        walk(iterations, scale, dampNum, dampDen, None,
+          p.collect().map(r => (r.get(0), r.getLong(1))).toMap)
+      else ranksDistributedState(g.cached, g.nodes, iterations, scale, dampNum, dampDen,
+        prior = Some(p))
     }
 
     /** [[PageRank.personalizedRanks]] over the prebuilt graph. */
@@ -297,20 +238,16 @@ object PageRank {
                                         scale: Long, dampNum: Long,
                                         dampDen: Long): DataFrame = {
       checkRounds(iterations, dampNum, dampDen)
-      val seedSet = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      // the seed set IS the query — driver-collected under the bounded
-      // contract regardless of path (probeCells' shape)
-      val seedVals: Set[Any] = seedSet.collect().map(_.get(0)).toSet
-      require(seedVals.nonEmpty, "seeds must be non-empty")
+      val seedVals = seedValues(seeds)
       if (g.onDriver)
-        // same dictionary-CSR loop as [[ranks]] — only base/start differ
-        ranksCsrLoop(g, outdeg, iterations, scale, dampNum, dampDen,
-          seeds = Some(seedVals))
-      else personalizedDistributedState(e.sparkSession, e, g.nodes, seedSet,
+        // same loop as [[ranks]] — only base/start differ
+        walk(iterations, scale, dampNum, dampDen, Some(seedVals), Map.empty)
+      else personalizedDistributedState(g.cached, g.nodes,
+        seeds.select(col(seeds.columns.head).as("node")).distinct(),
         iterations, scale, dampNum, dampDen)
     }
 
-    /** Release the graph's caches ([[DriverCsr.Graph.close]]). */
+    /** Release the cached edges ([[DriverCsr.Edges.close]]). */
     def close(): Unit = g.close()
   }
 
@@ -333,19 +270,18 @@ object PageRank {
     * multiplyExact/addExact in the driver loop): scale · max-weight
     * < 2⁶³.
     *
-    * Scale shape mirrors [[ranks]]: a [[DriverCsr]] loop when the node
-    * count fits `broadcastMaxNodes` (the in-adjacency carries a parallel
-    * weight array; W rides one treeAggregate), else the distributed loop
-    * (weighted edges cached src-partitioned, rounds exchange only the
-    * rank frame).
+    * Scale shape mirrors [[ranks]]: within the [[DriverCsr]] gate the
+    * same array loop over a weighted CSR (duplicate weights summed in
+    * process), else the distributed loop (weighted edges cached
+    * src-partitioned, rounds exchange only the rank frame).
     */
   def weightedRanks(edges: DataFrame, srcCol: String, dstCol: String,
                     weightCol: String, iterations: Int = 10,
                     scale: Long = 1000000000000L,
                     dampNum: Long = 85, dampDen: Long = 100,
-                    broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame =
+                    maxEdges: Long = DriverCsr.MaxEdges): DataFrame =
     weighted(edges, srcCol, dstCol, weightCol, None, iterations, scale,
-      dampNum, dampDen, broadcastMaxNodes)
+      dampNum, dampDen, maxEdges)
 
   /** WEIGHTED + PERSONALIZED PageRank — the two restart variants
     * COMPOSED: rank flows in proportion to integer edge weights
@@ -357,25 +293,24 @@ object PageRank {
     * together". Same exact-integer discipline as both parents — the
     * oracle unrolls every round with the per-edge division and the
     * seed-flag CASE; nodes unreachable from the seeds hold rank 0.
-    * Both scale shapes: the [[DriverCsr]] loop when the node count fits
-    * `broadcastMaxNodes`, else the distributed loop carrying each node's
-    * base on its zero-contribution row.
+    * Both scale shapes: the [[DriverCsr]] array loop within the gate,
+    * else the distributed loop carrying each node's base on its
+    * zero-contribution row.
     */
   def weightedPersonalizedRanks(edges: DataFrame, srcCol: String,
                                 dstCol: String, weightCol: String,
                                 seeds: DataFrame, iterations: Int = 10,
                                 scale: Long = 1000000000000L,
                                 dampNum: Long = 85, dampDen: Long = 100,
-                                broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame =
+                                maxEdges: Long = DriverCsr.MaxEdges): DataFrame =
     weighted(edges, srcCol, dstCol, weightCol, Some(seeds), iterations, scale,
-      dampNum, dampDen, broadcastMaxNodes)
+      dampNum, dampDen, maxEdges)
 
   private def weighted(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, seeds: Option[DataFrame],
                        iterations: Int, scale: Long, dampNum: Long,
-                       dampDen: Long, broadcastMaxNodes: Long): DataFrame = {
+                       dampDen: Long, maxEdges: Long): DataFrame = {
     checkRounds(iterations, dampNum, dampDen)
-    val spark = edges.sparkSession
     // Non-positive input weights FAIL LOUDLY (raise_error at execution)
     // rather than being silently dropped: a filter-before-collapse would
     // make mixed-sign duplicates (e.g. +5 and −5 for one edge) yield 5
@@ -385,131 +320,33 @@ object PageRank {
     val wChecked = when(col("w") > 0, col("w")).otherwise(
       raise_error(concat(lit("weightedRanks: weight must be > 0, got "),
         coalesce(col("w").cast("string"), lit("NULL")))).cast("long"))
-    // raw projection with the per-row positivity check; the driver path's
-    // duplicate-edge SUM collapse rides the adjacency's int exchange, the
-    // distributed path collapses upstream
+    // raw projection with the per-row positivity check, which the gate's
+    // first job runs; each side collapses duplicates itself
     val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src"), col("dst"), wChecked.as("w"))
-    // the seed set IS the query — driver-collected under the bounded
-    // contract regardless of path (personalizedRanks' shape)
-    val seedVals: Option[Set[Any]] = seeds.map { s =>
-      val v = s.select(col(s.columns.head).as("node")).distinct()
-        .collect().map(_.get(0)).toSet
-      require(v.nonEmpty, "seeds must be non-empty")
-      v
-    }
-    val g = DriverCsr.build("PageRank.weighted", DriverCsr.nodesOf(eRaw, "src", "dst"),
-        broadcastMaxNodes) { (srcIds, dstIds) =>
-      // weighted in-adjacency: (did, sids, ws) — the duplicate-edge SUM
-      // collapse rides this int exchange (the (did, sid) aggregate's
-      // distribution is satisfied by the did partitioning, so no second
-      // exchange appears)
-      eRaw
-        .join(broadcast(srcIds), eRaw("src") === srcIds("node"))
-        .join(broadcast(dstIds), eRaw("dst") === dstIds("node2"))
-        .select(col("id").as("sid"), col("id2").as("did"), col("w"))
-        .repartition(col("did"))
-        .groupBy(col("did"), col("sid")).agg(sum(col("w")).as("w"))
-        .groupBy(col("did"))
-        .agg(collect_list(col("sid")).as("sids"), collect_list(col("w")).as("ws"))
-        .rdd.map(r => (r.getInt(0), r.getSeq[Int](1).toArray,
-          r.getSeq[Long](2).toArray))
-    }
+    val seedVals = seeds.map(seedValues)
+    val g = DriverCsr.edges("PageRank.weighted", eRaw, maxEdges)
     try {
-      if (g.n == 0) g.nodes.withColumn("rank", lit(0L))
-      else if (g.onDriver)
-        weightedCsrLoop(g, iterations, scale, dampNum, dampDen, seedVals)
-      else weightedDistributedState(spark,
-        eRaw.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
-        g.nodes, g.n, iterations, scale, dampNum, dampDen, seedVals)
+      if (g.count == 0) rankFrame(g, Array.empty)
+      else if (g.onDriver) {
+        // duplicate edges collapse by SUMMING their weights, exactly
+        val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst, g.rows.map(_.getLong(2)),
+          (a, b) => Math.addExact(a, b))
+        val (base, start) = baseAndStart(g.nodeVals, scale, dampNum, dampDen, seedVals)
+        rankFrame(g, ranksLoop(adj, base, start, iterations, dampNum, dampDen))
+      } else weightedDistributedState(
+        g.cached.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
+        g.nodes, iterations, scale, dampNum, dampDen, seedVals)
     } finally g.close()
   }
 
-  private def weightedCsrLoop(g: DriverCsr.Graph[(Int, Array[Int], Array[Long])],
-                              iterations: Int, scale: Long, dampNum: Long,
-                              dampDen: Long,
-                              seeds: Option[Set[Any]]): DataFrame = {
-    val spark = g.nodes.sparkSession
-    val (adj, n) = (g.adj, g.n.toInt)
-    // out-weight totals W(u) from the cached adjacency — one pass
-    val wsum = adj.treeAggregate(new Array[Long](n))(
-      seqOp = { (acc, kv) =>
-        val (sids, ws) = (kv._2, kv._3)
-        var j = 0
-        while (j < sids.length) {
-          acc(sids(j)) = Math.addExact(acc(sids(j)), ws(j)); j += 1 }
-        acc
-      },
-      combOp = { (x, y) =>
-        var j = 0
-        while (j < n) { x(j) = Math.addExact(x(j), y(j)); j += 1 }
-        x
-      })
-    val (baseArr, init) = baseAndStart(g.nodeVals, scale, dampNum, dampDen, seeds)
-    var rank = init
-    // per-round raw-loop proof needs the largest out-weight total once:
-    // every edge weight w <= wsum(src), so rank·w <= maxRank·maxWsum
-    val maxWsum = {
-      var mx = 0L; var v = 0
-      while (v < n) { if (wsum(v) > mx) mx = wsum(v); v += 1 }
-      mx
-    }
-    var i = 0
-    while (i < iterations) {
-      val bc = spark.sparkContext.broadcast(rank)
-      // Overflow discipline: the distributed path's IntegralDivide over
-      // rank·w throws under ANSI when rank·max-weight crosses 2⁶³ — the
-      // driver loop must fail the same way, never wrap into silently
-      // wrong ranks. As in ranksCsrLoop, the proof is HOISTED out of
-      // the per-edge loop: ranks are non-negative, each term
-      // ⌊rank·w/wsum⌋ <= rank (w <= wsum), so partial sums are bounded by
-      // totalRank = Σ rank, and each multiply by maxRank·maxWsum — if
-      // totalRank, totalRank·dampNum, and maxRank·maxWsum all fit
-      // (checked ONCE per round), the raw loop cannot overflow and is
-      // bit-identical. The maxRank·maxWsum bound is conservative (it can
-      // fail where no actual edge overflows); failing it only routes the
-      // round through the per-edge checked loop, which throws exactly
-      // where the distributed path would.
-      val rawSafe = try {
-        var t = 0L; var mx = 0L; var v = 0
-        while (v < n) {
-          t = Math.addExact(t, rank(v))
-          if (rank(v) > mx) mx = rank(v)
-          v += 1
-        }
-        Math.multiplyExact(t, dampNum)
-        Math.multiplyExact(mx, maxWsum); true
-      } catch { case _: ArithmeticException => false }
-      val sums = adj.map { case (did, sids, ws) =>
-        val rv = bc.value
-        var s = 0L
-        var j = 0
-        if (rawSafe)
-          while (j < sids.length) {
-            s += rv(sids(j)) * ws(j) / wsum(sids(j))
-            j += 1
-          }
-        else
-          while (j < sids.length) {
-            s = Math.addExact(s,
-              Math.multiplyExact(rv(sids(j)), ws(j)) / wsum(sids(j)))
-            j += 1
-          }
-        (did, s)
-      }.collect()
-      bc.destroy()
-      rank = damped(baseArr, sums, dampNum, dampDen)
-      i += 1
-    }
-    rankFrame(g, rank)
-  }
-  private def weightedDistributedState(spark: SparkSession, e: DataFrame,
-                                       nodes0: DataFrame, n: Long,
+  private def weightedDistributedState(e: DataFrame, nodes0: DataFrame,
                                        iterations: Int, scale: Long,
                                        dampNum: Long, dampDen: Long,
-                                       seeds: Option[Set[Any]] = None): DataFrame = {
+                                       seeds: Option[Set[Any]]): DataFrame = {
+    val spark = e.sparkSession
     val edgesW = e
       .repartition(col("src"))
       .withColumn("wsum", sum(col("w")).over(Window.partitionBy(col("src"))))
@@ -519,6 +356,7 @@ object PageRank {
     // extra per-round join appears)
     val (nodesBase0, startExpr) = seeds match {
       case None =>
+        val n = nodes0.count()
         (nodes0.withColumn("b",
           lit(scale * (dampDen - dampNum) / dampDen / n)),
           lit(scale / n))
@@ -586,8 +424,8 @@ object PageRank {
   def resumeRanks(edges: DataFrame, prior: DataFrame, iterations: Int = 5,
                   scale: Long = 1000000000000L,
                   dampNum: Long = 85, dampDen: Long = 100,
-                  broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
-    val g = buildRankGraph(edges, broadcastMaxNodes)
+                  maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val g = buildRankGraph(edges, maxEdges)
     try g.resumeFrom(prior, iterations, scale, dampNum, dampDen)
     finally g.close()
   }
@@ -610,18 +448,18 @@ object PageRank {
   def personalizedRanks(edges: DataFrame, seeds: DataFrame,
                         iterations: Int = 10, scale: Long = 1000000000000L,
                         dampNum: Long = 85, dampDen: Long = 100,
-                        broadcastMaxNodes: Long = DriverCsr.MaxNodes): DataFrame = {
-    val g = buildRankGraph(edges, broadcastMaxNodes)
+                        maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
+    val g = buildRankGraph(edges, maxEdges)
     try g.personalized(seeds, iterations, scale, dampNum, dampDen)
     finally g.close()
   }
 
   /** Big-graph fallback of [[personalizedRanks]]. */
-  private def personalizedDistributedState(spark: SparkSession, e: DataFrame,
-                                           nodesPlain: DataFrame,
+  private def personalizedDistributedState(e: DataFrame, nodesPlain: DataFrame,
                                            seedSet: DataFrame, iterations: Int,
                                            scale: Long, dampNum: Long,
                                            dampDen: Long): DataFrame = {
+    val spark = e.sparkSession
     val edgesDeg = e
       .repartition(col("src"))
       .groupBy(col("src"), col("dst")).agg(lit(1))
@@ -678,8 +516,8 @@ object PageRank {
     * cached-RDD leaf; the join reuses the cached edge partitioning so only
     * the rank frame shuffles.
     */
-  private def ranksDistributedState(spark: SparkSession, e: DataFrame, nodes0: DataFrame,
-                                    n: Long, iterations: Int, scale: Long,
+  private def ranksDistributedState(e: DataFrame, nodes0: DataFrame,
+                                    iterations: Int, scale: Long,
                                     dampNum: Long, dampDen: Long,
                                     prior: Option[DataFrame] = None): DataFrame = {
     // ONE edge shuffle: partition by src, collapse duplicates (satisfied
@@ -692,8 +530,10 @@ object PageRank {
       .select(col("src"), col("dst"))
       .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
       .persist()
+    val spark = e.sparkSession
     val nRdd = nodes0.rdd
     nRdd.cache()
+    val n = nRdd.count()
     val nodes = spark.createDataFrame(nRdd, nodes0.schema)
     val base = scale * (dampDen - dampNum) / dampDen / n
     var ranks = prior match {

@@ -26,23 +26,27 @@ object Closure {
   /** The converged pointer-doubling mapping of `edges` (src → dst): one
     * (src, terminal dst, hops) triple per path, so a diamond lists its
     * terminal once per path. Each round composes the mapping with itself,
-    * as a left self-join on dst = src would: a null key never matches, and
-    * a successor row with a null dst keeps the row's own dst but still
-    * counts as an extension. Iterations are bounded to guard against
-    * cyclic input.
+    * as a left self-join on dst = src would: a null key never matches.
+    * A path that steps onto a successor row with a null dst ends there:
+    * it keeps its own dst, adds that row's hops and is terminal, so it
+    * composes no further and does not count as an extension. Iterations
+    * are bounded to guard against cyclic input.
     */
   def doubling(edges: Seq[(Any, Any)], maxIter: Int = 30): Seq[(Any, Any, Int)] = {
-    var m: Seq[(Any, Any, Int)] = edges.map { case (s, d) => (s, d, 1) }
+    // (src, dst, hops, terminal)
+    var m: Seq[(Any, Any, Int, Boolean)] = edges.map { case (s, d) => (s, d, 1, d == null) }
     var iter = 0
     var extending = true
     while (extending && iter < maxIter) {
       val bySrc = m.filter(_._1 != null).groupBy(_._1)
       extending = false
-      m = m.flatMap { case row @ (s, d, h) =>
-        bySrc.get(d) match {
+      m = m.flatMap { case row @ (s, d, h, done) =>
+        bySrc.get(d).filter(_ => !done) match {
           case Some(next) =>
-            extending = true
-            next.map { case (_, nd, nh) => (s, if (nd == null) d else nd, h + nh) }
+            next.map { case (_, nd, nh, ndone) =>
+              if (nd == null) (s, d, h + nh, true)
+              else { extending = true; (s, nd, h + nh, ndone) }
+            }
           case None => Seq(row)
         }
       }
@@ -50,7 +54,7 @@ object Closure {
     }
     require(!extending,
       s"Closure.resolve: still extending after $maxIter doublings (cyclic edges?)")
-    m
+    m.map { case (s, d, h, _) => (s, d, h) }
   }
 
   /** Resolve every `node` to its terminal successor(s).

@@ -159,54 +159,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("q93: PageRank adjacency build — broadcast id mapping, one edge shuffle, no SMJ") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions.col
-    val e = spark.createDataFrame(
-      Seq(Row("a", "b"), Row("b", "c"), Row("c", "a")).asJava,
-      StructType(Seq(StructField("src", StringType), StructField("dst", StringType))))
-    val ids = spark.createDataFrame(
-      Seq(Row("a", 0), Row("b", 1), Row("c", 2)).asJava,
-      StructType(Seq(StructField("node", StringType), StructField("id", IntegerType))))
-    val p = operators.PageRank.adjacencyPlan(e, ids,
-      ids.select(col("node").as("node2"), col("id").as("id2")))
-      .queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin".r.findAllIn(p).size == 2, p.take(1500))
-    assert(!p.contains("SortMergeJoin"), p.take(1500))
-    // the ONE edge shuffle: repartition by did; the dedup aggregate and the
-    // in-neighbor gather both reuse it, so no ENSURE_REQUIREMENTS exchange
-    // may appear above it.
-    assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
-      "adjacency build must shuffle the edges exactly once:\n" + p.take(1500))
-  }
-
-  test("q220: weighted BFS adjacency build — broadcast id mapping, one edge shuffle, min-collapse rides it") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions.col
-    val e = spark.createDataFrame(
-      Seq(Row("a", "b", 2L), Row("a", "b", 5L), Row("b", "c", 1L)).asJava,
-      StructType(Seq(StructField("src", StringType), StructField("dst", StringType),
-        StructField("w", LongType))))
-    val ids = spark.createDataFrame(
-      Seq(Row("a", 0), Row("b", 1), Row("c", 2)).asJava,
-      StructType(Seq(StructField("node", StringType), StructField("id", IntegerType))))
-    val p = operators.Bfs.weightedAdjacencyPlan(e, ids,
-      ids.select(col("node").as("node2"), col("id").as("id2")))
-      .queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin".r.findAllIn(p).size == 2, p.take(1500))
-    assert(!p.contains("SortMergeJoin"), p.take(1500))
-    // ONE edge shuffle: repartition by did; the (did, sid) min-collapse
-    // and the in-neighbor gather both reuse it — no ENSURE_REQUIREMENTS
-    // exchange may appear above it (the parallel-edge dedup no longer
-    // pays its own upstream string-keyed exchange).
-    assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
-      "weighted adjacency build must shuffle the edges exactly once:\n" + p.take(1500))
-  }
-
   test("q114: prefix-filtered similarity join has no cartesian; df count combines map-side") {
     val p = plan("q114_setsim_join")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -15,13 +15,11 @@ import scala.jdk.CollectionConverters._
   * it, runs on the graph without that edge and is checked to reject it on
   * both sides).
   *
-  * Node-gated operators run on string ids at the default gate and with
-  * `broadcastMaxNodes = 0`. Label propagation has no gate parameter: its
-  * driver path takes long ids only, so it runs on a long-keyed copy
-  * (a..e → 1..5, same order) against the string-keyed distributed loop.
-  *
-  * Edge-gated entries run at `DriverCsr.MaxEdges` and with `maxEdges = 0`,
-  * over string ids and over copies keyed by Double, Date and strings whose
+  * Every entry runs at `DriverCsr.MaxEdges` and with `maxEdges = 0`,
+  * which forces the distributed loop. The PageRank, HITS, label
+  * propagation and BFS entries run on string ids, and again over an edge
+  * frame whose every edge has a null endpoint. The other entries run over
+  * string ids and over copies keyed by Double, Date and strings whose
   * UTF-8 order differs from their UTF-16 order. Each copy maps a..e to
   * keys in the same Spark order, so its answer is the string answer with
   * the ids mapped.
@@ -38,84 +36,110 @@ class AwkwardGraphInputSpec extends AnyFunSuite with SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.mkString("|")).sorted
 
-  /** Label propagation: long-keyed copy when `m` > 0, else string keys. */
-  private def lpa(m: Long)(run: DataFrame => DataFrame): DataFrame = {
-    val toLong = udf((s: String) => Option(s).map(_.head - 'a' + 1L))
-    val toStr = udf((l: Long) => ('a' + l - 1).toChar.toString)
-    if (m == 0) run(edges)
-    else run(edges.select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst")))
-      .select(toStr(col("node")).as("node"), toStr(col("label")).as("label"))
+  /** The (node, dist) rows `Bfs.refreshDistances` hands its consumer. */
+  private def refreshed(e: DataFrame, prior: DataFrame, m: Long): DataFrame = {
+    var out: Seq[Row] = Nil
+    var schema: StructType = null
+    Bfs.refreshDistances(e, "src", "dst", e, seeds, prior, maxEdges = m) { df =>
+      out = df.collect().toSeq; schema = df.schema
+    }
+    spark.createDataFrame(out.asJava, schema)
   }
 
-  // (operator, run at a node gate, rows on both sides)
-  private val nodeGated: Seq[(String, Long => DataFrame, Seq[String])] = Seq(
+  // (operator, run over an edge frame at a gate, rows on both sides)
+  private val nodeGated: Seq[(String, (DataFrame, Long) => DataFrame, Seq[String])] = Seq(
     ("PageRank.ranks",
-      m => PageRank.ranks(edges, iterations = 3, broadcastMaxNodes = m),
+      (e, m) => PageRank.ranks(e, iterations = 3, maxEdges = m),
       Seq("a|78875000000", "b|97043750000", "c|84293750000", "d|148521875000",
         "e|153940625000")),
     ("PageRank.resumeRanks",
-      m => PageRank.resumeRanks(edges, PageRank.ranks(edges, iterations = 2),
-        iterations = 2, broadcastMaxNodes = m),
+      (e, m) => PageRank.resumeRanks(e, PageRank.ranks(e, iterations = 2),
+        iterations = 2, maxEdges = m),
       Seq("a|65824843750", "b|97043750000", "c|71243593750", "d|128946640625",
         "e|134365390625")),
     ("PageRank.personalizedRanks",
-      m => PageRank.personalizedRanks(edges, seeds, iterations = 3, broadcastMaxNodes = m),
+      (e, m) => PageRank.personalizedRanks(e, seeds, iterations = 3, maxEdges = m),
       Seq("a|303531250000", "b|127500000000", "c|54187500000", "d|153531250000",
         "e|54187500000")),
     ("PageRank.weightedRanks",
-      m => PageRank.weightedRanks(edges, "src", "dst", "w", iterations = 3,
-        broadcastMaxNodes = m),
+      (e, m) => PageRank.weightedRanks(e, "src", "dst", "w", iterations = 3,
+        maxEdges = m),
       Seq("a|70800000000", "b|90180000000", "c|57858750000", "d|141557853497",
         "e|180618141398")),
     ("PageRank.weightedPersonalizedRanks",
-      m => PageRank.weightedPersonalizedRanks(edges, "src", "dst", "w", seeds,
-        iterations = 3, broadcastMaxNodes = m),
+      (e, m) => PageRank.weightedPersonalizedRanks(e, "src", "dst", "w", seeds,
+        iterations = 3, maxEdges = m),
       Seq("a|242118750000", "b|127500000000", "c|21675000000", "d|30706250000",
         "e|86700000000")),
     ("Hits.hubsAuthorities",
-      m => Hits.hubsAuthorities(edges, "src", "dst", rounds = 3, broadcastMaxNodes = m),
+      (e, m) => Hits.hubsAuthorities(e, "src", "dst", rounds = 3, maxEdges = m),
       Seq("a|20833|416666", "b|708333|41666", "c|708333|416666", "d|1000000|1000000",
         "e|0|1000000")),
     ("Hits.resumeHubsAuthorities",
-      m => Hits.resumeHubsAuthorities(edges, "src", "dst",
-        Hits.hubsAuthorities(edges, "src", "dst", rounds = 1), rounds = 2,
-        broadcastMaxNodes = m),
+      (e, m) => Hits.resumeHubsAuthorities(e, "src", "dst",
+        Hits.hubsAuthorities(e, "src", "dst", rounds = 1), rounds = 2,
+        maxEdges = m),
       Seq("a|20833|416666", "b|708333|41666", "c|708333|416666", "d|1000000|1000000",
         "e|0|1000000")),
     ("LabelPropagation.propagate",
-      m => lpa(m)(LabelPropagation.propagate(_, "src", "dst", rounds = 1)),
+      (e, m) => LabelPropagation.propagate(e, "src", "dst", rounds = 1, maxEdges = m),
       Seq("a|b", "b|a", "c|a", "d|c", "e|b")),
     ("LabelPropagation.resumePropagate",
-      m => lpa(m)(e => LabelPropagation.resumePropagate(e, "src", "dst",
-        LabelPropagation.propagate(e, "src", "dst", rounds = 1), rounds = 1)),
+      (e, m) => LabelPropagation.resumePropagate(e, "src", "dst",
+        LabelPropagation.propagate(e, "src", "dst", rounds = 1), rounds = 1, maxEdges = m),
       Seq("a|a", "b|b", "c|a", "d|a", "e|a")),
     ("Bfs.hopDistances",
-      m => Bfs.hopDistances(edges, "src", "dst", seeds, rounds = 4, broadcastMaxNodes = m),
+      (e, m) => Bfs.hopDistances(e, "src", "dst", seeds, rounds = 4, maxEdges = m),
       Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
     ("Bfs.resumeDistances",
-      m => Bfs.resumeDistances(edges, "src", "dst",
-        Bfs.hopDistances(edges, "src", "dst", seeds, rounds = 1), rounds = 3,
-        broadcastMaxNodes = m),
+      (e, m) => Bfs.resumeDistances(e, "src", "dst",
+        Bfs.hopDistances(e, "src", "dst", seeds, rounds = 1), rounds = 3,
+        maxEdges = m),
       Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
     ("Bfs.weightedDistances",
-      m => Bfs.weightedDistances(edges, "src", "dst", "w", seeds, rounds = 4,
-        broadcastMaxNodes = m),
+      (e, m) => Bfs.weightedDistances(e, "src", "dst", "w", seeds, rounds = 4,
+        maxEdges = m),
       Seq("a|0", "b|2", "c|3", "d|4", "e|6")),
     ("Bfs.resumeWeightedDistances",
-      m => Bfs.resumeWeightedDistances(edges, "src", "dst", "w",
-        Bfs.weightedDistances(edges, "src", "dst", "w", seeds, rounds = 1), rounds = 3,
-        broadcastMaxNodes = m),
+      (e, m) => Bfs.resumeWeightedDistances(e, "src", "dst", "w",
+        Bfs.weightedDistances(e, "src", "dst", "w", seeds, rounds = 1), rounds = 3,
+        maxEdges = m),
       Seq("a|0", "b|2", "c|3", "d|4", "e|6")),
     ("Bfs.landmarkDistances",
-      m => Bfs.landmarkDistances(edges, "src", "dst", Seq("a", "d").toDF("node"),
-        rounds = 4, broadcastMaxNodes = m),
-      Seq("a|a|0", "b|a|1", "c|a|2", "d|a|3", "d|d|0", "e|a|2", "e|d|1")))
+      (e, m) => Bfs.landmarkDistances(e, "src", "dst", Seq("a", "d").toDF("node"),
+        rounds = 4, maxEdges = m),
+      Seq("a|a|0", "b|a|1", "c|a|2", "d|a|3", "d|d|0", "e|a|2", "e|d|1")),
+    ("Bfs.hopDistancesToFixpoint",
+      (e, m) => Bfs.hopDistancesToFixpoint(e, "src", "dst", seeds, maxEdges = m),
+      Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
+    ("Bfs.refreshDistances from an empty prior",
+      (e, m) => refreshed(e, Bfs.hopDistances(e, "src", "dst", seeds, rounds = 1).limit(0), m),
+      Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
+    ("Bfs.refreshDistances from a one-round prior",
+      (e, m) => refreshed(e, Bfs.hopDistances(e, "src", "dst", seeds, rounds = 1), m),
+      Seq("c|2", "d|3", "e|2")))
 
   nodeGated.foreach { case (name, run, want) =>
     test(s"$name: driver path and distributed loop on string ids, duplicates, a self-loop, a null") {
       try {
-        assert(rows(run(DriverCsr.MaxNodes)) == want, s"$name driver path")
-        assert(rows(run(0L)) == want, s"$name distributed loop")
+        assert(rows(run(edges, DriverCsr.MaxEdges)) == want, s"$name driver path")
+        assert(rows(run(edges, 0L)) == want, s"$name distributed loop")
+      } finally graft.Storage.releaseAll(spark)
+    }
+  }
+
+  test("an edge frame whose every edge has a null endpoint gives one empty typed result") {
+    val nulls = Seq[(String, String, java.lang.Long)](("a", null, 1L), (null, "b", 2L),
+      (null, null, 3L)).toDF("src", "dst", "w")
+    // personalized PageRank rejects a graph that holds no seed
+    for ((name, run, _) <- nodeGated if name != "PageRank.personalizedRanks") {
+      try {
+        val types = run(edges, DriverCsr.MaxEdges).schema.map(_.dataType)
+        Seq(DriverCsr.MaxEdges, 0L).foreach { m =>
+          val got = run(nulls, m)
+          assert(got.collect().isEmpty, s"$name maxEdges = $m")
+          assert(got.schema.map(_.dataType) == types, s"$name maxEdges = $m")
+        }
       } finally graft.Storage.releaseAll(spark)
     }
   }

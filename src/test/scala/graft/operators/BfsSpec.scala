@@ -20,9 +20,9 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     "x" -> "y")
 
   private def run(seeds: Seq[String], rounds: Int,
-                  maxNodes: Long = 2000000L): Map[String, Long] = {
+                  maxEdges: Long = 2000000L): Map[String, Long] = {
     val got = Bfs.hopDistances(edges.toDF("src", "dst"), "src", "dst",
-        seeds.toDF("node"), rounds, broadcastMaxNodes = maxNodes)
+        seeds.toDF("node"), rounds, maxEdges = maxEdges)
       .as[(String, Long)].collect().toMap
     graft.Storage.releaseAll(spark)
     got
@@ -55,9 +55,9 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     // up front, so both paths agree (and actually reach)
     val es = Seq(1L -> 2L, 2L -> 3L, 10L -> 11L).toDF("src", "dst")
     val seeds = Seq(1).toDF("node") // IntegerType vs LongType nodes
-    def runOn(maxNodes: Long): Map[Long, Long] = {
+    def runOn(maxEdges: Long): Map[Long, Long] = {
       val got = Bfs.hopDistances(es, "src", "dst", seeds, rounds = 3,
-          broadcastMaxNodes = maxNodes)
+          maxEdges = maxEdges)
         .as[(Long, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -72,9 +72,9 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     val es = (0 until 400).map(_ =>
       s"n${rnd.nextInt(60)}" -> s"n${rnd.nextInt(60)}")
     val seeds = Seq("n0", "n17")
-    def runOn(maxNodes: Long): Map[String, Long] = {
+    def runOn(maxEdges: Long): Map[String, Long] = {
       val got = Bfs.hopDistances(es.toDF("src", "dst"), "src", "dst",
-          seeds.toDF("node"), rounds = 5, broadcastMaxNodes = maxNodes)
+          seeds.toDF("node"), rounds = 5, maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -104,10 +104,10 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     ("a", "c", 9L)) // parallel a→c collapses to its min (5)
 
   private def runW(seeds: Seq[String], rounds: Int,
-                   maxNodes: Long = 2000000L): Map[String, Long] = {
+                   maxEdges: Long = 2000000L): Map[String, Long] = {
     val got = Bfs.weightedDistances(wEdges.toDF("src", "dst", "w"),
         "src", "dst", "w", seeds.toDF("node"), rounds,
-        broadcastMaxNodes = maxNodes)
+        maxEdges = maxEdges)
       .as[(String, Long)].collect().toMap
     graft.Storage.releaseAll(spark)
     got
@@ -125,9 +125,9 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     val es = (0 until 400).map(_ =>
       (s"n${rnd.nextInt(60)}", s"n${rnd.nextInt(60)}", 1L + rnd.nextInt(9)))
     val seeds = Seq("n0", "n17").toDF("node")
-    def runOn(maxNodes: Long): Map[String, Long] = {
+    def runOn(maxEdges: Long): Map[String, Long] = {
       val got = Bfs.weightedDistances(es.toDF("src", "dst", "w"),
-          "src", "dst", "w", seeds, rounds = 5, broadcastMaxNodes = maxNodes)
+          "src", "dst", "w", seeds, rounds = 5, maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -154,7 +154,7 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
       (s"n${rnd.nextInt(40)}", s"n${rnd.nextInt(40)}"))
     def runHop(rounds: Int): Map[String, Long] = {
       val got = Bfs.hopDistances(es.toDF("src", "dst"), "src", "dst",
-          Seq("n0").toDF("node"), rounds, broadcastMaxNodes = 1L)
+          Seq("n0").toDF("node"), rounds, maxEdges = 1L)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -169,10 +169,10 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     // frontier on its second improvement.
     val es = Seq(("s", "d", 10L), ("s", "a", 1L), ("a", "b", 1L),
       ("b", "d", 1L), ("d", "e", 1L))
-    def runOn(rounds: Int, maxNodes: Long): Map[String, Long] = {
+    def runOn(rounds: Int, maxEdges: Long): Map[String, Long] = {
       val got = Bfs.weightedDistances(es.toDF("src", "dst", "w"),
           "src", "dst", "w", Seq("s").toDF("node"), rounds,
-          broadcastMaxNodes = maxNodes)
+          maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -196,9 +196,9 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     val es = (0 until 400).map(_ =>
       s"n${rnd.nextInt(60)}" -> s"n${rnd.nextInt(60)}").toDF("src", "dst")
     val lms = Seq("n0", "n17", "n31")
-    def runOn(maxNodes: Long): Map[(String, String), Long] = {
+    def runOn(maxEdges: Long): Map[(String, String), Long] = {
       val got = Bfs.landmarkDistances(es, "src", "dst", lms.toDF("node"),
-          rounds = 4, broadcastMaxNodes = maxNodes)
+          rounds = 4, maxEdges = maxEdges)
         .as[(String, String, Long)].collect()
         .map(r => (r._1, r._2) -> r._3).toMap
       graft.Storage.releaseAll(spark)
@@ -218,11 +218,11 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
 
   test("landmarks entirely off the graph yield an empty table on both paths") {
     val es = Seq("a" -> "b", "b" -> "c").toDF("src", "dst")
-    for (maxNodes <- Seq(2000000L, 1L)) {
+    for (maxEdges <- Seq(2000000L, 1L)) {
       val got = Bfs.landmarkDistances(es, "src", "dst",
         Seq("zz", "yy").toDF("node"), rounds = 3,
-        broadcastMaxNodes = maxNodes)
-      assert(got.count() == 0L, s"maxNodes=$maxNodes")
+        maxEdges = maxEdges)
+      assert(got.count() == 0L, s"maxEdges=$maxEdges")
       graft.Storage.releaseAll(spark)
     }
   }
@@ -254,12 +254,12 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     graft.Storage.releaseAll(spark)
     for (snapMax <- Seq(2000000L, 1L); resMax <- Seq(2000000L, 1L)) {
       val snap = Bfs.hopDistances(es, "src", "dst", seeds, rounds = 2,
-        broadcastMaxNodes = snapMax)
+        maxEdges = snapMax)
       Bfs.saveDistances(spark, snap, "graft_test_bfs_snap")
       graft.Storage.releaseAll(spark)
       val resumed = Bfs.resumeDistances(es, "src", "dst",
           spark.table("graft_test_bfs_snap"), rounds = 3,
-          broadcastMaxNodes = resMax)
+          maxEdges = resMax)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       assert(resumed == cold5, s"snapMax=$snapMax resMax=$resMax")
@@ -278,12 +278,12 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     graft.Storage.releaseAll(spark)
     for (snapMax <- Seq(2000000L, 1L); resMax <- Seq(2000000L, 1L)) {
       val snap = Bfs.weightedDistances(es, "src", "dst", "w", seeds,
-        rounds = 2, broadcastMaxNodes = snapMax)
+        rounds = 2, maxEdges = snapMax)
       Bfs.saveDistances(spark, snap, "graft_test_wbfs_snap")
       graft.Storage.releaseAll(spark)
       val resumed = Bfs.resumeWeightedDistances(es, "src", "dst", "w",
           spark.table("graft_test_wbfs_snap"), rounds = 2,
-          broadcastMaxNodes = resMax)
+          maxEdges = resMax)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       assert(resumed == cold4, s"snapMax=$snapMax resMax=$resMax")
@@ -294,9 +294,9 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
   test("resume with zero extra rounds returns the snapshot; snapshot nodes off the current graph drop") {
     val es = Seq("a" -> "b", "b" -> "c").toDF("src", "dst")
     val snap = Seq(("a", 0L), ("b", 1L), ("gone", 3L)).toDF("node", "dist")
-    def runOn(maxNodes: Long): Map[String, Long] = {
+    def runOn(maxEdges: Long): Map[String, Long] = {
       val got = Bfs.resumeDistances(es, "src", "dst", snap, rounds = 0,
-          broadcastMaxNodes = maxNodes)
+          maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -344,7 +344,7 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     // distributed branch collapses upstream, the driver branch in the
     // adjacency exchange — both must see the same min-weight graph)
     val dist4 = Bfs.weightedDistances(es, "src", "dst", "w", seeds, rounds = 4,
-      broadcastMaxNodes = 1L).as[(String, Long)].collect().toMap
+      maxEdges = 1L).as[(String, Long)].collect().toMap
     assert(dist4 == cold4)
     graft.Storage.releaseAll(spark)
     val g = Bfs.buildWeightedGraph(es, "src", "dst", "w")
@@ -375,11 +375,11 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
     val coldFix = Bfs.hopDistancesToFixpoint(grown, "src", "dst", seeds)
       .as[(String, Long)].collect().toMap
     graft.Storage.releaseAll(spark)
-    def refreshOn(maxNodes: Long): Map[String, Long] = {
+    def refreshOn(maxEdges: Long): Map[String, Long] = {
       var improved: Map[String, Long] = null
       Bfs.refreshDistances(grown, "src", "dst", newE.toDF("src", "dst"),
         seeds, Seq.empty[(String, Long)].toDF("node", "dist")
-          .unionByName(prior), maxNodes) { im =>
+          .unionByName(prior), maxEdges) { im =>
         improved = im.as[(String, Long)].collect().toMap
       }
       graft.Storage.releaseAll(spark)

@@ -38,9 +38,9 @@ class HitsSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def run(rounds: Int, es: Seq[(Long, Long)] = edges,
-                  np: Int = 1, maxNodes: Long = 2000000L): Map[Long, (Long, Long)] = {
+                  np: Int = 1, maxEdges: Long = 2000000L): Map[Long, (Long, Long)] = {
     val got = Hits.hubsAuthorities(es.toDF("src", "dst").repartition(np),
-      "src", "dst", rounds, broadcastMaxNodes = maxNodes)
+      "src", "dst", rounds, maxEdges = maxEdges)
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     graft.Storage.releaseAll(spark)
     got
@@ -53,7 +53,7 @@ class HitsSpec extends AnyFunSuite with SparkSpec {
 
   test("the distributed fallback is bit-identical to the driver CSR path") {
     for (rounds <- Seq(1, 3))
-      assert(run(rounds, maxNodes = 1L) == replay(rounds), s"rounds=$rounds")
+      assert(run(rounds, maxEdges = 1L) == replay(rounds), s"rounds=$rounds")
   }
 
   test("duplicate edges collapse; hubs and authorities separate") {
@@ -77,9 +77,9 @@ class HitsSpec extends AnyFunSuite with SparkSpec {
     // overflow at these magnitudes, so neither path throws)
     val prior = Seq((1L, scale * 3, 0L), (10L, scale / 2, 0L))
       .toDF("node", "hub_q", "auth_q")
-    def resumed(maxNodes: Long): Map[Long, (Long, Long)] = {
+    def resumed(maxEdges: Long): Map[Long, (Long, Long)] = {
       val got = Hits.resumeHubsAuthorities(edges.toDF("src", "dst"),
-        "src", "dst", prior, rounds = 2, broadcastMaxNodes = maxNodes)
+        "src", "dst", prior, rounds = 2, maxEdges = maxEdges)
         .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
       graft.Storage.releaseAll(spark)
       got
@@ -89,13 +89,13 @@ class HitsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("resume from a snapshot equals the cold run on BOTH paths; unseen nodes start cold") {
-    def resumed(maxNodes: Long): Map[Long, (Long, Long)] = {
+    def resumed(maxEdges: Long): Map[Long, (Long, Long)] = {
       val snap = Hits.hubsAuthorities(edges.toDF("src", "dst"), "src", "dst",
-        rounds = 1, broadcastMaxNodes = maxNodes)
+        rounds = 1, maxEdges = maxEdges)
       Hits.saveScores(spark, snap, "graft_hits_spec_snap")
       val got = Hits.resumeHubsAuthorities(edges.toDF("src", "dst"),
         "src", "dst", spark.table("graft_hits_spec_snap"), rounds = 2,
-        broadcastMaxNodes = maxNodes)
+        maxEdges = maxEdges)
         .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
       spark.sql("DROP TABLE IF EXISTS graft_hits_spec_snap")
       graft.Storage.releaseAll(spark)

@@ -109,7 +109,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkSpec {
     for (rounds <- Seq(1, 4)) {
       val got = LabelPropagation.propagate(
         edges.map { case (a, b) => (s(a), s(b)) }.toDF("src", "dst"),
-        "src", "dst", rounds)
+        "src", "dst", rounds, maxEdges = 0)
         .as[(String, String)].collect()
         .map { case (k, v) => k.drop(1).toLong -> v.drop(1).toLong }.toMap
       graft.Storage.releaseAll(spark)
@@ -133,7 +133,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkSpec {
     def s(x: Long) = f"n$x%02d"
     val dist = LabelPropagation.propagate(
       withLoops.map { case (a, b) => (s(a), s(b)) }.toDF("src", "dst"),
-      "src", "dst", 3)
+      "src", "dst", 3, maxEdges = 0)
       .as[(String, String)].collect()
       .map { case (k, v) => k.drop(1).toLong -> v.drop(1).toLong }.toMap
     graft.Storage.releaseAll(spark)
@@ -142,7 +142,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("resume from a snapshot equals the cold run on BOTH paths; dangling labels reset to self") {
-    // driver path (long keys): snapshot at 2 rounds, resume 2 more ≡ cold 4
+    // driver path: snapshot at 2 rounds, resume 2 more ≡ cold 4
     val snap2 = LabelPropagation.propagate(
       edges.toDF("src", "dst"), "src", "dst", 2)
     LabelPropagation.saveLabels(spark, snap2, "graft_lpa_spec_snap")
@@ -153,13 +153,13 @@ class LabelPropagationSpec extends AnyFunSuite with SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_lpa_spec_snap")
     graft.Storage.releaseAll(spark)
     assert(resumed == refPropagate(4), "driver-path resume != cold 4 rounds")
-    // distributed path (string keys): same contract
+    // distributed path (string keys, maxEdges = 0): same contract
     def s(x: Long) = f"n$x%02d"
     val sEdges = edges.map { case (a, b) => (s(a), s(b)) }
     val sSnap = LabelPropagation.propagate(
       sEdges.toDF("src", "dst"), "src", "dst", 2)
     val sResumed = LabelPropagation.resumePropagate(
-      sEdges.toDF("src", "dst"), "src", "dst", sSnap, 2)
+      sEdges.toDF("src", "dst"), "src", "dst", sSnap, 2, maxEdges = 0)
       .as[(String, String)].collect()
       .map { case (k, v) => k.drop(1).toLong -> v.drop(1).toLong }.toMap
     graft.Storage.releaseAll(spark)
@@ -175,7 +175,7 @@ class LabelPropagationSpec extends AnyFunSuite with SparkSpec {
       "dangling labels must reset to the cold start")
     val sDangling = Seq((s(0L), "zz"), (s(1L), "zz")).toDF("node", "label")
     val sFromDangling = LabelPropagation.resumePropagate(
-      sEdges.toDF("src", "dst"), "src", "dst", sDangling, 3)
+      sEdges.toDF("src", "dst"), "src", "dst", sDangling, 3, maxEdges = 0)
       .as[(String, String)].collect()
       .map { case (k, v) => k.drop(1).toLong -> v.drop(1).toLong }.toMap
     graft.Storage.releaseAll(spark)

@@ -63,15 +63,15 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the big-graph distributed path is bit-identical to the driver path") {
-    // broadcastMaxNodes = 1 forces the distributed rank frame + cached
+    // maxEdges = 1 forces the distributed rank frame + cached
     // src-partitioned edge join; fixed-point arithmetic must make the two
     // layouts agree to the last bit (and both match the driver replay).
     val rnd = new scala.util.Random(17)
     val edges: Seq[(String, String)] = (0 until 300).map(_ =>
       s"n${rnd.nextInt(40)}" -> s"n${rnd.nextInt(40)}")
     val df = edges.toDF("src", "dst")
-    def collectRanks(maxNodes: Long): Map[String, Long] = {
-      val got = PageRank.ranks(df, iterations = 4, broadcastMaxNodes = maxNodes)
+    def collectRanks(maxEdges: Long): Map[String, Long] = {
+      val got = PageRank.ranks(df, iterations = 4, maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -107,10 +107,10 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     val edges = Seq(
       "a" -> "b", "a" -> "c", "b" -> "c", "c" -> "a", "d" -> "c", "d" -> "a")
     def resume(prior: Map[String, Long], es: Seq[(String, String)],
-               k: Int, maxNodes: Long = 2000000L): Map[String, Long] = {
+               k: Int, maxEdges: Long = 2000000L): Map[String, Long] = {
       val got = PageRank.resumeRanks(es.toDF("src", "dst"),
         prior.toSeq.toDF("node", "rank"), iterations = k,
-        broadcastMaxNodes = maxNodes)
+        maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -118,7 +118,7 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     val r3 = ranks(edges, 3)
     // unchanged graph: resume(snapshot of 3, 2) ≡ cold 5, on BOTH paths
     assert(resume(r3, edges, 2) == reference(edges, 5))
-    assert(resume(r3, edges, 2, maxNodes = 1L) == reference(edges, 5))
+    assert(resume(r3, edges, 2, maxEdges = 1L) == reference(edges, 5))
     // grown graph: the unseen node starts at the cold value scale/n
     val grown = edges :+ ("e" -> "a")
     val scale = 1000000000000L
@@ -158,9 +158,9 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
       }
       r
     }
-    def runW(maxNodes: Long): Map[String, Long] = {
+    def runW(maxEdges: Long): Map[String, Long] = {
       val got = PageRank.weightedRanks(wEdges.toDF("src", "dst", "w"),
-        "src", "dst", "w", iterations = 4, broadcastMaxNodes = maxNodes)
+        "src", "dst", "w", iterations = 4, maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -200,11 +200,11 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
       }
       r
     }
-    def runWP(maxNodes: Long): Map[String, Long] = {
+    def runWP(maxEdges: Long): Map[String, Long] = {
       val got = PageRank.weightedPersonalizedRanks(
         wEdges.toDF("src", "dst", "w"), "src", "dst", "w",
         seeds.toSeq.toDF("node"), iterations = 4,
-        broadcastMaxNodes = maxNodes)
+        maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -259,10 +259,10 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a",
       "x" -> "y", "y" -> "x")
     def run(seeds: Seq[String], np: Int = 1,
-            maxNodes: Long = 2000000L): Map[String, Long] = {
+            maxEdges: Long = 2000000L): Map[String, Long] = {
       val got = PageRank.personalizedRanks(
         edges.toDF("src", "dst").repartition(np),
-        seeds.toDF("node"), iterations = 4, broadcastMaxNodes = maxNodes)
+        seeds.toDF("node"), iterations = 4, maxEdges = maxEdges)
         .as[(String, Long)].collect().toMap
       graft.Storage.releaseAll(spark)
       got
@@ -270,7 +270,7 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     val got = run(Seq("a", "zz")) // off-graph seed ignored
     assert(got == personalizedReference(edges, Set("a"), 4))
     // the distributed fallback is bit-identical to the driver path
-    assert(run(Seq("a", "zz"), maxNodes = 1L) == got)
+    assert(run(Seq("a", "zz"), maxEdges = 1L) == got)
     assert(got("x") == 0L && got("y") == 0L) // unreachable from the seed
     // on a directed cycle the seed's restart mass flows FORWARD — its
     // out-neighbor accumulates it; the seeded component holds all mass

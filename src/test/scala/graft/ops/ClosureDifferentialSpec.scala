@@ -19,7 +19,8 @@ class ClosureDifferentialSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def relational(nodes: DataFrame, edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val m0 = edges.select(col("src"), col("dst"), lit(1).as("hops"))
+    val m0 = edges.select(col("src"), col("dst"), lit(1).as("hops"),
+      col("dst").isNull.as("done"))
     var mRdd = m0.rdd
     mRdd.cache()
     mRdd.count()
@@ -27,16 +28,21 @@ class ClosureDifferentialSpec extends AnyFunSuite with SparkSpec {
     var iter = 0
     var extending = true
     while (extending && iter < maxIter) {
-      val a = m.select(col("src"), col("dst"), col("hops"))
-      val b = m.select(col("src").as("b_src"), col("dst").as("b_dst"), col("hops").as("b_hops"))
-      val composed = a.join(b, a("dst") === b("b_src"), "left")
+      // a terminal row (its path stepped onto a null dst) composes no
+      // further; stepping onto a null dst is not an extension
+      val a = m.select(col("src"), col("dst"), col("hops"), col("done"))
+      val b = m.select(col("src").as("b_src"), col("dst").as("b_dst"), col("hops").as("b_hops"),
+        col("done").as("b_done"))
+      val composed = a.join(b, a("dst") === b("b_src") && !col("done"), "left")
         .select(
           col("src"),
           coalesce(col("b_dst"), col("dst")).as("dst"),
           (col("hops") + coalesce(col("b_hops"), lit(0))).as("hops"),
-          col("b_src").isNotNull.as("extended"))
+          (col("done") || (col("b_src").isNotNull &&
+            (col("b_dst").isNull || col("b_done")))).as("done"),
+          (col("b_src").isNotNull && col("b_dst").isNotNull).as("extended"))
       val acc = spark.sparkContext.longAccumulator("closure-extended")
-      val rdd = composed.rdd.map { r => if (r.getBoolean(3)) acc.add(1L); r }
+      val rdd = composed.rdd.map { r => if (r.getBoolean(4)) acc.add(1L); r }
       rdd.cache()
       rdd.count()
       extending = acc.value > 0
@@ -47,7 +53,9 @@ class ClosureDifferentialSpec extends AnyFunSuite with SparkSpec {
     }
     require(!extending,
       s"Closure.resolve: still extending after $maxIter doublings (cyclic edges?)")
-    val local = spark.createDataFrame(java.util.Arrays.asList(m.collect(): _*), m.schema)
+    val mapping = m.drop("done")
+    val local = spark.createDataFrame(java.util.Arrays.asList(mapping.collect(): _*),
+      mapping.schema)
     mRdd.unpersist(blocking = false)
     nodes
       .join(broadcast(local), nodes("node") === local("src"), "left")
@@ -97,9 +105,17 @@ class ClosureDifferentialSpec extends AnyFunSuite with SparkSpec {
     assert(dags.map(edges => sameAsRelational(nodes, edges)).count(identity) >= 6)
   }
 
-  test("null keys never match; a reached null dst extends forever in both") {
+  test("null keys never match; a reached null dst is terminal in both") {
     assert(sameAsRelational(Seq("a", "b", null), Seq((null, "a"), ("a", "b"), ("c", null))))
-    assert(!sameAsRelational(Seq("a"), Seq(("a", "b"), ("b", null))))
+    val acyclic = Seq(("a", "b"), ("b", null))
+    assert(sameAsRelational(Seq("a", "b"), acyclic))
+    assert(rows(Closure.resolve(Seq("a", "b").toDF("node"), acyclic.toDF("src", "dst"))) ==
+      Seq(("a", "b", 2), ("b", "b", 1)))
+    // a split into a null dst and a live successor keeps both paths
+    val split = Seq(("a", "b"), ("b", null), ("b", "c"))
+    assert(sameAsRelational(Seq("a", "b", "c"), split))
+    assert(rows(Closure.resolve(Seq("a").toDF("node"), split.toDF("src", "dst"))) ==
+      Seq(("a", "b", 2), ("a", "c", 2)))
   }
 
   test("diamonds and splits list one row per path") {

@@ -14,8 +14,8 @@ import scala.jdk.CollectionConverters._
 /** Steps that build plans or small driver artifacts start no Spark job of
   * their own: the row index numbers rows inside the action that reads
   * them, and the org-change lookup over a local edge frame never leaves the
-  * driver. The driver-path graph builds plus one walk, and the edge-gated
-  * entries within their gate, start no more jobs than pinned below.
+  * driver. The graph builds plus one walk, and the one-shot graph entries,
+  * within the driver gate start no more jobs than pinned below.
   */
 class DriverJobsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -98,42 +98,48 @@ class DriverJobsSpec extends AnyFunSuite with SparkSpec {
   }
   private lazy val seeds = Seq(0L).toDF("node")
 
-  // job counts of each driver-path build plus one walk, and of each
-  // edge-gated entry within its gate (4-core local session, AQE on); the
-  // node-gated builds no longer run a count job to materialize their
-  // cached adjacency, and the edge gate counts with one RDD job
+  // job counts of each graph build plus one walk, and of each one-shot
+  // entry, within the gate (4-core local session, AQE on): the gate's count
+  // job and its collect; the landmark entry also collects its landmarks.
+  // No round starts a job, and neither does reading a local result frame
+  // (ConnectedComponents and Mst results are RDD leaves: one job to read)
   Seq[(String, Int, () => Unit)](
-    ("PageRank.buildRankGraph", 11, () => {
+    ("PageRank.buildRankGraph", 2, () => {
       val g = PageRank.buildRankGraph(graph)
       try g.ranks(iterations = 3).collect() finally g.close()
     }),
-    ("Hits.buildHitsGraph", 13, () => {
+    ("Hits.buildHitsGraph", 2, () => {
       val g = Hits.buildHitsGraph(graph, "src", "dst")
       try g.scores(rounds = 3).collect() finally g.close()
     }),
-    ("LabelPropagation.buildLpaGraph", 11, () => {
+    ("LabelPropagation.buildLpaGraph", 2, () => {
       val g = LabelPropagation.buildLpaGraph(graph, "src", "dst")
       try g.propagate(rounds = 3).collect() finally g.close()
     }),
-    ("Bfs.buildHopGraph", 10, () => {
+    ("Bfs.buildHopGraph", 2, () => {
       val g = Bfs.buildHopGraph(graph, "src", "dst")
       try g.distances(seeds, rounds = 3).collect() finally g.close()
     }),
-    ("Bfs.buildWeightedGraph", 13, () => {
+    ("Bfs.buildWeightedGraph", 2, () => {
       val g = Bfs.buildWeightedGraph(graph, "src", "dst", "w")
       try g.distances(seeds, rounds = 3).collect() finally g.close()
     }),
-    ("Bfs.landmarkDistances", 12, () => {
+    ("Bfs.landmarkDistances", 4, () => {
       Bfs.landmarkDistances(graph, "src", "dst", Seq(0L, 20L).toDF("node"), rounds = 3)
         .collect()
     }),
-    ("KCore.core", 4, () => KCore.core(graph, "src", "dst", 3).collect()),
-    ("KTruss.truss", 4, () => KTruss.truss(graph, "src", "dst", 3).collect()),
+    ("Bfs.hopDistancesToFixpoint", 2, () =>
+      Bfs.hopDistancesToFixpoint(graph, "src", "dst", seeds).collect()),
+    ("Bfs.refreshDistances", 2, () =>
+      Bfs.refreshDistances(graph, "src", "dst", graph, seeds,
+        Seq.empty[(Long, Long)].toDF("node", "dist"))(_.collect())),
+    ("KCore.core", 3, () => KCore.core(graph, "src", "dst", 3).collect()),
+    ("KTruss.truss", 3, () => KTruss.truss(graph, "src", "dst", 3).collect()),
     ("ConnectedComponents.components", 4, () =>
       ConnectedComponents.components(graph.select(col("src").as("u"), col("dst").as("v")))
         .collect()),
     ("Mst.boruvkaFixpoint", 4, () => Mst.boruvkaFixpoint(graph, "src", "dst", "w").collect()),
-    ("Coverage.greedyMaxCoverage", 4, () => Coverage.greedyMaxCoverage(
+    ("Coverage.greedyMaxCoverage", 3, () => Coverage.greedyMaxCoverage(
       graph.groupBy(col("src")).agg(collect_list(col("dst").cast("string")).as("toks")),
       "src", col("toks"), k = 5).collect())
   ).foreach { case (name, pinned, run) =>

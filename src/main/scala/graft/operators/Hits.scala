@@ -89,14 +89,6 @@ object Hits {
   /** The big-graph loop over the null-filtered (s, d) edges. */
   private def hitsDistributed(eF: DataFrame, rounds: Int, scale: Long,
                               priorHubs: Option[DataFrame]): DataFrame = {
-    val spark = eF.sparkSession
-
-    def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
-      val rdd = df.rdd
-      rdd.cache()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-
     // multi-edge dedup: the per-round sums would double-count otherwise
     val e0 = eF.distinct()
     val eByS = e0.repartition(col("s"))
@@ -104,7 +96,7 @@ object Hits {
     val eByD = eByS.repartition(col("d"))
     eByD.persist()
 
-    val (nodes, nodesRdd) = rebase(
+    val (nodes, nodesRdd) = DriverCsr.rebase(
       eByS.select(col("s").as("node"))
         .union(eByS.select(col("d").as("node"))).distinct())
 
@@ -121,7 +113,7 @@ object Hits {
         .select(col("node"), scaled.as(outCol))
     }
 
-    var (h, hRdd) = rebase(priorHubs match {
+    var (h, hRdd) = DriverCsr.rebase(priorHubs match {
       case None => nodes.select(col("node"), lit(scale).as("h"))
       case Some(p) => nodes
         .join(p.select(col("node"), col("hub_q").as("__ph")), Seq("node"), "left")
@@ -134,14 +126,14 @@ object Hits {
       val araw = eByS
         .join(h.select(col("node").as("s"), col("h")), "s")
         .groupBy(col("d")).agg(sum(col("h")).as("ar"))
-      val (a2, aR2) = rebase(normalized(araw, "d", "ar", "a"))
+      val (a2, aR2) = DriverCsr.rebase(normalized(araw, "d", "ar", "a"))
       a2.count()
       if (aRdd != null) aRdd.unpersist(blocking = false)
       a = a2; aRdd = aR2
       val hraw = eByD
         .join(a.select(col("node").as("d"), col("a")), "d")
         .groupBy(col("s")).agg(sum(col("a")).as("hr"))
-      val (h2, hR2) = rebase(normalized(hraw, "s", "hr", "h"))
+      val (h2, hR2) = DriverCsr.rebase(normalized(hraw, "s", "hr", "h"))
       h2.count()
       hRdd.unpersist(blocking = false)
       h = h2; hRdd = hR2

@@ -136,14 +136,6 @@ object LabelPropagation {
   /** The big-graph loop over the (`__s`, `__d`, `__w`) vote edges. */
   private def lpaDistributed(edges: DataFrame, rounds: Int,
                              initLabels: Option[DataFrame]): DataFrame = {
-    val spark = edges.sparkSession
-
-    def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
-      val rdd = df.rdd
-      rdd.cache()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-
     val sym = symPartitioned(edges)
 
     val nodesD = sym.select(col("u").as("node")).distinct()
@@ -162,11 +154,11 @@ object LabelPropagation {
             when(col("__vn").isNotNull, col("__pl")).otherwise(col("node"))
               .as("label"))
     }
-    var (labels, labelsRdd) = rebase(startLabels)
+    var (labels, labelsRdd) = DriverCsr.rebase(startLabels)
 
     var r = 0
     while (r < rounds) {
-      val (l2, r2) = rebase(voteRound(sym, labels))
+      val (l2, r2) = DriverCsr.rebase(voteRound(sym, labels))
       l2.count() // materializes r2 — the previous leaf is now lineage-only
       labelsRdd.unpersist(blocking = false)
       labels = l2; labelsRdd = r2

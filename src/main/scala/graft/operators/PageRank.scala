@@ -435,11 +435,11 @@ object PageRank {
     * recommendation and seed-expansion curation (find everything the
     * walk reaches from a trusted set). Same exact-integer discipline as
     * [[ranks]]: base(v) = ⌊⌊scale·(den−num)/den⌋ / |S|⌋ for seeds and 0
-    * elsewhere, start = ⌊scale/|S|⌋ on seeds, every round one label-frame
-    * shuffle against the cached src-partitioned edges (the distributed
-    * path's shape — seed-restricted base makes the driver-path's
-    * uniform-base shortcut inapplicable, and the per-round node frame
-    * carries its base along, so no extra join appears). Seeds outside
+    * elsewhere, start = ⌊scale/|S|⌋ on seeds. Within the [[DriverCsr]]
+    * gate it is [[ranks]]' array loop with those base/start vectors;
+    * above it every round is one rank-frame shuffle against the cached
+    * src-partitioned edges, and the per-round node frame carries its
+    * base along, so no extra join appears. Seeds outside
     * the graph are ignored; at least one must be present. Duplicate
     * edges collapse. Returns (node, rank) after exactly `iterations`
     * rounds — nodes unreachable from the seeds hold rank 0, which is the
@@ -459,7 +459,6 @@ object PageRank {
                                            seedSet: DataFrame, iterations: Int,
                                            scale: Long, dampNum: Long,
                                            dampDen: Long): DataFrame = {
-    val spark = e.sparkSession
     val edgesDeg = e
       .repartition(col("src"))
       .groupBy(col("src"), col("dst")).agg(lit(1))
@@ -468,22 +467,17 @@ object PageRank {
       .persist()
     val nodes0 = nodesPlain
       .join(seedSet.withColumn("__s", lit(1L)), Seq("node"), "left")
-    def rebase(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
-      val rdd = df.rdd
-      rdd.cache()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-    val (flags, flagsRdd) = rebase(nodes0)
+    val (flags, flagsRdd) = DriverCsr.rebase(nodes0)
     val nSeeds = flags.filter(col("__s").isNotNull).count()
     require(nSeeds > 0, "no seed appears in the graph")
     val base = scale * (dampDen - dampNum) / dampDen / nSeeds
     require(base > 0 && scale / nSeeds > 0,
       s"scale $scale too small for $nSeeds seeds")
-    val (nodesBase, nbRdd) = rebase(flags.select(col("node"),
+    val (nodesBase, nbRdd) = DriverCsr.rebase(flags.select(col("node"),
       when(col("__s").isNotNull, lit(base)).otherwise(lit(0L)).as("b")))
     nodesBase.count()
     flagsRdd.unpersist(blocking = false)
-    var (ranks, ranksRdd) = rebase(nodesBase.select(col("node"),
+    var (ranks, ranksRdd) = DriverCsr.rebase(nodesBase.select(col("node"),
       when(col("b") > 0, lit(scale / nSeeds)).otherwise(lit(0L)).as("rank")))
     var i = 0
     while (i < iterations) {
@@ -502,7 +496,7 @@ object PageRank {
         .select(col("dst").as("node"),
           (col("bb") + IntOps.intDiv(col("in_mass") * dampNum, lit(dampDen)))
             .as("rank"))
-      val (r2, rr2) = rebase(next)
+      val (r2, rr2) = DriverCsr.rebase(next)
       r2.count()
       ranksRdd.unpersist(blocking = false)
       ranks = r2; ranksRdd = rr2

@@ -16,12 +16,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale shape mirrors [[PageRank]]: within the [[DriverCsr]] gate the
   * edges are collected once, collapsed into an int CSR on the driver and
   * every round is an array loop (no Spark job per round; a fixpoint
-  * walk stops when a round changes nothing). Above it a distributed
-  * loop min-merges the reached frame against the cached edge list
-  * (rebased per round via RDD cache — the materializeLeaf discipline —
-  * so plans never nest). An edge with a null endpoint is dropped on
-  * both sides. Unreached nodes are EXCLUDED from the output, not carried
-  * as sentinels.
+  * walk stops when a round changes nothing). Above it every walk — hop,
+  * weighted, landmark, and the incremental refresh — runs ONE relax
+  * step, min(dist + w) grouped by the state keys, with hop edges at
+  * w = 1 as the driver's unweighted CSR treats them, inside one
+  * delta-frontier loop ([[distributedRelax]]). An edge with a null
+  * endpoint is dropped on both sides. Unreached nodes are EXCLUDED from
+  * the output, not carried as sentinels.
   *
   * [[weightedDistances]] generalizes the recurrence to positive integer
   * edge weights (min-plus relaxation — the same shape weighted PageRank
@@ -69,45 +70,80 @@ object Bfs {
     * caller runs over the same unchanged graph — the snapshot+resume
     * gates run two walks back to back. Above the gate each walk runs the
     * distributed relax over the cached edges (per-walk cost is already
-    * the honest shape there). [[HopGraph.close]] releases the cache after
-    * the last walk.
+    * the honest shape there). [[DistanceGraph.close]] releases the cache
+    * after the last walk.
     */
   def buildHopGraph(edges: DataFrame, srcCol: String, dstCol: String,
-                    maxEdges: Long = DriverCsr.MaxEdges): HopGraph =
-    new HopGraph(DriverCsr.edges("Bfs.buildHopGraph", endpoints(edges, srcCol, dstCol),
-      maxEdges))
+                    maxEdges: Long = DriverCsr.MaxEdges): DistanceGraph =
+    new DistanceGraph(DriverCsr.edges("Bfs.buildHopGraph", endpoints(edges, srcCol, dstCol),
+      maxEdges), None)
 
-  /** The prebuilt-graph handle for hop (w ≡ 1) walks — see
-    * [[buildHopGraph]]. Every walk is bit-identical to the one-shot
-    * entry points (same edges, same recurrence).
+  /** The distributed side's hop edges: distinct, each at w = 1. */
+  private def hopEdges(g: DriverCsr.Edges): DataFrame =
+    g.cached.distinct().withColumn("w", lit(1L))
+
+  /** The prebuilt-graph handle of [[buildHopGraph]] (hop walks, every
+    * edge costs 1) and [[buildWeightedGraph]] (min-plus walks; `maxW`,
+    * the largest raw weight, bounds overflow). Every walk is
+    * bit-identical to the one-shot entry points (same edges, same
+    * recurrence).
     */
-  final class HopGraph private[operators] (g: DriverCsr.Edges) {
-    private lazy val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst)
+  final class DistanceGraph private[operators] (g: DriverCsr.Edges, maxW: Option[Long]) {
 
-    /** [[Bfs.hopDistances]] over the prebuilt graph. */
+    // hop: duplicates collapse. Weighted: parallel edges keep their
+    // minimum weight, and an edge with a null weight relaxes nothing
+    private lazy val adj =
+      if (maxW.isEmpty) DriverCsr.csr(g.nodeVals.length, g.src, g.dst)
+      else {
+        val keep = g.rows.indices.filter(!g.rows(_).isNullAt(2)).toArray
+        DriverCsr.csr(g.nodeVals.length, keep.map(g.src), keep.map(g.dst),
+          keep.map(g.rows(_).getLong(2)), math.min)
+      }
+
+    /** The distributed side's (src, dst, w) edges, collapsed as [[adj]]. */
+    private def edgesW: DataFrame =
+      if (maxW.isEmpty) hopEdges(g)
+      else g.cached.filter(col("w").isNotNull)
+        .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
+
+    /** [[Bfs.hopDistances]] or [[Bfs.weightedDistances]] over the prebuilt graph. */
     def distances(seeds: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (g.count == 0) distFrame(g, Array.empty)
-      else if (g.onDriver) distFrame(g, relax(adj, seedStart(g, seeds), rounds))
+      if (g.count == 0) return distFrame(g, Array.empty)
+      maxW.foreach(w => require(rounds == 0 || w <= (Long.MaxValue - 1L) / rounds,
+        s"rounds*maxWeight would overflow: rounds=$rounds maxW=$w"))
+      if (g.onDriver) distFrame(g, relax(adj, seedStart(g, seeds), rounds))
       else {
-        val e = g.cached.distinct()
-        val seedDf = typedSeeds(e, seeds)
+        // seeds stay a FRAME on this path (a semi-join): a large seed set
+        // is never collected into the plan as an IN-list
+        val seedDf = g.seedFrame(seeds)
         require(!seedDf.isEmpty, "seeds must be non-empty")
-        distributedState(e, seedsFrame(e, seedDf), rounds)
+        distributedRelax(edgesW,
+          g.nodes.join(seedDf, Seq("node"), "left_semi").withColumn("dist", lit(0L)),
+          rounds, Seq("node"))
       }
     }
 
-    /** [[Bfs.resumeDistances]] over the prebuilt graph. */
+    /** [[Bfs.resumeDistances]] or [[Bfs.resumeWeightedDistances]] over the
+      * prebuilt graph.
+      */
     def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
       require(rounds >= 0, s"rounds must be >= 0, got $rounds")
       if (g.count == 0) return distFrame(g, Array.empty)
       val p = snapshot(prior, g.nodeType)
-      if (g.onDriver) distFrame(g, relax(adj, priorStart(g, p.collect()), rounds))
-      else {
-        val e = g.cached.distinct()
-        distributedState(e, nodesOf(e).join(p, Seq("node")).select(col("node"), col("dist")),
-          rounds)
+      // the snapshot is node-sized, within the driver contract
+      val rows = if (g.onDriver) p.collect() else Array.empty[Row]
+      maxW.foreach { w =>
+        val maxPrior =
+          if (g.onDriver) rows.filter(!_.isNullAt(1)).map(_.getLong(1)).maxOption.getOrElse(0L)
+          else Option(p.agg(max(col("dist"))).head().get(0)).fold(0L)(_.asInstanceOf[Long])
+        require(maxPrior >= 0L, s"snapshot distances must be >= 0, max $maxPrior")
+        require(rounds == 0 || w <= (Long.MaxValue - 1L - maxPrior) / rounds,
+          s"maxPrior + rounds*maxWeight would overflow: " +
+            s"maxPrior=$maxPrior rounds=$rounds maxW=$w")
       }
+      if (g.onDriver) distFrame(g, relax(adj, priorStart(g, rows), rounds))
+      else distributedRelax(edgesW, g.nodes.join(p, Seq("node")), rounds, Seq("node"))
     }
 
     /** Release the cached edges ([[DriverCsr.Edges.close]]). */
@@ -136,49 +172,19 @@ object Bfs {
     d
   }
 
-  /** The seeds cast to the node type (see [[typedSeeds]]), collected. */
-  private def typedSeedVals(g: DriverCsr.Edges, seeds: DataFrame): Array[Any] =
-    seeds.select(col(seeds.columns.head).cast(g.nodeType).as("node"))
-      .filter(col("node").isNotNull).distinct()
-      .collect().map(_.get(0))
-
   /** Seeds at 0, every other node unreached; seeds off the graph are
-    * ignored.
+    * ignored ([[DriverCsr.Edges.seedFrame]] casts them to the node type).
     */
   private def seedStart(g: DriverCsr.Edges, seeds: DataFrame): Array[Long] = {
-    val vals = typedSeedVals(g, seeds)
+    val vals = g.seedFrame(seeds).collect().map(_.get(0))
     require(vals.nonEmpty, "seeds must be non-empty")
     val d = Array.fill(g.nodeVals.length)(INF)
     vals.map(g.idOf).filter(_ >= 0).foreach(d(_) = 0L)
     d
   }
 
-  /** The seed frame cast to the NODE column's type before any matching:
-    * the driver path compares with strict runtime equality (a dictionary
-    * lookup, where an IntegerType seed never equals a LongType node)
-    * while a join path compares through Spark's implicit casts — casting
-    * once up front makes both paths see identically typed values, so the
-    * same inputs reach the same nodes regardless of which scale path
-    * runs. Seeds that don't cast (null) are dropped, which is the
-    * existing off-graph-seed rule.
-    */
-  private def typedSeeds(e: DataFrame, seeds: DataFrame): DataFrame =
-    seeds.select(col(seeds.columns.head)
-        .cast(e.schema.fields(0).dataType).as("node"))
-      .filter(col("node").isNotNull).distinct()
-
   private def nodesOf(e: DataFrame): DataFrame =
     e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
-
-  /** Initial reached frame for the distributed path: graph nodes in the
-    * seed set, at distance 0. Seeds stay a FRAME on this path (semi-join,
-    * broadcast when small): this is the branch for graphs too large for
-    * the driver, so a large seed set must never be collected into the
-    * plan as an IN-list (driver memory + plan bloat on exactly the scale
-    * path).
-    */
-  private def seedsFrame(e: DataFrame, seedDf: DataFrame): DataFrame =
-    nodesOf(e).join(seedDf, Seq("node"), "left_semi").withColumn("dist", lit(0L))
 
   /** Up to `rounds` synchronous min-relaxation rounds from `init` (INF =
     * unreached) over `adj`, each edge costing its weight (1 when the CSR
@@ -212,60 +218,63 @@ object Bfs {
     dist
   }
 
-  /** Distributed rounds from an arbitrary initial reached frame. */
-  private def distributedState(e: DataFrame, d0: DataFrame, rounds: Int): DataFrame =
-    distributedRelax(e.sparkSession, e, d0, rounds, Seq("node"),
-      (eC, f) => eC.join(f, eC("src") === f("node"))
-        .groupBy(eC("dst").as("node"))
-        .agg((min(col("dist")) + 1L).as("dist")))
-      .select(col("node"), col("dist"))
+  /** The one distributed relax step, the frame twin of [[relax]]'s inner
+    * loop: every edge of `e` (`src`, `dst`, `w`) leaving a node of `f`
+    * offers dist + w to its target, and each state key (`node`, or `node,
+    * lm`) keeps the minimum.
+    */
+  private def relaxStep(e: DataFrame, f: DataFrame, keyCols: Seq[String]): DataFrame =
+    e.join(f, e("src") === f("node"))
+      .groupBy(e("dst").as("node") +: keyCols.tail.map(col): _*)
+      .agg(min(col("dist") + col("w")).as("dist"))
 
-  /** DELTA-FRONTIER distributed relaxation — each round relaxes only
-    * edges leaving nodes whose distance IMPROVED last round, instead of
-    * re-joining the full reached frame against the edge list. The result
-    * after any fixed round count is BIT-IDENTICAL to the full min-merge
-    * (spec-pinned against the driver-CSR path): an improvement at v in
-    * round r+1 must relax through an in-neighbor u using d_r(u), and if
-    * u did not improve in round r then the same candidate d_r(u)+w was
-    * already min-merged into v in an earlier round (distances are
-    * monotone non-increasing) — so restricting to last round's improved
-    * set loses nothing, and candidates carry the same values full-merge
-    * would use, so it invents nothing. An empty frontier is a fixpoint
-    * (every later round is a no-op), so the loop exits early — the
-    * fixed-round result is unchanged, deep round caps just stop paying
-    * per-round cost past the graph's effective diameter.
+  /** The one distributed relax loop: every hop, weighted and landmark
+    * walk above the gate, and [[refreshDistances]]' fixpoint, run here
+    * over (`src`, `dst`, `w`) edges — hop edges at w = 1 — with
+    * [[relaxStep]] as the only step.
     *
-    * At scale this is the difference between R·|edges⋈reached| and
-    * Σ_r |edges⋈frontier_r| join work — for hop BFS every node improves
-    * exactly once, so the frontier sum is ONE pass over the reachable
-    * graph total, vs one pass PER ROUND for the full merge.
+    * DELTA-FRONTIER relaxation: each round relaxes only edges leaving the
+    * states whose distance IMPROVED last round, instead of re-joining the
+    * full reached frame against the edge list. After any fixed round
+    * count the result is BIT-IDENTICAL to the full min-merge, which is
+    * what the driver's [[relax]] computes (spec-pinned on both sides of
+    * the gate): an improvement at v in round r+1 must relax through an
+    * in-neighbor u using d_r(u), and if u did not improve in round r then
+    * the same candidate d_r(u) + w was already min-merged into v earlier
+    * (distances are monotone non-increasing) — so restricting to last
+    * round's improved set loses nothing, and candidates carry the values
+    * the full merge would use, so it invents nothing. Ties are not
+    * improvements (else cycles re-emit forever). An empty frontier is a
+    * fixpoint, so the loop exits early: deep round caps stop paying past
+    * the graph's effective diameter, and for hop BFS the frontier sum is
+    * ONE pass over the reachable graph instead of one pass per round.
+    *
+    * Each round rebases the reached and frontier frames onto cached RDD
+    * leaves, so self-referential plans never nest R deep.
     *
     * @param keyCols  state key (`node`, or `node, lm` for the landmark
     *                 table); `dist` rides alongside
-    * @param step     frontier → relaxed-candidate frame (keyCols + dist)
     * @param frontier0 explicit initial frontier (must be the subset of
     *                 `d0` whose values are new/improved vs whatever
     *                 fixpoint `d0` extends — the incremental-refresh
     *                 entry); default: all of `d0`
+    * @param cacheLog receives every RDD this call caches, so a caller in a
+    *                 long-lived streaming driver, where other threads hold
+    *                 their own cached RDDs, can release exactly this call's
+    *                 residue (unpersisting one already released is a no-op)
+    * @return the reached frame: `keyCols` then `dist`
     */
-  private def distributedRelax(spark: SparkSession, e: DataFrame,
-                               d0: DataFrame, rounds: Int,
+  private def distributedRelax(e: DataFrame, d0: DataFrame, rounds: Int,
                                keyCols: Seq[String],
-                               step: (DataFrame, DataFrame) => DataFrame,
                                frontier0: Option[DataFrame] = None,
                                cacheLog: Option[scala.collection.mutable
                                  .Buffer[org.apache.spark.rdd.RDD[_]]] = None)
       : DataFrame = {
-    // every RDD this call caches is appended to cacheLog (when given),
-    // so a caller that must leave the session's OTHER caches alone —
-    // refreshDistances runs inside long-lived streaming drivers where
-    // concurrent threads may hold their own persistent RDDs — can
-    // release exactly this call's residue instead of diffing the
-    // session-global persistent-RDD registry (double-unpersist of the
-    // ones already released here is a no-op)
+    val spark = e.sparkSession
     def logged[T](r: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
       cacheLog.foreach(_ += r); r
     }
+    val state = keyCols :+ "dist"
     val eCached = e.persist()
     eCached.count()
     var dRdd = logged(d0.rdd)
@@ -281,15 +290,11 @@ object Bfs {
       else spark.createDataFrame(fRdd, frontier0.get.schema)
     var r = 0
     while (r < rounds && fCount > 0) {
-      val stepped = step(eCached, frontier)
-      // strict improvements only: ties are not frontier (else cycles
-      // re-emit forever); a node absent from reached is an improvement
-      val improved = stepped.join(
+      // strict improvements only; a state absent from reached improves
+      val improved = relaxStep(eCached, frontier, keyCols).join(
           reached.withColumnRenamed("dist", "__old"), keyCols, "left")
         .filter(col("__old").isNull || col("dist") < col("__old"))
-        .select((keyCols :+ "dist").map(col): _*)
-      // rebase each round on cached RDD leaves (materializeLeaf
-      // discipline): self-referential plans otherwise nest R deep
+        .select(state.map(col): _*)
       val iRdd = logged(improved.rdd)
       iRdd.cache()
       val iCount = iRdd.count()
@@ -310,7 +315,7 @@ object Bfs {
     }
     eCached.unpersist(blocking = false)
     if (fRdd ne dRdd) fRdd.unpersist(blocking = false)
-    reached
+    reached.select(state.map(col): _*)
   }
 
   // ------------------------------------------------------------------
@@ -342,12 +347,12 @@ object Bfs {
                         landmarks: DataFrame, rounds: Int,
                         maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val eRaw = endpoints(edges, srcCol, dstCol)
-    val lmDf = typedSeeds(eRaw, landmarks)
-    val lmVals: Array[Any] = lmDf.collect().map(_.get(0))
-    require(lmVals.nonEmpty, "landmarks must be non-empty")
-    val g = DriverCsr.edges("Bfs.landmarkDistances", eRaw, maxEdges)
+    val g = DriverCsr.edges("Bfs.landmarkDistances", endpoints(edges, srcCol, dstCol),
+      maxEdges)
     try {
+      val lmDf = g.seedFrame(landmarks)
+      val lmVals: Array[Any] = lmDf.collect().map(_.get(0))
+      require(lmVals.nonEmpty, "landmarks must be non-empty")
       if (g.onDriver) {
         // one relax per landmark over the one CSR
         val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst)
@@ -360,24 +365,12 @@ object Bfs {
         g.frame(rows, StructType(Seq(StructField("node", g.nodeType, nullable = true),
           StructField("lm", g.nodeType, nullable = true),
           StructField("dist", LongType, nullable = false))))
-      } else {
-        val e = g.cached.distinct()
-        val nodesDf = nodesOf(e)
-        val d0 = nodesDf.join(lmDf.select(col("node").as("lm")),
-            nodesDf("node") === col("lm"))
-          .select(col("node"), col("lm"), lit(0L).as("dist"))
-        landmarkDistributedState(e.sparkSession, e, d0, rounds)
-      }
+      } else distributedRelax(hopEdges(g),
+        g.nodes.join(lmDf.select(col("node").as("lm")), col("node") === col("lm"))
+          .select(col("node"), col("lm"), lit(0L).as("dist")),
+        rounds, Seq("node", "lm"))
     } finally g.close()
   }
-
-  private def landmarkDistributedState(spark: SparkSession, e: DataFrame,
-                                       d0: DataFrame, rounds: Int): DataFrame =
-    distributedRelax(spark, e, d0, rounds, Seq("node", "lm"),
-      (eC, f) => eC.join(f, eC("src") === f("node"))
-        .groupBy(eC("dst").as("node"), col("lm"))
-        .agg((min(col("dist")) + 1L).as("dist")))
-      .select(col("node"), col("lm"), col("dist"))
 
   /** Harmonic-closeness estimates from a landmark table — centrality
     * scored over the landmark SAMPLE instead of all-pairs BFS (the
@@ -463,12 +456,12 @@ object Bfs {
     */
   def buildWeightedGraph(edges: DataFrame, srcCol: String, dstCol: String,
                          weightCol: String,
-                         maxEdges: Long = DriverCsr.MaxEdges): WeightedGraph = {
+                         maxEdges: Long = DriverCsr.MaxEdges): DistanceGraph = {
     val g = DriverCsr.edges("Bfs.buildWeightedGraph",
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
           col(weightCol).cast(LongType).as("w"))
         .filter(col("src").isNotNull && col("dst").isNotNull), maxEdges)
-    if (g.count == 0) return new WeightedGraph(g, 0L)
+    if (g.count == 0) return new DistanceGraph(g, Some(0L))
     val (lo, hi) =
       if (g.onDriver) {
         val ws = g.rows.filter(!_.isNullAt(2)).map(_.getLong(2))
@@ -480,65 +473,7 @@ object Bfs {
     val positive = lo.exists(_ >= 1L)
     if (!positive) g.close()
     require(positive, s"edge weights must be positive longs, found min ${lo.getOrElse("null")}")
-    new WeightedGraph(g, hi)
-  }
-
-  /** The prebuilt-graph handle for weighted (min-plus) walks — see
-    * [[buildWeightedGraph]].
-    */
-  final class WeightedGraph private[operators] (g: DriverCsr.Edges, maxW: Long) {
-
-    // an edge with a null weight relaxes nothing (min(dist + null) on
-    // the distributed side)
-    private lazy val adj = {
-      val keep = g.rows.indices.filter(!g.rows(_).isNullAt(2)).toArray
-      DriverCsr.csr(g.nodeVals.length, keep.map(g.src), keep.map(g.dst),
-        keep.map(g.rows(_).getLong(2)), math.min)
-    }
-
-    /** [[Bfs.weightedDistances]] over the prebuilt graph. */
-    def distances(seeds: DataFrame, rounds: Int): DataFrame = {
-      require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (g.count == 0) return distFrame(g, Array.empty)
-      require(rounds == 0 || maxW <= (Long.MaxValue - 1L) / rounds,
-        s"rounds*maxWeight would overflow: rounds=$rounds maxW=$maxW")
-      if (g.onDriver) distFrame(g, relax(adj, seedStart(g, seeds), rounds))
-      else {
-        val e = collapsed
-        val seedDf = typedSeeds(e, seeds)
-        require(!seedDf.isEmpty, "seeds must be non-empty")
-        weightedDistributedState(e, seedsFrame(e, seedDf), rounds)
-      }
-    }
-
-    /** [[Bfs.resumeWeightedDistances]] over the prebuilt graph. */
-    def resumeFrom(prior: DataFrame, rounds: Int): DataFrame = {
-      require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-      if (g.count == 0) return distFrame(g, Array.empty)
-      val p = snapshot(prior, g.nodeType)
-      // the snapshot is node-sized, within the driver contract
-      val rows = if (g.onDriver) p.collect() else Array.empty[Row]
-      val maxPrior =
-        if (g.onDriver) rows.filter(!_.isNullAt(1)).map(_.getLong(1)).maxOption.getOrElse(0L)
-        else Option(p.agg(max(col("dist"))).head().get(0)).fold(0L)(_.asInstanceOf[Long])
-      require(maxPrior >= 0L, s"snapshot distances must be >= 0, max $maxPrior")
-      require(rounds == 0 || maxW <= (Long.MaxValue - 1L - maxPrior) / rounds,
-        s"maxPrior + rounds*maxWeight would overflow: " +
-          s"maxPrior=$maxPrior rounds=$rounds maxW=$maxW")
-      if (g.onDriver) distFrame(g, relax(adj, priorStart(g, rows), rounds))
-      else {
-        val e = collapsed
-        weightedDistributedState(e,
-          nodesOf(e).join(p, Seq("node")).select(col("node"), col("dist")), rounds)
-      }
-    }
-
-    /** Release the cached edges ([[DriverCsr.Edges.close]]). */
-    def close(): Unit = g.close()
-
-    /** The distributed side's parallel-edge MIN collapse. */
-    private def collapsed: DataFrame =
-      g.cached.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
+    new DistanceGraph(g, Some(hi))
   }
 
   /** RESUME weighted (min-plus) relaxation from a prior reached frame —
@@ -556,14 +491,6 @@ object Bfs {
     val g = buildWeightedGraph(edges, srcCol, dstCol, weightCol, maxEdges)
     try g.resumeFrom(prior, rounds) finally g.close()
   }
-
-  private def weightedDistributedState(e: DataFrame, d0: DataFrame,
-                                       rounds: Int): DataFrame =
-    distributedRelax(e.sparkSession, e, d0, rounds, Seq("node"),
-      (eC, f) => eC.join(f, eC("src") === f("node"))
-        .groupBy(eC("dst").as("node"))
-        .agg(min(col("dist") + col("w")).as("dist")))
-      .select(col("node"), col("dist"))
 
   // ------------------------------------------------------------------
   // Snapshot + resume (the q194/q197/q198 serve discipline)
@@ -683,47 +610,43 @@ object Bfs {
         // equivalence).
         val old = priorStart(g, snapshot(prior, g.nodeType).collect())
         val init = old.clone()
-        typedSeedVals(g, seeds).map(g.idOf).filter(_ >= 0).foreach(init(_) = 0L)
+        g.seedFrame(seeds).collect().map(r => g.idOf(r.get(0))).filter(_ >= 0)
+          .foreach(init(_) = 0L)
         val dist = relax(DriverCsr.csr(g.nodeVals.length, g.src, g.dst), init, Int.MaxValue)
         consume(distFrame(g, dist, i => dist(i) < old(i)))
-      } else refreshDistributed(g.cached, endpoints(newEdges, srcCol, dstCol), seeds, prior,
+      } else refreshDistributed(g, endpoints(newEdges, srcCol, dstCol), seeds, prior,
         consume)
     } finally g.close()
   }
 
-  /** The distributed side of [[refreshDistances]] over the cached grown
-    * edges `e` and this batch's edges `newEdges`.
+  /** The distributed side of [[refreshDistances]] over the gated grown
+    * edges `g` and this batch's edges `newEdges`; both relax at w = 1
+    * (duplicate edges are harmless to min-relaxation).
     */
-  private def refreshDistributed(e: DataFrame, newEdges: DataFrame, seeds: DataFrame,
+  private def refreshDistributed(g: DriverCsr.Edges, newEdges: DataFrame, seeds: DataFrame,
                                  prior: DataFrame, consume: DataFrame => Unit): Unit = {
-    val spark = e.sparkSession
     // release EXACTLY this call's leaf caches afterwards: the RDDs are
     // tracked as they are created (here and inside distributedRelax via
     // cacheLog) — a registry-wide before/after diff would also sweep up
     // RDDs cached concurrently by other driver threads
     val cacheLog =
       scala.collection.mutable.Buffer.empty[org.apache.spark.rdd.RDD[_]]
-    val ne = newEdges.distinct().persist()
-    val seedDf = typedSeeds(e, seeds)
+    val ne = newEdges.distinct().withColumn("w", lit(1L)).persist()
     // rebase the prior on a cached RDD leaf (materializeLeaf discipline)
     // rather than a plan-level cache: the caller typically reads the
     // prior FROM the very table the improvements append to, and a
     // plan-level cache would (a) trip the same-table read/write check in
     // the append job and (b) be invalidated — and recomputed against the
     // post-append table — by the append itself
-    val p0 = snapshot(prior, e.schema.fields(0).dataType)
-    val pRdd = p0.rdd
+    val (p, pRdd) = DriverCsr.rebase(snapshot(prior, g.nodeType))
     cacheLog += pRdd
-    pRdd.cache(); pRdd.count()
-    val p = spark.createDataFrame(pRdd, p0.schema)
+    pRdd.count()
     // seed activations: seeds first appearing on the graph via this batch
-    val seedAct = nodesOf(ne).join(seedDf, Seq("node"), "left_semi")
+    val seedAct = nodesOf(ne).join(g.seedFrame(seeds), Seq("node"), "left_semi")
       .join(p, Seq("node"), "left_anti")
       .select(col("node"), lit(0L).as("dist"))
     // one relax pass of the batch edges against the prior
-    val relaxed = ne.join(p, ne("src") === p("node"))
-      .groupBy(ne("dst").as("node")).agg((min(col("dist")) + 1L).as("dist"))
-    val f0 = seedAct.unionByName(relaxed)
+    val f0 = seedAct.unionByName(relaxStep(ne, p, Seq("node")))
       .groupBy(col("node")).agg(min(col("dist")).as("dist"))
       .join(p.withColumnRenamed("dist", "__old"), Seq("node"), "left")
       .filter(col("__old").isNull || col("dist") < col("__old"))
@@ -735,11 +658,8 @@ object Bfs {
       } else {
         val d0 = p.join(f0.select(col("node")), Seq("node"), "left_anti")
           .unionByName(f0)
-        val fixed = distributedRelax(spark, e, d0, Int.MaxValue, Seq("node"),
-          (eC, f) => eC.join(f, eC("src") === f("node"))
-            .groupBy(eC("dst").as("node"))
-            .agg((min(col("dist")) + 1L).as("dist")),
-          frontier0 = Some(f0), cacheLog = Some(cacheLog))
+        val fixed = distributedRelax(g.cached.withColumn("w", lit(1L)), d0, Int.MaxValue,
+          Seq("node"), frontier0 = Some(f0), cacheLog = Some(cacheLog))
         fixed.join(p.withColumnRenamed("dist", "__old"), Seq("node"), "left")
           .filter(col("__old").isNull || col("dist") < col("__old"))
           .select(col("node"), col("dist"))

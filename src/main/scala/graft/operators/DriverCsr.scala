@@ -138,6 +138,17 @@ private[operators] object DriverCsr extends Logging {
       cached.select(col(a).as("node")).union(cached.select(col(b).as("node"))).distinct()
     }
 
+    /** `seeds`' first column cast to the node type as one distinct,
+      * null-free `node` column. The driver loops look seeds up in the
+      * dictionary, where a String or IntegerType seed never equals a
+      * LongType node, while a join casts implicitly: casting once up front
+      * gives both sides of the gate the same seeds. A null seed is dropped,
+      * like a seed off the graph.
+      */
+    def seedFrame(seeds: DataFrame): DataFrame =
+      seeds.select(col(seeds.columns.head).cast(nodeType).as("node"))
+        .filter(col("node").isNotNull).distinct()
+
     /** A local result frame over `out`: reading it starts no job. */
     def frame(out: Iterable[Row], outSchema: StructType): DataFrame = {
       import scala.jdk.CollectionConverters._

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.IntOps
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
@@ -26,11 +26,14 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * Scale shape: the [[DriverCsr]] gate over the null-free edges. Within
   * it the edges are collected once, collapsed into an int CSR on the
   * driver and every round is an array loop (no Spark job per round).
-  * Above it ranks stay distributed, rebased each round onto a
-  * cached-RDD leaf (the Closure pattern — carrying the loop's lineage
-  * squares plan statistics until planning hangs), and the sort-merge
-  * join reuses the cached `src` partitioning, so each round shuffles
-  * only the node-sized rank frame — never the edges.
+  * Above it every entry runs ONE distributed loop, the same recurrence
+  * over frames: the edges carry a weight (1 when unweighted, so
+  * ⌊rank·1/W⌋ is ⌊rank/outdeg⌋), one shuffle by `src` collapses them and
+  * sums each source's out-weight, and the (node, base, rank) state is
+  * rebased each round onto a cached-RDD leaf (carrying the loop's
+  * lineage squares plan statistics until planning hangs). The entries
+  * differ only in the start state: uniform, a prior snapshot, or
+  * restricted to seeds cast to the node type.
   *
   * Dangling nodes (no out-edges) leak their damped mass rather than
   * redistributing it — deterministic and documented; feed a symmetrized
@@ -38,29 +41,6 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * after its action ([[graft.Storage.releaseAll]]).
   */
 object PageRank {
-
-  /** One damped-update round of the DISTRIBUTED-state path; separated so
-    * PlanSpec can pin the plan shape.
-    */
-  private[graft] def step(nodes: DataFrame, edgesDeg: DataFrame, ranks: DataFrame,
-                          base: Long, dampNum: Long, dampDen: Long,
-                          broadcastRanks: Boolean): DataFrame = {
-    val rankSide = if (broadcastRanks) broadcast(ranks) else ranks
-    val contribs = edgesDeg
-      .join(rankSide, edgesDeg("src") === rankSide("node"))
-      .select(col("dst"),
-        IntOps.intDiv(col("rank"), col("outdeg")).as("c"))
-    // Every node contributes an explicit zero, so the dst-sum alone yields
-    // one row per node (in_mass = 0 for nodes with no in-edges) and no
-    // second per-round join is needed. Adding zeros to an exact long sum
-    // changes nothing — bit-identity with the two-join formulation holds.
-    contribs
-      .unionByName(nodes.select(col("node").as("dst"), lit(0L).as("c")))
-      .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      .select(col("dst").as("node"),
-        (lit(base) + IntOps.intDiv(col("in_mass") * dampNum, lit(dampDen)))
-          .as("rank"))
-  }
 
   /** @param edges two-column frame (`src`, `dst`) of directed edges;
     *        duplicates are collapsed and an edge with a null endpoint is
@@ -142,39 +122,55 @@ object PageRank {
     rank
   }
 
-  /** Per-node base and start vectors of the driver loops: uniform
-    * teleport, or restricted to `seeds` (personalized).
+  /** Each seed's teleport base and start rank when `k` nodes are seeds
+    * (every node, uniform, when `seeded` is false).
     */
-  private def baseAndStart(nodeVals: Array[Any], scale: Long, dampNum: Long,
-                           dampDen: Long,
-                           seeds: Option[Set[Any]]): (Array[Long], Array[Long]) = {
-    val n = nodeVals.length
-    seeds match {
-      case None =>
-        val b = scale * (dampDen - dampNum) / dampDen / n
-        (Array.fill(n)(b), Array.fill(n)(scale / n))
-      case Some(ss) =>
-        val flag = nodeVals.map(ss.contains)
-        val k = flag.count(identity)
-        require(k > 0, "no seed appears in the graph")
-        val b = scale * (dampDen - dampNum) / dampDen / k
-        require(b > 0 && scale / k > 0, s"scale $scale too small for $k seeds")
-        (Array.tabulate(n)(j => if (flag(j)) b else 0L),
-          Array.tabulate(n)(j => if (flag(j)) scale / k else 0L))
-    }
+  private def share(k: Long, scale: Long, dampNum: Long, dampDen: Long,
+                    seeded: Boolean): (Long, Long) = {
+    if (seeded) require(k > 0, "no seed appears in the graph")
+    val b = scale * (dampDen - dampNum) / dampDen / k
+    if (seeded) require(b > 0 && scale / k > 0, s"scale $scale too small for $k seeds")
+    (b, scale / k)
   }
 
   private def rankFrame(g: DriverCsr.Edges, rank: Array[Long]): DataFrame =
     g.nodeFrame(Iterator.tabulate(rank.length)(i => Row(g.nodeVals(i), rank(i))),
       StructField("rank", LongType, nullable = false))
 
-  /** The seed set IS the query — driver-collected under the bounded
-    * contract regardless of path (probeCells' shape).
+  /** The distributed twin of [[ranksLoop]] over the cached edges `e`
+    * (`src`, `dst`, and `w` when `collapse` reads it). ONE shuffle by
+    * `src` collapses duplicate (src, dst) edges with `collapse` (the
+    * partitioning satisfies the grouping) and sums each source's
+    * out-weight W(u) in a sort-only window over it; the result is cached
+    * still partitioned by the per-round join key, so a round shuffles only
+    * the node-sized state. `start` is the (`node`, `b`, `rank`) state:
+    * each node's base rides its zero-contribution row, so the round's
+    * aggregate needs no second join (sum(b) is the base, each node's row
+    * appears once). Every round is rebased onto a cached RDD leaf.
     */
-  private def seedValues(seeds: DataFrame): Set[Any] = {
-    val v = seeds.select(col(seeds.columns.head)).distinct().collect().map(_.get(0)).toSet
-    require(v.nonEmpty, "seeds must be non-empty")
-    v
+  private def distributedLoop(e: DataFrame, collapse: Column, start: DataFrame,
+                              iterations: Int, dampNum: Long, dampDen: Long): DataFrame = {
+    val edgesW = e.repartition(col("src"))
+      .groupBy(col("src"), col("dst")).agg(collapse.as("w"))
+      .withColumn("wsum", sum(col("w")).over(Window.partitionBy(col("src"))))
+      .persist()
+    var (state, rdd) = DriverCsr.rebase(start)
+    for (_ <- 1 to iterations) {
+      val next = edgesW.join(state, edgesW("src") === state("node"))
+        .select(col("dst"), IntOps.intDiv(col("rank") * col("w"), col("wsum")).as("c"),
+          lit(0L).as("b"))
+        .unionByName(state.select(col("node").as("dst"), lit(0L).as("c"), col("b")))
+        .groupBy(col("dst"))
+        .agg(sum(col("c")).as("in_mass"), sum(col("b")).as("b"))
+        .select(col("dst").as("node"), col("b"),
+          (col("b") + IntOps.intDiv(col("in_mass") * dampNum, lit(dampDen))).as("rank"))
+      val (s, r) = DriverCsr.rebase(next)
+      r.count()
+      rdd.unpersist(blocking = false)
+      state = s; rdd = r
+    }
+    edgesW.unpersist(blocking = false)
+    state.select(col("node"), col("rank"))
   }
 
   /** Shared-build handle for the snapshot+resume gates: the gated edges
@@ -186,66 +182,72 @@ object PageRank {
                      maxEdges: Long = DriverCsr.MaxEdges): RankGraph =
     new RankGraph(DriverCsr.edges("PageRank.buildRankGraph",
       edges.select(col("src"), col("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull), maxEdges))
+        .filter(col("src").isNotNull && col("dst").isNotNull), maxEdges), weighted = false)
 
   /** See [[buildRankGraph]]. Every walk is bit-identical to the one-shot
-    * entry points (same edges, same loop).
+    * entry points (same edges, same loop). A weighted graph's edges carry
+    * `w` as their third column.
     */
-  final class RankGraph private[operators] (g: DriverCsr.Edges) {
+  final class RankGraph private[operators] (g: DriverCsr.Edges, weighted: Boolean) {
 
-    // duplicate edges collapse; every weight is 1
-    private lazy val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst,
-      Array.fill(g.src.length)(1L), (a, _) => a)
+    // duplicate edges collapse: their weights sum, or every weight is 1
+    private lazy val adj =
+      if (weighted) DriverCsr.csr(g.nodeVals.length, g.src, g.dst, g.rows.map(_.getLong(2)),
+        (a, b) => Math.addExact(a, b))
+      else DriverCsr.csr(g.nodeVals.length, g.src, g.dst,
+        Array.fill(g.src.length)(1L), (a, _) => a)
 
-    private def empty: DataFrame = rankFrame(g, Array.empty)
-
-    private def walk(iterations: Int, scale: Long, dampNum: Long, dampDen: Long,
-                     seeds: Option[Set[Any]], prior: Map[Any, Long]): DataFrame = {
-      val (base, start) = baseAndStart(g.nodeVals, scale, dampNum, dampDen, seeds)
-      // warm start: nodes the snapshot has never seen start at the
-      // cold-start value (the round-R rank of a node that joined later
-      // IS its cold value)
-      val init = Array.tabulate(start.length)(j => prior.getOrElse(g.nodeVals(j), start(j)))
-      rankFrame(g, ranksLoop(adj, base, init, iterations, dampNum, dampDen))
+    /** Every rank entry: `iterations` rounds from the uniform start, from
+      * `prior`'s (`node`, `rank`) snapshot (nodes it has never seen start
+      * at the cold value — the round-R rank of a node that joined later IS
+      * its cold value), or with the teleport restricted to `seeds`. Seeds
+      * and snapshot nodes are cast to the node type on both sides of the
+      * gate.
+      */
+    private[operators] def walk(iterations: Int, scale: Long, dampNum: Long, dampDen: Long,
+                                seeds: Option[DataFrame], prior: Option[DataFrame]): DataFrame = {
+      checkRounds(iterations, dampNum, dampDen)
+      val p = prior.map(_.select(col("node").cast(g.nodeType).as("node"), col("rank")))
+      if (g.count == 0) rankFrame(g, Array.empty)
+      else if (g.onDriver) {
+        val n = g.nodeVals.length
+        val flag = Array.fill(n)(seeds.isEmpty)
+        seeds.foreach(g.seedFrame(_).collect().map(r => g.idOf(r.get(0)))
+          .filter(_ >= 0).foreach(flag(_) = true))
+        val (b, s) = share(flag.count(identity), scale, dampNum, dampDen, seeds.isDefined)
+        val base = flag.map(f => if (f) b else 0L)
+        val init = flag.map(f => if (f) s else 0L)
+        // the snapshot is node-sized, within the driver contract
+        p.foreach(_.collect().foreach { r =>
+          val i = g.idOf(r.get(0)); if (i >= 0) init(i) = r.getLong(1) })
+        rankFrame(g, ranksLoop(adj, base, init, iterations, dampNum, dampDen))
+      } else {
+        val (nodes, nodesRdd) = DriverCsr.rebase(seeds.fold(g.nodes.withColumn("__s", lit(true)))(
+          sd => g.nodes.join(g.seedFrame(sd).withColumn("__s", lit(true)), Seq("node"), "left")))
+        val isSeed = col("__s").isNotNull
+        val (b, s) = share(nodes.filter(isSeed).count(), scale, dampNum, dampDen,
+          seeds.isDefined)
+        val init = when(isSeed, lit(s)).otherwise(lit(0L))
+        val start = p.fold(nodes.withColumn("rank", init))(pr => nodes
+          .join(pr.withColumnRenamed("rank", "__pr"), Seq("node"), "left")
+          .withColumn("rank", coalesce(col("__pr"), init)))
+          .select(col("node"), when(isSeed, lit(b)).otherwise(lit(0L)).as("b"), col("rank"))
+        try distributedLoop(g.cached, if (weighted) sum(col("w")) else lit(1L), start,
+          iterations, dampNum, dampDen)
+        finally nodesRdd.unpersist(blocking = false)
+      }
     }
 
     /** [[PageRank.ranks]] over the prebuilt graph. */
     def ranks(iterations: Int = 10, scale: Long = 1000000000000L,
-              dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
-      checkRounds(iterations, dampNum, dampDen)
-      if (g.count == 0) empty
-      else if (g.onDriver) walk(iterations, scale, dampNum, dampDen, None, Map.empty)
-      else ranksDistributedState(g.cached, g.nodes, iterations, scale, dampNum, dampDen)
-    }
+              dampNum: Long = 85, dampDen: Long = 100): DataFrame =
+      walk(iterations, scale, dampNum, dampDen, None, None)
 
     /** [[PageRank.resumeRanks]] over the prebuilt graph. */
     def resumeFrom(prior: DataFrame, iterations: Int = 5,
                    scale: Long = 1000000000000L,
-                   dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
-      checkRounds(iterations, dampNum, dampDen)
-      val p = prior.select(col("node"), col("rank"))
-      if (g.count == 0) empty
-      else if (g.onDriver)
-        // the snapshot is node-sized, within the driver contract
-        walk(iterations, scale, dampNum, dampDen, None,
-          p.collect().map(r => (r.get(0), r.getLong(1))).toMap)
-      else ranksDistributedState(g.cached, g.nodes, iterations, scale, dampNum, dampDen,
-        prior = Some(p))
-    }
-
-    /** [[PageRank.personalizedRanks]] over the prebuilt graph. */
-    private[operators] def personalized(seeds: DataFrame, iterations: Int,
-                                        scale: Long, dampNum: Long,
-                                        dampDen: Long): DataFrame = {
-      checkRounds(iterations, dampNum, dampDen)
-      val seedVals = seedValues(seeds)
-      if (g.onDriver)
-        // same loop as [[ranks]] — only base/start differ
-        walk(iterations, scale, dampNum, dampDen, Some(seedVals), Map.empty)
-      else personalizedDistributedState(g.cached, g.nodes,
-        seeds.select(col(seeds.columns.head).as("node")).distinct(),
-        iterations, scale, dampNum, dampDen)
-    }
+                   dampNum: Long = 85, dampDen: Long = 100): DataFrame =
+      walk(iterations, scale, dampNum, dampDen, None, Some(prior))
 
     /** Release the cached edges ([[DriverCsr.Edges.close]]). */
     def close(): Unit = g.close()
@@ -326,77 +328,9 @@ object PageRank {
         col(weightCol).cast("long").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src"), col("dst"), wChecked.as("w"))
-    val seedVals = seeds.map(seedValues)
     val g = DriverCsr.edges("PageRank.weighted", eRaw, maxEdges)
-    try {
-      if (g.count == 0) rankFrame(g, Array.empty)
-      else if (g.onDriver) {
-        // duplicate edges collapse by SUMMING their weights, exactly
-        val adj = DriverCsr.csr(g.nodeVals.length, g.src, g.dst, g.rows.map(_.getLong(2)),
-          (a, b) => Math.addExact(a, b))
-        val (base, start) = baseAndStart(g.nodeVals, scale, dampNum, dampDen, seedVals)
-        rankFrame(g, ranksLoop(adj, base, start, iterations, dampNum, dampDen))
-      } else weightedDistributedState(
-        g.cached.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
-        g.nodes, iterations, scale, dampNum, dampDen, seedVals)
-    } finally g.close()
-  }
-
-  private def weightedDistributedState(e: DataFrame, nodes0: DataFrame,
-                                       iterations: Int, scale: Long,
-                                       dampNum: Long, dampDen: Long,
-                                       seeds: Option[Set[Any]]): DataFrame = {
-    val spark = e.sparkSession
-    val edgesW = e
-      .repartition(col("src"))
-      .withColumn("wsum", sum(col("w")).over(Window.partitionBy(col("src"))))
-      .persist()
-    // per-node base: uniform, or seed-restricted (the personalizedRanks
-    // shape — each node's base rides its zero-contribution row, so no
-    // extra per-round join appears)
-    val (nodesBase0, startExpr) = seeds match {
-      case None =>
-        val n = nodes0.count()
-        (nodes0.withColumn("b",
-          lit(scale * (dampDen - dampNum) / dampDen / n)),
-          lit(scale / n))
-      case Some(ss) =>
-        val isSeed = col("node").isin(ss.toSeq: _*)
-        val k = nodes0.filter(isSeed).count()
-        require(k > 0, "no seed appears in the graph")
-        val b = scale * (dampDen - dampNum) / dampDen / k
-        require(b > 0 && scale / k > 0, s"scale $scale too small for $k seeds")
-        (nodes0.withColumn("b", when(isSeed, lit(b)).otherwise(lit(0L))),
-          when(col("b") > 0, lit(scale / k)).otherwise(lit(0L)))
-    }
-    val nbRdd = nodesBase0.rdd
-    nbRdd.cache()
-    val nodesBase = spark.createDataFrame(nbRdd, nodesBase0.schema)
-    var ranks = nodesBase.select(col("node"), startExpr.as("rank"))
-    var prev: Option[org.apache.spark.rdd.RDD[Row]] = None
-    var i = 0
-    while (i < iterations) {
-      val next = edgesW
-        .join(ranks, edgesW("src") === ranks("node"))
-        .select(col("dst"),
-          IntOps.intDiv(col("rank") * col("w"), col("wsum")).as("c"),
-          lit(0L).as("b"))
-        .unionByName(nodesBase.select(col("node").as("dst"),
-          lit(0L).as("c"), col("b")))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("in_mass"), sum(col("b")).as("bb"))
-        .select(col("dst").as("node"),
-          (col("bb") + IntOps.intDiv(col("in_mass") * dampNum, lit(dampDen)))
-            .as("rank"))
-      val rdd = next.rdd
-      rdd.cache()
-      rdd.count()
-      prev.foreach(_.unpersist(blocking = false))
-      prev = Some(rdd)
-      ranks = spark.createDataFrame(rdd, next.schema)
-      i += 1
-    }
-    ranks
+    try new RankGraph(g, weighted = true).walk(iterations, scale, dampNum, dampDen, seeds, None)
+    finally g.close()
   }
 
   /** Persist a rank vector as a two-column managed table — the
@@ -436,11 +370,11 @@ object PageRank {
     * walk reaches from a trusted set). Same exact-integer discipline as
     * [[ranks]]: base(v) = ⌊⌊scale·(den−num)/den⌋ / |S|⌋ for seeds and 0
     * elsewhere, start = ⌊scale/|S|⌋ on seeds. Within the [[DriverCsr]]
-    * gate it is [[ranks]]' array loop with those base/start vectors;
-    * above it every round is one rank-frame shuffle against the cached
-    * src-partitioned edges, and the per-round node frame carries its
-    * base along, so no extra join appears. Seeds outside
-    * the graph are ignored; at least one must be present. Duplicate
+    * gate it is [[ranks]]' array loop with those base/start vectors,
+    * above it [[ranks]]' distributed loop from the same start. Seeds are
+    * cast to the node type first (a "1" seeds node 1 of a long-keyed
+    * graph on both sides); seeds outside the graph are ignored, and at
+    * least one must be present unless the graph is empty. Duplicate
     * edges collapse. Returns (node, rank) after exactly `iterations`
     * rounds — nodes unreachable from the seeds hold rank 0, which is the
     * point (the q93 global walk ranks them anyway).
@@ -450,106 +384,7 @@ object PageRank {
                         dampNum: Long = 85, dampDen: Long = 100,
                         maxEdges: Long = DriverCsr.MaxEdges): DataFrame = {
     val g = buildRankGraph(edges, maxEdges)
-    try g.personalized(seeds, iterations, scale, dampNum, dampDen)
+    try g.walk(iterations, scale, dampNum, dampDen, Some(seeds), None)
     finally g.close()
-  }
-
-  /** Big-graph fallback of [[personalizedRanks]]. */
-  private def personalizedDistributedState(e: DataFrame, nodesPlain: DataFrame,
-                                           seedSet: DataFrame, iterations: Int,
-                                           scale: Long, dampNum: Long,
-                                           dampDen: Long): DataFrame = {
-    val edgesDeg = e
-      .repartition(col("src"))
-      .groupBy(col("src"), col("dst")).agg(lit(1))
-      .select(col("src"), col("dst"))
-      .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .persist()
-    val nodes0 = nodesPlain
-      .join(seedSet.withColumn("__s", lit(1L)), Seq("node"), "left")
-    val (flags, flagsRdd) = DriverCsr.rebase(nodes0)
-    val nSeeds = flags.filter(col("__s").isNotNull).count()
-    require(nSeeds > 0, "no seed appears in the graph")
-    val base = scale * (dampDen - dampNum) / dampDen / nSeeds
-    require(base > 0 && scale / nSeeds > 0,
-      s"scale $scale too small for $nSeeds seeds")
-    val (nodesBase, nbRdd) = DriverCsr.rebase(flags.select(col("node"),
-      when(col("__s").isNotNull, lit(base)).otherwise(lit(0L)).as("b")))
-    nodesBase.count()
-    flagsRdd.unpersist(blocking = false)
-    var (ranks, ranksRdd) = DriverCsr.rebase(nodesBase.select(col("node"),
-      when(col("b") > 0, lit(scale / nSeeds)).otherwise(lit(0L)).as("rank")))
-    var i = 0
-    while (i < iterations) {
-      val contribs = edgesDeg
-        .join(ranks, edgesDeg("src") === ranks("node"))
-        .select(col("dst"), IntOps.intDiv(col("rank"), col("outdeg")).as("c"),
-          lit(0L).as("b"))
-      // one zero-contribution row per node CARRIES the node's base, so
-      // the per-round aggregate needs no second join (sum(b) = the base,
-      // each node's b appears exactly once)
-      val next = contribs
-        .unionByName(nodesBase.select(col("node").as("dst"),
-          lit(0L).as("c"), col("b")))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("in_mass"), sum(col("b")).as("bb"))
-        .select(col("dst").as("node"),
-          (col("bb") + IntOps.intDiv(col("in_mass") * dampNum, lit(dampDen)))
-            .as("rank"))
-      val (r2, rr2) = DriverCsr.rebase(next)
-      r2.count()
-      ranksRdd.unpersist(blocking = false)
-      ranks = r2; ranksRdd = rr2
-      i += 1
-    }
-    nbRdd.unpersist(blocking = false)
-    ranks
-  }
-
-  /** Big-graph fallback: distributed rank frame, rebased per round onto a
-    * cached-RDD leaf; the join reuses the cached edge partitioning so only
-    * the rank frame shuffles.
-    */
-  private def ranksDistributedState(e: DataFrame, nodes0: DataFrame,
-                                    iterations: Int, scale: Long,
-                                    dampNum: Long, dampDen: Long,
-                                    prior: Option[DataFrame] = None): DataFrame = {
-    // ONE edge shuffle: partition by src, collapse duplicates (satisfied
-    // by the src partitioning) and count out-degrees with a sort-only
-    // window over the same partitioning; cached still partitioned by the
-    // per-round join key.
-    val edgesDeg = e
-      .repartition(col("src"))
-      .groupBy(col("src"), col("dst")).agg(lit(1))
-      .select(col("src"), col("dst"))
-      .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .persist()
-    val spark = e.sparkSession
-    val nRdd = nodes0.rdd
-    nRdd.cache()
-    val n = nRdd.count()
-    val nodes = spark.createDataFrame(nRdd, nodes0.schema)
-    val base = scale * (dampDen - dampNum) / dampDen / n
-    var ranks = prior match {
-      case None => nodes.withColumn("rank", lit(scale / n))
-      case Some(p) => nodes
-        .join(p.select(col("node"), col("rank").as("__pr")), Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("__pr"), lit(scale / n)).as("rank"))
-    }
-    var prev: Option[org.apache.spark.rdd.RDD[Row]] = None
-    var i = 0
-    while (i < iterations) {
-      val next = step(nodes, edgesDeg, ranks, base, dampNum, dampDen,
-        broadcastRanks = false)
-      val rdd = next.rdd
-      rdd.cache()
-      rdd.count()
-      prev.foreach(_.unpersist(blocking = false))
-      prev = Some(rdd)
-      ranks = spark.createDataFrame(rdd, next.schema)
-      i += 1
-    }
-    ranks
   }
 }

@@ -18,7 +18,10 @@ import scala.jdk.CollectionConverters._
   * Every entry runs at `DriverCsr.MaxEdges` and with `maxEdges = 0`,
   * which forces the distributed loop. The PageRank, HITS, label
   * propagation and BFS entries run on string ids, and again over an edge
-  * frame whose every edge has a null endpoint. The other entries run over
+  * frame whose every edge has a null endpoint; the PageRank and BFS
+  * entries also run over seeded random multigraphs (long and string ids,
+  * duplicate edges with differing weights, self-loops), where both sides
+  * must agree. The other entries run over
   * string ids and over copies keyed by Double, Date and strings whose
   * UTF-8 order differs from their UTF-16 order. Each copy maps a..e to
   * keys in the same Spark order, so its answer is the string answer with
@@ -31,16 +34,24 @@ class AwkwardGraphInputSpec extends AnyFunSuite with SparkSpec {
     ("a", "b", 2L), ("b", "c", 1L), ("c", "a", 3L), ("a", "b", 2L), ("c", "d", 1L),
     ("d", "d", 5L), ("d", "e", 2L), ("e", null, 1L), ("b", "e", 4L))
   private lazy val edges = edgeRows.toDF("src", "dst", "w")
-  private lazy val seeds = Seq("a").toDF("node")
+
+  /** The seed node a in the key type of `e`: long-keyed inputs name it 1. */
+  private def seeds(e: DataFrame): DataFrame =
+    if (e.schema("src").dataType == LongType) Seq(1L).toDF("node") else Seq("a").toDF("node")
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.mkString("|")).sorted
+
+  /** Nodes a and d in the key type of `e` (1 and 4 when long-keyed). */
+  private def landmarks(e: DataFrame): DataFrame =
+    if (e.schema("src").dataType == LongType) Seq(1L, 4L).toDF("node")
+    else Seq("a", "d").toDF("node")
 
   /** The (node, dist) rows `Bfs.refreshDistances` hands its consumer. */
   private def refreshed(e: DataFrame, prior: DataFrame, m: Long): DataFrame = {
     var out: Seq[Row] = Nil
     var schema: StructType = null
-    Bfs.refreshDistances(e, "src", "dst", e, seeds, prior, maxEdges = m) { df =>
+    Bfs.refreshDistances(e, "src", "dst", e, seeds(e), prior, maxEdges = m) { df =>
       out = df.collect().toSeq; schema = df.schema
     }
     spark.createDataFrame(out.asJava, schema)
@@ -58,7 +69,7 @@ class AwkwardGraphInputSpec extends AnyFunSuite with SparkSpec {
       Seq("a|65824843750", "b|97043750000", "c|71243593750", "d|128946640625",
         "e|134365390625")),
     ("PageRank.personalizedRanks",
-      (e, m) => PageRank.personalizedRanks(e, seeds, iterations = 3, maxEdges = m),
+      (e, m) => PageRank.personalizedRanks(e, seeds(e), iterations = 3, maxEdges = m),
       Seq("a|303531250000", "b|127500000000", "c|54187500000", "d|153531250000",
         "e|54187500000")),
     ("PageRank.weightedRanks",
@@ -67,7 +78,7 @@ class AwkwardGraphInputSpec extends AnyFunSuite with SparkSpec {
       Seq("a|70800000000", "b|90180000000", "c|57858750000", "d|141557853497",
         "e|180618141398")),
     ("PageRank.weightedPersonalizedRanks",
-      (e, m) => PageRank.weightedPersonalizedRanks(e, "src", "dst", "w", seeds,
+      (e, m) => PageRank.weightedPersonalizedRanks(e, "src", "dst", "w", seeds(e),
         iterations = 3, maxEdges = m),
       Seq("a|242118750000", "b|127500000000", "c|21675000000", "d|30706250000",
         "e|86700000000")),
@@ -89,34 +100,34 @@ class AwkwardGraphInputSpec extends AnyFunSuite with SparkSpec {
         LabelPropagation.propagate(e, "src", "dst", rounds = 1), rounds = 1, maxEdges = m),
       Seq("a|a", "b|b", "c|a", "d|a", "e|a")),
     ("Bfs.hopDistances",
-      (e, m) => Bfs.hopDistances(e, "src", "dst", seeds, rounds = 4, maxEdges = m),
+      (e, m) => Bfs.hopDistances(e, "src", "dst", seeds(e), rounds = 4, maxEdges = m),
       Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
     ("Bfs.resumeDistances",
       (e, m) => Bfs.resumeDistances(e, "src", "dst",
-        Bfs.hopDistances(e, "src", "dst", seeds, rounds = 1), rounds = 3,
+        Bfs.hopDistances(e, "src", "dst", seeds(e), rounds = 1), rounds = 3,
         maxEdges = m),
       Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
     ("Bfs.weightedDistances",
-      (e, m) => Bfs.weightedDistances(e, "src", "dst", "w", seeds, rounds = 4,
+      (e, m) => Bfs.weightedDistances(e, "src", "dst", "w", seeds(e), rounds = 4,
         maxEdges = m),
       Seq("a|0", "b|2", "c|3", "d|4", "e|6")),
     ("Bfs.resumeWeightedDistances",
       (e, m) => Bfs.resumeWeightedDistances(e, "src", "dst", "w",
-        Bfs.weightedDistances(e, "src", "dst", "w", seeds, rounds = 1), rounds = 3,
+        Bfs.weightedDistances(e, "src", "dst", "w", seeds(e), rounds = 1), rounds = 3,
         maxEdges = m),
       Seq("a|0", "b|2", "c|3", "d|4", "e|6")),
     ("Bfs.landmarkDistances",
-      (e, m) => Bfs.landmarkDistances(e, "src", "dst", Seq("a", "d").toDF("node"),
+      (e, m) => Bfs.landmarkDistances(e, "src", "dst", landmarks(e),
         rounds = 4, maxEdges = m),
       Seq("a|a|0", "b|a|1", "c|a|2", "d|a|3", "d|d|0", "e|a|2", "e|d|1")),
     ("Bfs.hopDistancesToFixpoint",
-      (e, m) => Bfs.hopDistancesToFixpoint(e, "src", "dst", seeds, maxEdges = m),
+      (e, m) => Bfs.hopDistancesToFixpoint(e, "src", "dst", seeds(e), maxEdges = m),
       Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
     ("Bfs.refreshDistances from an empty prior",
-      (e, m) => refreshed(e, Bfs.hopDistances(e, "src", "dst", seeds, rounds = 1).limit(0), m),
+      (e, m) => refreshed(e, Bfs.hopDistances(e, "src", "dst", seeds(e), rounds = 1).limit(0), m),
       Seq("a|0", "b|1", "c|2", "d|3", "e|2")),
     ("Bfs.refreshDistances from a one-round prior",
-      (e, m) => refreshed(e, Bfs.hopDistances(e, "src", "dst", seeds, rounds = 1), m),
+      (e, m) => refreshed(e, Bfs.hopDistances(e, "src", "dst", seeds(e), rounds = 1), m),
       Seq("c|2", "d|3", "e|2")))
 
   nodeGated.foreach { case (name, run, want) =>
@@ -128,11 +139,71 @@ class AwkwardGraphInputSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** A seeded random multigraph over nodes a..l (1..12 when long-keyed):
+    * 30 random edges plus duplicates of a third of them with other
+    * weights, three self-loops, and edges out of a and d so the seeds and
+    * landmarks are on the graph.
+    */
+  private def multigraph(seed: Long, longIds: Boolean): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def w() = 1L + rnd.nextInt(9)
+    val base = Seq((0, rnd.nextInt(12)), (3, rnd.nextInt(12))) ++
+      Seq.fill(30)((rnd.nextInt(12), rnd.nextInt(12))) ++
+      Seq.fill(3) { val v = rnd.nextInt(12); (v, v) }
+    val rows = base.map { case (s, d) => (s, d, w()) } ++
+      base.filter(_ => rnd.nextInt(3) == 0).map { case (s, d) => (s, d, w()) }
+    val key: Int => Any = if (longIds) i => i + 1L else i => ('a' + i).toChar.toString
+    val keyType = if (longIds) LongType else StringType
+    spark.createDataFrame(rnd.shuffle(rows).map { case (s, d, wt) =>
+      Row(key(s), key(d), wt) }.asJava, StructType(Seq(StructField("src", keyType),
+      StructField("dst", keyType), StructField("w", LongType))))
+  }
+
+  for ((name, run, _) <- nodeGated if name.startsWith("PageRank.") || name.startsWith("Bfs.");
+       (seed, longIds) <- Seq((11L, true), (12L, false), (13L, true))) {
+    val ids = if (longIds) "long" else "string"
+    test(s"$name on random multigraph $seed ($ids ids): driver path and distributed loop agree") {
+      val e = multigraph(seed, longIds)
+      try {
+        val driver = rows(run(e, DriverCsr.MaxEdges))
+        assert(driver.nonEmpty, s"$name driver path")
+        assert(rows(run(e, 0L)) == driver, s"$name distributed loop")
+      } finally graft.Storage.releaseAll(spark)
+    }
+  }
+
+  test("personalized PageRank casts the seeds to the node type on both sides of the gate") {
+    // long-keyed graph, String seed: the driver path used to compare "1"
+    // with 1L and find no seed, while the distributed join cast implicitly
+    val e = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L), (3L, 4L, 1L)).toDF("src", "dst", "w")
+    val s = Seq("1").toDF("node")
+    val want = Seq("1|150000000000", "2|127500000000", "3|722500000000", "4|0")
+    try Seq(DriverCsr.MaxEdges, 0L).foreach { m =>
+      assert(rows(PageRank.personalizedRanks(e, s, iterations = 2, maxEdges = m)) == want,
+        s"personalizedRanks maxEdges = $m")
+      assert(rows(PageRank.weightedPersonalizedRanks(e, "src", "dst", "w", s, iterations = 2,
+        maxEdges = m)) == want, s"weightedPersonalizedRanks maxEdges = $m")
+    } finally graft.Storage.releaseAll(spark)
+  }
+
+  test("weighted BFS: an edge with a null weight relaxes nothing on both sides of the gate") {
+    // b is reached only over a null-weight edge, c over a null-weight
+    // edge (from b) and a weighted one
+    val e = Seq[(String, String, java.lang.Long)](("a", "b", null), ("b", "c", null),
+      ("b", "c", 1L), ("a", "c", 5L), ("c", "d", null)).toDF("src", "dst", "w")
+    try Seq(DriverCsr.MaxEdges, 0L).foreach { m =>
+      assert(rows(Bfs.weightedDistances(e, "src", "dst", "w", seeds(e), rounds = 3,
+        maxEdges = m)) == Seq("a|0", "c|5"), s"maxEdges = $m")
+      assert(rows(Bfs.resumeWeightedDistances(e, "src", "dst", "w",
+        Seq(("a", 0L)).toDF("node", "dist"), rounds = 3, maxEdges = m)) == Seq("a|0", "c|5"),
+        s"resume maxEdges = $m")
+    } finally graft.Storage.releaseAll(spark)
+  }
+
   test("an edge frame whose every edge has a null endpoint gives one empty typed result") {
     val nulls = Seq[(String, String, java.lang.Long)](("a", null, 1L), (null, "b", 2L),
       (null, null, 3L)).toDF("src", "dst", "w")
-    // personalized PageRank rejects a graph that holds no seed
-    for ((name, run, _) <- nodeGated if name != "PageRank.personalizedRanks") {
+    for ((name, run, _) <- nodeGated) {
       try {
         val types = run(edges, DriverCsr.MaxEdges).schema.map(_.dataType)
         Seq(DriverCsr.MaxEdges, 0L).foreach { m =>

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.pipelines.ReferenceAdjust
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,6 +47,8 @@ class HeaderAdjustSpec extends AnyFunSuite with SparkSpec {
       Seq(("f1", "RX1", "10"), ("f2", "RY2", "20"), ("f2", "RZ3", "30")))
   }
 
+  // the panel as ReferenceAdjust reads it: annual rows (null quarter) in
+  // file order (`_row_idx`)
   private def panel = Seq(
     // org m1+m2 merged into MM per lookup; u1 untouched; p1 problematic;
     // MM itself reports rows in 2019 — they must merge with m1+m2, not
@@ -58,14 +61,18 @@ class HeaderAdjustSpec extends AnyFunSuite with SparkSpec {
     ("u1", 2019, Some(5.0), Some(2.0), Some("UNTOUCHED")),
     ("p1", 2019, Some(7.0), Some(3.0), Some("PROBLEMATIC")),
   ).toDF("org_code", "year", "beds", "day_beds", "org_name")
+    .withColumn("quarter", lit(null).cast("string"))
+    .withColumn("_row_idx", monotonically_increasing_id())
 
   private def lookup = Seq(
-    ("m1", "MM", 0), ("m2", "MM", 0), ("p1", "PX", 1),
-  ).toDF("old_code", "final_code", "problematic")
+    ("m1", "MM", 0, 0), ("m2", "MM", 0, 0), ("p1", "PX", 0, 1),
+  ).toDF("old_code", "final_code", "experiences_split", "problematic")
 
-  test("OrgChangeAdjust merges clean changes with NA-preserving sums") {
-    val out = OrgChangeAdjust.adjust(panel, lookup, "org_code", Seq("year"),
-      Seq("beds", "day_beds")).cache()
+  private def adjusted =
+    ReferenceAdjust.adjust(panel, lookup, ReferenceAdjust.Params(Seq("beds", "day_beds")))
+
+  test("ReferenceAdjust merges clean changes with NA-preserving sums") {
+    val out = adjusted.cache()
     val merged2019 = out.filter(col("org_code") === "MM" && col("year") === 2019).collect()
     assert(merged2019.length == 1, "successor's own rows must merge, not duplicate the grain")
     assert(merged2019(0).getAs[Double]("beds") == 70.0) // 10 + 20 + MM's own 40
@@ -75,9 +82,8 @@ class HeaderAdjustSpec extends AnyFunSuite with SparkSpec {
       "all-null merge must stay null, not become 0")
   }
 
-  test("OrgChangeAdjust leaves untouched trusts as-is and flags problematic ones") {
-    val out = OrgChangeAdjust.adjust(panel, lookup, "org_code", Seq("year"),
-      Seq("beds", "day_beds")).cache()
+  test("ReferenceAdjust keeps untouched trusts as-is and flags problematic ones") {
+    val out = adjusted.cache()
     val u = out.filter(col("org_code") === "u1").collect()(0)
     assert(u.getAs[Double]("beds") == 5.0)
     assert(u.getAs[Int]("unproblematic_org_change") == 0)
@@ -85,16 +91,11 @@ class HeaderAdjustSpec extends AnyFunSuite with SparkSpec {
     val p = out.filter(col("org_code") === "p1").collect()(0)
     assert(p.getAs[Double]("beds") == 7.0, "problematic trusts are flagged, never merged")
     assert(p.getAs[Int]("exp_problematic_org_change") == 1)
-    val m = out.filter(col("org_code") === "MM" && col("year") === 2019).collect()(0)
-    assert(m.getAs[Int]("unproblematic_org_change") == 1)
-    assert(m.getAs[Int]("exp_unproblematic_org_change") == 1)
   }
 
-  test("OrgChangeAdjust preserves measure totals for non-problematic rows") {
-    val out = OrgChangeAdjust.adjust(panel, lookup, "org_code", Seq("year"),
-      Seq("beds", "day_beds"))
+  test("ReferenceAdjust preserves measure totals for non-problematic rows") {
     val before = panel.filter(col("org_code") =!= "p1").agg(sum("beds")).head().getDouble(0)
-    val after = out.filter(col("org_code") =!= "p1").agg(sum("beds")).head().getDouble(0)
+    val after = adjusted.filter(col("org_code") =!= "p1").agg(sum("beds")).head().getDouble(0)
     assert(before == after, "merger re-keying must conserve totals")
   }
 }

@@ -75,14 +75,22 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
 
     samples(caseGen, 5).filter(_._1.nonEmpty).foreach { case (rows, lk) =>
       val data = rows.toDF("org_code", "year", "beds")
-      val lookup = lk.toDF("old_code", "final_code", "problematic")
-      val out = OrgChangeAdjust.adjust(data, lookup, "org_code", Seq("year"), Seq("beds"))
+        .withColumn("quarter", lit(null).cast("string"))
+        .withColumn("_row_idx", monotonically_increasing_id())
+      val lookup = lk.map { case (o, f, p) => (o, f, 0, p) }
+        .toDF("old_code", "final_code", "experiences_split", "problematic")
+      val out = graft.pipelines.ReferenceAdjust.adjust(data, lookup,
+        graft.pipelines.ReferenceAdjust.Params(Seq("beds")))
       val before = data.agg(sum("beds")).head()
       val after = out.agg(sum("beds")).head()
       val b = if (before.isNullAt(0)) 0.0 else before.getDouble(0)
       val a = if (after.isNullAt(0)) 0.0 else after.getDouble(0)
       assert(a == b, s"total beds must be conserved: before=$b after=$a lk=$lk")
-      val dup = out.groupBy("org_code", "year").count().filter(col("count") > 1).count()
+      // a successor named in both a clean and a problematic change keeps
+      // one row per problematic flag (the reference's grouping)
+      val both = lk.filter(_._3 == 0).map(_._2).toSet.intersect(lk.filter(_._3 == 1).map(_._2).toSet)
+      val dup = out.filter(!col("org_code").isin(both.toSeq: _*))
+        .groupBy("org_code", "year").count().filter(col("count") > 1).count()
       assert(dup == 0, s"adjusted panel must have unique (key, time) grain; lk=$lk")
     }
   }

@@ -1,12 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 class StagingReaderSpec extends AnyFunSuite with SparkSpec {
 
@@ -107,39 +104,17 @@ class StagingReaderSpec extends AnyFunSuite with SparkSpec {
     }
     assert(dir.toFile.listFiles().length == 40, "above the 32-path parallel-listing threshold")
 
-    val jobs = new ConcurrentLinkedQueue[(String, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull ->
-          e.stageInfos.map(_.numTasks).sum)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("staging-read", "readExcelStaging")
-      val df = StagingReader.readExcelStaging(spark, Seq(s"$dir/*"),
-        sheetName = Some("^providers?$"), fileNameFilter = Some("^(?!England)"))
-      sc.setJobGroup("staging-action", "collect")
-      val got = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-      sc.clearJobGroup()
-      // listener events arrive in order: once the action's job is seen,
-      // every job the read itself started has been seen too
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.asScala.exists(_._1 == "staging-action") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val byGroup = jobs.asScala.toSeq.groupBy(_._1)
-      assert(byGroup.getOrElse("staging-read", Nil).isEmpty,
-        s"readExcelStaging started jobs before any action: ${byGroup.get("staging-read")}")
-      assert(byGroup("staging-action").map(_._2).sum <= sc.defaultParallelism,
-        s"the parse runs one task per core, not per file: ${byGroup("staging-action")}")
+    val (df, readJobs) = bodyJobsOf(StagingReader.readExcelStaging(spark, Seq(s"$dir/*"),
+      sheetName = Some("^providers?$"), fileNameFilter = Some("^(?!England)")))
+    val (got, actionJobs) = bodyJobsOf(
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq)
+    assert(readJobs.isEmpty, s"readExcelStaging started jobs before any action: $readJobs")
+    assert(actionJobs.map(_.tasks).sum <= spark.sparkContext.defaultParallelism,
+      s"the parse runs one task per core, not per file: $actionJobs")
 
-      assert(df.columns.toSeq == Seq("fname", "org_code", "n_beds"))
-      // path order across files, sheet order within each
-      assert(got == data.flatMap { case (f, rows) =>
-        rows.map(r => (f, r(0).toString, r(1).toString)) })
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    assert(df.columns.toSeq == Seq("fname", "org_code", "n_beds"))
+    // path order across files, sheet order within each
+    assert(got == data.flatMap { case (f, rows) =>
+      rows.map(r => (f, r(0).toString, r(1).toString)) })
   }
 }

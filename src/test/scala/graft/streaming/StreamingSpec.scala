@@ -1389,37 +1389,14 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   private val SessionJobsPerBatch = 15.0
 
   test("tailed stores: Spark jobs per committed micro-batch stay at the measured count") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
     val sg = "graft_stream_jobs_skipgram"
     val ss = "graft_stream_jobs_session"
     val tables = Seq(sg, ss).flatMap(x =>
       Seq(x, StoreIngest.ledgerTable(x), StoreIngest.tailsTable(x)))
     tables.foreach(dropTable)
     val root = java.nio.file.Files.createTempDirectory("graft_tail_jobs").toFile
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    // listener events arrive in order: once a marker job is seen, every
-    // job started before it has been seen too
-    def mark(group: String): Unit = {
-      sc.setJobGroup(group, group)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(group) && System.nanoTime() < deadline) Thread.sleep(20)
-    }
-    def jobsOf(ingest: => Unit): Int = {
-      mark("jobs-before")
-      jobs.clear()
-      ingest
-      mark("jobs-after")
-      jobs.asScala.count(_ != "jobs-after")
-    }
-    sc.addSparkListener(listener)
+    // every job of the ingest, stream threads included
+    def jobCount(ingest: => Unit): Int = jobsOf(ingest)._2.size
     try {
       // three users, each order-contiguous across the two slices, so the
       // second batch reads committed tails and runs the offender check
@@ -1431,10 +1408,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       def stream = spark.readStream
         .schema("user LONG, etype STRING, ord LONG, eid LONG")
         .option("maxFilesPerTrigger", "1").parquet(in.getAbsolutePath)
-      val sgJobs = jobsOf(StoreIngest.ingestSkipGramStore(stream, "user", "etype",
+      val sgJobs = jobCount(StoreIngest.ingestSkipGramStore(stream, "user", "etype",
         col("ord"), col("eid"), window = 2, sg,
         new java.io.File(root, "cp_sg").getAbsolutePath).awaitTermination())
-      val ssJobs = jobsOf(StoreIngest.ingestSessionStore(stream, "user",
+      val ssJobs = jobCount(StoreIngest.ingestSessionStore(stream, "user",
         col("ord"), col("eid"), gapUs = 15L, ss,
         new java.io.File(root, "cp_ss").getAbsolutePath).awaitTermination())
       assert(spark.table(StoreIngest.ledgerTable(sg)).count() == 2L &&
@@ -1446,7 +1423,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(ssJobs / 2.0 <= SessionJobsPerBatch,
         s"session ingest: ${ssJobs / 2.0} jobs per batch, measured $SessionJobsPerBatch")
     } finally {
-      sc.removeSparkListener(listener)
       rmTree(root)
       tables.foreach(dropTable)
       graft.Storage.releaseAll(spark)
